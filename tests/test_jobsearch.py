@@ -228,6 +228,14 @@ class TestFastPartsEquivalence:
         b"Content-Type: text/html\r\n\r\n<p>text</p><p",
         b"Content-Type: text/html\r\n\r\n<p>a > b</p>",
         b"Content-Type: text/html\r\n\r\nleading<p>mid</p>trailing",
+        # long text runs followed by an entity: the gate declines in
+        # linear time (the unanchored form backtracked 4x per 2 chars)
+        f"Content-Type: text/html\r\n\r\n<p>{'x' * 40}&amp;</p>".encode(),
+        f"Content-Type: text/html\r\n\r\n<p>{'word ' * 2000}&nbsp;</p>".encode(),
+        f"Content-Type: text/html\r\n\r\n{'y' * 5000}<b>z</b>{'y' * 5000}&lt;".encode(),
+        # <meta> is void: text after it survives on both paths
+        b"Content-Type: text/html\r\n\r\n<head><meta charset=utf-8></head><p>keep</p>",
+        b'Content-Type: text/html\r\n\r\n<head><meta charset="utf-8"><title>t</title></head><p>keep</p>',
         # slow-path declines (None -> BytesParser decides)
         b"Content-Type: text/html\r\nContent-Transfer-Encoding: quoted-printable\r\n\r\n<p>caf=C3=A9</p>",
         (
@@ -262,6 +270,34 @@ class TestFastPartsEquivalence:
         assert got is not None and len(got) == 1
         payload, charset = got[0]
         assert payload == self.H.encode() and charset == "utf-8"
+
+
+class TestChromeSnapshot:
+    def test_meta_charset_keeps_every_line(self):
+        """Chrome's "Save as MHTML" puts ``<meta charset="utf-8">`` in
+        ``<head>``; the void tag must not swallow the rest of the page."""
+        import quopri
+
+        from tomasz_weight_tracker_spark.pipelines.jobsearch import mhtml_text_lines
+
+        lines = ["Your recent activity", "Data Engineer #1", "Show deleted jobs"]
+        html = (
+            '<!DOCTYPE html><html lang="en"><head><meta charset="utf-8">'
+            "<title>My Jobs | LinkedIn</title><style>.job{margin:0}</style></head>"
+            "<body><main>"
+            + "".join(f'<div class="job"><span dir="ltr">{ln}</span></div>' for ln in lines)
+            + "</main></body></html>"
+        )
+        qp = quopri.encodestring(html.encode()).replace(b"\n", b"\r\n")
+        raw = (
+            b"From: <Saved by Blink>\r\nMIME-Version: 1.0\r\n"
+            b'Content-Type: multipart/related;\r\n\ttype="text/html";\r\n'
+            b'\tboundary="B"\r\n\r\n\r\n--B\r\nContent-Type: text/html\r\n'
+            b"Content-Transfer-Encoding: quoted-printable\r\n\r\n"
+            + qp
+            + b"\r\n--B--\r\n"
+        )
+        assert mhtml_text_lines(raw) == lines
 
 
 class TestCorruptDocuments:

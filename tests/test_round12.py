@@ -174,25 +174,27 @@ class TestTuneForScale:
     32-empty-reduce-task scheduler floor per exchange, big local
     corpora must keep the machine wide."""
 
-    def test_proportionality_and_bounds(self, tmp_path):
-        from tomasz_weight_tracker_spark.session import (
-            _DEFAULT_CPUS,
-            data_bytes,
-        )
+    def test_proportionality_and_bounds(self, spark, tmp_path):
+        from tomasz_weight_tracker_spark.session import _DEFAULT_CPUS, tune_for_scale
 
-        rule = lambda b: max(8, min(4 * _DEFAULT_CPUS, (b >> 19) + 1))  # noqa: E731
-        assert rule(0) == 8                      # empty -> floor
-        assert rule(2 << 20) == 8                # sf0.01-ish -> floor
-        assert rule(17 << 20) == 35              # sf0.1-ish -> ~cores
-        assert rule(10 << 30) == 4 * _DEFAULT_CPUS  # sf1+ -> cap
+        def corpus(name, nbytes):
+            d = tmp_path / name
+            d.mkdir()
+            with open(d / "t.parquet", "wb") as f:
+                f.truncate(nbytes)  # sparse: only the size matters
+            return str(d)
 
-        d = tmp_path / "corpus"
-        d.mkdir()
-        (d / "t.parquet").write_bytes(b"x" * 1024)
-        (d / "sub").mkdir()
-        (d / "sub" / "u.parquet").write_bytes(b"y" * 2048)
-        (d / "notes.txt").write_bytes(b"z" * 4096)  # non-parquet ignored
-        assert data_bytes(str(d)) == 3072
+        cap = 4 * _DEFAULT_CPUS
+        before = spark.conf.get("spark.sql.shuffle.partitions")
+        try:
+            assert tune_for_scale(spark, corpus("empty", 0)) == max(8, min(cap, 1))
+            assert tune_for_scale(spark, corpus("sf001", 2 << 20)) == max(8, min(cap, 5))
+            assert tune_for_scale(spark, corpus("sf01", 17 << 20)) == max(8, min(cap, 35))
+            assert tune_for_scale(spark, corpus("sf1", 10 << 30)) == max(8, cap)
+            # An unlistable corpus is production scale: the cap.
+            assert tune_for_scale(spark, str(tmp_path / "absent")) == max(8, cap)
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", before)
 
     def test_sets_session_conf(self, spark, tmp_path):
         from tomasz_weight_tracker_spark.session import tune_for_scale

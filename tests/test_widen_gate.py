@@ -9,11 +9,23 @@ already splits).
 
 from __future__ import annotations
 
+import pytest
+
 from tomasz_weight_tracker_spark.plans import REGISTRY
 from tomasz_weight_tracker_spark.plans.catalog import load
 
-SF_SMALL = "/root/testdata/sf0.001"  # 64 KiB documents: below _WIDEN_MIN_BYTES
-SF_BENCH = "/root/testdata/sf0.1"  # 584 KiB documents: gate on (1 split)
+SMALL = "sf0.001"  # 64 KiB documents: below _WIDEN_MIN_BYTES
+BENCH = "sf0.1"  # 584 KiB documents: gate on (1 split)
+
+
+@pytest.fixture
+def sf_small(sf_path):
+    return sf_path(SMALL)
+
+
+@pytest.fixture
+def sf_bench(sf_path):
+    return sf_path(BENCH)
 
 
 def _formatted(df) -> str:
@@ -29,35 +41,35 @@ def _roundrobin(plan: str) -> bool:
 
 
 class TestWidenGate:
-    def test_gate_on_at_bench_sf(self, spark):
-        plan = _formatted(load(spark, SF_BENCH, "documents"))
+    def test_gate_on_at_bench_sf(self, spark, sf_bench):
+        plan = _formatted(load(spark, sf_bench, "documents"))
         assert _roundrobin(plan), plan[:1500]
 
-    def test_gate_off_below_bytes_floor(self, spark):
-        plan = _formatted(load(spark, SF_SMALL, "documents"))
+    def test_gate_off_below_bytes_floor(self, spark, sf_small):
+        plan = _formatted(load(spark, sf_small, "documents"))
         assert not _roundrobin(plan), plan[:1500]
 
-    def test_gate_off_on_many_file_input(self, spark, tmp_path):
+    def test_gate_off_on_many_file_input(self, spark, sf_bench, tmp_path):
         # A multi-file documents table has nparts > cores/4 at local[4]:
         # the scan already parallelizes, so the widen must be a no-op.
         path = str(tmp_path / "documents.parquet")
-        load(spark, SF_BENCH, "documents", widen=False).repartition(4).write.parquet(
+        load(spark, sf_bench, "documents", widen=False).repartition(4).write.parquet(
             path
         )
         plan = _formatted(load(spark, str(tmp_path), "documents"))
         assert not _roundrobin(plan), plan[:1500]
 
-    def test_widened_headline_query_at_bench_sf(self, spark):
+    def test_widened_headline_query_at_bench_sf(self, spark, sf_bench, sf_small):
         # minhash_signature is one of the 11 queries the r12 driver
         # measured the widen on (2.0x): the exchange must be in its
         # plan at the bench SF and absent below the floor.
-        on = _formatted(REGISTRY["minhash_signature"].build(spark, SF_BENCH))
-        off = _formatted(REGISTRY["minhash_signature"].build(spark, SF_SMALL))
+        on = _formatted(REGISTRY["minhash_signature"].build(spark, sf_bench))
+        off = _formatted(REGISTRY["minhash_signature"].build(spark, sf_small))
         assert _roundrobin(on), on[:1500]
         assert not _roundrobin(off), off[:1500]
 
-    def test_optout_query_never_widens(self, spark):
+    def test_optout_query_never_widens(self, spark, sf_bench):
         # exact_dedup opts out at its load site (measured x0.51 WITH
         # widen): no round-robin exchange even at the bench SF.
-        plan = _formatted(REGISTRY["exact_dedup"].build(spark, SF_BENCH))
+        plan = _formatted(REGISTRY["exact_dedup"].build(spark, sf_bench))
         assert not _roundrobin(plan), plan[:1500]

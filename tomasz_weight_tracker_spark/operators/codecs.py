@@ -595,42 +595,6 @@ def resize_nearest(decoded: dict, out_w: int, out_h: int) -> dict | None:
     return {"width": out_w, "height": out_h, "bpp": decoded.get("bpp"), "pixels": out}
 
 
-VIDEO_MAGIC = b"VID0"
-
-
-def make_video(frames: list[bytes]) -> bytes:
-    """Serialize a toy video container: magic + frame count + length-
-    prefixed frame blobs (each typically a BMP).  Real enough that
-    parse must walk variable-length records; simple enough to be
-    stdlib-only."""
-    out = bytearray(VIDEO_MAGIC)
-    out += struct.pack("<I", len(frames))
-    for fr in frames:
-        out += struct.pack("<I", len(fr))
-        out += fr
-    return bytes(out)
-
-
-def parse_video(raw: bytes) -> list[bytes] | None:
-    """Walk the length-prefixed container; None if it doesn't validate.
-    Truncated trailing frames are dropped, not raised — corrupt blobs
-    are data (same posture as parse_bmp/parse_wav)."""
-    if len(raw) < 8 or raw[:4] != VIDEO_MAGIC:
-        return None
-    n = struct.unpack_from("<I", raw, 4)[0]
-    frames, pos = [], 8
-    for _ in range(n):
-        if pos + 4 > len(raw):
-            break
-        ln = struct.unpack_from("<I", raw, pos)[0]
-        pos += 4
-        if pos + ln > len(raw):
-            break
-        frames.append(raw[pos : pos + ln])
-        pos += ln
-    return frames
-
-
 # ---------------------------------------------------------------------------
 # JPEG (baseline sequential, ITU T.81) — the last codec stub closed
 # (round-10 verdict item 5).  Pure stdlib: marker walk, canonical

@@ -78,15 +78,6 @@ def minhash_from_pairs(pairs_col: Column, salt: int) -> Column:
     )
 
 
-def minhash_expr(token_arr: Column, salt: int) -> Column:
-    """One MinHash value: min over the distinct token set of the
-    ``h1 + salt*h2`` double hash.  k salts -> k-wide signature.
-
-    Prefer :func:`minhash_signature` for multi-salt use — it
-    materializes the md5 work once across all salts."""
-    return minhash_from_pairs(minhash_hash_pairs(token_arr), salt)
-
-
 def sql_minhash_pairs(tokens_expr: str) -> str:
     """DuckDB twin of :func:`minhash_hash_pairs` (use in a CTE)."""
     return (
@@ -98,10 +89,6 @@ def sql_minhash_pairs(tokens_expr: str) -> str:
 
 def sql_minhash_from_pairs(pairs_expr: str, salt: int) -> str:
     return f"list_min(list_transform({pairs_expr}, s -> s.h1 + {salt} * s.h2))"
-
-
-def sql_minhash(tokens_expr: str, salt: int) -> str:
-    return sql_minhash_from_pairs(sql_minhash_pairs(tokens_expr), salt)
 
 
 def minhash_signature(df: DataFrame, text_col: str, k: int = 8) -> DataFrame:

@@ -45,10 +45,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def sql_dot(a: str, b: str) -> str:
-    return f"list_dot_product({a}, {b})"
-
-
 def sql_cosine(a: str, b: str) -> str:
     return f"list_cosine_similarity({a}, {b})"
 

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..functions import md5_long, tokens
+from ..functions import tokens
 
 # Marker stopwords per language for the n-gram/stopword heuristic.
 # Deterministic and shared with the DuckDB oracle; precision on real
@@ -96,11 +96,6 @@ def fingerprint(text: Column) -> Column:
     text.  Exact-dedup key."""
     normalized = F.regexp_replace(F.trim(F.lower(text)), "\\s+", " ")
     return F.md5(normalized)
-
-
-def fingerprint_long(text: Column) -> Column:
-    normalized = F.regexp_replace(F.trim(F.lower(text)), "\\s+", " ")
-    return md5_long(normalized)
 
 
 # --- DuckDB oracle twins (SQL text generators) -----------------------------

@@ -111,11 +111,6 @@ def bucket_end_labeled(ts: Column, minutes: int = 15) -> Column:
     return F.timestamp_seconds(F.floor(shifted / secs) * secs)
 
 
-def truncate_to(ts: Column, unit: str) -> Column:
-    """T9: date_trunc wrapper ('minute', 'day', 'month', ...)."""
-    return F.date_trunc(unit, ts)
-
-
 def resolve_days_ago(ref_date: Column, line: Column, pattern: str = r"(\d+)\s+day[^\s]*\s+ago") -> Column:
     """T8: '<N> days ago' -> ref_date - N days (utils/loose_thoughts.py:191-196)."""
     n = F.regexp_extract(line, pattern, 1)

@@ -87,11 +87,13 @@ _CHARSET_TOKEN_RE = re.compile(r"[A-Za-z0-9_.:+-]+\Z")
 # HTML whose text extraction is provably a tag-split: only plain
 # begin/end tags (no quotes or '&' anywhere, so no charrefs, comments,
 # doctypes, processing instructions, or attribute values that could
-# hide '<'/'>').  Both alternatives consume >=1 char and are disjoint
-# on their first char, so the match is linear-time.
-_SIMPLE_HTML_RE = re.compile(r"(?:<[a-zA-Z/][^<>\"'&]*>|[^<&]+)*\Z")
+# hide '<'/'>').  Anchored, each tag followed by a text run that can't
+# contain '<': every character has exactly one way to match, so the
+# match is linear-time even when it fails at the end (an unrolled
+# ``(tag|text+)*`` backtracks exponentially over a long text run).
+_SIMPLE_HTML_RE = re.compile(r"\A[^<&]*(?:<[a-zA-Z/][^<>\"'&]*>[^<&]*)*\Z")
 _TAG_SPLIT_RE = re.compile(r"<[^>]*>")
-_SKIP_TAG_RE = re.compile(r"</?(?:script|style|head|title|noscript|meta)\b", re.I)
+_SKIP_TAG_RE = re.compile(r"</?(?:script|style|head|title|noscript)\b", re.I)
 
 
 def _fast_parts(raw: bytes) -> list[tuple[bytes, str | None]] | None:
@@ -157,12 +159,14 @@ def _fast_parts(raw: bytes) -> list[tuple[bytes, str | None]] | None:
 
 
 class _TextExtractor(HTMLParser):
-    """BS4-free HTML -> text: drops script/style/head/title/noscript/meta
+    """BS4-free HTML -> text: drops script/style/head/title/noscript
     content, joins remaining text nodes with newlines (the observable
     behavior of the reference's soup.get_text(separator='\\n') after
-    decomposing those tags)."""
+    decomposing those tags).  ``meta`` is a void element with no text:
+    counting it as an open skipped element would drop everything after
+    it."""
 
-    SKIP = {"script", "style", "head", "title", "noscript", "meta"}
+    SKIP = {"script", "style", "head", "title", "noscript"}
 
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)

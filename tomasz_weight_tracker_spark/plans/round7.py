@@ -869,26 +869,22 @@ def _lsh_audit_oracle() -> str:
     """
 
 
-# Session-scoped memo (round 13, same pattern and rationale as
-# catalog.trained_ivf_centroids): the sample and its O(sample^2) exact
-# ground truth are a deterministic pure function of the corpus, both
-# frames are tiny eager checkpoints, and TWO auditors build them —
-# keyed by applicationId so a fresh bench/oracle invocation always
-# recomputes from parquet.
-_AUDIT_MEMO: dict[tuple, tuple] = {}
-
-
 def _lsh_audit_sample_truth(spark, sf_dir):
     """The _AUDIT_N md5-sampled documents and their exact integer-
     Jaccard ground-truth pairs — shared by the recall audit and the
-    band autotune so the instrument cannot drift between them (and
-    built once per session, see _AUDIT_MEMO)."""
-    from ..functions import md5_long
+    band autotune so the instrument cannot drift between them.
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    memoed = _AUDIT_MEMO.get(key)
-    if memoed is not None:
-        return memoed
+    Built once per application (``session.SessionState.lsh_audit``,
+    same rationale as catalog.trained_ivf_centroids): both frames are
+    tiny eager checkpoints and a deterministic pure function of the
+    corpus, so a fresh bench/oracle invocation always recomputes them
+    from parquet."""
+    from ..functions import md5_long
+    from ..session import session_state
+
+    memo = session_state(spark).lsh_audit
+    if sf_dir in memo:
+        return memo[sf_dir]
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     samp = (
@@ -919,7 +915,7 @@ def _lsh_audit_sample_truth(spark, sf_dir):
         # CONSTRUCTION (driver OOM in TreeNode), not execution.
         .localCheckpoint(eager=True)
     )
-    _AUDIT_MEMO[key] = (samp, truth)
+    memo[sf_dir] = (samp, truth)
     return samp, truth
 
 

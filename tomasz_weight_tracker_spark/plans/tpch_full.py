@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from .catalog import dsum, load, register, sql_dsum, track_cache
+from .catalog import dsum, load, register, sql_dsum
 
 
 def _dec(col, scale=4, prec=18):
@@ -441,6 +441,8 @@ def q_min_cost_supplier(spark, sf_dir):
     "the threshold.  No second scan, no second shuffle.",
 )
 def q_important_parts(spark, sf_dir):
+    from ..caching import track_cache
+
     li = load(spark, sf_dir, "lineitem")
     s = load(spark, sf_dir, "supplier")
     n = load(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_3")
@@ -496,6 +498,8 @@ def q_important_parts(spark, sf_dir):
     "than tolerated.",
 )
 def q_top_revenue_supplier(spark, sf_dir):
+    from ..caching import track_cache
+
     li = load(spark, sf_dir, "lineitem")
     s = load(spark, sf_dir, "supplier")
     rev = (

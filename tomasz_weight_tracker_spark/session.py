@@ -5,13 +5,18 @@ Arrow on, UTC session timezone (DuckDB-oracle comparable), shuffle
 partitions sized to the local core count rather than the 200 default.
 On a real cluster the same factory is used with a different master and
 a shuffle-partition count sized to the input (see ``for_scale``).
+
+Also the one place that knows session lifetime (:class:`SessionState`)
+and the one that knows input size (:func:`parquet_file_sizes`).
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 _DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -101,24 +106,35 @@ def shuffle_partitions_for(input_bytes: int, target_partition_bytes: int = 128 <
     return max(_DEFAULT_CPUS, input_bytes // target_partition_bytes)
 
 
-def data_bytes(sf_dir: str) -> int:
-    """Total parquet bytes under a test-corpus directory (tables may be
-    single files or Spark-written directories)."""
-    total = 0
-    for root, _dirs, files in os.walk(sf_dir):
-        for f in files:
-            if f.endswith(".parquet"):
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
-    return total
+def parquet_file_sizes(path: str | os.PathLike) -> list[int] | None:
+    """Byte sizes of a parquet path's data files: the file itself, or
+    every ``*.parquet`` file under a directory (recursively), skipping
+    the ``_``/``.``-prefixed metadata and checksum files Spark ignores.
+
+    ``None`` when the path cannot be listed.  Every size gate reads
+    that as production scale: no widen, pre-aggregate, keyed join.
+    """
+    def _raise(err: OSError) -> None:
+        raise err
+
+    try:
+        if os.path.isfile(path):
+            return [os.path.getsize(path)]
+        return [
+            os.path.getsize(os.path.join(root, f))
+            for root, _dirs, files in os.walk(path, onerror=_raise)
+            for f in files
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        ]
+    except OSError:
+        return None
 
 
 def tune_for_scale(spark: SparkSession, sf_dir: str) -> int:
     """Apply the :func:`shuffle_partitions_for` proportionality rule to
     a LOCAL test corpus: one shuffle partition per ~512 KiB of source
-    parquet, floored at 8 and capped at 4x the local cores.
+    parquet, floored at 8 and capped at 4x the local cores (the cap
+    too when ``sf_dir`` cannot be listed).
 
     This is the same partitions-follow-data discipline scaled down —
     a fixed count is wrong in both directions.  Measured on the
@@ -130,6 +146,49 @@ def tune_for_scale(spark: SparkSession, sf_dir: str) -> int:
     is runtime-settable, so catalog runners call this per scale
     factor on a shared session.
     """
-    n = max(8, min(4 * _DEFAULT_CPUS, (data_bytes(sf_dir) >> 19) + 1))
+    sizes = parquet_file_sizes(sf_dir)
+    cap = 4 * _DEFAULT_CPUS
+    n = cap if sizes is None else max(8, min(cap, (sum(sizes) >> 19) + 1))
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     return n
+
+
+@dataclass(eq=False)
+class SessionState:
+    """Everything the engine memoizes for one Spark application.
+
+    - ``loads``: ``plans.catalog.load``'s DataFrames, so file listing,
+      footer reads and the widen decision happen once per table;
+    - ``ivf_centroids``: ``plans.catalog.trained_ivf_centroids``;
+    - ``lsh_audit``: the LSH audit sample and its exact ground truth;
+    - ``caches``: ``caching.track_cache``'d per-query relations,
+      unpersisted by ``caching.release_caches``.
+
+    The memos are pure functions of the input files, so every query of
+    the application shares them.  The memoized DataFrames hold their
+    session, so a memo keyed weakly by session would never let it go;
+    instead one instance lives at a time, tagged with the application
+    id, and :func:`session_state` replaces it when the id changes
+    (PySpark runs one SparkContext per process).
+    """
+
+    app_id: str
+    loads: dict[tuple, DataFrame] = field(default_factory=dict)
+    ivf_centroids: dict[tuple, DataFrame] = field(default_factory=dict)
+    lsh_audit: dict[str, tuple[DataFrame, DataFrame]] = field(default_factory=dict)
+    caches: list[DataFrame] = field(default_factory=list)
+
+
+_STATE: SessionState | None = None
+_STATE_LOCK = threading.Lock()
+
+
+def session_state(spark: SparkSession) -> SessionState:
+    """The live application's :class:`SessionState`, replacing (and so
+    releasing) a stopped application's."""
+    global _STATE
+    app_id = spark.sparkContext.applicationId
+    with _STATE_LOCK:
+        if _STATE is None or _STATE.app_id != app_id:
+            _STATE = SessionState(app_id)
+        return _STATE

@@ -207,15 +207,9 @@ def compact_table(
     the same path (same single-writer posture as ``upsert_by_key``);
     on a partitioned table run it per partition directory.
     """
-    import os
+    from ..session import parquet_file_sizes
 
-    path = Path(path)
-    total = sum(
-        os.path.getsize(Path(root) / f)
-        for root, _, files in os.walk(path)
-        for f in files
-        if f.endswith(".parquet")
-    )
+    total = sum(parquet_file_sizes(path) or ())
     n_files = max(1, -(-total // target_file_bytes))
     df = spark.read.parquet(str(path)).localCheckpoint()
     df.repartition(n_files).write.mode("overwrite").parquet(str(path))
