@@ -235,7 +235,7 @@ def main() -> None:
     # Layout-lever queries at headline scale: the write is the 100 TB
     # investment, the query is what it buys — report both components
     # (round-6 verdict item 3) instead of one merged wall number.
-    from tomasz_weight_tracker_spark.plans.round6 import LAYOUT_WRITE_S
+    from tomasz_weight_tracker_spark.plans.catalog import LAYOUT_WRITE_S
 
     layout = {}
     for name in (

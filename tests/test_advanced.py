@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from tomasz_weight_tracker_spark.plans.advanced import (
@@ -18,7 +19,10 @@ from tomasz_weight_tracker_spark.plans.advanced import (
 )
 from tomasz_weight_tracker_spark.streaming.tuning import state_partitions
 
-SF = "/root/testdata/sf0.001"
+
+@pytest.fixture
+def sf(sf_path):
+    return sf_path("sf0.001")
 
 
 def _ts(h, m=0):
@@ -49,15 +53,15 @@ class TestScd2:
         assert u1[2].valid_to is None and u1[2].is_current
         assert sum(r.is_current for r in out) == 2  # exactly one per user
 
-    def test_current_rows_match_latest_event(self, spark):
-        out = q_scd2_user_state(spark, SF)
+    def test_current_rows_match_latest_event(self, spark, sf):
+        out = q_scd2_user_state(spark, sf)
         cur = out.filter("is_current").groupBy("user_id").count()
         assert cur.filter("count != 1").count() == 0
 
 
 class TestPageRank:
-    def test_mass_and_node_domain(self, spark):
-        out = q_pagerank_part_supplier(spark, SF).collect()
+    def test_mass_and_node_domain(self, spark, sf):
+        out = q_pagerank_part_supplier(spark, sf).collect()
         # Every node gets the damping floor; symmetric edges leak no mass,
         # so total rank stays within damping bounds of node count.
         assert all(r.rank >= 0.15 for r in out)
@@ -67,15 +71,15 @@ class TestPageRank:
         kinds = {r.kind for r in out}
         assert kinds == {"part", "supplier"}
 
-    def test_deterministic_across_runs(self, spark):
-        a = {r.id: r.rank for r in q_pagerank_part_supplier(spark, SF).collect()}
-        b = {r.id: r.rank for r in q_pagerank_part_supplier(spark, SF).collect()}
+    def test_deterministic_across_runs(self, spark, sf):
+        a = {r.id: r.rank for r in q_pagerank_part_supplier(spark, sf).collect()}
+        b = {r.id: r.rank for r in q_pagerank_part_supplier(spark, sf).collect()}
         assert a == b
 
 
 class TestSortedNeighborhood:
-    def test_pair_budget_and_orientation(self, spark):
-        out = q_snm_near_dup(spark, SF).collect()
+    def test_pair_budget_and_orientation(self, spark, sf):
+        out = q_snm_near_dup(spark, sf).collect()
         assert all(r.doc_a != r.doc_b for r in out)
         # Each doc opens at most w comparisons -> no quadratic blowup.
         from collections import Counter
@@ -121,16 +125,16 @@ class TestSortedNeighborhood:
 
 
 class TestBitmapDistinct:
-    def test_equals_exact_count_distinct(self, spark):
+    def test_equals_exact_count_distinct(self, spark, sf):
         got = {
             r.event_type: r.n_users
-            for r in q_bitmap_distinct_users(spark, SF).collect()
+            for r in q_bitmap_distinct_users(spark, sf).collect()
         }
         from tomasz_weight_tracker_spark.plans.catalog import load
 
         want = {
             r.event_type: r.n
-            for r in load(spark, SF, "events")
+            for r in load(spark, sf, "events")
             .groupBy("event_type")
             .agg(F.countDistinct("user_id").alias("n"))
             .collect()
@@ -183,7 +187,7 @@ class TestStatePartitions:
 
 
 class TestSnapshotDiff:
-    def test_statuses_match_residue_construction(self, spark):
+    def test_statuses_match_residue_construction(self, spark, sf):
         from tomasz_weight_tracker_spark.plans.advanced import (
             _DIFF_CHANGE,
             _DIFF_DELETE,
@@ -192,11 +196,11 @@ class TestSnapshotDiff:
         )
         from tomasz_weight_tracker_spark.plans.catalog import load
 
-        out = q_snapshot_diff(spark, SF).collect()
+        out = q_snapshot_diff(spark, sf).collect()
         by_status = {}
         for r in out:
             by_status.setdefault(r.status, []).append(r)
-        keys = [r.o_orderkey for r in load(spark, SF, "orders").select("o_orderkey").collect()]
+        keys = [r.o_orderkey for r in load(spark, sf, "orders").select("o_orderkey").collect()]
         assert len(by_status.get("removed", [])) == sum(1 for k in keys if k % _DIFF_DELETE == 0)
         assert len(by_status.get("added", [])) == sum(1 for k in keys if k % _DIFF_INSERT == 0)
         # changed = price-bumped keys that were not deleted
@@ -207,13 +211,13 @@ class TestSnapshotDiff:
 
 
 class TestSequencePacking:
-    def test_offsets_tile_the_token_stream(self, spark):
+    def test_offsets_tile_the_token_stream(self, spark, sf):
         from tomasz_weight_tracker_spark.plans.advanced import (
             _PACK_BUDGET,
             q_sequence_packing,
         )
 
-        rows = sorted(q_sequence_packing(spark, SF).collect(), key=lambda r: r.doc_id)
+        rows = sorted(q_sequence_packing(spark, sf).collect(), key=lambda r: r.doc_id)
         # Prefix-sum property: each doc starts where the previous ended.
         run = 0
         for r in rows:
@@ -221,14 +225,14 @@ class TestSequencePacking:
             assert r.pack_id == run // _PACK_BUDGET
             run += r.n_tokens
 
-    def test_no_full_corpus_global_window(self, spark):
+    def test_no_full_corpus_global_window(self, spark, sf):
         # The only unpartitioned window runs over shard SUBTOTALS; the
         # per-document window must be shard-partitioned.
         import io, contextlib
 
         from tomasz_weight_tracker_spark.plans.advanced import q_sequence_packing
 
-        df = q_sequence_packing(spark, SF)
+        df = q_sequence_packing(spark, sf)
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
@@ -241,10 +245,10 @@ class TestSequencePacking:
 
 
 class TestValueDeciles:
-    def test_bins_are_ordered_and_balanced(self, spark):
+    def test_bins_are_ordered_and_balanced(self, spark, sf):
         from tomasz_weight_tracker_spark.plans.advanced import q_value_deciles
 
-        rows = q_value_deciles(spark, SF).collect()
+        rows = q_value_deciles(spark, sf).collect()
         by_type = {}
         for r in rows:
             by_type.setdefault(r.event_type, []).append(r)
@@ -259,13 +263,13 @@ class TestValueDeciles:
 
 
 class TestDatasetSplit:
-    def test_user_disjoint_and_total(self, spark):
+    def test_user_disjoint_and_total(self, spark, sf):
         from tomasz_weight_tracker_spark.functions import md5_long
         from tomasz_weight_tracker_spark.plans.advanced import q_dataset_split
         from tomasz_weight_tracker_spark.plans.catalog import load
 
-        out = {r.split: r for r in q_dataset_split(spark, SF).collect()}
-        ev = load(spark, SF, "events")
+        out = {r.split: r for r in q_dataset_split(spark, sf).collect()}
+        ev = load(spark, sf, "events")
         assert sum(r.n_events for r in out.values()) == ev.count()
         # Group-aware: per-user split assignment is a function of user_id,
         # so split user counts partition the distinct-user set.
@@ -411,15 +415,15 @@ class TestDedupThrottle:
 
 
 class TestStreamingJoinClicks:
-    def test_matches_batch_interval_join(self, spark):
+    def test_matches_batch_interval_join(self, spark, sf):
         from tomasz_weight_tracker_spark.plans.advanced import q_streaming_join_clicks
         from tomasz_weight_tracker_spark.plans.catalog import load
 
         got = {
             (r.purchase_id, r.click_id)
-            for r in q_streaming_join_clicks(spark, SF).collect()
+            for r in q_streaming_join_clicks(spark, sf).collect()
         }
-        ev = load(spark, SF, "events")
+        ev = load(spark, sf, "events")
         p = ev.filter("event_type = 'purchase'").select(
             F.col("event_id").alias("purchase_id"), "user_id", F.col("ts").alias("p_ts")
         )
@@ -529,7 +533,7 @@ class TestReviewRegressions:
         # still pair up on the ASCII remainder.
         assert [(p.doc_a, p.doc_b) for p in pairs] == [(1, 2)]
 
-    def test_drain_to_memory_raises_on_timeout(self, spark):
+    def test_drain_to_memory_raises_on_timeout(self, spark, sf):
         import pytest as _pytest
 
         from tomasz_weight_tracker_spark.streaming.pipelines import (
@@ -539,7 +543,7 @@ class TestReviewRegressions:
 
         # A 1 ms deadline cannot fit stream startup + a micro-batch:
         # the drain must raise, not hand back a truncated table.
-        df = stream_events(spark, SF).select("event_id")
+        df = stream_events(spark, sf).select("event_id")
         with _pytest.raises(RuntimeError, match="did not finish"):
             drain_to_memory(spark, df, "t_timeout", "append", timeout_sec=0.001)
 
@@ -579,10 +583,10 @@ class TestDocChunking:
 
 
 class TestSourceRebalance:
-    def test_kept_counts_approach_uniform_target(self, spark):
+    def test_kept_counts_approach_uniform_target(self, spark, sf):
         from tomasz_weight_tracker_spark.plans.advanced import q_source_rebalance
 
-        rows = q_source_rebalance(spark, SF).collect()
+        rows = q_source_rebalance(spark, sf).collect()
         per_source = min(r.n_total for r in rows)
         for r in rows:
             assert r.n_kept <= r.n_total
@@ -648,12 +652,12 @@ class TestEmptyInputs:
     """Every advanced query must run (not crash) on EMPTY tables — the
     day-one state of any incremental pipeline."""
 
-    def test_all_advanced_queries_tolerate_empty_tables(self, spark, tmp_path):
+    def test_all_advanced_queries_tolerate_empty_tables(self, spark, tmp_path, sf_path):
         import tomasz_weight_tracker_spark.plans.advanced as A
         from tomasz_weight_tracker_spark.plans import REGISTRY
         from tomasz_weight_tracker_spark.plans.catalog import load
 
-        src = "/root/testdata/sf0.001"
+        src = sf_path("sf0.001")
         path = str(tmp_path / "empty")
         for table in ("events", "documents", "orders", "lineitem"):
             load(spark, src, table).limit(0).write.parquet(
@@ -710,7 +714,7 @@ class TestSensorFoldSparseGrid:
 
 
 class TestIncrementalTopkGate:
-    def test_batching_invariance(self, spark):
+    def test_batching_invariance(self, spark, sf):
         """The monotonicity theorem in practice: ANY batching of the
         same rows folds to the same top-k state."""
         import tempfile
@@ -721,7 +725,7 @@ class TestIncrementalTopkGate:
         from tomasz_weight_tracker_spark.plans.catalog import load
 
         ev = (
-            load(spark, SF, "events")
+            load(spark, sf, "events")
             .filter(F.col("value").isNotNull())
             .select("event_id", "user_id", "value")
         )

@@ -4,15 +4,20 @@ empty-input totality."""
 
 from __future__ import annotations
 
+import pytest
+
 from tomasz_weight_tracker_spark.plans import REGISTRY
 from tomasz_weight_tracker_spark.plans.catalog import load
 
-SF_GATE = "/root/testdata/sf0.01"
+
+@pytest.fixture
+def sf_gate(sf_path):
+    return sf_path("sf0.01")
 
 
 class TestBloomSemijoin:
-    def test_gate_corpus_stats(self, spark):
-        r = REGISTRY["bloom_semijoin_prune"].build(spark, SF_GATE).first()
+    def test_gate_corpus_stats(self, spark, sf_gate):
+        r = REGISTRY["bloom_semijoin_prune"].build(spark, sf_gate).first()
         assert r["n_false_neg"] == 0  # Bloom filters never miss
         assert r["n_false_pos"] > 0  # and the FP cost is visible, not hidden
         # measured FP rate stays near the k=4 @ 16 bits/key theory (~0.24%)
@@ -24,10 +29,10 @@ class TestBloomSemijoin:
         assert r["m_bits"] >= 16 * r["n_keys"]
         assert 0 < r["bits_set"] <= r["m_bits"]
 
-    def test_empty_tables_total(self, spark, tmp_path):
+    def test_empty_tables_total(self, spark, tmp_path, sf_path):
         path = str(tmp_path / "empty")
         for table in ("orders", "lineitem"):
-            load(spark, "/root/testdata/sf0.001", table).limit(0).write.parquet(
+            load(spark, sf_path("sf0.001"), table).limit(0).write.parquet(
                 f"{path}/{table}.parquet"
             )
         r = REGISTRY["bloom_semijoin_prune"].build(spark, path).first()
@@ -37,8 +42,8 @@ class TestBloomSemijoin:
 
 
 class TestLshRecallAudit:
-    def test_gate_corpus_audit(self, spark):
-        r = REGISTRY["lsh_recall_audit"].build(spark, "/root/testdata/sf0.01").first()
+    def test_gate_corpus_audit(self, spark, sf_path):
+        r = REGISTRY["lsh_recall_audit"].build(spark, sf_path("sf0.01")).first()
         assert r["n_docs"] == 256
         assert r["n_true"] == 2879  # exact all-pairs Jaccard >= 0.9 ground truth
         # the uncapped generator has the recall MinHash theory promises...
@@ -51,7 +56,7 @@ class TestLshRecallAudit:
         assert r["recall_ppm"] >= r["recall_nocap_ppm"] - 100_000
         assert r["n_cand"] <= r["n_cand_nocap"]
 
-    def test_sample_is_scale_invariant(self, spark):
+    def test_sample_is_scale_invariant(self, spark, sf_path):
         # same fixed 256-doc audit cost at every corpus scale
-        r = REGISTRY["lsh_recall_audit"].build(spark, "/root/testdata/sf0.001").first()
+        r = REGISTRY["lsh_recall_audit"].build(spark, sf_path("sf0.001")).first()
         assert r["n_docs"] == 256

@@ -10,7 +10,10 @@ import pytest
 
 from tomasz_weight_tracker_spark.plans import REGISTRY
 
-SF_SMALL = "/root/testdata/sf0.001"
+
+@pytest.fixture
+def sf_small(sf_path):
+    return sf_path("sf0.001")
 
 
 def normalize(v):
@@ -25,9 +28,9 @@ def canon(rows, cols):
 
 
 @pytest.mark.parametrize("name", sorted(REGISTRY))
-def test_query_matches_oracle(spark, duck, name):
+def test_query_matches_oracle(spark, duck, name, sf_small):
     q = REGISTRY[name]
-    sdf = q.build(spark, SF_SMALL)
+    sdf = q.build(spark, sf_small)
     srows = [tuple(r) for r in sdf.collect()]
     if q.oracle is None:
         # rows-only contract: runs and yields a stable schema.

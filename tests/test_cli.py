@@ -27,8 +27,8 @@ def test_catalog_cli_lists_unknown(spark, capsys):
     assert "available:" in capsys.readouterr().out
 
 
-def test_catalog_cli_runs_query(spark):
-    assert main(["catalog", "global_summary", "--sf-dir", "/root/testdata/sf0.001"]) == 0
+def test_catalog_cli_runs_query(spark, sf_path):
+    assert main(["catalog", "global_summary", "--sf-dir", sf_path("sf0.001")]) == 0
 
 
 def test_upsert_and_compact_cli(spark, tmp_path):
@@ -51,13 +51,13 @@ def test_upsert_and_compact_cli(spark, tmp_path):
     assert {(r.id, r.v) for r in spark.read.parquet(table).collect()} == got
 
 
-def test_explain_cli_prints_physical_plan(spark, capsys):
+def test_explain_cli_prints_physical_plan(spark, capsys, sf_path):
     from tomasz_weight_tracker_spark.__main__ import run
 
     class A:
         cmd = "explain"
         query = "pricing_summary"
-        sf_dir = "/root/testdata/sf0.001"
+        sf_dir = sf_path("sf0.001")
         mode = "formatted"
 
     assert run(spark, A()) == 0

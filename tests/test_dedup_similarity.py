@@ -606,12 +606,12 @@ class TestProductQuantization:
 
 
 class TestSemanticDedup:
-    """The within-cluster prune logic of plans/round8.py:q_semantic_dedup
+    """The within-cluster prune logic of plans/dedup_lsh.py:q_semantic_dedup
     on a hand-built fixture (the catalog query itself is parity-gated
     against the Lloyd-replay oracle)."""
 
     def _run(self, spark, rows, eps_q=300_000_000):
-        from tomasz_weight_tracker_spark.plans import round8 as R8
+        from tomasz_weight_tracker_spark.plans import dedup_lsh
 
         mem = spark.createDataFrame(
             rows, "centroid_id int, vec_id long, v array<double>, simcent_q long"
@@ -637,7 +637,7 @@ class TestSemanticDedup:
             .select(F.col("x.vec_id").alias("vec_id"))
             .distinct()
         )
-        assert R8.SEM_EPS_Q == 300_000_000  # fixture thresholds assume this
+        assert dedup_lsh.SEM_EPS_Q == 300_000_000  # fixture thresholds assume this
         return {r.vec_id for r in dropped.collect()}
 
     def test_keeps_lowest_centroid_similarity(self, spark):

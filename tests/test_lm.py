@@ -51,9 +51,9 @@ class TestLmScore:
     def test_empty_corpus_total(self, spark):
         assert lm_score(_docs(spark, [])).collect() == []
 
-    def test_gate_corpus_splits_both_classes(self, spark):
+    def test_gate_corpus_splits_both_classes(self, spark, sf_path):
         out = lm_score(
-            spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+            spark.read.parquet(f"{sf_path('sf0.01')}/documents.parquet")
         ).agg(
             F.sum(F.col("kept").cast("int")).alias("k"),
             F.count(F.lit(1)).alias("n"),
@@ -84,8 +84,8 @@ class TestPerceptron:
         # label: doc 0 is 2/3 stopwords -> +1; empty doc -> +1 (0 >= 0)
         assert rows[0]["y"] == 1 and rows[1]["y"] == 1
 
-    def test_training_converges_on_gate_corpus(self, spark):
-        docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    def test_training_converges_on_gate_corpus(self, spark, sf_path):
+        docs = spark.read.parquet(f"{sf_path('sf0.01')}/documents.parquet")
         out = perceptron_train(spark, docs, 8)
         errs = {r["round"]: r["errors"] for r in out.select("round", "errors").distinct().collect()}
         assert errs[1] == 500  # w=0: every margin is 0, all flagged
@@ -132,13 +132,13 @@ class TestPerceptronSparse:
         }
         assert dense == sparse
 
-    def test_b4096_converges_on_gate_corpus(self, spark):
+    def test_b4096_converges_on_gate_corpus(self, spark, sf_path):
         from tomasz_weight_tracker_spark.operators.lm import (
             SPARSE_BUCKETS,
             perceptron_train_sparse,
         )
 
-        docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+        docs = spark.read.parquet(f"{sf_path('sf0.01')}/documents.parquet")
         out = perceptron_train_sparse(spark, docs, 6)
         errs = {
             r["round"]: r["errors"]
@@ -197,12 +197,12 @@ class TestDsir:
 
 
 class TestStreamingLmFilter:
-    def test_stream_equals_batch(self, spark):
+    def test_stream_equals_batch(self, spark, sf_path):
         """Train-offline / score-online introduces no drift: the drained
         streaming state must equal the batch scorer row-for-row."""
         from tomasz_weight_tracker_spark.plans import REGISTRY
 
-        sf = "/root/testdata/sf0.001"
+        sf = sf_path("sf0.001")
         got = sorted(
             tuple(r)
             for r in REGISTRY["streaming_lm_filter"].build(spark, sf).collect()
@@ -214,13 +214,13 @@ class TestStreamingLmFilter:
 
 
 class TestPerceptronApply:
-    def test_apply_consistent_with_training(self, spark):
+    def test_apply_consistent_with_training(self, spark, sf_path):
         from tomasz_weight_tracker_spark.operators.lm import (
             perceptron_apply,
             perceptron_train,
         )
 
-        docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+        docs = spark.read.parquet(f"{sf_path('sf0.01')}/documents.parquet")
         rows = perceptron_apply(docs, 8).collect()
         assert len(rows) == 500
         n_correct = sum(1 for r in rows if r["correct"])
@@ -242,11 +242,11 @@ class TestPerceptronApply:
 
 
 class TestLmCalibrated:
-    def test_per_source_median_threshold(self, spark):
+    def test_per_source_median_threshold(self, spark, sf_path):
         from tomasz_weight_tracker_spark.plans import REGISTRY
 
         rows = REGISTRY["lm_score_calibrated"].build(
-            spark, "/root/testdata/sf0.01"
+            spark, sf_path("sf0.01")
         ).collect()
         assert len(rows) == 400
         by_src = {}

@@ -3,10 +3,15 @@ water-level invariants on the gate corpus, and empty-input totality."""
 
 from __future__ import annotations
 
+import pytest
+
 from tomasz_weight_tracker_spark.plans import REGISTRY
 from tomasz_weight_tracker_spark.plans.catalog import load
 
-SF_GATE = "/root/testdata/sf0.01"
+
+@pytest.fixture
+def sf_gate(sf_path):
+    return sf_path("sf0.01")
 
 
 def _write_docs(spark, path, rows):
@@ -38,8 +43,8 @@ class TestTokenBudgetMix:
         assert out["A"]["accept_ppm"] == 1_000_000
         assert out["B"]["accept_ppm"] == 940_000
 
-    def test_gate_corpus_invariants(self, spark):
-        rows = REGISTRY["token_budget_mix"].build(spark, SF_GATE).collect()
+    def test_gate_corpus_invariants(self, spark, sf_gate):
+        rows = REGISTRY["token_budget_mix"].build(spark, sf_gate).collect()
         capped = [r for r in rows if r["capped"]]
         kept = [r for r in rows if not r["capped"]]
         assert capped and kept  # both branches live on the gate corpus
@@ -56,17 +61,17 @@ class TestTokenBudgetMix:
         assert all(r["tokens_avail"] > lam for r in capped)
         assert all(r["tokens_avail"] <= lam for r in kept)
 
-    def test_empty_corpus_total(self, spark, tmp_path):
+    def test_empty_corpus_total(self, spark, tmp_path, sf_path):
         path = str(tmp_path / "empty")
-        load(spark, "/root/testdata/sf0.001", "documents").limit(0).write.parquet(
+        load(spark, sf_path("sf0.001"), "documents").limit(0).write.parquet(
             f"{path}/documents.parquet"
         )
         assert REGISTRY["token_budget_mix"].build(spark, path).collect() == []
 
 
 class TestTokenBudgetMixApply:
-    def test_realized_yield_tracks_allocation(self, spark):
-        rows = REGISTRY["token_budget_mix_apply"].build(spark, SF_GATE).collect()
+    def test_realized_yield_tracks_allocation(self, spark, sf_gate):
+        rows = REGISTRY["token_budget_mix_apply"].build(spark, sf_gate).collect()
         assert len(rows) == 20
         for r in rows:
             # full-acceptance sources keep every doc and every token
@@ -79,13 +84,13 @@ class TestTokenBudgetMixApply:
         assert full  # the keep-all branch is represented
         assert all(r["docs_kept"] == 25 for r in full)
 
-    def test_deterministic_across_builds(self, spark):
+    def test_deterministic_across_builds(self, spark, sf_gate):
         a = sorted(
             tuple(r)
-            for r in REGISTRY["token_budget_mix_apply"].build(spark, SF_GATE).collect()
+            for r in REGISTRY["token_budget_mix_apply"].build(spark, sf_gate).collect()
         )
         b = sorted(
             tuple(r)
-            for r in REGISTRY["token_budget_mix_apply"].build(spark, SF_GATE).collect()
+            for r in REGISTRY["token_budget_mix_apply"].build(spark, sf_gate).collect()
         )
         assert a == b

@@ -108,8 +108,8 @@ class TestKeepBest:
 
 
 class TestBitextMargin:
-    def test_mutual_and_margin_properties(self, spark):
-        df = REGISTRY["bitext_mine_margin"].build(spark, "/root/testdata/sf0.001")
+    def test_mutual_and_margin_properties(self, spark, sf_path):
+        df = REGISTRY["bitext_mine_margin"].build(spark, sf_path("sf0.001"))
         rows = df.collect()
         assert len(rows) > 0
         # parity split: src even, tgt odd; margin strictly above 1
@@ -158,11 +158,11 @@ class TestJsonl:
 
 
 class TestStreamingLineDedup:
-    def test_fold_equals_one_shot_scrub(self, spark):
+    def test_fold_equals_one_shot_scrub(self, spark, sf_path):
         """The drained per-doc kept counts must equal the batch scrub's
         (for docs that keep anything) — the batching-invariance the
         oracle parity proves, asserted here engine-side at sf0.001."""
-        sf = "/root/testdata/sf0.001"
+        sf = sf_path("sf0.001")
         stream = {
             r["doc_id"]: (r["n_kept"], r["n_occurrences"])
             for r in REGISTRY["streaming_line_dedup"].build(spark, sf).collect()

@@ -12,11 +12,15 @@ from __future__ import annotations
 import re
 from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 from tomasz_weight_tracker_spark.plans.catalog import REGISTRY
 
-SF = "/root/testdata/sf0.001"
+
+@pytest.fixture
+def sf(sf_path):
+    return sf_path("sf0.001")
 
 
 def test_registry_has_round11_entries():
@@ -33,7 +37,7 @@ def test_registry_has_round11_entries():
 
 
 class TestBitextIvfPlanShape:
-    def test_no_corpus_cartesian(self, spark):
+    def test_no_corpus_cartesian(self, spark, sf):
         """The round-10 weak was a deliberate src x broadcast(tgt)
         cartesian.  The IVF twin must have NO CartesianProduct and no
         unkeyed join except against the (bounded, broadcast) centroid
@@ -41,7 +45,7 @@ class TestBitextIvfPlanShape:
         IdentityBroadcastMode exchange (the <=8-row centroid side),
         and the src-tgt candidate cut must be an equi-join keyed on
         centroid_id."""
-        df = REGISTRY["bitext_mine_margin_ivf"].build(spark, SF)
+        df = REGISTRY["bitext_mine_margin_ivf"].build(spark, sf)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan
         # the candidate cut is a keyed join on centroid_id
@@ -63,14 +67,14 @@ class TestBitextIvfPlanShape:
 
 
 class TestBitextIvfProperties:
-    def test_candidate_cut_and_policy(self, spark):
+    def test_candidate_cut_and_policy(self, spark, sf):
         from tomasz_weight_tracker_spark.caching import release_caches
-        from tomasz_weight_tracker_spark.plans.round11 import (
+        from tomasz_weight_tracker_spark.plans.similarity_ann import (
             _BITEXT_K,
             ivf_candidate_pairs,
         )
 
-        e = spark.read.parquet(f"{SF}/embeddings.parquet")
+        e = spark.read.parquet(f"{sf}/embeddings.parquet")
         n = e.count()
         n_src = e.filter(F.col("vec_id") % 2 == 0).count()
         n_tgt = n - n_src
@@ -79,7 +83,7 @@ class TestBitextIvfProperties:
         # cartesian (exactly nprobe/C of it in expectation)
         assert 0 < n_pairs < 0.5 * n_src * n_tgt
 
-        rows = REGISTRY["bitext_mine_margin_ivf"].build(spark, SF).collect()
+        rows = REGISTRY["bitext_mine_margin_ivf"].build(spark, sf).collect()
         release_caches()
         assert len(rows) > 0
         for r in rows:
@@ -94,28 +98,28 @@ class TestSliceTwinsAreExact:
     """The sf10 slice twins must be SUBSETS of the full runs, row for
     row — whole-series (meter) / whole-block slicing, not sampling."""
 
-    def test_electricity_userslice_is_projection_of_full(self, spark):
-        full = REGISTRY["electricity_15min"].build(spark, SF)
-        sliced = REGISTRY["electricity_15min_userslice"].build(spark, SF)
+    def test_electricity_userslice_is_projection_of_full(self, spark, sf):
+        full = REGISTRY["electricity_15min"].build(spark, sf)
+        sliced = REGISTRY["electricity_15min_userslice"].build(spark, sf)
         expect = sorted(
             tuple(r) for r in full.filter(F.col("user_id") % 50 == 7).collect()
         )
         got = sorted(tuple(r) for r in sliced.collect())
         assert got == expect and len(got) > 0
 
-    def test_snm_blockslice_is_subset_of_full(self, spark):
-        full = {tuple(r) for r in REGISTRY["snm_near_dup"].build(spark, SF).collect()}
+    def test_snm_blockslice_is_subset_of_full(self, spark, sf):
+        full = {tuple(r) for r in REGISTRY["snm_near_dup"].build(spark, sf).collect()}
         got = {
             tuple(r)
-            for r in REGISTRY["snm_near_dup_blockslice"].build(spark, SF).collect()
+            for r in REGISTRY["snm_near_dup_blockslice"].build(spark, sf).collect()
         }
         assert got and got <= full
 
 
 class TestKeepBestLsh:
-    def test_membership_partition_and_quality(self, spark):
-        d = spark.read.parquet(f"{SF}/documents.parquet")
-        out = REGISTRY["dup_cluster_keep_best_lsh"].build(spark, SF).collect()
+    def test_membership_partition_and_quality(self, spark, sf):
+        d = spark.read.parquet(f"{sf}/documents.parquet")
+        out = REGISTRY["dup_cluster_keep_best_lsh"].build(spark, sf).collect()
         # components partition the corpus: members sum to the doc count
         assert sum(r["n_members"] for r in out) == d.count()
         # the kept doc's recorded quality is its actual distinct-vocab size
@@ -302,13 +306,13 @@ class TestJpegCodec:
 
 
 class TestIvfAssignPlanShape:
-    def test_no_window_in_assign(self, spark):
+    def test_no_window_in_assign(self, spark, sf):
         """ivf_assign's argmax must be the combinable max(struct) agg,
         never a row_number window over the N x C scored join — the
         window shuffles every (vector, centroid) pair wide."""
         from tomasz_weight_tracker_spark.operators import similarity as S
 
-        e = spark.read.parquet(f"{SF}/embeddings.parquet")
+        e = spark.read.parquet(f"{sf}/embeddings.parquet")
         cents = e.filter(F.col("vec_id") < 8).select(
             F.col("vec_id").alias("centroid_id"), "embedding"
         )

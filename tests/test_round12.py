@@ -11,11 +11,15 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from tomasz_weight_tracker_spark.plans.catalog import REGISTRY
 
-SF = "/root/testdata/sf0.001"
+
+@pytest.fixture
+def sf(sf_path):
+    return sf_path("sf0.001")
 
 
 def test_registry_has_round12_entries():
@@ -30,14 +34,14 @@ def test_registry_has_round12_entries():
 
 
 class TestTrainedMinerPlanShape:
-    def test_no_corpus_cartesian(self, spark):
+    def test_no_corpus_cartesian(self, spark, sf):
         """Same invariant as the untrained twin (round 11): no
         CartesianProduct; the candidate cut is an equi-join on
         centroid_id; every unkeyed join builds on a bounded
         (IdentityBroadcastMode) centroid exchange.  ivf_train's Lloyd
         rounds run eagerly (localCheckpoint) before this plan, so the
         mining plan itself is what we inspect."""
-        df = REGISTRY["bitext_mine_margin_ivf_trained"].build(spark, SF)
+        df = REGISTRY["bitext_mine_margin_ivf_trained"].build(spark, sf)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan
         assert re.search(
@@ -54,7 +58,7 @@ class TestTrainedMinerPlanShape:
 
         release_caches()
 
-    def test_no_forced_corpus_broadcast(self, spark):
+    def test_no_forced_corpus_broadcast(self, spark, sf):
         """ADVICE r11: the kx/ky top-k sum relations are O(corpus) and
         must not carry a broadcast HINT.  The candidate stage's bounded
         centroid broadcasts live inside the cached pair subtree, so the
@@ -63,9 +67,9 @@ class TestTrainedMinerPlanShape:
         broadcast)' (verified: F.broadcast on a join side produces
         exactly that marker)."""
         from tomasz_weight_tracker_spark.caching import release_caches
-        from tomasz_weight_tracker_spark.plans.round11 import mine_bitext_ivf
+        from tomasz_weight_tracker_spark.plans.similarity_ann import mine_bitext_ivf
 
-        e = spark.read.parquet(f"{SF}/embeddings.parquet")
+        e = spark.read.parquet(f"{sf}/embeddings.parquet")
         df = mine_bitext_ivf(e, n_cent=8, nprobe=2, k=4)
         optimized = df._jdf.queryExecution().optimizedPlan().toString()
         assert "hint" not in optimized.lower(), (
@@ -76,14 +80,14 @@ class TestTrainedMinerPlanShape:
 
 
 class TestTrainedMinerSemantics:
-    def test_centroids_param_matches_default(self, spark):
+    def test_centroids_param_matches_default(self, spark, sf):
         """mine_bitext_ivf(centroids=first-8) must equal the default
         first-8 path bit-for-bit — the centroids parameter only swaps
         the quantizer, never the mining semantics."""
         from tomasz_weight_tracker_spark.caching import release_caches
-        from tomasz_weight_tracker_spark.plans.round11 import mine_bitext_ivf
+        from tomasz_weight_tracker_spark.plans.similarity_ann import mine_bitext_ivf
 
-        e = spark.read.parquet(f"{SF}/embeddings.parquet")
+        e = spark.read.parquet(f"{sf}/embeddings.parquet")
         cents = e.filter(F.col("vec_id") < 8).select(
             F.col("vec_id").alias("centroid_id"), "embedding"
         )
@@ -149,14 +153,14 @@ class TestJpeg420:
 
 
 class TestRecallAudit:
-    def test_audit_invariants(self, spark):
+    def test_audit_invariants(self, spark, sf):
         """Count consistency: hits bound by both pair sets, ppm is the
         exact integer division, and the sampled universe is bounded by
         _BAUD_N."""
         from tomasz_weight_tracker_spark.caching import release_caches
-        from tomasz_weight_tracker_spark.plans.round12 import _BAUD_N
+        from tomasz_weight_tracker_spark.plans.similarity_ann import _BAUD_N
 
-        row = REGISTRY["bitext_recall_audit"].build(spark, SF).collect()[0]
+        row = REGISTRY["bitext_recall_audit"].build(spark, sf).collect()[0]
         assert row.n_vecs <= _BAUD_N
         assert 0 <= row.n_hit_ivf <= min(row.n_ivf, row.n_brute)
         assert 0 <= row.n_hit_trained <= min(row.n_ivf_trained, row.n_brute)

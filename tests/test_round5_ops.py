@@ -6,9 +6,13 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
-SF = "/root/testdata/sf0.001"
+
+@pytest.fixture
+def sf(sf_path):
+    return sf_path("sf0.001")
 
 
 def _docs(spark, tmp_path, rows, sub="docs"):
@@ -52,12 +56,12 @@ class TestBm25Search:
         assert out[1] > out[2]  # more tf -> higher score
         assert set(out) == {1, 2, 4}
 
-    def test_topk_is_take_ordered_no_corpus_shuffle(self, spark):
+    def test_topk_is_take_ordered_no_corpus_shuffle(self, spark, sf):
         import re
 
         from tomasz_weight_tracker_spark.plans import REGISTRY
 
-        df = REGISTRY["bm25_search"].build(spark, SF)
+        df = REGISTRY["bm25_search"].build(spark, sf)
         plan = df._jdf.queryExecution().explainString(
             df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                 "formatted"
@@ -70,11 +74,11 @@ class TestBm25Search:
 
 
 class TestWeightedSample:
-    def test_deterministic_and_sized(self, spark):
+    def test_deterministic_and_sized(self, spark, sf):
         from tomasz_weight_tracker_spark.plans import REGISTRY
 
-        a = [tuple(r) for r in REGISTRY["weighted_sample_events"].build(spark, SF).collect()]
-        b = [tuple(r) for r in REGISTRY["weighted_sample_events"].build(spark, SF).collect()]
+        a = [tuple(r) for r in REGISTRY["weighted_sample_events"].build(spark, sf).collect()]
+        b = [tuple(r) for r in REGISTRY["weighted_sample_events"].build(spark, sf).collect()]
         assert a == b  # no RNG state anywhere
         from tomasz_weight_tracker_spark.plans.scale_ops import _WSAMP_K
 
@@ -95,12 +99,12 @@ class TestWeightedSample:
         heavy = sum(1 for r in out if r.value == 100.0)
         assert heavy > len(out) * 0.8, f"heavy stratum got {heavy}/{len(out)}"
 
-    def test_zero_shuffle_take_ordered(self, spark):
+    def test_zero_shuffle_take_ordered(self, spark, sf):
         import re
 
         from tomasz_weight_tracker_spark.plans import REGISTRY
 
-        df = REGISTRY["weighted_sample_events"].build(spark, SF)
+        df = REGISTRY["weighted_sample_events"].build(spark, sf)
         plan = df._jdf.queryExecution().explainString(
             df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                 "formatted"
@@ -134,12 +138,12 @@ class TestIntervalBucketJoin:
         out = {r.win_id: r.n_purchases for r in q_interval_bucket_join(spark, path).collect()}
         assert out == {1: 3, 2: 0}
 
-    def test_no_pair_join_only_broadcast_offsets(self, spark):
+    def test_no_pair_join_only_broadcast_offsets(self, spark, sf):
         import re
 
         from tomasz_weight_tracker_spark.plans import REGISTRY
 
-        df = REGISTRY["interval_bucket_join"].build(spark, SF)
+        df = REGISTRY["interval_bucket_join"].build(spark, sf)
         plan = df._jdf.queryExecution().explainString(
             df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                 "formatted"
@@ -264,7 +268,7 @@ class TestTriangleProjectionCap:
         # cap prunes edges, not the vertex census.
         assert out.n_nodes == 3 + k
 
-    def test_cap_does_not_bind_on_gate_data(self, spark):
+    def test_cap_does_not_bind_on_gate_data(self, spark, sf):
         """The gate tables' co-supply degrees are near-uniform (sf0.001
         median 10 / max 10; sf0.01 median 26 / max 41; sf0.1 median 29
         / max 52), so the DERIVED cap — _TRI_CAP_MARGIN x lower-median
@@ -277,7 +281,7 @@ class TestTriangleProjectionCap:
 
         prof = (
             REGISTRY["graph_degree_profile"]
-            .build(spark, SF)
+            .build(spark, sf)
             .filter(F.col("side") == "suppliers_per_part")
             .collect()
         )
@@ -385,7 +389,7 @@ class TestReferentialIntegrity:
 
 
 class TestStreamingUpsertState:
-    def test_multi_batch_converges_to_keep_last(self, spark, tmp_path):
+    def test_multi_batch_converges_to_keep_last(self, spark, tmp_path, sf_path):
         """4-file time-split replay with maxFilesPerTrigger=1: the
         foreachBatch MERGE sink must converge to keep-last-per-key
         ACROSS micro-batches — later batches overwrite earlier state,
@@ -397,7 +401,7 @@ class TestStreamingUpsertState:
         from tomasz_weight_tracker_spark.plans.catalog import load
         from tomasz_weight_tracker_spark.streaming.pipelines import stream_upsert
 
-        ev = load(spark, "/root/testdata/sf0.001", "events").filter(
+        ev = load(spark, sf_path("sf0.001"), "events").filter(
             F.col("value").isNotNull()
         )
         out = str(tmp_path / "evsplit")
@@ -450,7 +454,7 @@ class TestStreamingUpsertState:
         }
         assert got == want
 
-    def test_out_of_order_batches_converge_with_order_by(self, spark, tmp_path):
+    def test_out_of_order_batches_converge_with_order_by(self, spark, tmp_path, sf_path):
         """Round-5 advice: per-batch keep-last + plain upsert is
         last-BATCH-wins — a later micro-batch carrying OLDER rows
         overwrites newer state.  With order_by the merge is
@@ -463,7 +467,7 @@ class TestStreamingUpsertState:
         from tomasz_weight_tracker_spark.plans.catalog import load
         from tomasz_weight_tracker_spark.streaming.pipelines import stream_upsert
 
-        ev = load(spark, "/root/testdata/sf0.001", "events").filter(
+        ev = load(spark, sf_path("sf0.001"), "events").filter(
             F.col("value").isNotNull()
         )
         out = str(tmp_path / "evrev")
@@ -526,7 +530,7 @@ class TestStreamingUpsertState:
 
 
 class TestSnapshotPatchApply:
-    def test_roundtrip_counts_and_membership(self, spark):
+    def test_roundtrip_counts_and_membership(self, spark, sf):
         from tomasz_weight_tracker_spark.plans import REGISTRY
         from tomasz_weight_tracker_spark.plans.advanced import (
             _DIFF_DELETE,
@@ -534,8 +538,8 @@ class TestSnapshotPatchApply:
         )
         from tomasz_weight_tracker_spark.plans.catalog import load
 
-        out = REGISTRY["snapshot_patch_apply"].build(spark, SF)
-        orders = load(spark, SF, "orders")
+        out = REGISTRY["snapshot_patch_apply"].build(spark, sf)
+        orders = load(spark, sf, "orders")
         n_old = orders.count()
         n_del = orders.filter(F.col("o_orderkey") % _DIFF_DELETE == 0).count()
         n_ins = orders.filter(F.col("o_orderkey") % _DIFF_INSERT == 0).count()
@@ -549,19 +553,19 @@ class TestSnapshotPatchApply:
 
 
 class TestEmbedDupClusters:
-    def test_clusters_have_pair_support(self, spark):
+    def test_clusters_have_pair_support(self, spark, sf):
         # Every cluster groups >= 2 vectors, the canonical id is the
         # min member, and cluster membership covers exactly the nodes
         # of the near-pair graph.
         from tomasz_weight_tracker_spark.plans import REGISTRY
 
-        clusters = REGISTRY["embed_dup_clusters"].build(spark, SF).collect()
+        clusters = REGISTRY["embed_dup_clusters"].build(spark, sf).collect()
         assert clusters, "expected near-dup clusters at sf0.001"
         assert all(r.n_members >= 2 for r in clusters)
         assert all(r.canonical_id == r.component for r in clusters)
         pairs = (
             REGISTRY["embed_lsh_near_dup"]
-            .build(spark, SF)
+            .build(spark, sf)
             .filter(F.col("is_near"))
             .select("id_a", "id_b")
             .collect()
@@ -571,14 +575,14 @@ class TestEmbedDupClusters:
 
 
 class TestRound5EmptyInputs:
-    def test_new_queries_tolerate_empty_tables(self, spark, tmp_path):
+    def test_new_queries_tolerate_empty_tables(self, spark, tmp_path, sf_path):
         """Day-one totality for the round-5 queries living outside
         plans/advanced.py (whose module-wide empty sweep already
         covers patch-apply, degree profile, and incremental agg)."""
         from tomasz_weight_tracker_spark.plans import REGISTRY
         from tomasz_weight_tracker_spark.plans.catalog import load
 
-        src = "/root/testdata/sf0.001"
+        src = sf_path("sf0.001")
         path = str(tmp_path / "empty")
         for table in (
             "events", "documents", "embeddings", "orders", "lineitem",
@@ -606,11 +610,11 @@ class TestRound5EmptyInputs:
 
 
 class TestStreamingHopping:
-    def test_every_event_in_exactly_two_windows(self, spark):
+    def test_every_event_in_exactly_two_windows(self, spark, sf):
         from tomasz_weight_tracker_spark.plans import REGISTRY
         from tomasz_weight_tracker_spark.plans.catalog import load
 
-        out = REGISTRY["streaming_hopping_counts"].build(spark, SF)
+        out = REGISTRY["streaming_hopping_counts"].build(spark, sf)
         total = out.agg(F.sum("n_events")).first()[0]
-        n_events = load(spark, SF, "events").count()
+        n_events = load(spark, sf, "events").count()
         assert total == 2 * n_events

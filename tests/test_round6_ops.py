@@ -5,9 +5,13 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
-SF = "/root/testdata/sf0.001"
+
+@pytest.fixture
+def sf(sf_path):
+    return sf_path("sf0.001")
 
 
 def _plan(df) -> str:
@@ -20,7 +24,7 @@ def _plan(df) -> str:
 
 class TestSpanDedupRebuild:
     def test_shared_chunk_removed_from_all_docs(self, spark, tmp_path):
-        from tomasz_weight_tracker_spark.plans.round6 import (
+        from tomasz_weight_tracker_spark.plans.dedup_lsh import (
             _SPAN_K,
             q_span_dedup_rebuild,
         )
@@ -50,7 +54,7 @@ class TestSpanDedupRebuild:
         assert out[3].kept_text == "unique words only here"
 
     def test_fully_duplicated_doc_rebuilds_empty(self, spark, tmp_path):
-        from tomasz_weight_tracker_spark.plans.round6 import q_span_dedup_rebuild
+        from tomasz_weight_tracker_spark.plans.dedup_lsh import q_span_dedup_rebuild
 
         text = " ".join(f"w{i}" for i in range(16))  # two aligned chunks
         rows = [(1, text, "en", "s", 0), (2, text, "en", "s", 0)]
@@ -65,13 +69,13 @@ class TestSpanDedupRebuild:
 
 
 class TestBucketedJoinOrders:
-    def test_join_is_exchange_free(self, spark):
+    def test_join_is_exchange_free(self, spark, sf):
         """Both sides are bucketed+sorted on the customer key, so the
         join itself needs no exchange AND no sort — the only shuffle in
         the plan is the final |segments|-row aggregation."""
         from tomasz_weight_tracker_spark.plans import REGISTRY
 
-        plan = _plan(REGISTRY["bucketed_join_orders"].build(spark, SF))
+        plan = _plan(REGISTRY["bucketed_join_orders"].build(spark, sf))
         assert "SortMergeJoin" in plan
         exchanges = re.findall(r"\(\d+\) Exchange", plan)
         assert len(exchanges) == 1, plan[:2500]
@@ -84,23 +88,23 @@ class TestBucketedJoinOrders:
 
 
 class TestPartitionPrunedScan:
-    def test_scan_prunes_to_one_partition(self, spark):
+    def test_scan_prunes_to_one_partition(self, spark, sf):
         from tomasz_weight_tracker_spark.plans import REGISTRY
 
-        plan = _plan(REGISTRY["partition_pruned_scan"].build(spark, SF))
+        plan = _plan(REGISTRY["partition_pruned_scan"].build(spark, sf))
         # Directory partitioning turned the predicate into a partition
         # filter at the scan — the other event_type dirs are never read.
         assert re.search(r"PartitionFilters: \[.*event_type.*purchase", plan), (
             plan[:2500]
         )
-    def test_salt_is_in_the_join_keys_and_shape_is_shuffled_hash(self, spark):
+    def test_salt_is_in_the_join_keys_and_shape_is_shuffled_hash(self, spark, sf):
         """The mitigation must actually be IN the plan: a shuffled hash
         join whose keys carry the salt (so the hot key's rows hash to
         salt_buckets different reducers), with the dim exploded across
         salts (a Generate under the build side)."""
         from tomasz_weight_tracker_spark.plans import REGISTRY
 
-        plan = _plan(REGISTRY["skew_join_events"].build(spark, SF))
+        plan = _plan(REGISTRY["skew_join_events"].build(spark, sf))
         assert "ShuffledHashJoin" in plan, plan[:1500]
         # The join's equi-keys include the salt column on both sides.
         assert re.search(r"Left keys \[2\].*__salt", plan), plan[:2500]
@@ -109,12 +113,12 @@ class TestPartitionPrunedScan:
         assert re.search(r"\(\d+\) Generate", plan)
         assert "BroadcastHashJoin" not in plan
 
-    def test_hot_key_dominates_and_weights_flow_through(self, spark):
+    def test_hot_key_dominates_and_weights_flow_through(self, spark, sf):
         """~75% of probe rows collapse onto skew_key 0, and the weighted
         sum proves build-side attributes crossed the salted join."""
         from tomasz_weight_tracker_spark.plans import REGISTRY
 
-        rows = REGISTRY["skew_join_events"].build(spark, SF).collect()
+        rows = REGISTRY["skew_join_events"].build(spark, sf).collect()
         by_key = {r.skew_key: r for r in rows}
         total = sum(r.n for r in rows)
         assert 0 in by_key and by_key[0].n > 0.5 * total
@@ -123,7 +127,7 @@ class TestPartitionPrunedScan:
         from tomasz_weight_tracker_spark.plans.catalog import load
 
         some = next(r for r in rows if r.skew_key != 0)
-        ev = load(spark, SF, "events").filter(
+        ev = load(spark, sf, "events").filter(
             F.col("value").isNotNull() & (F.col("user_id") == some.skew_key)
         )
         qv_sum = ev.agg(

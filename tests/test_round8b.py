@@ -7,14 +7,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from tomasz_weight_tracker_spark.plans import REGISTRY
-from tomasz_weight_tracker_spark.plans.round8b import (
-    PQA_N,
-    PQA_TOPK,
-    PSPAN_K,
-    PSPAN_MIN,
-)
+from tomasz_weight_tracker_spark.plans.similarity_ann import PQA_N, PQA_TOPK
+from tomasz_weight_tracker_spark.plans.dedup_lsh import PSPAN_K, PSPAN_MIN
 
-SF_SMALL = "/root/testdata/sf0.001"
+
+@pytest.fixture
+def sf_small(sf_path):
+    return sf_path("sf0.001")
 
 
 @pytest.fixture(scope="module")
@@ -49,15 +48,15 @@ class TestDupPassageSpans:
         assert (r.id_a, r.id_b) == (0, 1)
         assert (r.a_start, r.b_start, r.span_toks) == (10, 4, 31)
 
-    def test_spans_are_verbatim_and_maximal(self, spark):
+    def test_spans_are_verbatim_and_maximal(self, spark, sf_small):
         # Every reported span on the real corpus must be (1) verbatim —
         # the token windows match exactly — and (2) maximal — extending
         # one token left or right breaks the match or a boundary.
-        spans = REGISTRY["dup_passage_spans"].build(spark, SF_SMALL).collect()
+        spans = REGISTRY["dup_passage_spans"].build(spark, sf_small).collect()
         assert spans, "sf0.001 corpus is known to contain shared passages"
         docs = {
             r["doc_id"]: r["toks"]
-            for r in spark.read.parquet(f"{SF_SMALL}/documents.parquet")
+            for r in spark.read.parquet(f"{sf_small}/documents.parquet")
             .select(
                 "doc_id",
                 F.split(F.trim(F.lower(F.col("text"))), r"\s+").alias("toks"),
@@ -74,8 +73,8 @@ class TestDupPassageSpans:
             if ia + n < len(ta) and ib + n < len(tb):
                 assert ta[ia + n] != tb[ib + n], "span extendable right"
 
-    def test_no_self_pairs_and_ordered(self, spark):
-        spans = REGISTRY["dup_passage_spans"].build(spark, SF_SMALL).collect()
+    def test_no_self_pairs_and_ordered(self, spark, sf_small):
+        spans = REGISTRY["dup_passage_spans"].build(spark, sf_small).collect()
         assert all(s.id_a < s.id_b for s in spans)
 
 
@@ -92,14 +91,14 @@ class TestDupPassageRebuild:
             [f"b{i}" for i in range(3)] + [f"b{i}" for i in range(3, 20)]
         )
 
-    def test_rebuild_consistent_with_spans(self, spark):
+    def test_rebuild_consistent_with_spans(self, spark, sf_small):
         # Every affected doc's drop count equals the size of the union
         # of its id_b-side span ranges (overlap-safe), and the kept
         # text is the complement of those positions in order.
-        spans = REGISTRY["dup_passage_spans"].build(spark, SF_SMALL).collect()
+        spans = REGISTRY["dup_passage_spans"].build(spark, sf_small).collect()
         rebuilt = {
             r.doc_id: r
-            for r in REGISTRY["dup_passage_rebuild"].build(spark, SF_SMALL).collect()
+            for r in REGISTRY["dup_passage_rebuild"].build(spark, sf_small).collect()
         }
         drop: dict[int, set[int]] = {}
         for s in spans:
@@ -109,7 +108,7 @@ class TestDupPassageRebuild:
         assert set(rebuilt) == set(drop)
         docs = {
             r["doc_id"]: r["toks"]
-            for r in spark.read.parquet(f"{SF_SMALL}/documents.parquet")
+            for r in spark.read.parquet(f"{sf_small}/documents.parquet")
             .select(
                 "doc_id",
                 F.split(F.trim(F.lower(F.col("text"))), r"\s+").alias("toks"),
@@ -126,8 +125,8 @@ class TestDupPassageRebuild:
 
 
 class TestPqRecallAudit:
-    def test_audit_invariants(self, spark):
-        r = REGISTRY["pq_recall_audit"].build(spark, SF_SMALL).collect()
+    def test_audit_invariants(self, spark, sf_small):
+        r = REGISTRY["pq_recall_audit"].build(spark, sf_small).collect()
         assert len(r) == 1
         r = r[0]
         assert r.n_queries == PQA_N and r.k == PQA_TOPK
@@ -180,15 +179,15 @@ class TestPassageSpanProperties:
 
 
 class TestDecileCutValues:
-    def test_cuts_are_order_statistics(self, spark):
+    def test_cuts_are_order_statistics(self, spark, sf_small):
         import math
 
-        rows = REGISTRY["decile_cut_values"].build(spark, SF_SMALL).collect()
+        rows = REGISTRY["decile_cut_values"].build(spark, sf_small).collect()
         by_type: dict[str, dict[int, float]] = {}
         for r in rows:
             by_type.setdefault(r.event_type, {})[r.decile] = r.cut_value
         vals = (
-            spark.read.parquet(f"{SF_SMALL}/events.parquet")
+            spark.read.parquet(f"{sf_small}/events.parquet")
             .filter(F.col("value").isNotNull())
             .select("event_type", "value")
             .collect()
@@ -206,14 +205,14 @@ class TestDecileCutValues:
 
 
 class TestEvalDecontamSpans:
-    def test_roles_and_verbatim_evidence(self, spark):
-        from tomasz_weight_tracker_spark.plans.round8b import DECON_EVAL_MOD
+    def test_roles_and_verbatim_evidence(self, spark, sf_small):
+        from tomasz_weight_tracker_spark.plans.dedup_lsh import DECON_EVAL_MOD
 
-        rows = REGISTRY["eval_decontam_spans"].build(spark, SF_SMALL).collect()
+        rows = REGISTRY["eval_decontam_spans"].build(spark, sf_small).collect()
         assert rows
         docs = {
             r["doc_id"]: r["toks"]
-            for r in spark.read.parquet(f"{SF_SMALL}/documents.parquet")
+            for r in spark.read.parquet(f"{sf_small}/documents.parquet")
             .select(
                 "doc_id",
                 F.split(F.trim(F.lower(F.col("text"))), r"\s+").alias("toks"),
@@ -230,10 +229,10 @@ class TestEvalDecontamSpans:
 
 
 class TestTermProximitySearch:
-    def test_hits_verified_against_raw_positions(self, spark):
-        from tomasz_weight_tracker_spark.plans.round8b import PROX_WINDOW
+    def test_hits_verified_against_raw_positions(self, spark, sf_small):
+        from tomasz_weight_tracker_spark.plans.similarity_ann import PROX_WINDOW
 
-        rows = REGISTRY["term_proximity_search"].build(spark, SF_SMALL).collect()
+        rows = REGISTRY["term_proximity_search"].build(spark, sf_small).collect()
         assert rows
         terms = {(r.term_a, r.term_b) for r in rows}
         assert len(terms) == 1  # one probe pair, corpus-derived
@@ -242,7 +241,7 @@ class TestTermProximitySearch:
         # Recompute one document's pair count from raw token positions.
         r0 = min(rows, key=lambda r: r.doc_id)
         toks = (
-            spark.read.parquet(f"{SF_SMALL}/documents.parquet")
+            spark.read.parquet(f"{sf_small}/documents.parquet")
             .filter(F.col("doc_id") == r0.doc_id)
             .select(F.split(F.trim(F.lower(F.col("text"))), r"\s+").alias("t"))
             .collect()[0]["t"]
@@ -255,21 +254,21 @@ class TestTermProximitySearch:
 
 
 class TestIvfadcTopk:
-    def test_ranking_shape_and_cell_pruning(self, spark):
+    def test_ranking_shape_and_cell_pruning(self, spark, sf_small):
         from tomasz_weight_tracker_spark.operators.similarity import (
             dot,
             ivf_assign,
             ivf_train,
         )
         from tomasz_weight_tracker_spark.plans.catalog import load
-        from tomasz_weight_tracker_spark.plans.round8b import (
+        from tomasz_weight_tracker_spark.plans.similarity_ann import (
             IVFADC_COARSE,
             IVFADC_NPROBE,
             IVFADC_NQ,
             IVFADC_TOPK,
         )
 
-        rows = REGISTRY["embed_ivfadc_topk"].build(spark, SF_SMALL).collect()
+        rows = REGISTRY["embed_ivfadc_topk"].build(spark, sf_small).collect()
         byq: dict[int, list] = {}
         for r in rows:
             byq.setdefault(r.q_id, []).append(r)
@@ -283,7 +282,7 @@ class TestIvfadcTopk:
 
         # The pruning claim: every returned neighbor lives in one of
         # the query's nprobe probed coarse cells.
-        e = load(spark, SF_SMALL, "embeddings").select(
+        e = load(spark, sf_small, "embeddings").select(
             "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
         )
         coarse = ivf_train(e, n_centroids=IVFADC_COARSE)
@@ -307,8 +306,8 @@ class TestIvfadcTopk:
 
 
 class TestIvfadcRecallAudit:
-    def test_audit_invariants_and_comparability(self, spark):
-        r = REGISTRY["ivfadc_recall_audit"].build(spark, SF_SMALL).collect()
+    def test_audit_invariants_and_comparability(self, spark, sf_small):
+        r = REGISTRY["ivfadc_recall_audit"].build(spark, sf_small).collect()
         assert len(r) == 1
         r = r[0]
         assert r.n_queries == PQA_N and r.k == PQA_TOPK
@@ -318,21 +317,21 @@ class TestIvfadcRecallAudit:
         assert r.recall_ppm == r.n_hit * 1_000_000 // r.n_true
         # Same sample and same exact ground truth as pq_recall_audit,
         # so the two rows decompose the recall budget comparably.
-        p = REGISTRY["pq_recall_audit"].build(spark, SF_SMALL).collect()[0]
+        p = REGISTRY["pq_recall_audit"].build(spark, sf_small).collect()[0]
         assert (p.n_queries, p.n_true) == (r.n_queries, r.n_true)
 
 
 class TestTrainingShardWrite:
-    def test_roundtrip_manifest_and_contiguous_files(self, spark):
+    def test_roundtrip_manifest_and_contiguous_files(self, spark, sf_small):
         from pyspark.sql import functions as SF
 
         from tomasz_weight_tracker_spark.session import fixed_scratch_dir
 
         manifest = sorted(
-            map(tuple, REGISTRY["training_shard_write"].build(spark, SF_SMALL).collect())
+            map(tuple, REGISTRY["training_shard_write"].build(spark, sf_small).collect())
         )
         direct = sorted(
-            map(tuple, REGISTRY["corpus_shuffle_shards"].build(spark, SF_SMALL).collect())
+            map(tuple, REGISTRY["corpus_shuffle_shards"].build(spark, sf_small).collect())
         )
         assert manifest == direct
         # Each physical file must hold a CONTIGUOUS, non-overlapping
@@ -352,8 +351,8 @@ class TestTrainingShardWrite:
 
 
 class TestIncrementalShardManifest:
-    def test_append_only_growth_with_carry_shards(self, spark):
-        rows = REGISTRY["incremental_shard_manifest"].build(spark, SF_SMALL).collect()
+    def test_append_only_growth_with_carry_shards(self, spark, sf_small):
+        rows = REGISTRY["incremental_shard_manifest"].build(spark, sf_small).collect()
         assert rows
         rows.sort(key=lambda r: r.shard_id)
         # Contiguous shard ids from 0; batches are non-decreasing along
@@ -368,8 +367,8 @@ class TestIncrementalShardManifest:
 
 
 class TestBpeCorpusTokens:
-    def test_accounting_invariants(self, spark):
-        rows = REGISTRY["bpe_corpus_tokens"].build(spark, SF_SMALL).collect()
+    def test_accounting_invariants(self, spark, sf_small):
+        rows = REGISTRY["bpe_corpus_tokens"].build(spark, sf_small).collect()
         assert rows
         for r in rows:
             # Each qualifying word is >= 2 chars, and BPE tokens can

@@ -2,11 +2,12 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tomasz_weight_tracker_spark.operators.text_analysis import STOPWORDS
 from tomasz_weight_tracker_spark.plans import REGISTRY
-from tomasz_weight_tracker_spark.plans.round8c import (
+from tomasz_weight_tracker_spark.plans.text_curation import (
     GOPHER_ALPHA_PCT,
     GOPHER_MAX_MWL,
     GOPHER_MIN_MWL,
@@ -14,13 +15,16 @@ from tomasz_weight_tracker_spark.plans.round8c import (
     GOPHER_MIN_WORDS,
 )
 
-SF_SMALL = "/root/testdata/sf0.001"
+
+@pytest.fixture
+def sf_small(sf_path):
+    return sf_path("sf0.001")
 
 
 class TestSourceLeakageMatrix:
-    def test_matrix_accounts_for_every_span(self, spark):
-        spans = REGISTRY["dup_passage_spans"].build(spark, SF_SMALL).collect()
-        matrix = REGISTRY["source_leakage_matrix"].build(spark, SF_SMALL).collect()
+    def test_matrix_accounts_for_every_span(self, spark, sf_small):
+        spans = REGISTRY["dup_passage_spans"].build(spark, sf_small).collect()
+        matrix = REGISTRY["source_leakage_matrix"].build(spark, sf_small).collect()
         assert sum(r.n_spans for r in matrix) == len(spans)
         assert sum(r.dup_tokens for r in matrix) == sum(s.span_toks for s in spans)
         for r in matrix:
@@ -29,8 +33,8 @@ class TestSourceLeakageMatrix:
 
 
 class TestTokenizerFertility:
-    def test_fertility_bounds(self, spark):
-        rows = REGISTRY["tokenizer_fertility_by_lang"].build(spark, SF_SMALL).collect()
+    def test_fertility_bounds(self, spark, sf_small):
+        rows = REGISTRY["tokenizer_fertility_by_lang"].build(spark, sf_small).collect()
         assert rows
         for r in rows:
             # At least one token per word; BPE at 8 merges can't beat
@@ -41,14 +45,14 @@ class TestTokenizerFertility:
 
 
 class TestGopherRules:
-    def test_rules_recomputed_in_python(self, spark):
+    def test_rules_recomputed_in_python(self, spark, sf_small):
         docs = {
             r["doc_id"]: r["text"]
-            for r in spark.read.parquet(f"{SF_SMALL}/documents.parquet")
+            for r in spark.read.parquet(f"{sf_small}/documents.parquet")
             .select("doc_id", "text")
             .collect()
         }
-        rows = REGISTRY["gopher_quality_rules"].build(spark, SF_SMALL).collect()
+        rows = REGISTRY["gopher_quality_rules"].build(spark, sf_small).collect()
         assert len(rows) == len(docs)
         sw = set(STOPWORDS)
         kept = 0

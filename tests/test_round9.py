@@ -8,7 +8,10 @@ from pyspark.sql import functions as F
 
 from tomasz_weight_tracker_spark.plans import REGISTRY
 
-SF_SMALL = "/root/testdata/sf0.001"
+
+@pytest.fixture
+def sf_small(sf_path):
+    return sf_path("sf0.001")
 
 
 def _write_docs(spark, root: str, texts: list[str]) -> None:
@@ -59,12 +62,12 @@ class TestDupPassageMaximal:
         r = got[0]
         assert (r.a_start, r.span_toks, r.n_fragments) == (5, 32, 2)
 
-    def test_fragment_conservation_and_disjointness(self, spark):
+    def test_fragment_conservation_and_disjointness(self, spark, sf_small):
         # On the real corpus: every dup_passage_spans fragment lands in
         # exactly one maximal island, and a pair's maximal spans are
         # pairwise disjoint AND non-touching (else they'd have merged).
-        frags = REGISTRY["dup_passage_spans"].build(spark, SF_SMALL).collect()
-        merged = REGISTRY["dup_passage_maximal"].build(spark, SF_SMALL).collect()
+        frags = REGISTRY["dup_passage_spans"].build(spark, sf_small).collect()
+        merged = REGISTRY["dup_passage_maximal"].build(spark, sf_small).collect()
         assert sum(r.n_fragments for r in merged) == len(frags)
         by_pair: dict[tuple, list] = {}
         for r in merged:
@@ -85,10 +88,7 @@ class TestCapTolerantBridging:
         # same-diagonal bridge (gap <= k) must still report ONE
         # maximal 48-token span — pre-bridge this split into two
         # fragments around the capped gram.
-        from tomasz_weight_tracker_spark.plans.round8b import (
-            PSPAN_DF_MAX,
-            PSPAN_K,
-        )
+        from tomasz_weight_tracker_spark.plans.dedup_lsh import PSPAN_DF_MAX, PSPAN_K
 
         boiler = [f"bl{i}" for i in range(PSPAN_K)]
         passage = (
@@ -119,12 +119,14 @@ class TestCapTolerantBridging:
 
 
 class TestIvfadcAutotune:
-    def test_sweep_shape_and_choice_rule(self, spark):
-        from tomasz_weight_tracker_spark.plans.round8b import IVFADC_COARSE
-        from tomasz_weight_tracker_spark.plans.round9 import IVFADC_TUNE_PCT
+    def test_sweep_shape_and_choice_rule(self, spark, sf_small):
+        from tomasz_weight_tracker_spark.plans.similarity_ann import (
+            IVFADC_COARSE,
+            IVFADC_TUNE_PCT,
+        )
 
         rows = sorted(
-            REGISTRY["ivfadc_autotune"].build(spark, SF_SMALL).collect(),
+            REGISTRY["ivfadc_autotune"].build(spark, sf_small).collect(),
             key=lambda r: r.nprobe,
         )
         assert [r.nprobe for r in rows] == list(range(1, IVFADC_COARSE + 1))
@@ -146,7 +148,7 @@ class TestIvfadcAutotune:
 
 
 class TestStreamingLshAssign:
-    def test_drained_stream_equals_one_shot_probe(self, spark):
+    def test_drained_stream_equals_one_shot_probe(self, spark, sf_small):
         # The drained 3-micro-batch replay must equal the one-shot
         # probe over the whole corpus with everything marked new —
         # the batching-invariance theorem, checked engine-side (the
@@ -163,9 +165,9 @@ class TestStreamingLshAssign:
 
         drained = {
             (r.doc_id, r.dup_of)
-            for r in REGISTRY["streaming_lsh_assign"].build(spark, SF_SMALL).collect()
+            for r in REGISTRY["streaming_lsh_assign"].build(spark, sf_small).collect()
         }
-        docs = load(spark, SF_SMALL, "documents").select("doc_id", "text")
+        docs = load(spark, sf_small, "documents").select("doc_id", "text")
         sigs = (
             D.minhash_signature(docs, "text", k=LSH_K)
             .drop("text")
@@ -190,14 +192,14 @@ class TestStreamingLshAssign:
 
 
 class TestLshBandAutotune:
-    def test_sweep_monotone_and_choice_rule(self, spark):
-        from tomasz_weight_tracker_spark.plans.round9 import (
+    def test_sweep_monotone_and_choice_rule(self, spark, sf_small):
+        from tomasz_weight_tracker_spark.plans.dedup_lsh import (
             _LSH_BAND_SWEEP,
             LSH_TUNE_PCT,
         )
 
         rows = sorted(
-            REGISTRY["lsh_band_autotune"].build(spark, SF_SMALL).collect(),
+            REGISTRY["lsh_band_autotune"].build(spark, sf_small).collect(),
             key=lambda r: r.bands,
         )
         assert [r.bands for r in rows] == list(_LSH_BAND_SWEEP)
@@ -276,15 +278,15 @@ class TestInferredCsvScan:
 
 
 class TestGopherRuleAttribution:
-    def test_attribution_consistent_with_boolean_view(self, spark):
+    def test_attribution_consistent_with_boolean_view(self, spark, sf_small):
         rules = ["word_count", "mean_word_len", "stopwords", "alpha_words"]
         flags = {
             r.doc_id: {n: r[f"r_{n}"] for n in rules}
-            for r in REGISTRY["gopher_quality_rules"].build(spark, SF_SMALL).collect()
+            for r in REGISTRY["gopher_quality_rules"].build(spark, sf_small).collect()
         }
         attr = {
             r.rule: r
-            for r in REGISTRY["gopher_rule_attribution"].build(spark, SF_SMALL).collect()
+            for r in REGISTRY["gopher_rule_attribution"].build(spark, sf_small).collect()
         }
         assert set(attr) == set(rules)
         for n in rules:
@@ -303,12 +305,12 @@ class TestGopherRuleAttribution:
 
 
 class TestSourceTemperatureMix:
-    def test_flattening_and_conservation(self, spark):
+    def test_flattening_and_conservation(self, spark, sf_small):
         import math
 
-        from tomasz_weight_tracker_spark.plans.round9 import TMIX_BUDGET_PCT
+        from tomasz_weight_tracker_spark.plans.text_curation import TMIX_BUDGET_PCT
 
-        rows = REGISTRY["source_temperature_mix"].build(spark, SF_SMALL).collect()
+        rows = REGISTRY["source_temperature_mix"].build(spark, sf_small).collect()
         assert rows
         tot_avail = sum(r.tokens_avail for r in rows)
         budget = tot_avail * TMIX_BUDGET_PCT // 100

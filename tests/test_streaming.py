@@ -345,7 +345,7 @@ class TestTransformWithState:
         assert ("streaming_tws_counts" in REGISTRY) == enabled
 
 
-    def test_tws_user_stats_matches_batch(self, spark):
+    def test_tws_user_stats_matches_batch(self, spark, sf_path):
         """transformWithStateInPandas replay == batch GROUP BY.  Skipped
         where the API's protobuf dependency is absent (this container's
         google.protobuf is broken); the processor/plumbing is still
@@ -359,7 +359,7 @@ class TestTransformWithState:
             tws_user_stats,
         )
 
-        sf_small = "/root/testdata/sf0.001"
+        sf_small = sf_path("sf0.001")
         try:
             from google.protobuf import descriptor  # noqa: F401
         except ImportError:
@@ -416,10 +416,10 @@ class TestMultiBatchReplay:
     micro-batches through the SAME operators — and checks the drained
     results still equal the batch semantics the oracles encode."""
 
-    def _split_events(self, spark, tmp_path, n_files=4):
+    def _split_events(self, spark, sf_path, tmp_path, n_files=4):
         from tomasz_weight_tracker_spark.plans.catalog import load
 
-        ev = load(spark, "/root/testdata/sf0.001", "events")
+        ev = load(spark, sf_path("sf0.001"), "events")
         out = str(tmp_path / "evsplit")
         # Time-ordered files so watermarks advance monotonically
         # between batches (the realistic replay of an append log).
@@ -432,10 +432,10 @@ class TestMultiBatchReplay:
         ).parquet(out)
         return ev, out
 
-    def test_stateful_counts_across_batches(self, spark, tmp_path):
+    def test_stateful_counts_across_batches(self, spark, tmp_path, sf_path):
         from tomasz_weight_tracker_spark.streaming.pipelines import drain_to_memory
 
-        ev, out = self._split_events(spark, tmp_path)
+        ev, out = self._split_events(spark, sf_path, tmp_path)
         schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
         stream = (
             spark.readStream.schema(schema)
@@ -484,10 +484,10 @@ class TestMultiBatchReplay:
         }
         assert got == want
 
-    def test_streaming_dedup_across_batches(self, spark, tmp_path):
+    def test_streaming_dedup_across_batches(self, spark, tmp_path, sf_path):
         from tomasz_weight_tracker_spark.streaming.pipelines import drain_to_memory
 
-        ev, out = self._split_events(spark, tmp_path)
+        ev, out = self._split_events(spark, sf_path, tmp_path)
         schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
         stream = (
             spark.readStream.schema(schema)

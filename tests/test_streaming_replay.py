@@ -21,9 +21,13 @@ observes.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-SF = "/root/testdata/sf0.001"
+
+@pytest.fixture
+def sf(sf_path):
+    return sf_path("sf0.001")
 
 
 def _drained(df):
@@ -36,21 +40,21 @@ def _run_schedule(apply_batch, batches, schedule):
         apply_batch(batches[bid], bid)
 
 
-def _docs_batches(spark, n_batches, cols):
-    docs = spark.read.parquet(f"{SF}/documents.parquet").select(*cols)
+def _docs_batches(spark, sf, n_batches, cols):
+    docs = spark.read.parquet(f"{sf}/documents.parquet").select(*cols)
     return {
         r: docs.filter(F.col("doc_id") % n_batches == r) for r in range(n_batches)
     }
 
 
 class TestUrlDedupReplay:
-    def test_replayed_batches_drain_identically(self, spark, tmp_path):
-        from tomasz_weight_tracker_spark.plans.round10 import (
+    def test_replayed_batches_drain_identically(self, spark, tmp_path, sf):
+        from tomasz_weight_tracker_spark.plans.streaming_ingest import (
             make_url_dedup_batch,
             url_dedup_fold,
         )
 
-        batches = _docs_batches(spark, 2, ["doc_id"])
+        batches = _docs_batches(spark, sf, 2, ["doc_id"])
         clean_log = str(tmp_path / "clean")
         chaos_log = str(tmp_path / "chaos")
         _run_schedule(make_url_dedup_batch(clean_log), batches, [0, 1])
@@ -59,16 +63,16 @@ class TestUrlDedupReplay:
         chaos = _drained(url_dedup_fold(spark, chaos_log))
         assert clean == chaos and len(clean) > 0
 
-    def test_append_mode_would_fail(self, spark, tmp_path):
+    def test_append_mode_would_fail(self, spark, tmp_path, sf):
         """The instrument detects the r11 bug class: an APPEND-log twin
         of the same sink must drain DIFFERENTLY under replay (the sum
         leg doubles).  If this stops failing, the test above has lost
         its teeth."""
-        from tomasz_weight_tracker_spark.plans.round10 import (
+        from tomasz_weight_tracker_spark.plans.dedup_lsh import (
             _url_gen_spark,
             url_canonicalize,
-            url_dedup_fold,
         )
+        from tomasz_weight_tracker_spark.plans.streaming_ingest import url_dedup_fold
 
         def buggy_append_batch(log):
             def apply_batch(batch_df, _batch_id):
@@ -83,7 +87,7 @@ class TestUrlDedupReplay:
 
             return apply_batch
 
-        batches = _docs_batches(spark, 2, ["doc_id"])
+        batches = _docs_batches(spark, sf, 2, ["doc_id"])
         clean_log = str(tmp_path / "clean")
         chaos_log = str(tmp_path / "chaos")
         _run_schedule(buggy_append_batch(clean_log), batches, [0, 1])
@@ -94,13 +98,13 @@ class TestUrlDedupReplay:
 
 
 class TestLineDedupReplay:
-    def test_replayed_batches_drain_identically(self, spark, tmp_path):
-        from tomasz_weight_tracker_spark.plans.round10b import (
+    def test_replayed_batches_drain_identically(self, spark, tmp_path, sf):
+        from tomasz_weight_tracker_spark.plans.streaming_ingest import (
             line_dedup_fold,
             make_line_dedup_batch,
         )
 
-        batches = _docs_batches(spark, 2, ["doc_id", "text"])
+        batches = _docs_batches(spark, sf, 2, ["doc_id", "text"])
         clean_log = str(tmp_path / "clean")
         chaos_log = str(tmp_path / "chaos")
         _run_schedule(make_line_dedup_batch(clean_log), batches, [0, 1])
@@ -111,19 +115,19 @@ class TestLineDedupReplay:
 
 
 class TestLshAssignReplay:
-    def test_replayed_batches_drain_identically(self, spark, tmp_path):
+    def test_replayed_batches_drain_identically(self, spark, tmp_path, sf):
         """Replay safety by ABSORPTION (append + min-fold) rather than
         overwrite: the replayed batch re-appends updates and store
         signatures; the drained keyed MIN must not move.  This also
         covers the store leg — the replayed batch probes a store that
         already contains its own signatures (same-id rows must never
         become self-assignments)."""
-        from tomasz_weight_tracker_spark.plans.round9 import (
+        from tomasz_weight_tracker_spark.plans.streaming_ingest import (
             lsh_assign_fold,
             make_lsh_assign_batch,
         )
 
-        batches = _docs_batches(spark, 2, ["doc_id", "text"])
+        batches = _docs_batches(spark, sf, 2, ["doc_id", "text"])
         out = {}
         for label, schedule in (("clean", [0, 1]), ("chaos", [0, 0, 1, 1])):
             sig = str(tmp_path / label / "sig")
@@ -134,12 +138,12 @@ class TestLshAssignReplay:
 
 
 class TestUpsertReplay:
-    def test_replayed_batches_drain_identically(self, spark, tmp_path):
+    def test_replayed_batches_drain_identically(self, spark, tmp_path, sf):
         from tomasz_weight_tracker_spark.streaming.pipelines import (
             make_upsert_batch,
         )
 
-        docs = spark.read.parquet(f"{SF}/documents.parquet").select(
+        docs = spark.read.parquet(f"{sf}/documents.parquet").select(
             "doc_id", "source", "n_chars"
         )
         batches = {r: docs.filter(F.col("doc_id") % 2 == r) for r in range(2)}

@@ -9,10 +9,13 @@ already splits).
 
 from __future__ import annotations
 
+import shutil
+from contextlib import contextmanager
+
 import pytest
 
 from tomasz_weight_tracker_spark.plans import REGISTRY
-from tomasz_weight_tracker_spark.plans.catalog import load
+from tomasz_weight_tracker_spark.plans.catalog import _file_splits, load
 
 SMALL = "sf0.001"  # 64 KiB documents: below _WIDEN_MIN_BYTES
 BENCH = "sf0.1"  # 584 KiB documents: gate on (1 split)
@@ -72,4 +75,43 @@ class TestWidenGate:
         # exact_dedup opts out at its load site (measured x0.51 WITH
         # widen): no round-robin exchange even at the bench SF.
         plan = _formatted(REGISTRY["exact_dedup"].build(spark, sf_bench))
+        assert not _roundrobin(plan), plan[:1500]
+
+
+@contextmanager
+def _max_partition_bytes(spark, value: str):
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+
+class TestFileSplits:
+    """The split math reads maxPartitionBytes as Spark resolved it: the
+    conf string keeps its unit, so parsing it as a byte count fails."""
+
+    @pytest.mark.parametrize(
+        "conf, size, splits",
+        [
+            ("64m", 100 << 20, 2),
+            ("1g", 200 << 20, 1),
+            (str(32 << 20), 100 << 20, 4),
+        ],
+    )
+    def test_split_count_honours_unit(self, spark, conf, size, splits):
+        with _max_partition_bytes(spark, conf):
+            assert _file_splits(spark, [size, 1]) == splits + 1
+
+    def test_gate_off_when_unit_limit_splits_the_file(self, spark, sf_bench, tmp_path):
+        # 584 KiB over a "64k" split limit is 10 splits: the scan already
+        # parallelizes, so the widen must not fire.
+        shutil.copy(f"{sf_bench}/documents.parquet", tmp_path / "documents.parquet")
+        with _max_partition_bytes(spark, "64k"):
+            plan = _formatted(load(spark, str(tmp_path), "documents"))
         assert not _roundrobin(plan), plan[:1500]

@@ -26,7 +26,7 @@ hash-exchange on the word key that every window in the round reuses
 not recompute rounds 1..r-1 (same reasoning as similarity.ivf_train).
 
 Semantics notes (documented, deterministic, mirrored by the SQL
-oracle in plans/round7.py):
+oracle in plans/lm_tokenizer.py):
 
 - pair counts are NAIVE over adjacent positions — "aaa" counts (a,a)
   twice — matching the original BPE formulation's counting step;

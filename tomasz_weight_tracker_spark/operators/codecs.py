@@ -604,7 +604,7 @@ def resize_nearest(decoded: dict, out_w: int, out_h: int) -> dict | None:
 # quantization + Huffman tables (public constants), 4:4:4 or grayscale,
 # with PORTABLE away-from-zero coefficient rounding so DC-only blobs
 # decode to closed-form values an SQL oracle can replay exactly (see
-# plans/round11.py:media_decode_jpeg).
+# plans/media.py:media_decode_jpeg).
 
 _ZIGZAG = [
     0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,

@@ -95,7 +95,7 @@ def lm_model(
     """Train the bigram LM on the ``doc_id % train_mod == 0`` reference
     split: returns (unigram counts, bigram counts, vocab-size scalar) —
     all VOCABULARY-bounded frames, the model a stream scorer broadcasts
-    (see plans/round7.py:streaming_lm_filter)."""
+    (see plans/streaming_ingest.py:streaming_lm_filter)."""
     train = _toked(docs).filter(F.col("doc_id") % train_mod == 0)
     uni = (
         train.select(F.explode("t").alias("w"))
@@ -184,8 +184,8 @@ def sql_lm_chain(
 ) -> str:
     """The WITH-chain of :func:`sql_lm_score` up to the per-doc ``agg``
     relation — shared with the calibrated variant's oracle
-    (plans/round7.py:lm_score_calibrated) and, via ``source``/``bare``,
-    with the end-to-end curation composition (plans/round8.py), which
+    (plans/lm_tokenizer.py:lm_score_calibrated) and, via ``source``/``bare``,
+    with the end-to-end curation composition (plans/text_curation.py), which
     splices it mid-WITH over the dedup-survivor relation.  Built from
     one generator that :func:`sql_lm_score` appends its final SELECT
     to, so the variants can never drift (the earlier version

@@ -12,13 +12,11 @@ from . import scale_ops  # noqa: F401  (HLL sketch, stratified sample, z-order, 
 from . import python_api  # noqa: F401  (applyInPandas, pandas UDAF, Python UDTF)
 from . import pathbound  # noqa: F401  (W1/W2/W4 pipelines gate-embedded via derived inputs)
 from . import advanced  # noqa: F401  (SCD2, PageRank, sorted-neighborhood, bitmap distinct)
-from . import round6  # noqa: F401  (span dedup, bucketed join, partition-pruned scan)
-from . import round7  # noqa: F401  (paged source gate, BPE vocab training)
-from . import round8  # noqa: F401  (star-edge dedup, sparse perceptron, media phash)
-from . import round8b  # noqa: F401  (passage spans, PQ recall audit, BPE corpus tokens)
-from . import round8c  # noqa: F401  (source leakage matrix, fertility, Gopher rules)
-from . import round9  # noqa: F401  (maximal passage spans, IVFADC autotune)
-from . import round10  # noqa: F401  (S2/S8/S12 gate closure, URL dedup)
-from . import round10b  # noqa: F401  (keep-best dedup, line scrub, bitext mining, JSONL)
-from . import round11  # noqa: F401  (IVF bitext mining, LSH keep-best)
-from . import round12  # noqa: F401  (trained-quantizer bitext, IVF recall audit)
+from . import dedup_lsh  # noqa: F401  (LSH edges/clusters, passage spans, line/URL dedup)
+from . import similarity_ann  # noqa: F401  (PQ, IVFADC, proximity search, bitext mining)
+from . import text_curation  # noqa: F401  (mixing, Gopher rules, curation end to end)
+from . import lm_tokenizer  # noqa: F401  (BPE, bigram LM, perceptron, DSIR)
+from . import media  # noqa: F401  (GIF/JPEG decode, perceptual-hash near-dups)
+from . import streaming_ingest  # noqa: F401  (foreachBatch ingestion folds)
+from . import file_pipelines  # noqa: F401  (CSV/HTML/JSONL/report, paged source, shards)
+from . import relational  # noqa: F401  (bucketing, partition pruning, Bloom, deciles)

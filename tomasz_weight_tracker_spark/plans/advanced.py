@@ -347,7 +347,7 @@ def q_snm_near_dup(spark, sf_dir):
 
 def snm_near_dup_frame(docs, slice_mod: int | None = None):
     """The SNM chain over a documents frame — shared by the flagship
-    query and its sf10 bounded-slice twin (round11.py).  ``slice_mod``
+    query and its sf10 bounded-slice twin (below).  ``slice_mod``
     keeps only blocks with md5(block-key) % slice_mod == 0 (whole-block
     slicing — exact, since every window partitions by the block key)."""
     # Unicode-correct compare head: keep letters/digits of ANY script.
@@ -2009,3 +2009,31 @@ def q_incremental_topk_events(spark, sf_dir):
             tiebreak_cols=["event_id"],
         )
     return out
+
+
+# ===========================================================================
+# snm_near_dup's sf10 bounded-slice twin (see catalog.py's slice twins)
+# ===========================================================================
+
+_SNM_SLICE_MOD = 8
+
+
+@register(
+    "snm_near_dup_blockslice",
+    _snm_oracle(slice_mod=_SNM_SLICE_MOD),
+    survey_ids=(),
+    doc="snm_near_dup's sf10 value-check twin: the identical sorted-"
+    "neighborhood chain over the ~1/8 of coarse BLOCKS whose "
+    "md5(block-key) % 8 == 0.  Blocks (6-char sort-key prefixes) are "
+    "the partition key of every window in the chain — run cap, "
+    "neighbor leads — so whole-block slicing is exact: every kept "
+    "block's pairs are bit-identical to the full run's.  The oracle "
+    "filters blocks BEFORE its pair CTEs, cutting the intermediate "
+    "the 100x-verbatim sf10 corpus used to OOM (24 GB cap) by the "
+    "slice factor.  The block hash is the portable md5_long pair, so "
+    "both engines select the same blocks.",
+)
+def q_snm_near_dup_blockslice(spark, sf_dir):
+    return snm_near_dup_frame(
+        load(spark, sf_dir, "documents"), slice_mod=_SNM_SLICE_MOD
+    )

@@ -1,0 +1,2372 @@
+"""Dedup catalog queries: MinHash-LSH near-dup edges, clusters and their
+keep policies, passage spans, line and URL dedup, and the LSH audits.
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import Window
+from pyspark.sql import functions as F
+
+from ..functions import md5_long, md5_long_sql, tokens
+from ..operators import dedup as D
+from ..operators import similarity as S
+from ..operators.text_analysis import sql_tokens
+from .catalog import load, register, trained_ivf_centroids
+from .llm_ops import (
+    LSH_BANDS,
+    LSH_CAP,
+    LSH_K,
+    LSH_THRESH,
+    TOKS,
+    _BANDED_SQL,
+    _SIG_MATCHES,
+)
+
+
+# ===========================================================================
+# C4-style span dedup: aligned K-token chunks, cross-doc exact removal
+# ===========================================================================
+
+_SPAN_K = 8
+
+
+@register(
+    "span_dedup_rebuild",
+    f"""
+    WITH t AS (
+        SELECT doc_id, string_split(text, ' ') AS arr FROM documents
+    ), e AS (
+        SELECT doc_id, arr,
+               unnest(range(0, cast(ceil(len(arr) / {_SPAN_K}.0) AS BIGINT)))::BIGINT
+                   AS pos
+        FROM t
+    ), ch AS (
+        SELECT doc_id, pos,
+               array_to_string(arr[pos * {_SPAN_K} + 1 : pos * {_SPAN_K} + {_SPAN_K}], ' ')
+                   AS chunk
+        FROM e
+    ), d AS (
+        SELECT md5(chunk) AS h, count(DISTINCT doc_id)::BIGINT AS nd
+        FROM ch GROUP BY 1
+    )
+    SELECT ch.doc_id,
+           count(*)::BIGINT AS n_chunks,
+           sum(CASE WHEN d.nd > 1 THEN 1 ELSE 0 END)::BIGINT AS n_dup_chunks,
+           coalesce(array_to_string(
+               list(ch.chunk ORDER BY ch.pos) FILTER (WHERE d.nd <= 1), ' '
+           ), '') AS kept_text
+    FROM ch JOIN d ON md5(ch.chunk) = d.h
+    GROUP BY ch.doc_id
+    """,
+    survey_ids=("A7", "G2"),
+    doc="C4-style span-level dedup APPLIED, not just measured: every "
+    f"document splits into aligned {_SPAN_K}-token chunks, a chunk "
+    "that occurs in more than one distinct document is removed from "
+    "ALL of them, and the surviving chunks are re-joined in order — "
+    "the cross-document boilerplate-excision step of a pretraining "
+    "pipeline (C4 did it at 3-sentence spans; these synthetic docs "
+    "have no sentence marks, so the span is token-aligned), "
+    "complementing boilerplate_ngrams (which measures) and "
+    "exact_dedup (whole-doc).  Plan: chunking is NATIVE array code "
+    "(transform over sequence + slice — no explode for the chunk "
+    "build, no Python), then one shuffle keyed on the chunk hash for "
+    "the distinct-doc count, a hash join back, and one keyed "
+    "aggregation to rebuild each doc (sorted collect_list, bounded "
+    "by the doc's own chunk count).  Corpus cost is linear; a chunk "
+    "hot enough to blow the join key is by definition boilerplate "
+    "and lands in the removed set.",
+)
+def q_span_dedup_rebuild(spark, sf_dir):
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+    k = _SPAN_K
+    ch = (
+        docs.withColumn("__arr", F.split(F.col("text"), " "))
+        .select(
+            "doc_id",
+            F.explode(
+                F.expr(
+                    f"transform(sequence(0, cast(ceil(size(__arr) / {k}.0) as int) - 1), "
+                    f"i -> struct(cast(i as bigint) as pos, "
+                    f"array_join(slice(__arr, i * {k} + 1, {k}), ' ') as chunk))"
+                )
+            ).alias("c"),
+        )
+        .select("doc_id", "c.pos", "c.chunk", F.md5("c.chunk").alias("h"))
+    )
+    nd = ch.groupBy("h").agg(F.count_distinct("doc_id").alias("nd"))
+    kept = F.array_join(
+        F.transform(
+            F.array_sort(
+                F.collect_list(
+                    F.when(
+                        F.col("nd") <= 1, F.struct(F.col("pos"), F.col("chunk"))
+                    )
+                )
+            ),
+            lambda x: x["chunk"],
+        ),
+        " ",
+    )
+    return (
+        ch.join(nd, "h")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_chunks"),
+            F.sum(F.when(F.col("nd") > 1, 1).otherwise(0))
+            .cast("long")
+            .alias("n_dup_chunks"),
+            kept.alias("kept_text"),
+        )
+    )
+
+
+# ===========================================================================
+# LSH recall/precision audit (round 7c): measure the candidate
+# generator against exact ground truth on a fixed-size sample
+# ===========================================================================
+
+_AUDIT_N = 256       # deterministic sample size — constant at any corpus scale
+_AUDIT_P, _AUDIT_Q = 9, 10  # ground-truth Jaccard threshold p/q = 0.9
+
+
+def _lsh_audit_base_ctes() -> str:
+    """``WITH samp, truth, h, sig`` CTE prefix — the md5 document
+    sample, its exact integer-Jaccard ground truth, and the MinHash
+    signatures; shared by the recall audit and the band autotune so
+    the instrument cannot drift between them."""
+
+    toks = "string_split_regex(trim(lower(text)), '\\s+')"
+    guarded = (
+        "CASE WHEN trim(lower(text)) = '' THEN []::VARCHAR[] "
+        f"ELSE {toks} END"
+    )
+    pri = "('0x' || substr(md5('aud:' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT"
+    # theta test in pure integers: J >= p/q  <=>  (p+q)*common >= p*(|A|+|B|)
+    truth_pred = (
+        f"{_AUDIT_P + _AUDIT_Q} * len(list_filter(a.t, x -> list_contains(b.t, x)))"
+        f" >= {_AUDIT_P} * (len(a.t) + len(b.t))"
+    )
+    minhash_pairs = D.sql_minhash_pairs(guarded)
+    mh = ", ".join(
+        f"{D.sql_minhash_from_pairs('hs', i)} AS mh{i}" for i in range(LSH_K)
+    )
+    return f"""
+    WITH samp AS MATERIALIZED (
+        SELECT doc_id, text, list_distinct({toks}) AS t
+        FROM documents
+        QUALIFY row_number() OVER (ORDER BY {pri}, doc_id) <= {_AUDIT_N}),
+    truth AS MATERIALIZED (
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b
+        FROM samp a JOIN samp b ON a.doc_id < b.doc_id
+        WHERE {truth_pred}),
+    h AS (SELECT doc_id, {minhash_pairs} AS hs FROM samp),
+    sig AS (SELECT doc_id, {mh} FROM h)"""
+
+
+def _lsh_audit_oracle() -> str:
+    return _lsh_audit_base_ctes() + f""",
+    banded0 AS (
+{_BANDED_SQL}
+    ),{D.sql_lsh_candidates(LSH_K, LSH_BANDS, LSH_CAP, LSH_THRESH)},
+    candv AS MATERIALIZED (
+      SELECT id_a, id_b
+      FROM cand JOIN sig sa ON cand.id_a = sa.doc_id
+                JOIN sig sb ON cand.id_b = sb.doc_id
+      WHERE {_SIG_MATCHES} >= {LSH_THRESH}),
+    nocap0 AS (
+      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+      FROM banded0 a JOIN banded0 b
+        ON a.band_id = b.band_id
+       AND list_slice(a.skey, 1, {LSH_K // LSH_BANDS})
+           = list_slice(b.skey, 1, {LSH_K // LSH_BANDS})
+       AND a.doc_id < b.doc_id
+    ),
+    nocap AS MATERIALIZED (
+      SELECT id_a, id_b
+      FROM nocap0 JOIN sig sa ON nocap0.id_a = sa.doc_id
+                  JOIN sig sb ON nocap0.id_b = sb.doc_id
+      WHERE {_SIG_MATCHES} >= {LSH_THRESH}),
+    hit AS (SELECT count(*)::BIGINT AS n_hit
+            FROM candv JOIN truth USING (id_a, id_b)),
+    hitn AS (SELECT count(*)::BIGINT AS n_hit_nocap
+             FROM nocap JOIN truth USING (id_a, id_b)),
+    c AS (SELECT count(*)::BIGINT AS n_cand FROM candv),
+    cn AS (SELECT count(*)::BIGINT AS n_cand_nocap FROM nocap),
+    tr AS (SELECT count(*)::BIGINT AS n_true FROM truth),
+    sz AS (SELECT count(*)::BIGINT AS n_docs FROM samp)
+    SELECT n_docs, n_true, n_cand, n_hit,
+           CASE WHEN n_true > 0 THEN (n_hit * 1000000) // n_true
+                ELSE 1000000 END AS recall_ppm,
+           CASE WHEN n_cand > 0 THEN (n_hit * 1000000) // n_cand
+                ELSE 1000000 END AS precision_ppm,
+           n_cand_nocap, n_hit_nocap,
+           CASE WHEN n_true > 0 THEN (n_hit_nocap * 1000000) // n_true
+                ELSE 1000000 END AS recall_nocap_ppm
+    FROM sz CROSS JOIN tr CROSS JOIN c CROSS JOIN hit
+         CROSS JOIN cn CROSS JOIN hitn
+    """
+
+
+def _lsh_audit_sample_truth(spark, sf_dir):
+    """The _AUDIT_N md5-sampled documents and their exact integer-
+    Jaccard ground-truth pairs — shared by the recall audit and the
+    band autotune so the instrument cannot drift between them.
+
+    Built once per application (``session.SessionState.lsh_audit``,
+    same rationale as catalog.trained_ivf_centroids): both frames are
+    tiny eager checkpoints and a deterministic pure function of the
+    corpus, so a fresh bench/oracle invocation always recomputes them
+    from parquet."""
+    from ..session import session_state
+
+    memo = session_state(spark).lsh_audit
+    if sf_dir in memo:
+        return memo[sf_dir]
+
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+    samp = (
+        docs.withColumn(
+            "__pri",
+            md5_long(F.concat(F.lit("aud:"), F.col("doc_id").cast("string"))),
+        )
+        .orderBy("__pri", "doc_id")
+        .limit(_AUDIT_N)
+        .drop("__pri")
+        .localCheckpoint(eager=True)
+    )
+    toks = F.array_distinct(F.split(F.trim(F.lower(F.col("text"))), r"\s+"))
+    st = samp.select("doc_id", toks.alias("t"))
+    a = st.select(F.col("doc_id").alias("id_a"), F.col("t").alias("ta"))
+    b = st.select(F.col("doc_id").alias("id_b"), F.col("t").alias("tb"))
+    common = F.size(F.filter("ta", lambda x: F.array_contains(F.col("tb"), x)))
+    truth = (
+        a.join(F.broadcast(b), F.col("id_a") < F.col("id_b"))
+        .filter(
+            F.lit(_AUDIT_P + _AUDIT_Q) * common
+            >= F.lit(_AUDIT_P) * (F.size("ta") + F.size("tb"))
+        )
+        .select("id_a", "id_b")
+        # Checkpoint the tiny pair frames: the final stat aggregates
+        # reference truth/cand twice each, and re-inlining the carried
+        # 16-wide minhash expression trees per reference blows up plan
+        # CONSTRUCTION (driver OOM in TreeNode), not execution.
+        .localCheckpoint(eager=True)
+    )
+    memo[sf_dir] = (samp, truth)
+    return samp, truth
+
+
+@register(
+    "lsh_recall_audit",
+    _lsh_audit_oracle(),
+    survey_ids=("A1", "A3"),
+    doc="Measure, don't guess — applied to the dedup path itself: the "
+    f"EXACT recall and precision of the production MinHash-LSH pair "
+    "generator (same 16-hash/4-band/64-cap/12-of-16 pipeline as "
+    "lsh_near_dup, same operators/dedup.py code) against exact "
+    f"token-set Jaccard >= {_AUDIT_P}/{_AUDIT_Q} ground truth, on a "
+    f"deterministic {_AUDIT_N}-document sample (TakeOrdered over an "
+    "md5 priority — fixed COST at any corpus scale, which is exactly "
+    "how one audits at 100 TB: the all-pairs truth is O(n^2) and must "
+    "never see the full corpus).  Reported capped AND uncapped.  In "
+    "round 7 this audit measured the then-current drop-the-bucket cap "
+    "at 0.45% recall vs 90.8% uncapped on this adversarially dense "
+    "corpus; round 8 replaced truncation with recursive bucket "
+    "splitting plus output-bound emission of signature-exhausted "
+    "clusters (operators/dedup.py:lsh_candidate_pairs), and the same "
+    "instrument now shows capped == uncapped recall here — the cap "
+    "only bounds FALSE-candidate emission.  The theta test is "
+    "pure-integer ((p+q)*common >= p*(|A|+|B|)), the sample is "
+    "broadcast for the truth self-join, and every rate lands as a "
+    "ppm integer.",
+)
+def q_lsh_recall_audit(spark, sf_dir):
+    samp, truth = _lsh_audit_sample_truth(spark, sf_dir)
+    sig = D.minhash_signature(samp, "text", k=LSH_K).drop("text")
+    # sig_matches comes from the band-shuffled signature array
+    # (emit_sig_matches), the same verify the production lsh_near_dup
+    # runs.  Neither pair frame is checkpointed any more: the round-12
+    # tagged-union restructure below references each exactly ONCE, so
+    # the TreeNode blowup that forced eager materialization (16-wide
+    # signature trees re-inlined per downstream reference) cannot
+    # occur, and the whole audit evaluates in one job.
+    cand = (
+        D.lsh_candidate_pairs(
+            sig,
+            "doc_id",
+            k=LSH_K,
+            bands=LSH_BANDS,
+            max_bucket=LSH_CAP,
+            emit_sig_matches=True,
+            verify_min=LSH_THRESH,
+        )
+        .filter(F.col("sig_matches") >= LSH_THRESH)
+        .select("id_a", "id_b")
+    )
+    # The uncapped twin isolates the bucket-handling recall cost
+    # (sample-bounded: at most N*(N-1)/2 pairs, safe without the cap).
+    nocap = (
+        D.lsh_candidate_pairs(
+            sig,
+            "doc_id",
+            k=LSH_K,
+            bands=LSH_BANDS,
+            max_bucket=None,
+            emit_sig_matches=True,
+        )
+        .filter(F.col("sig_matches") >= LSH_THRESH)
+        .select("id_a", "id_b")
+    )
+
+    # Tagged union -> one pair-keyed fold -> one scalar aggregate:
+    # n_hit == |cand INTERSECT truth| == sum(c*t) etc., replacing five
+    # independent aggregate subtrees + two joins (each a separate AQE
+    # job at toy scale) with two exchanges total.  Every frame holds
+    # DISTINCT pairs, so max() per tag is exact.
+    def _tag(df, t, c, n):
+        return df.select(
+            "id_a",
+            "id_b",
+            F.lit(t).alias("t"),
+            F.lit(c).alias("c"),
+            F.lit(n).alias("n"),
+        )
+
+    per_pair = (
+        _tag(truth, 1, 0, 0)
+        .unionByName(_tag(cand, 0, 1, 0))
+        .unionByName(_tag(nocap, 0, 0, 1))
+        .groupBy("id_a", "id_b")
+        .agg(
+            F.max("t").alias("t"),
+            F.max("c").alias("c"),
+            F.max("n").alias("n"),
+        )
+    )
+    zero = F.lit(0)  # empty pair relation: sum() is NULL, count() was 0
+    scalars = per_pair.agg(
+        F.coalesce(F.sum("t"), zero).cast("long").alias("n_true"),
+        F.coalesce(F.sum("c"), zero).cast("long").alias("n_cand"),
+        F.coalesce(F.sum(F.col("c") * F.col("t")), zero)
+        .cast("long")
+        .alias("n_hit"),
+        F.coalesce(F.sum("n"), zero).cast("long").alias("n_cand_nocap"),
+        F.coalesce(F.sum(F.col("n") * F.col("t")), zero)
+        .cast("long")
+        .alias("n_hit_nocap"),
+    )
+    sz = samp.agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
+    out = sz.crossJoin(F.broadcast(scalars))
+    return out.select(
+        "n_docs",
+        "n_true",
+        "n_cand",
+        "n_hit",
+        F.when(F.col("n_true") > 0, F.expr("(n_hit * 1000000) div n_true"))
+        .otherwise(F.lit(1000000))
+        .cast("long")
+        .alias("recall_ppm"),
+        F.when(F.col("n_cand") > 0, F.expr("(n_hit * 1000000) div n_cand"))
+        .otherwise(F.lit(1000000))
+        .cast("long")
+        .alias("precision_ppm"),
+        "n_cand_nocap",
+        "n_hit_nocap",
+        F.when(F.col("n_true") > 0, F.expr("(n_hit_nocap * 1000000) div n_true"))
+        .otherwise(F.lit(1000000))
+        .cast("long")
+        .alias("recall_nocap_ppm"),
+    )
+
+_SIG_CTES = (
+    f"WITH h AS (SELECT doc_id, {D.sql_minhash_pairs(TOKS)} AS hs FROM documents),\n"
+    "    sig AS (SELECT doc_id, "
+    + ", ".join(
+        f"{D.sql_minhash_from_pairs('hs', i)} AS mh{i}" for i in range(LSH_K)
+    )
+    + " FROM h),"
+)
+
+
+@register(
+    "lsh_dup_star_edges",
+    _SIG_CTES
+    + D.sql_lsh_star_edges(LSH_K, LSH_BANDS, LSH_CAP, LSH_THRESH)
+    + """
+    SELECT src_id, dst_id, sig_matches, kind FROM edges""",
+    survey_ids=(),
+    doc="Cluster-level near-dup edges (operators/dedup.py:"
+    "lsh_dedup_edges): identical-signature clusters collapse to "
+    "rep->member STAR edges (kind 'exact', |cluster|-1 rows — linear "
+    "where lsh_near_dup's pair enumeration is quadratic) plus the "
+    f"verified (>= {LSH_THRESH}/{LSH_K} agreement) rep-pair 'near' "
+    "edges between distinct signatures.  This is the shape a 100 TB "
+    "dedup pass consumes — drop every dst_id, keep the reps — so "
+    "emission is O(corpus + bounded candidates), not "
+    "O(sum cluster^2); same collapse-first banding, split rule and "
+    "verify gate as lsh_near_dup, same oracle fragments.",
+)
+def q_lsh_dup_star_edges(spark, sf_dir):
+    d = load(spark, sf_dir, "documents")
+    sig = D.minhash_signature(d.select("doc_id", "text"), "text", k=LSH_K).drop(
+        "text"
+    )
+    return D.lsh_dedup_edges(
+        sig,
+        "doc_id",
+        k=LSH_K,
+        bands=LSH_BANDS,
+        max_bucket=LSH_CAP,
+        verify_min=LSH_THRESH,
+    )
+
+
+# ===========================================================================
+# Incremental dedup against a persisted signature index (crawl refresh)
+# ===========================================================================
+
+_INC_BATCHES = 3
+
+
+def _inc_lsh_oracle() -> str:
+    # One-shot UNCAPPED near-dup on the full corpus: the equality the
+    # batching-invariance theorem guarantees (see
+    # operators/dedup.py:lsh_probe_pairs).  Banding via the same
+    # sql_lsh_banded split-order frame; a band match is agreement on
+    # the first rows-per-band positions.
+
+    rpb = LSH_K // LSH_BANDS
+    return (
+        _SIG_CTES
+        + f"""
+    banded0 AS (
+{D.sql_lsh_banded(LSH_K, LSH_BANDS)}
+    ),
+    cand AS (
+      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+      FROM banded0 a JOIN banded0 b
+        ON a.band_id = b.band_id
+       AND list_slice(a.skey, 1, {rpb}) = list_slice(b.skey, 1, {rpb})
+       AND a.doc_id < b.doc_id)
+    SELECT id_a, id_b, ({_SIG_MATCHES})::BIGINT AS sig_matches
+    FROM cand JOIN sig sa ON cand.id_a = sa.doc_id
+              JOIN sig sb ON cand.id_b = sb.doc_id
+    WHERE {_SIG_MATCHES} >= {LSH_THRESH}"""
+    )
+
+
+@register(
+    "incremental_lsh_dedup",
+    _inc_lsh_oracle(),
+    survey_ids=("S11", "ST1"),
+    doc="The crawl-refresh production shape of near-dup detection: "
+    f"documents arrive in {_INC_BATCHES} batches (doc_id residue "
+    "classes); each batch is MinHash-signed, PROBED against the "
+    "persisted signature store — parquet state PARTITIONED by "
+    "band-key-hash bucket (operators/dedup.py:lsh_store_append), so "
+    "each refresh partition-prunes the store scan to the batch's "
+    "touched buckets and broadcast-semi-joins on the exact band hash "
+    "BEFORE any shuffle (lsh_store_probe_read) — emitting only pairs "
+    "with a new endpoint, then appended to the store.  History is "
+    "never re-paired against itself AND never re-scanned: per-refresh "
+    "cost (scan, shuffle, and output) is O(|batch| x touched buckets) "
+    "however long the crawl has run.  The probe's share-a-band candidate "
+    "rule is a pure pairwise predicate, hence BATCHING-INVARIANT "
+    "(operators/dedup.py:lsh_probe_pairs): the union of the batch "
+    "emissions equals the one-shot uncapped run on the union corpus "
+    "— which is exactly what the oracle computes.  Each batch's probe "
+    "plan reads a file listing of the store PINNED as-of-its-turn "
+    "(lsh_store_probe_read pin_files), so later appends never feed "
+    "back into an earlier batch's probe and all batch outputs can "
+    "evaluate together in one final job (_inc_lsh_replay).",
+)
+def q_incremental_lsh_dedup(spark, sf_dir):
+    out, _sigs = _inc_lsh_replay(spark, sf_dir, "inc_lsh", D.lsh_probe_pairs)
+    return out
+
+
+def _inc_lsh_replay(spark, sf_dir, tag, probe_fn):
+    """The shared crawl-refresh driver loop (dedup pairs + assign
+    variants differ only in the probe primitive).  Round-12 replay
+    floor (verdict r11 item 6 — batch the per-micro-batch actions):
+
+    - signatures AND band hashes are computed once on the union corpus
+      and checkpointed (minhash is a pure per-doc function; the
+      replay's subject is STORE interaction, not re-signing);
+    - every batch's touched store buckets are collected in ONE job up
+      front (they are pure functions of the checkpointed hashes, at
+      most batches x n_buckets ints);
+    - each refresh's probe reads a PINNED file listing of the store
+      as-of-its-turn (lsh_store_probe_read pin_files), so the batch
+      outputs stay correct when deferred — the union of all refresh
+      emissions evaluates in ONE final job instead of one eager
+      checkpoint per refresh.  The store appends themselves remain
+      sequential real writes: they ARE the state machinery under test.
+    """
+    from ..session import scratch_dir
+
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+    state = f"{scratch_dir(tag)}/sig_state"
+    sigs_all = (
+        D.minhash_signature(docs, "text", k=LSH_K)
+        .drop("text")
+        .withColumn("__bha", D._band_hash_array(LSH_K, LSH_BANDS))
+        .localCheckpoint(eager=True)
+    )
+    touched: dict[int, set[int]] = {r: set() for r in range(_INC_BATCHES)}
+    for row in (
+        sigs_all.select(
+            (F.col("doc_id") % _INC_BATCHES).alias("r"),
+            F.explode("__bha").alias("__bh"),
+        )
+        .select(
+            "r",
+            F.pmod(F.col("__bh"), F.lit(D.LSH_STORE_BUCKETS)).cast("int").alias("pb"),
+        )
+        .distinct()
+        .collect()
+    ):
+        touched[int(row.r)].add(int(row.pb))
+    outs = []
+    for r in range(_INC_BATCHES):
+        new_sigs = sigs_all.filter(
+            F.col("doc_id") % _INC_BATCHES == r
+        ).withColumn("is_new", F.lit(True))
+        # Band-partitioned store probe (round-10): partition filter on
+        # the batch's band-hash buckets + broadcast semi-join, so the
+        # refresh never scans or shuffles untouched store history.
+        store = D.lsh_store_probe_read(
+            spark, state, new_sigs, k=LSH_K, bands=LSH_BANDS,
+            touched=sorted(touched[r]), pin_files=True,
+        )
+        if store is None:  # genuinely-empty first refresh
+            all_sigs = new_sigs.drop("__bha")
+        else:
+            all_sigs = store.withColumn("is_new", F.lit(False)).unionByName(
+                new_sigs.drop("__bha")
+            )
+        outs.append(
+            probe_fn(
+                all_sigs, "is_new", "doc_id",
+                k=LSH_K, bands=LSH_BANDS, verify_min=LSH_THRESH,
+            )
+        )
+        D.lsh_store_append(
+            new_sigs.drop("is_new"), state, k=LSH_K, bands=LSH_BANDS
+        )
+    out = outs[0]
+    for o in outs[1:]:
+        out = out.unionByName(o)
+    return out, sigs_all
+
+
+def _inc_assign_oracle() -> str:
+    # The one-shot semantics of the min-fold: for every doc, the
+    # smallest verified neighbor — GROUP BY over the uncapped pair
+    # relation the incremental_lsh_dedup oracle already defines.
+    return (
+        "WITH verified AS (\n"
+        + _inc_lsh_oracle()
+        + "\n    )\n"
+        "    SELECT id_b AS doc_id, MIN(id_a) AS dup_of\n"
+        "    FROM verified GROUP BY id_b"
+    )
+
+
+@register(
+    "incremental_lsh_assign",
+    _inc_assign_oracle(),
+    survey_ids=("S11", "ST1"),
+    doc="The BOUNDED-OUTPUT crawl-refresh dedup shape — what the "
+    "round-8 soak showed incremental_lsh_dedup's pair relation is "
+    "not (10x verbatim duplication -> ~100x pairs, 768M rows): each "
+    f"refresh ({_INC_BATCHES} doc_id-residue batches) probes the "
+    "persisted signature store and emits per-document ASSIGNMENT "
+    "updates (doc_id, dup_of = smallest verified neighbor visible "
+    "this refresh) instead of pairs "
+    "(operators/dedup.py:lsh_probe_assign), so refresh output is "
+    "O(touched members) however duplicated the corpus — and refresh "
+    "COMPUTE matches: the store is parquet PARTITIONED by "
+    "band-key-hash bucket, partition-pruned to the batch's buckets "
+    "and band-hash-semi-joined before any shuffle "
+    "(lsh_store_probe_read), so untouched history is never scanned.  "
+    "Updates fold "
+    "through the state table with a keyed MIN-merge (the S11 upsert "
+    "mechanism; here an append log + final min-aggregate — "
+    "associative + commutative, so batch order is irrelevant), and "
+    "the folded table equals GROUP BY doc MIN(neighbor) over the "
+    "one-shot uncapped pair run — which is what the oracle computes. "
+    "A dedup consumer drops every doc_id present in the table and "
+    "keeps the rest: the keep-one-representative decision at 100 TB "
+    "in one linear relation.",
+)
+def q_incremental_lsh_assign(spark, sf_dir):
+    from ..session import scratch_dir
+
+    # Shared replay driver (see _inc_lsh_replay): pinned-store probes,
+    # deferred batch outputs — the per-refresh update relations land
+    # in the append log in ONE write instead of one eager job per
+    # refresh, then fold through the keyed MIN-merge exactly as
+    # before (associative + commutative, so batching is irrelevant).
+    updates, _sigs = _inc_lsh_replay(
+        spark, sf_dir, "inc_assign", D.lsh_probe_assign
+    )
+    upd_state = f"{scratch_dir('inc_assign_log')}/assign_updates"
+    updates.write.mode("append").parquet(upd_state)
+    return (
+        spark.read.parquet(upd_state)
+        .groupBy("doc_id")
+        .agg(F.min("dup_of").alias("dup_of"))
+    )
+
+
+# ===========================================================================
+# Semantic dedup: k-means partition, then prune within clusters
+# ===========================================================================
+
+# SemDeDup-style semantic deduplication (Abbas et al. 2023,
+# arXiv:2303.09540): instead of comparing every pair of embeddings
+# (O(N^2), impossible at corpus scale), partition the space with
+# k-means and compare ONLY within clusters — cost drops to
+# sum |cluster|^2 ~= N^2/k, and k grows with the corpus (the paper
+# uses ~sqrt(N) clusters) so cluster size, and therefore per-cluster
+# work, stays bounded.  Among semantic duplicates (pair cosine >= eps)
+# the member with the LOWEST similarity to its cluster centroid is
+# kept (the paper's keep-outliers rule), deterministic tiebreak on id.
+SEM_K = 8
+SEM_ITERS = 2
+# floor(1e9 * cosine) threshold: 0.30 is ~p99 of the all-pairs cosine
+# distribution of this embedding table — "semantic duplicate" is the
+# top percentile of similarity, not the bulk.
+SEM_EPS_Q = 300_000_000
+
+_SEM_COS = (
+    "floor(1e9 * list_dot_product({a}.v, {b}.v)"
+    " / (sqrt(list_dot_product({a}.v, {a}.v))"
+    " * sqrt(list_dot_product({b}.v, {b}.v))))::BIGINT"
+)
+
+
+def _sem_oracle() -> str:
+    cent_cos = (
+        "floor(1e9 * list_dot_product(a.v, c.cv)"
+        " / (sqrt(list_dot_product(a.v, a.v))"
+        " * sqrt(list_dot_product(c.cv, c.cv))))::BIGINT"
+    )
+    return f"""
+    WITH {S.sql_ivf_train(n_centroids=SEM_K, iterations=SEM_ITERS, dim=64)},
+    amap AS (
+      SELECT vec_id, v, centroid_id FROM (
+        SELECT e.vec_id, e.v, c.centroid_id,
+               row_number() OVER (PARTITION BY e.vec_id
+                                  ORDER BY list_dot_product(e.v, c.cv) DESC, c.centroid_id) AS rn
+        FROM e CROSS JOIN cent c) WHERE rn = 1
+    ),
+    mem AS (
+      SELECT a.centroid_id, a.vec_id, a.v, {cent_cos} AS simcent_q
+      FROM amap a JOIN cent c USING (centroid_id)
+    ),
+    dropped AS (
+      SELECT DISTINCT x.vec_id
+      FROM mem x JOIN mem y
+        ON x.centroid_id = y.centroid_id AND x.vec_id <> y.vec_id
+       AND (y.simcent_q < x.simcent_q
+            OR (y.simcent_q = x.simcent_q AND y.vec_id < x.vec_id))
+      WHERE {_SEM_COS.format(a="x", b="y")} >= {SEM_EPS_Q}
+    )
+    SELECT m.vec_id, m.centroid_id, m.simcent_q,
+           (d.vec_id IS NOT NULL) AS is_dropped
+    FROM mem m LEFT JOIN dropped d ON m.vec_id = d.vec_id
+    """
+
+
+@register(
+    "semantic_dedup",
+    _sem_oracle(),
+    survey_ids=(),
+    doc="SemDeDup-style semantic dedup (Abbas et al. 2023): Lloyd "
+    f"k-means over the embedding table ({SEM_K} centroids x "
+    f"{SEM_ITERS} rounds, the catalog-verified ivf_train — even the "
+    "learned centroids are cross-engine bit-identical), broadcast "
+    "map-side assignment, then cosine pairs are enumerated ONLY "
+    "within clusters: cost is sum |cluster|^2 ~= N^2/k instead of "
+    "N^2, and k scales with the corpus (~sqrt(N)) so per-cluster "
+    "work stays bounded at 100 TB; a hot cluster re-clusters "
+    "recursively exactly like the LSH hot-bucket split.  Among "
+    "duplicates (pair cosine >= 0.30 ~= p99, compared in the "
+    "floor-1e9-quantized integer domain) the member with the LOWEST "
+    "centroid similarity is kept (the paper's keep-outliers rule, "
+    "id tiebreak), so the decision is deterministic and "
+    "order-independent.  Returns every member with its cluster, "
+    "quantized centroid similarity, and the drop verdict.",
+)
+def q_semantic_dedup(spark, sf_dir):
+    e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    cents = trained_ivf_centroids(spark, sf_dir, SEM_K, SEM_ITERS)
+    assigned = S.ivf_assign(e, cents).select(
+        "vec_id", "centroid_id", F.col("embedding").cast("array<double>").alias("v")
+    )
+    cv = cents.select("centroid_id", F.col("embedding").alias("__cv"))
+    # Materialize members once (eager): three consumers below (both
+    # sides of the pair join + the final probe) — without this the
+    # 2-round training lineage is replayed per consumer.
+    mem = (
+        assigned.join(F.broadcast(cv), "centroid_id")
+        .select(
+            "centroid_id",
+            "vec_id",
+            "v",
+            F.floor(S.cosine(F.col("v"), F.col("__cv")) * F.lit(1e9))
+            .cast("long")
+            .alias("simcent_q"),
+        )
+        .localCheckpoint(eager=True)
+    )
+    x, y = mem.alias("x"), mem.alias("y")
+    pair_cos_q = F.floor(
+        S.cosine(F.col("x.v"), F.col("y.v")) * F.lit(1e9)
+    ).cast("long")
+    # y is "kept-preferred" over x: strictly lower centroid
+    # similarity, or equal with the smaller id.  x is dropped when a
+    # kept-preferred in-cluster neighbor is within eps.
+    dropped = (
+        x.join(
+            y,
+            (F.col("x.centroid_id") == F.col("y.centroid_id"))
+            & (F.col("x.vec_id") != F.col("y.vec_id"))
+            & (
+                (F.col("y.simcent_q") < F.col("x.simcent_q"))
+                | (
+                    (F.col("y.simcent_q") == F.col("x.simcent_q"))
+                    & (F.col("y.vec_id") < F.col("x.vec_id"))
+                )
+            ),
+        )
+        .filter(pair_cos_q >= SEM_EPS_Q)
+        .select(F.col("x.vec_id").alias("vec_id"))
+        .distinct()
+        .withColumn("__d", F.lit(True))
+    )
+    return mem.join(dropped, "vec_id", "left").select(
+        "vec_id",
+        "centroid_id",
+        "simcent_q",
+        F.coalesce(F.col("__d"), F.lit(False)).alias("is_dropped"),
+    )
+
+# ===========================================================================
+# Unaligned duplicated-passage extraction (exact-substring dedup)
+# ===========================================================================
+
+# k-gram width: long enough that chance 8-token collisions are
+# negligible, short enough that a 16-token passage yields >= 9
+# consecutive matches to merge.
+PSPAN_K = 8
+# Minimum reported span, in tokens.
+PSPAN_MIN = 16
+# Document-frequency cap per k-gram hash: a gram occurring at more
+# than this many positions corpus-wide is boilerplate / an exact-dup
+# clique — territory owned by span_dedup_rebuild and exact_dedup —
+# and enumerating its postings pairwise would be quadratic in the
+# clique size.  Measured at sf0.01: the cap is not binding (24 spans
+# at caps 16/32/64 alike); it exists to bound the worst case.
+# An over-cap gram INSIDE an otherwise-unique shared passage does NOT
+# split the reported span: islands bridge same-diagonal gaps <= k
+# (see _pspan_ctes), which losslessly covers any capped run of up to
+# k-1 consecutive grams.  Only a capped run LONGER than k-1 grams
+# (a >= 2k-1-token boilerplate block mid-passage) still splits, and a
+# capped run at the very start/end of a passage shortens it (no
+# flanking match to anchor the bridge) — both are exact-dup-clique
+# territory by construction.
+PSPAN_DF_MAX = 16
+
+
+def _pspan_base_ctes() -> str:
+    """Tokenize -> rolling-gram -> df-cap fragment (CTEs t, g, df) —
+    shared by every passage-span consumer."""
+    k, cap = PSPAN_K, PSPAN_DF_MAX
+    h = md5_long_sql(f"array_to_string(toks[p : p + {k - 1}], ' ')")
+    return f"""
+    WITH t AS (
+        SELECT doc_id,
+               CASE WHEN trim(lower(text)) = '' THEN []::VARCHAR[]
+                    ELSE string_split_regex(trim(lower(text)), '\\s+') END AS toks
+        FROM documents
+    ), g AS (
+        SELECT doc_id, u.p::BIGINT AS p, {h} AS h
+        FROM t, unnest(range(1, len(toks) - {k} + 2)) AS u(p)
+        WHERE len(toks) >= {k}
+    ), df AS (
+        SELECT h FROM g GROUP BY h HAVING count(*) BETWEEN 2 AND {cap}
+    )"""
+
+
+def _pspan_ctes() -> str:
+    """Open CTE chain ending in ``spans`` (id_a, id_b, a_start,
+    b_start, span_toks) — shared by the measuring query and the
+    rebuild so the two cannot drift (the sql_lm_chain lesson).
+
+    Islands bridge same-diagonal gaps of up to k matched positions:
+    a gap can only come from grams the df cap dropped (an intermediate
+    gram of a matched pair is shared by both docs, so df >= 2), and
+    for gap <= k the flanking gram windows [p, p+k) and [p', p'+k)
+    still COVER every token in between (p' <= p+k), so the span stays
+    verbatim-verified.  A genuine token mismatch breaks the k grams
+    overlapping it, forcing a gap of >= k+1 — so bridging never merges
+    across real differences.  span_toks is max(pa)-min(pa)+k (equal to
+    count+k-1 when no gram was capped)."""
+    k, mn = PSPAN_K, PSPAN_MIN
+    return _pspan_base_ctes() + f""", m AS (
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.p AS pa, b.p AS pb
+        FROM g a JOIN g b USING (h) JOIN df USING (h)
+        WHERE a.doc_id < b.doc_id
+    ), ib AS (
+        SELECT id_a, id_b, pa, pb, pa - pb AS diag,
+               CASE WHEN pa - lag(pa) OVER (PARTITION BY id_a, id_b, pa - pb
+                                            ORDER BY pa) <= {k}
+                    THEN 0 ELSE 1 END AS brk
+        FROM m
+    ), i AS (
+        SELECT id_a, id_b, pa, pb, diag,
+               sum(brk) OVER (PARTITION BY id_a, id_b, diag ORDER BY pa
+                              ROWS UNBOUNDED PRECEDING) AS isl
+        FROM ib
+    ), spans AS (
+        SELECT id_a, id_b, min(pa)::BIGINT AS a_start, min(pb)::BIGINT AS b_start,
+               (max(pa) - min(pa) + {k})::BIGINT AS span_toks
+        FROM i GROUP BY id_a, id_b, diag, isl
+        HAVING max(pa) - min(pa) + {k} >= {mn}
+    )"""
+
+
+def _pspan_oracle() -> str:
+    return (
+        _pspan_ctes()
+        + """
+    SELECT id_a, id_b, a_start, b_start, span_toks FROM spans
+    """
+    )
+
+
+@register(
+    "dup_passage_spans",
+    _pspan_oracle(),
+    survey_ids=("A7", "G2", "W1"),
+    doc="Unaligned cross-document duplicated-passage extraction (the "
+    "exact-substring dedup of Lee et al. 2022, relationally): every "
+    f"token position emits a rolling {PSPAN_K}-gram fingerprint; "
+    "per-gram postings are collapsed to ONE sorted list (the "
+    "lexical_cosine posting pattern — a single corpus explode + one "
+    f"keyed aggregation), df-capped at {PSPAN_DF_MAX} (an over-cap "
+    "gram is boilerplate/exact-dup-clique territory owned by "
+    "span_dedup_rebuild and exact_dedup, and pairwise enumeration of "
+    "its postings would be quadratic in the clique); cross-document "
+    "match pairs come from an in-row combination expansion bounded "
+    "by cap^2/2 per gram; and consecutive matches merge into MAXIMAL "
+    "shared spans via gaps-and-islands per (pair, diagonal = pa-pb) "
+    "— a window whose partition is one pair's one diagonal, bounded "
+    "by the shorter document, never the corpus.  Reports (id_a, "
+    f"id_b, a_start, b_start, span_toks >= {PSPAN_MIN}) — exact "
+    "positions, so a rebuild pass can excise the duplicated passage "
+    "from one side.  Catches what the aligned chunker structurally "
+    "misses: offset-shifted quotes (a diagonal with pa != pb) and "
+    "boundary-straddling passages.",
+)
+def q_dup_passage_spans(spark, sf_dir):
+    return _passage_spans(spark, sf_dir)
+
+
+def _passage_spans(spark, sf_dir):
+    k = PSPAN_K
+    docs = load(spark, sf_dir, "documents")
+    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    d = docs.select("doc_id", toks.alias("toks")).filter(F.size("toks") >= k)
+    g = d.select(
+        "doc_id",
+        F.explode(
+            F.transform(
+                F.sequence(F.lit(1), F.size("toks") - k + 1),
+                lambda p: F.struct(
+                    p.cast("long").alias("p"),
+                    md5_long(F.array_join(F.slice("toks", p, k), " ")).alias("h"),
+                ),
+            )
+        ).alias("s"),
+    ).select("doc_id", "s.p", "s.h")
+    posts = (
+        g.groupBy("h")
+        .agg(F.sort_array(F.collect_list(F.struct("doc_id", "p"))).alias("ps"))
+        .filter((F.size("ps") >= 2) & (F.size("ps") <= PSPAN_DF_MAX))
+    )
+    # (x, i) -> pairs (ps[i], ps[j]) for i < j over the (doc_id, p)-
+    # sorted list: id_a <= id_b by construction, same-doc repeats
+    # filtered below (a within-doc repeat is doc_repetition's signal,
+    # not a cross-doc passage).
+    pair_structs = F.flatten(
+        F.transform(
+            F.col("ps"),
+            lambda x, i: F.transform(
+                F.slice(F.col("ps"), i + 2, F.size(F.col("ps"))),
+                lambda y: F.struct(
+                    x["doc_id"].alias("id_a"),
+                    x["p"].alias("pa"),
+                    y["doc_id"].alias("id_b"),
+                    y["p"].alias("pb"),
+                ),
+            ),
+        )
+    )
+    m = (
+        posts.select(F.explode(pair_structs).alias("pr"))
+        .select("pr.id_a", "pr.pa", "pr.id_b", "pr.pb")
+        .filter(F.col("id_a") != F.col("id_b"))
+    )
+    # Cap-tolerant islands: bridge same-diagonal gaps <= k (only the
+    # df cap can create them, and the flanking gram windows still
+    # cover every bridged token — see _pspan_ctes' docstring); a real
+    # token mismatch forces a gap >= k+1 and still splits.
+    w = Window.partitionBy("id_a", "id_b", F.col("pa") - F.col("pb")).orderBy("pa")
+    brk = F.when(F.col("pa") - F.lag("pa").over(w) <= k, F.lit(0)).otherwise(
+        F.lit(1)
+    )
+    staged = m.select(
+        "id_a",
+        "id_b",
+        "pa",
+        "pb",
+        (F.col("pa") - F.col("pb")).alias("diag"),
+        brk.alias("__brk"),
+    )
+    w2 = Window.partitionBy("id_a", "id_b", "diag").orderBy("pa").rowsBetween(
+        Window.unboundedPreceding, 0
+    )
+    isl = staged.withColumn("isl", F.sum("__brk").over(w2))
+    return (
+        isl.groupBy("id_a", "id_b", "diag", "isl")
+        .agg(
+            F.min("pa").alias("a_start"),
+            F.min("pb").alias("b_start"),
+            (F.max("pa") - F.min("pa") + F.lit(k)).cast("long").alias("span_toks"),
+        )
+        .filter(F.col("span_toks") >= PSPAN_MIN)
+        .select("id_a", "id_b", "a_start", "b_start", "span_toks")
+    )
+
+
+def _pspan_rebuild_oracle() -> str:
+    return (
+        _pspan_ctes()
+        + """, dropped AS (
+        SELECT DISTINCT spans.id_b AS doc_id, u.pos::BIGINT AS pos
+        FROM spans, unnest(range(b_start, b_start + span_toks)) AS u(pos)
+    ), affected AS (
+        SELECT DISTINCT doc_id FROM dropped
+    ), tok AS (
+        SELECT t.doc_id, len(t.toks)::BIGINT AS n_toks,
+               u.pos::BIGINT AS pos, t.toks[u.pos] AS tk
+        FROM t JOIN affected USING (doc_id),
+             unnest(range(1, len(t.toks) + 1)) AS u(pos)
+    )
+    SELECT tok.doc_id, max(tok.n_toks) AS n_toks,
+           sum(CASE WHEN d.pos IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
+               AS n_dropped,
+           coalesce(string_agg(tok.tk, ' ' ORDER BY tok.pos)
+                        FILTER (WHERE d.pos IS NULL), '') AS kept_text
+    FROM tok LEFT JOIN dropped d ON tok.doc_id = d.doc_id AND tok.pos = d.pos
+    GROUP BY tok.doc_id
+    """
+    )
+
+
+@register(
+    "dup_passage_rebuild",
+    _pspan_rebuild_oracle(),
+    survey_ids=("A7", "G2"),
+    doc="Passage-level dedup APPLIED, not just measured (the "
+    "span_dedup_rebuild discipline, on the unaligned detector): for "
+    "every duplicated passage dup_passage_spans reports, the LATER "
+    "document (id_b — keep-first-occurrence, deterministic since "
+    "id_a < id_b) has the covered token positions excised and its "
+    "text rebuilt from the survivors in order.  Output is bounded by "
+    "AFFECTED documents (docs that lose at least one token), not the "
+    "corpus: (doc_id, n_toks, n_dropped, kept_text).  Overlapping "
+    "spans union through a DISTINCT position set, so double-counting "
+    "is impossible.  Plan shape: the span relation is the verified "
+    "dup_passage_spans plan (shared builder, shared oracle CTE chain "
+    "— measure and rebuild cannot drift); position excision is one "
+    "explode of the affected docs (semi-join pruned before the "
+    "explode, so the corpus is never re-tokenized), a left anti "
+    "lookup on (doc, pos), and one per-doc sorted-collect rebuild "
+    "bounded by the doc's own token count.  Soak cost model: wall "
+    "tracks AFFECTED-doc volume, not corpus volume — on 10x verbatim "
+    "replicas (SOAK_r8) output grows 173x (every replica is "
+    "affected) and wall 3.8x; a corpus with constant dup density "
+    "scales linearly.",
+)
+def q_dup_passage_rebuild(spark, sf_dir):
+    spans = _passage_spans(spark, sf_dir)
+    dropped = (
+        spans.select(
+            F.col("id_b").alias("doc_id"),
+            F.explode(
+                F.sequence(
+                    F.col("b_start"), F.col("b_start") + F.col("span_toks") - 1
+                )
+            ).alias("pos"),
+        )
+        .distinct()
+        # Tiny (affected positions only) and read three times below;
+        # materializing also stops the full span plan re-running per
+        # consumer.
+        .localCheckpoint(eager=True)
+    )
+    affected = dropped.select("doc_id").distinct()
+    docs = load(spark, sf_dir, "documents")
+    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    tok = (
+        docs.join(affected, "doc_id", "left_semi")
+        .select("doc_id", toks.alias("toks"))
+        .select(
+            "doc_id",
+            F.size("toks").cast("long").alias("n_toks"),
+            F.posexplode("toks").alias("pos0", "tk"),
+        )
+        .withColumn("pos", (F.col("pos0") + 1).cast("long"))
+    )
+    flagged = tok.join(
+        dropped.withColumn("__d", F.lit(True)), ["doc_id", "pos"], "left"
+    )
+    kept_struct = F.when(
+        F.col("__d").isNull(), F.struct("pos", "tk")
+    )
+    return flagged.groupBy("doc_id").agg(
+        F.max("n_toks").alias("n_toks"),
+        F.sum(F.when(F.col("__d").isNotNull(), 1).otherwise(0))
+        .cast("long")
+        .alias("n_dropped"),
+        # collect_list skips the NULL structs the when() emits for
+        # dropped positions; all-dropped docs land as '' via the empty
+        # array, matching the oracle's coalesce.
+        F.array_join(
+            F.transform(
+                F.array_sort(F.collect_list(kept_struct)),
+                lambda x: x["tk"],
+            ),
+            " ",
+        ).alias("kept_text"),
+    )
+
+
+# ===========================================================================
+# Passage-level eval-set decontamination (span evidence, both directions)
+# ===========================================================================
+
+DECON_EVAL_MOD = 7  # doc_id % MOD == 0 plays the held-out eval set
+# (mod 7 keeps the gate non-trivial at every test SF: 7-8 leakage
+# spans at sf0.001/sf0.01 where mod 97's sparser eval set finds 0
+# at sf0.01 — an empty result would hash-match vacuously)
+
+
+def _decontam_oracle() -> str:
+    k, mn, mod = PSPAN_K, PSPAN_MIN, DECON_EVAL_MOD
+    return (
+        _pspan_base_ctes()
+        + f""", m AS (
+        SELECT e.doc_id AS eval_id, t2.doc_id AS train_id,
+               e.p AS pe, t2.p AS pt
+        FROM g e JOIN g t2 USING (h) JOIN df USING (h)
+        WHERE e.doc_id % {mod} = 0 AND t2.doc_id % {mod} <> 0
+    ), ib AS (
+        SELECT eval_id, train_id, pe, pt, pe - pt AS diag,
+               CASE WHEN pe - lag(pe) OVER (PARTITION BY eval_id, train_id,
+                                                         pe - pt
+                                            ORDER BY pe) <= {k}
+                    THEN 0 ELSE 1 END AS brk
+        FROM m
+    ), i AS (
+        SELECT eval_id, train_id, pe, pt, diag,
+               sum(brk) OVER (PARTITION BY eval_id, train_id, diag
+                              ORDER BY pe ROWS UNBOUNDED PRECEDING) AS isl
+        FROM ib
+    )
+    SELECT eval_id, train_id,
+           min(pe)::BIGINT AS eval_start, min(pt)::BIGINT AS train_start,
+           (max(pe) - min(pe) + {k})::BIGINT AS span_toks
+    FROM i GROUP BY eval_id, train_id, diag, isl
+    HAVING max(pe) - min(pe) + {k} >= {mn}
+    """
+    )
+
+
+@register(
+    "eval_decontam_spans",
+    _decontam_oracle(),
+    survey_ids=("A7", "J4"),
+    doc="Passage-level eval-set decontamination with SPAN EVIDENCE — "
+    "the leakage check run before any benchmark claim: documents "
+    f"with doc_id % {DECON_EVAL_MOD} == 0 play the held-out eval "
+    "set, and every train document sharing a verbatim passage of >= "
+    f"{PSPAN_MIN} tokens with an eval document is reported with the "
+    "exact positions on BOTH sides (eval_start for audit, "
+    "train_start for excision via the dup_passage_rebuild "
+    "machinery).  Strictly stronger evidence than "
+    "contamination_overlap's shingle fraction: a 0.1% overlap "
+    "fraction can still be one fatal verbatim answer string, which "
+    "this query pins to a position.  Same rolling-gram + df-cap + "
+    "gaps-and-islands machinery as dup_passage_spans (shared "
+    "_pspan_base CTEs and builder fragments), with the pairing rule "
+    "swapped from id-ordered to eval-x-train — both directions of "
+    "leakage in one pass.  At 100 TB the eval side is tiny and its "
+    "gram postings broadcast; the train side is touched once.",
+)
+def q_eval_decontam_spans(spark, sf_dir):
+    k, mod = PSPAN_K, DECON_EVAL_MOD
+    docs = load(spark, sf_dir, "documents")
+    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    d = docs.select("doc_id", toks.alias("toks")).filter(F.size("toks") >= k)
+    g = d.select(
+        "doc_id",
+        F.explode(
+            F.transform(
+                F.sequence(F.lit(1), F.size("toks") - k + 1),
+                lambda p: F.struct(
+                    p.cast("long").alias("p"),
+                    md5_long(F.array_join(F.slice("toks", p, k), " ")).alias("h"),
+                ),
+            )
+        ).alias("s"),
+    ).select("doc_id", "s.p", "s.h")
+    is_eval = F.col("doc_id") % mod == 0
+    posts = (
+        g.groupBy("h")
+        .agg(
+            F.sort_array(
+                F.collect_list(F.when(is_eval, F.struct("doc_id", "p")))
+            ).alias("es"),
+            F.sort_array(
+                F.collect_list(F.when(~is_eval, F.struct("doc_id", "p")))
+            ).alias("ts"),
+        )
+        .filter(
+            (F.size("es") + F.size("ts") >= 2)
+            & (F.size("es") + F.size("ts") <= PSPAN_DF_MAX)
+            & (F.size("es") >= 1)
+            & (F.size("ts") >= 1)
+        )
+    )
+    pair_structs = F.flatten(
+        F.transform(
+            F.col("es"),
+            lambda x: F.transform(
+                F.col("ts"),
+                lambda y: F.struct(
+                    x["doc_id"].alias("eval_id"),
+                    x["p"].alias("pe"),
+                    y["doc_id"].alias("train_id"),
+                    y["p"].alias("pt"),
+                ),
+            ),
+        )
+    )
+    m = posts.select(F.explode(pair_structs).alias("pr")).select(
+        "pr.eval_id", "pr.pe", "pr.train_id", "pr.pt"
+    )
+    # Cap-tolerant islands (same bridge rule as _passage_spans).
+    w = Window.partitionBy(
+        "eval_id", "train_id", F.col("pe") - F.col("pt")
+    ).orderBy("pe")
+    brk = F.when(F.col("pe") - F.lag("pe").over(w) <= k, F.lit(0)).otherwise(
+        F.lit(1)
+    )
+    staged = m.select(
+        "eval_id",
+        "train_id",
+        "pe",
+        "pt",
+        (F.col("pe") - F.col("pt")).alias("diag"),
+        brk.alias("__brk"),
+    )
+    w2 = Window.partitionBy("eval_id", "train_id", "diag").orderBy(
+        "pe"
+    ).rowsBetween(Window.unboundedPreceding, 0)
+    isl = staged.withColumn("isl", F.sum("__brk").over(w2))
+    return (
+        isl.groupBy("eval_id", "train_id", "diag", "isl")
+        .agg(
+            F.min("pe").alias("eval_start"),
+            F.min("pt").alias("train_start"),
+            (F.max("pe") - F.min("pe") + F.lit(k)).cast("long").alias("span_toks"),
+        )
+        .filter(F.col("span_toks") >= PSPAN_MIN)
+        .select("eval_id", "train_id", "eval_start", "train_start", "span_toks")
+    )
+
+# ===========================================================================
+# Source-level leakage matrix (passage spans rolled up to sources)
+# ===========================================================================
+
+
+@register(
+    "source_leakage_matrix",
+    _pspan_ctes()
+    + """
+    SELECT da.source AS source_a, db.source AS source_b,
+           count(*)::BIGINT AS n_spans,
+           count(DISTINCT (s.id_a, s.id_b))::BIGINT AS n_doc_pairs,
+           sum(s.span_toks)::BIGINT AS dup_tokens,
+           max(s.span_toks)::BIGINT AS max_span_toks
+    FROM spans s
+    JOIN documents da ON da.doc_id = s.id_a
+    JOIN documents db ON db.doc_id = s.id_b
+    GROUP BY da.source, db.source
+    """,
+    survey_ids=("A1", "J1"),
+    doc="The duplicated-passage relation rolled up to SOURCE "
+    "granularity: per (source_a, source_b) pair, how many verbatim "
+    "spans, distinct doc pairs, and duplicated tokens flow between "
+    "the slices — the cross-source leakage table a curation owner "
+    "reads before re-weighting or re-crawling (within-source rows "
+    "diagnose internal boilerplate; cross-source rows diagnose "
+    "mirror/syndication overlap).  Shares the span builder and "
+    "oracle CTE chain with dup_passage_spans; the rollup adds two "
+    "id-keyed joins to the (bounded) span relation — the corpus is "
+    "touched only by the shared gram pass — and one S^2-bounded "
+    "aggregation.  Soak note: under the harness's 10x VERBATIM "
+    "replication the matrix concentrates onto the same-source "
+    "diagonal (178 -> 20 rows at SOAK_r8 while dup_tokens grows) — "
+    "replica pairs share their base doc's source and cross-base "
+    "gram postings exceed the df cap; a row-count drop here is the "
+    "rollup key-space shrinking, not data loss.",
+)
+def q_source_leakage_matrix(spark, sf_dir):
+    spans = _passage_spans(spark, sf_dir)
+    src = load(spark, sf_dir, "documents").select("doc_id", "source")
+    sa = src.select(F.col("doc_id").alias("id_a"), F.col("source").alias("source_a"))
+    sb = src.select(F.col("doc_id").alias("id_b"), F.col("source").alias("source_b"))
+    return (
+        spans.join(sa, "id_a")
+        .join(sb, "id_b")
+        .groupBy("source_a", "source_b")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_spans"),
+            F.countDistinct("id_a", "id_b").cast("long").alias("n_doc_pairs"),
+            F.sum("span_toks").cast("long").alias("dup_tokens"),
+            F.max("span_toks").cast("long").alias("max_span_toks"),
+        )
+    )
+
+# ===========================================================================
+# Maximal-span merge for passage dedup (interval union per doc pair)
+# ===========================================================================
+
+
+def _sql_islands(
+    name: str, src: str, part: str, start: str, end: str, tie: str
+) -> str:
+    """CTE ``{name}``: the rows of ``src`` plus ``grp``, the id of the
+    interval island each [start, end) row falls in, per ``part``.  The
+    order (start, end, ``tie``) must be TOTAL: the break flag and its
+    running sum are separate window layers, and with duplicate
+    (start, end) rows the two sorts need not agree on tie order
+    otherwise — rows sorted before the flagged row pick up grp=0 and
+    one island splits in two (round-10 sf1 finding)."""
+    order = f"{start}, {end}, {tie}"
+    return f"""{name}_brk AS (
+        SELECT *,
+               CASE WHEN {start} > coalesce(max({end}) OVER (
+                        PARTITION BY {part} ORDER BY {order}
+                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
+                    THEN 1 ELSE 0 END AS brk
+        FROM {src}
+    ), {name} AS (
+        SELECT *, sum(brk) OVER (PARTITION BY {part} ORDER BY {order}
+                                 ROWS UNBOUNDED PRECEDING) AS grp
+        FROM {name}_brk
+    )"""
+
+
+def _interval_islands(ivl, part, start: str, end: str, tie):
+    """``ivl`` plus ``__grp``, the Spark twin of :func:`_sql_islands`:
+    order each ``part`` group's [start, end) rows by (start, end,
+    ``tie``), break where start exceeds the running max end, and
+    running-sum the breaks into island ids."""
+    w = Window.partitionBy(*part).orderBy(start, end, *tie)
+    prev_end = F.max(end).over(w.rowsBetween(Window.unboundedPreceding, -1))
+    brk = F.when(prev_end.isNull() | (F.col(start) > prev_end), F.lit(1)).otherwise(
+        F.lit(0)
+    )
+    grp = F.sum("__brk").over(w.rowsBetween(Window.unboundedPreceding, 0))
+    return ivl.withColumn("__brk", brk).withColumn("__grp", grp)
+
+
+def _pspan_maximal_oracle() -> str:
+    return (
+        _pspan_ctes()
+        + """, iv AS (
+        SELECT id_a, id_b, a_start, a_start + span_toks AS a_end, b_start
+        FROM spans
+    ), """
+        + _sql_islands("gi", "iv", "id_a, id_b", "a_start", "a_end", "b_start")
+        + """
+    SELECT id_a, id_b, min(a_start)::BIGINT AS a_start,
+           (max(a_end) - min(a_start))::BIGINT AS span_toks,
+           count(*)::BIGINT AS n_fragments
+    FROM gi GROUP BY id_a, id_b, grp
+    """
+    )
+
+
+@register(
+    "dup_passage_maximal",
+    _pspan_maximal_oracle(),
+    survey_ids=("A7", "W1"),
+    doc="MAXIMAL duplicated-passage intervals per document pair: "
+    "dup_passage_spans decomposes shared text by diagonal (pa-pb), so "
+    "a passage that appears at TWO offsets in doc B, or one with "
+    "internal periodicity, reports overlapping/adjacent fragments in "
+    "doc-A coordinates — this entry unions those intervals "
+    "([a_start, a_start+span_toks), half-open, touching merges) into "
+    "maximal spans via the interval-union islands trick "
+    "(interval_union_time's machinery on token offsets): order a "
+    "pair's fragments by start, break where start exceeds the running "
+    "max end, running-sum the breaks into island ids, min/max per "
+    "island.  The window partition is ONE pair's fragment list — "
+    "bounded by the pair's span count, never the corpus.  Excision "
+    "tooling (dup_passage_rebuild) wants exactly this relation: one "
+    "row per contiguous duplicated region, with the fragment count "
+    "kept for audit.",
+)
+def q_dup_passage_maximal(spark, sf_dir):
+    spans = _passage_spans(spark, sf_dir)
+    ivl = spans.select(
+        "id_a",
+        "id_b",
+        "a_start",
+        (F.col("a_start") + F.col("span_toks")).alias("a_end"),
+        "b_start",
+    )
+    return (
+        _interval_islands(ivl, ["id_a", "id_b"], "a_start", "a_end", ["b_start"])
+        .groupBy("id_a", "id_b", "__grp")
+        .agg(
+            F.min("a_start").cast("long").alias("a_start"),
+            (F.max("a_end") - F.min("a_start")).cast("long").alias("span_toks"),
+            F.count(F.lit(1)).cast("long").alias("n_fragments"),
+        )
+        .select("id_a", "id_b", "a_start", "span_toks", "n_fragments")
+    )
+
+
+# ===========================================================================
+# LSH band autotune (the tuner trilogy's dedup leg)
+# ===========================================================================
+
+LSH_TUNE_PCT = 95  # capture >= this % of the loosest banding's recall
+_LSH_BAND_SWEEP = (1, 2, 4, 8, 16)  # divisors of LSH_K
+
+
+def _lsh_band_autotune_oracle() -> str:
+    k, pct = LSH_K, LSH_TUNE_PCT
+    arms = []
+    for nb in _LSH_BAND_SWEEP:
+        rpb = k // nb
+        for band in range(nb):
+            key = ", ".join(f"mh{band * rpb + j}" for j in range(rpb))
+            arms.append(
+                f"SELECT doc_id, {nb}::BIGINT AS nb, "
+                f"{band}::BIGINT AS band_id, [{key}] AS key FROM sig"
+            )
+    loosest = _LSH_BAND_SWEEP[-1]
+    return (
+        _lsh_audit_base_ctes()
+        + f""",
+    sweep AS ({" UNION ALL ".join(arms)}),
+    cand AS MATERIALIZED (
+        SELECT DISTINCT a.nb, a.doc_id AS id_a, b.doc_id AS id_b
+        FROM sweep a JOIN sweep b
+          ON a.nb = b.nb AND a.band_id = b.band_id AND a.key = b.key
+         AND a.doc_id < b.doc_id),
+    ver AS MATERIALIZED (
+        SELECT cand.nb, cand.id_a, cand.id_b
+        FROM cand JOIN sig sa ON cand.id_a = sa.doc_id
+                  JOIN sig sb ON cand.id_b = sb.doc_id
+        WHERE {_SIG_MATCHES} >= {LSH_THRESH}),
+    nbs AS (SELECT unnest([{", ".join(str(b) for b in _LSH_BAND_SWEEP)}])::BIGINT
+                AS nb),
+    cc AS (SELECT nb, count(*)::BIGINT AS n_cand FROM cand GROUP BY nb),
+    vc AS (SELECT nb, count(*)::BIGINT AS n_verified FROM ver GROUP BY nb),
+    hc AS (SELECT ver.nb, count(*)::BIGINT AS n_hit
+           FROM ver JOIN truth USING (id_a, id_b) GROUP BY ver.nb),
+    tr AS (SELECT count(*)::BIGINT AS n_true FROM truth),
+    rec AS (
+        SELECT nbs.nb, coalesce(cc.n_cand, 0) AS n_cand,
+               coalesce(vc.n_verified, 0) AS n_verified,
+               coalesce(hc.n_hit, 0) AS n_hit,
+               (coalesce(hc.n_hit, 0) * 1000000 // tr.n_true)::BIGINT
+                   AS recall_ppm
+        FROM nbs LEFT JOIN cc USING (nb) LEFT JOIN vc USING (nb)
+                 LEFT JOIN hc USING (nb) CROSS JOIN tr),
+    fullr AS (SELECT recall_ppm AS full_ppm FROM rec WHERE nb = {loosest}),
+    ch AS (SELECT min(nb) AS chosen_nb FROM rec CROSS JOIN fullr
+           WHERE recall_ppm * 100 >= {pct} * full_ppm)
+    SELECT rec.nb AS bands, rec.n_cand, rec.n_verified, rec.n_hit,
+           rec.recall_ppm,
+           ({pct} * fullr.full_ppm // 100)::BIGINT AS target_ppm,
+           (rec.nb = ch.chosen_nb) AS chosen
+    FROM rec CROSS JOIN fullr CROSS JOIN ch
+    """
+    )
+
+
+@register(
+    "lsh_band_autotune",
+    _lsh_band_autotune_oracle(),
+    survey_ids=("A1", "A3"),
+    doc="Band-count AUTOTUNING for the MinHash-LSH dedup path — the "
+    "tuner trilogy's dedup leg (ivfadc_autotune tunes the ANN leg "
+    "from its audit; this tunes banding from lsh_recall_audit's "
+    f"sample and ground truth): sweep bands over the divisors of "
+    f"k={LSH_K} — one signature computation, every banding is just a "
+    "different grouping of the SAME 16 hashes — measure candidate "
+    "volume (the verification workload banding exists to bound: "
+    "more/narrower bands => exponentially more candidates) and "
+    "verified recall against exact integer-Jaccard truth, and choose "
+    f"the FEWEST bands capturing >= {LSH_TUNE_PCT}% of the loosest "
+    "banding's recall.  Fewest bands = cheapest: candidate volume is "
+    "monotone in band count, so the choice rule reads 'stop widening "
+    "the net once the extra candidates stop catching true dups'.  "
+    "The ceiling is relative (the 12-of-16 verify gate caps what any "
+    "banding can pass), the sample is the audit's constant-cost md5 "
+    "sample, and the whole sweep is the result relation — integer "
+    "arithmetic end-to-end, hash-checked against the oracle replay.",
+)
+def q_lsh_band_autotune(spark, sf_dir):
+    k, pct = LSH_K, LSH_TUNE_PCT
+    loosest = _LSH_BAND_SWEEP[-1]
+    samp, truth = _lsh_audit_sample_truth(spark, sf_dir)
+    sig = (
+        D.minhash_signature(samp, "text", k=k)
+        .drop("text")
+        .localCheckpoint(eager=True)  # sign once: 31 band arms reuse it
+    )
+    structs = []
+    for nb in _LSH_BAND_SWEEP:
+        rpb = k // nb
+        for band in range(nb):
+            structs.append(
+                F.struct(
+                    F.lit(nb).cast("long").alias("nb"),
+                    F.lit(band).cast("long").alias("band_id"),
+                    F.array(
+                        *[F.col(f"mh{band * rpb + j}") for j in range(rpb)]
+                    ).alias("key"),
+                )
+            )
+    sweep = sig.select(
+        "doc_id", F.explode(F.array(*structs)).alias("b")
+    ).select("doc_id", "b.nb", "b.band_id", "b.key")
+    a, b = sweep.alias("a"), sweep.alias("b")
+    cand = (
+        a.join(
+            b,
+            (F.col("a.nb") == F.col("b.nb"))
+            & (F.col("a.band_id") == F.col("b.band_id"))
+            & (F.col("a.key") == F.col("b.key"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(
+            F.col("a.nb").alias("nb"),
+            F.col("a.doc_id").alias("id_a"),
+            F.col("b.doc_id").alias("id_b"),
+        )
+        .distinct()
+    )
+    sa = sig.select(
+        F.col("doc_id").alias("id_a"),
+        *[F.col(f"mh{i}").alias(f"a{i}") for i in range(k)],
+    )
+    sb = sig.select(
+        F.col("doc_id").alias("id_b"),
+        *[F.col(f"mh{i}").alias(f"b{i}") for i in range(k)],
+    )
+    matches = sum(
+        (F.col(f"a{i}") == F.col(f"b{i}")).cast("int") for i in range(k)
+    )
+    nbs = spark.createDataFrame(
+        [(int(nb),) for nb in _LSH_BAND_SWEEP], "nb long"
+    )
+    # Round-12 restructure: n_cand / n_verified / n_hit were three
+    # aggregate subtrees over two eager checkpoints (cand, ver); fold
+    # them into ONE grouped pass over the flagged candidate relation
+    # (verified as an int flag instead of a filter; truth membership
+    # via a broadcast left join — truth is sample-bounded but
+    # localCheckpointed/stat-less, hence the explicit hint).  The
+    # per-arm stat frame is |_LSH_BAND_SWEEP| rows, so checkpoint THAT
+    # (the tail references it three times) instead of the pair frames.
+    arm_stats = (
+        cand.join(sa, "id_a")
+        .join(sb, "id_b")
+        .withColumn("v", (matches >= LSH_THRESH).cast("int"))
+        .join(
+            F.broadcast(truth.withColumn("in_t", F.lit(1))),
+            ["id_a", "id_b"],
+            "left",
+        )
+        .groupBy("nb")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_cand"),
+            F.sum("v").cast("long").alias("n_verified"),
+            F.coalesce(
+                F.sum(F.col("v") * F.coalesce(F.col("in_t"), F.lit(0))),
+                F.lit(0),
+            )
+            .cast("long")
+            .alias("n_hit"),
+        )
+    )
+    tr = truth.agg(F.count(F.lit(1)).cast("long").alias("n_true"))
+    rec = (
+        nbs.join(arm_stats, "nb", "left")
+        .crossJoin(F.broadcast(tr))
+        .select(
+            "nb",
+            F.coalesce("n_cand", F.lit(0)).cast("long").alias("n_cand"),
+            F.coalesce("n_verified", F.lit(0)).cast("long").alias("n_verified"),
+            F.coalesce("n_hit", F.lit(0)).cast("long").alias("n_hit"),
+            F.expr("(coalesce(n_hit, 0) * 1000000) div n_true")
+            .cast("long")
+            .alias("recall_ppm"),
+        )
+        .localCheckpoint(eager=True)  # |sweep| rows; tail reads it 3x
+    )
+    fullr = rec.filter(F.col("nb") == loosest).select(
+        F.col("recall_ppm").alias("full_ppm")
+    )
+    ch = (
+        rec.crossJoin(F.broadcast(fullr))
+        .filter(F.col("recall_ppm") * 100 >= pct * F.col("full_ppm"))
+        .agg(F.min("nb").alias("chosen_nb"))
+    )
+    return (
+        rec.crossJoin(F.broadcast(fullr))
+        .crossJoin(F.broadcast(ch))
+        .select(
+            F.col("nb").alias("bands"),
+            "n_cand",
+            "n_verified",
+            "n_hit",
+            "recall_ppm",
+            F.expr(f"({pct} * full_ppm) div 100").cast("long").alias("target_ppm"),
+            (F.col("nb") == F.col("chosen_nb")).alias("chosen"),
+        )
+    )
+
+
+# ===========================================================================
+# URL-granularity dedup (C4/CCNet's first dedup stage)
+# ===========================================================================
+
+# Messy-URL synthesis from doc_id (closed-form on both engines): mixed
+# scheme/host case, optional www., default and non-default ports,
+# duplicate slashes, /index.html and trailing-slash variants, tracking
+# params in shuffled order, fragments.  Distinct raw URLs collapse to
+# one canonical form exactly when they differ only in canonicalizable
+# parts — which the residue classes arrange in volume.
+
+_TWO_LEVEL_SUFFIXES = ("co.uk", "com.au", "co.jp", "org.uk", "ac.uk")
+_TRACKING_RE = "^(utm_[^=]*|fbclid|gclid)="
+
+
+def _url_gen_spark(h):
+    scheme = F.when(h % 2 == 0, F.lit("HTTP://")).otherwise(F.lit("https://"))
+    www = F.when(h % 3 == 0, F.lit("WWW.")).otherwise(F.lit(""))
+    host = F.concat(
+        F.lit("Example"),
+        (h % 7).cast("string"),
+        F.when(h % 5 == 0, F.lit(".CO.UK")).otherwise(F.lit(".COM")),
+    )
+    port = (
+        F.when(h % 11 == 0, F.lit(":8080"))
+        .when((h % 4 == 0) & (h % 2 == 0), F.lit(":80"))
+        .when((h % 4 == 1) & (h % 2 == 1), F.lit(":443"))
+        .otherwise(F.lit(""))
+    )
+    base_path = F.concat(F.lit("/articles//item-"), (h % 13).cast("string"))
+    path = (
+        F.when(h % 6 == 0, F.concat(base_path, F.lit("/")))
+        .when(h % 6 == 1, F.concat(base_path, F.lit("/index.html")))
+        .otherwise(base_path)
+    )
+    idq = (h % 17).cast("string")
+    query = (
+        F.when(h % 8 == 0, F.concat(F.lit("?utm_source=feed&id="), idq, F.lit("&utm_campaign=x")))
+        .when(h % 8 == 1, F.concat(F.lit("?id="), idq, F.lit("&fbclid=abc")))
+        .when(h % 8 == 2, F.lit("?b=2&a=1"))
+        .when(h % 8 == 3, F.lit("?a=1&b=2"))
+        .otherwise(F.lit(""))
+    )
+    frag = F.when(h % 9 == 0, F.lit("#section-2")).otherwise(F.lit(""))
+    return F.concat(scheme, www, host, port, path, query, frag)
+
+
+def _url_gen_sql(h="doc_id"):
+    return f"""
+        (CASE WHEN {h} % 2 = 0 THEN 'HTTP://' ELSE 'https://' END) ||
+        (CASE WHEN {h} % 3 = 0 THEN 'WWW.' ELSE '' END) ||
+        'Example' || ({h} % 7)::VARCHAR ||
+        (CASE WHEN {h} % 5 = 0 THEN '.CO.UK' ELSE '.COM' END) ||
+        (CASE WHEN {h} % 11 = 0 THEN ':8080'
+              WHEN {h} % 4 = 0 AND {h} % 2 = 0 THEN ':80'
+              WHEN {h} % 4 = 1 AND {h} % 2 = 1 THEN ':443'
+              ELSE '' END) ||
+        '/articles//item-' || ({h} % 13)::VARCHAR ||
+        (CASE WHEN {h} % 6 = 0 THEN '/'
+              WHEN {h} % 6 = 1 THEN '/index.html' ELSE '' END) ||
+        (CASE WHEN {h} % 8 = 0
+                  THEN '?utm_source=feed&id=' || ({h} % 17)::VARCHAR || '&utm_campaign=x'
+              WHEN {h} % 8 = 1 THEN '?id=' || ({h} % 17)::VARCHAR || '&fbclid=abc'
+              WHEN {h} % 8 = 2 THEN '?b=2&a=1'
+              WHEN {h} % 8 = 3 THEN '?a=1&b=2'
+              ELSE '' END) ||
+        (CASE WHEN {h} % 9 = 0 THEN '#section-2' ELSE '' END)"""
+
+
+def url_canonicalize(url):
+    """Canonical dedup key of a raw URL, all native Column expressions:
+    fragment dropped; scheme dropped from the KEY (http/https treated
+    equal for dedup — C4-style); authority lowercased, leading 'www.'
+    and default ports (:80/:443) stripped, other ports kept; path
+    double-slashes collapsed, trailing '/index.html' and trailing
+    slashes stripped, empty -> '/'; tracking params (utm_*, fbclid,
+    gclid) dropped and survivors SORTED.  One projection, no UDF."""
+    nofrag = F.regexp_replace(url, "#.*$", "")
+    auth = F.lower(F.regexp_extract(nofrag, "^[A-Za-z]+://([^/?#]+)", 1))
+    auth = F.regexp_replace(auth, "^www\\.", "")
+    auth = F.regexp_replace(auth, ":(80|443)$", "")
+    path = F.regexp_extract(nofrag, "^[A-Za-z]+://[^/?#]*([^?#]*)", 1)
+    path = F.regexp_replace(path, "/{2,}", "/")
+    path = F.regexp_replace(path, "/index\\.html$", "")
+    path = F.regexp_replace(path, "/+$", "")
+    path = F.when(path == "", F.lit("/")).otherwise(path)
+    rawq = F.regexp_extract(nofrag, "\\?([^#]*)", 1)
+    params = F.array_sort(
+        F.filter(
+            F.split(rawq, "&"),
+            lambda x: ~x.rlike(_TRACKING_RE),
+        )
+    )
+    query = F.when(
+        (rawq == "") | (F.size(params) == 0), F.lit("")
+    ).otherwise(F.concat(F.lit("?"), F.array_join(params, "&")))
+    return F.concat(auth, path, query)
+
+
+def sql_url_canonicalize(url_expr):
+    """DuckDB twin of :func:`url_canonicalize` (identical pipeline)."""
+    nofrag = f"regexp_replace({url_expr}, '#.*$', '')"
+    auth = (
+        f"regexp_replace(regexp_replace(lower(regexp_extract({nofrag}, "
+        f"'^[A-Za-z]+://([^/?#]+)', 1)), '^www\\.', ''), ':(80|443)$', '')"
+    )
+    path = (
+        f"regexp_replace(regexp_replace(regexp_replace("
+        f"regexp_extract({nofrag}, '^[A-Za-z]+://[^/?#]*([^?#]*)', 1), "
+        f"'/{{2,}}', '/', 'g'), '/index\\.html$', ''), '/+$', '')"
+    )
+    path = f"(CASE WHEN {path} = '' THEN '/' ELSE {path} END)"
+    rawq = f"regexp_extract({nofrag}, '\\?([^#]*)', 1)"
+    params = (
+        f"list_sort(list_filter(string_split({rawq}, '&'), "
+        f"x -> NOT regexp_matches(x, '{_TRACKING_RE}')))"
+    )
+    query = (
+        f"(CASE WHEN {rawq} = '' OR len({params}) = 0 THEN '' "
+        f"ELSE '?' || array_to_string({params}, '&') END)"
+    )
+    return f"({auth} || {path} || {query})"
+
+
+def registered_domain(canon):
+    """Registered domain off the canonical key: last 2 host labels, or
+    3 when the last two form a known two-level public suffix (small
+    built-in set — the full PSL is a data file swap, same plan)."""
+    host = F.regexp_replace(F.regexp_extract(canon, "^([^/?]+)", 1), ":\\d+$", "")
+    labels = F.split(host, "\\.")
+    last2 = F.concat(
+        F.element_at(labels, -2), F.lit("."), F.element_at(labels, -1)
+    )
+    return F.when(
+        (F.size(labels) >= 3) & last2.isin(*_TWO_LEVEL_SUFFIXES),
+        F.concat(F.element_at(labels, -3), F.lit("."), last2),
+    ).otherwise(last2)
+
+
+def sql_registered_domain(canon):
+    host = (
+        f"regexp_replace(regexp_extract({canon}, '^([^/?]+)', 1), ':\\d+$', '')"
+    )
+    labels = f"string_split({host}, '.')"
+    last2 = f"({labels}[-2] || '.' || {labels}[-1])"
+    suf = ", ".join(f"'{s}'" for s in _TWO_LEVEL_SUFFIXES)
+    return (
+        f"(CASE WHEN len({labels}) >= 3 AND {last2} IN ({suf}) "
+        f"THEN {labels}[-3] || '.' || {last2} ELSE {last2} END)"
+    )
+
+
+_URL_CTES = f"""
+    WITH raw AS (
+        SELECT doc_id, {_url_gen_sql("doc_id")} AS url FROM documents
+    ),
+    canon AS (
+        SELECT doc_id, url, {sql_url_canonicalize("url")} AS curl FROM raw
+    )"""
+
+
+@register(
+    "url_canonical_dedup",
+    _URL_CTES
+    + """
+    SELECT curl AS canonical_url,
+           min(doc_id)::BIGINT AS kept_doc_id,
+           count(*)::BIGINT AS n_docs,
+           count(DISTINCT url)::BIGINT AS n_raw_urls
+    FROM canon GROUP BY curl
+    """,
+    survey_ids=("A6", "A7", "G3"),
+    doc="URL-granularity dedup — the FIRST dedup stage of a C4/CCNet "
+    "pretraining pipeline, run before any content dedup: messy crawl "
+    "URLs (mixed case, www., default ports, doubled slashes, "
+    "/index.html + trailing-slash variants, utm_*/fbclid/gclid "
+    "params in shuffled order, fragments — synthesized closed-form "
+    "per doc) are canonicalized in ONE native projection "
+    "(url_canonicalize: regexp extract/replace + array filter/sort, "
+    "no UDF) and collapsed keep-first per canonical key.  Output is "
+    "one row per canonical URL with the kept doc and collapse "
+    "counts.  Scale shape: a scan-side projection plus one keyed "
+    "aggregation with map-side combine — the same single-shuffle "
+    "profile as exact_dedup, at 100 TB the cheapest stage in the "
+    "stack; the canonical key is computed once and reusable by the "
+    "downstream content-dedup stages.",
+)
+def q_url_canonical_dedup(spark, sf_dir):
+    docs = load(spark, sf_dir, "documents").select("doc_id")
+    canon = docs.select(
+        "doc_id",
+        _url_gen_spark(F.col("doc_id")).alias("url"),
+    ).withColumn("curl", url_canonicalize(F.col("url")))
+    return canon.groupBy(F.col("curl").alias("canonical_url")).agg(
+        F.min("doc_id").cast("long").alias("kept_doc_id"),
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.countDistinct("url").cast("long").alias("n_raw_urls"),
+    )
+
+
+@register(
+    "url_domain_profile",
+    _URL_CTES
+    + f""",
+    dom AS (
+        SELECT doc_id, curl, {sql_registered_domain("curl")} AS domain,
+               regexp_extract(curl, '^([^/?]+)', 1) AS host
+        FROM canon
+    ),
+    tot AS (SELECT count(*)::BIGINT AS n_total FROM dom)
+    SELECT domain,
+           count(*)::BIGINT AS n_docs,
+           count(DISTINCT curl)::BIGINT AS n_canonical,
+           count(DISTINCT host)::BIGINT AS n_hosts,
+           (count(*) * 1000000 // tot.n_total)::BIGINT AS share_ppm
+    FROM dom CROSS JOIN tot
+    GROUP BY domain, tot.n_total
+    """,
+    survey_ids=("A1", "A3"),
+    doc="Per-registered-domain corpus profile over the canonical URL "
+    "relation — the domain-skew input mixture design consumes "
+    "(token_budget_mix / source_temperature_mix operate per source; "
+    "this is the same accounting at web granularity): docs, distinct "
+    "canonical URLs, distinct hosts, and integer-ppm corpus share "
+    "per registered domain (last-2 host labels, or 3 over a "
+    "two-level public suffix — the suffix set is a broadcast data "
+    "file at production scale, identical plan).  Shape: the dedup "
+    "projection + one domain-keyed aggregate; the total-count attach "
+    "is a 1-row broadcast cross join, never a shuffle of the corpus.",
+)
+def q_url_domain_profile(spark, sf_dir):
+    docs = load(spark, sf_dir, "documents").select("doc_id")
+    canon = docs.select(
+        "doc_id", _url_gen_spark(F.col("doc_id")).alias("url")
+    ).withColumn("curl", url_canonicalize(F.col("url")))
+    dom = canon.select(
+        "doc_id",
+        "curl",
+        registered_domain(F.col("curl")).alias("domain"),
+        F.regexp_extract("curl", "^([^/?]+)", 1).alias("host"),
+    )
+    tot = dom.agg(F.count(F.lit(1)).cast("long").alias("n_total"))
+    return (
+        dom.crossJoin(F.broadcast(tot))
+        .groupBy("domain", "n_total")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.countDistinct("curl").cast("long").alias("n_canonical"),
+            F.countDistinct("host").cast("long").alias("n_hosts"),
+        )
+        .select(
+            "domain",
+            "n_docs",
+            "n_canonical",
+            "n_hosts",
+            ((F.col("n_docs") * 1000000) / F.col("n_total"))
+            .cast("long")
+            .alias("share_ppm"),
+        )
+    )
+
+
+# ===========================================================================
+# Rebuild on MAXIMAL excision regions (dedup-consumer integration)
+# ===========================================================================
+
+
+def _rebuild_maximal_oracle() -> str:
+    # The excision-side twin of dup_passage_maximal's interval union,
+    # in DOC-B coordinates (the doc being excised), collapsed across
+    # ALL partners: regions are disjoint maximal intervals, so the
+    # dropped-position relation needs no DISTINCT and n_dropped is the
+    # plain sum of region widths.  kept_text must equal
+    # dup_passage_rebuild's DISTINCT-position excision exactly.
+    return (
+        _pspan_ctes()
+        + """, bint AS (
+        SELECT id_b AS doc_id, b_start AS s, b_start + span_toks AS e,
+               id_a, a_start
+        FROM spans
+    ), """
+        # (id_a, a_start) tiebreaks: one passage shared with many partners
+        # (the 10x replica corpus) gives duplicate (s, e) rows — found at
+        # sf1, 18 docs with n_dropped = 2 x n_toks before the tiebreak.
+        + _sql_islands("bg", "bint", "doc_id", "s", "e", "id_a, a_start")
+        + """, reg AS (
+        SELECT doc_id, min(s) AS s, max(e) AS e FROM bg GROUP BY doc_id, grp
+    ), nreg AS (
+        SELECT doc_id, count(*)::BIGINT AS n_regions,
+               sum(e - s)::BIGINT AS n_dropped
+        FROM reg GROUP BY doc_id
+    ), dropped AS (
+        SELECT doc_id, u.pos::BIGINT AS pos
+        FROM reg, unnest(range(s, e)) AS u(pos)
+    ), tok AS (
+        SELECT t.doc_id, len(t.toks)::BIGINT AS n_toks,
+               u.pos::BIGINT AS pos, t.toks[u.pos] AS tk
+        FROM t JOIN nreg USING (doc_id),
+             unnest(range(1, len(t.toks) + 1)) AS u(pos)
+    )
+    SELECT tok.doc_id, max(tok.n_toks) AS n_toks,
+           max(nreg.n_dropped) AS n_dropped,
+           max(nreg.n_regions) AS n_regions,
+           coalesce(string_agg(tok.tk, ' ' ORDER BY tok.pos)
+                        FILTER (WHERE d.pos IS NULL), '') AS kept_text
+    FROM tok JOIN nreg USING (doc_id)
+         LEFT JOIN dropped d ON tok.doc_id = d.doc_id AND tok.pos = d.pos
+    GROUP BY tok.doc_id
+    """
+    )
+
+
+@register(
+    "dup_passage_rebuild_maximal",
+    _rebuild_maximal_oracle(),
+    survey_ids=("A7", "G2", "W1"),
+    doc="dup_passage_rebuild CONSUMING maximal excision regions (the "
+    "round-9 verdict's dedup-consumer integration): the span "
+    "relation's b-side intervals are interval-unioned PER EXCISED "
+    "DOC across all partners (dup_passage_maximal's islands trick in "
+    "doc-B coordinates), so a passage duplicated at two offsets — or "
+    "reported as overlapping diagonal fragments — excises ONCE: the "
+    "regions are disjoint maximal intervals, the dropped-position "
+    "explode needs no DISTINCT (the old rebuild's per-position dedup "
+    "shuffle disappears), and n_dropped is the closed-form sum of "
+    "region widths.  Output adds n_regions (contiguous excised "
+    "regions per doc) for audit; kept_text is hash-checked to equal "
+    "the DISTINCT-position rebuild exactly — union-then-excise-once "
+    "== excise-with-dedup, per the oracle.  Plan: span plan -> one "
+    "per-doc interval window (bounded by the doc's span count) -> "
+    "bounded explode of disjoint regions -> the shared anti-join "
+    "rebuild.",
+)
+def q_dup_passage_rebuild_maximal(spark, sf_dir):
+    spans = _passage_spans(spark, sf_dir)
+    ivl = spans.select(
+        F.col("id_b").alias("doc_id"),
+        F.col("b_start").alias("s"),
+        (F.col("b_start") + F.col("span_toks")).alias("e"),
+        "id_a",
+        "a_start",
+    )
+    # Total order via (id_a, a_start) tiebreaks — see _sql_islands:
+    # island determinism must not hinge on tie order.
+    regions = (
+        _interval_islands(ivl, ["doc_id"], "s", "e", ["id_a", "a_start"])
+        .groupBy("doc_id", "__grp")
+        .agg(F.min("s").alias("s"), F.max("e").alias("e"))
+        # Tiny (one row per excised region); read by three consumers
+        # below, and materializing stops the span plan re-running.
+        .localCheckpoint(eager=True)
+    )
+    nreg = regions.groupBy("doc_id").agg(
+        F.count(F.lit(1)).cast("long").alias("n_regions"),
+        F.sum(F.col("e") - F.col("s")).cast("long").alias("n_dropped"),
+    )
+    # Regions are disjoint by construction: no DISTINCT needed.
+    dropped = regions.select(
+        "doc_id",
+        F.explode(F.sequence(F.col("s"), F.col("e") - 1)).alias("pos"),
+    )
+    docs = load(spark, sf_dir, "documents")
+    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    tok = (
+        docs.join(nreg.select("doc_id"), "doc_id", "left_semi")
+        .select("doc_id", toks.alias("toks"))
+        .select(
+            "doc_id",
+            F.size("toks").cast("long").alias("n_toks"),
+            F.explode(
+                F.transform(
+                    F.sequence(F.lit(1), F.size("toks")),
+                    lambda p: F.struct(
+                        p.cast("long").alias("pos"),
+                        F.element_at("toks", p.cast("int")).alias("tk"),
+                    ),
+                )
+            ).alias("s"),
+        )
+        .select("doc_id", "n_toks", "s.pos", "s.tk")
+    )
+    kept = (
+        tok.join(dropped, ["doc_id", "pos"], "left_anti")
+        .groupBy("doc_id")
+        .agg(
+            F.max("n_toks").alias("n_toks_k"),
+            F.array_join(
+                F.transform(
+                    F.sort_array(F.collect_list(F.struct("pos", "tk"))),
+                    lambda x: x["tk"],
+                ),
+                " ",
+            ).alias("kept_text"),
+        )
+    )
+    base = tok.groupBy("doc_id").agg(F.max("n_toks").alias("n_toks"))
+    return (
+        base.join(nreg, "doc_id")
+        .join(kept, "doc_id", "left")
+        .select(
+            "doc_id",
+            "n_toks",
+            "n_dropped",
+            "n_regions",
+            F.coalesce("kept_text", F.lit("")).alias("kept_text"),
+        )
+    )
+
+# ===========================================================================
+# Cluster-representative selection (keep best per near-dup cluster)
+# ===========================================================================
+
+# Same candidate generation + closure as dup_clusters (extended.py) so
+# the two queries agree on what a cluster IS; this query adds the
+# keep-policy.  Quality = distinct-vocabulary size (a stand-in for any
+# per-doc quality score — the plan shape is identical for a model
+# score column).
+_SQL_TOKS = (
+    "CASE WHEN trim(lower(coalesce(text, ''))) = '' THEN []::VARCHAR[] "
+    "ELSE list_distinct(string_split_regex(trim(lower(coalesce(text, ''))), "
+    "'\\s+')) END"
+)
+
+_KEEP_BEST_ORACLE = f"""
+    WITH RECURSIVE t AS (
+        SELECT doc_id, source, {_SQL_TOKS} AS toks
+        FROM documents WHERE doc_id < 200
+    ),
+    q AS (SELECT doc_id, len(toks)::BIGINT AS quality FROM t),
+    edges0 AS (
+      SELECT a.doc_id AS u, b.doc_id AS v
+      FROM t a JOIN t b
+        ON a.source = b.source AND a.doc_id < b.doc_id
+       AND b.doc_id - a.doc_id <= 40
+      WHERE len(a.toks) + len(b.toks) > 0
+        AND len(list_filter(a.toks, x -> list_contains(b.toks, x)))::DOUBLE
+            / (len(a.toks) + len(b.toks)
+               - len(list_filter(a.toks, x -> list_contains(b.toks, x))))::DOUBLE
+            > 0.5
+    ),
+    edges AS (SELECT u, v FROM edges0 UNION SELECT v, u FROM edges0),
+    nodes AS (SELECT DISTINCT u AS id FROM edges),
+    walk AS (
+      SELECT id, id AS reach FROM nodes
+      UNION
+      SELECT w.id, e.v AS reach FROM walk w JOIN edges e ON e.u = w.reach
+    ),
+    comp AS (SELECT id, min(reach) AS component FROM walk GROUP BY id),
+    memb AS (
+      SELECT q.doc_id, q.quality,
+             coalesce(c.component, q.doc_id) AS component
+      FROM q LEFT JOIN comp c ON c.id = q.doc_id
+    ),
+    ranked AS (
+      SELECT *, row_number() OVER (
+          PARTITION BY component ORDER BY quality DESC, doc_id) AS rn
+      FROM memb
+    )
+    SELECT component,
+           count(*)::BIGINT AS n_members,
+           max(CASE WHEN rn = 1 THEN doc_id END)::BIGINT AS kept_doc_id,
+           max(CASE WHEN rn = 1 THEN quality END)::BIGINT AS kept_quality
+    FROM ranked
+    GROUP BY component
+"""
+
+
+@register(
+    "dup_cluster_keep_best",
+    _KEEP_BEST_ORACLE,
+    survey_ids=("A7",),
+    doc="Cluster-representative selection — the dedup CONSUMER policy: "
+    "within each near-dup cluster keep the highest-quality member "
+    "(quality here = distinct-vocab size; any per-doc score column "
+    "slots into the same plan), tiebreak min doc_id; singletons keep "
+    "themselves.  Uses the SAME Jaccard>0.5 candidates + min-label "
+    "closure as dup_clusters, then ONE map-side-combinable aggregate: "
+    "max(struct(quality, -doc_id)) per component — no window, no "
+    "second shuffle for the argmax.  Scale shape: candidates come "
+    "from banded LSH in production (lsh_dup_star_edges), the closure "
+    "is per-round keyed shuffles on the EDGE vocabulary only, and the "
+    "keep decision is one combinable agg over members — at 100 TB "
+    "the corpus never shuffles on volume, only ids+scores do.  "
+    "doc_id<200 bounds the oracle's recursive CTE, not the engine.",
+)
+def q_dup_cluster_keep_best(spark, sf_dir):
+    from ..operators.clusters import connected_components
+
+    d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
+    t = d.select(
+        "doc_id",
+        "source",
+        F.array_distinct(
+            tokens(F.lower(F.coalesce(F.col("text"), F.lit(""))))
+        ).alias("toks"),
+    )
+    t = t.withColumn("quality", F.size("toks").cast("long"))
+    a, b = t.alias("a"), t.alias("b")
+    pairs = (
+        a.join(
+            b,
+            (F.col("a.source") == F.col("b.source"))
+            & (F.col("a.doc_id") < F.col("b.doc_id"))
+            & (F.col("b.doc_id") - F.col("a.doc_id") <= 40),
+        )
+        .withColumn("j", D.jaccard_exprs(F.col("a.toks"), F.col("b.toks")))
+        .filter(F.col("j") > 0.5)
+        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
+    )
+    comps = connected_components(pairs)
+    memb = (
+        t.select("doc_id", "quality")
+        .join(comps, t.doc_id == comps.id, "left")
+        .select(
+            "doc_id",
+            "quality",
+            F.coalesce(F.col("component"), F.col("doc_id")).alias("component"),
+        )
+    )
+    # argmax(quality, then MIN doc_id) as one combinable max over a
+    # lexicographic struct: (quality, -doc_id) ascending-max ==
+    # quality DESC then doc_id ASC.
+    best = F.max(
+        F.struct(F.col("quality"), (-F.col("doc_id")).alias("neg_id"))
+    ).alias("best")
+    return (
+        memb.groupBy("component")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_members"), best)
+        .select(
+            "component",
+            "n_members",
+            (-F.col("best.neg_id")).cast("long").alias("kept_doc_id"),
+            F.col("best.quality").cast("long").alias("kept_quality"),
+        )
+    )
+
+
+# ===========================================================================
+# Global line dedup (CCNet/C4 keep-first-occurrence) + rebuild
+# ===========================================================================
+
+_LINE_W = 8  # tokens per derived line (synthetic text has no newlines)
+
+
+def _doc_line_chunks(docs):
+    """(doc_id, idx, line) — the corpus as derived lines (consecutive
+    8-token chunks).  Shared by the batch scrub and the streaming twin
+    so their line semantics cannot drift.  Empty docs are filtered out
+    here (Spark's sequence(0, -1) is a DESCENDING pair, not empty) and
+    re-attached by the batch scrub's final left join."""
+    base = docs.select(
+        "doc_id",
+        tokens(F.lower(F.coalesce(F.col("text"), F.lit("")))).alias("toks"),
+    )
+    w = F.lit(_LINE_W)
+    n_lines = F.ceil(F.size("toks") / F.lit(float(_LINE_W))).cast("long")
+    return (
+        base.filter(F.size("toks") > 0)
+        .select(
+            "doc_id",
+            F.posexplode(
+                F.transform(
+                    F.sequence(F.lit(0), (n_lines - 1).cast("int")),
+                    lambda c: F.concat_ws(" ", F.slice("toks", c * w + 1, _LINE_W)),
+                )
+            ).alias("idx", "line"),
+        )
+        .select("doc_id", F.col("idx").cast("long").alias("idx"), "line")
+    )
+
+
+# DuckDB rendering of the same chunking (used by both oracles).
+_SQL_CHUNKS = f"""
+    t AS (
+        SELECT doc_id, {sql_tokens("lower(coalesce(text, ''))")} AS toks FROM documents
+    ),
+    idxs AS (
+        SELECT doc_id, toks,
+               unnest(generate_series(
+                   0, CAST(ceil(len(toks) / {_LINE_W}.0) AS BIGINT) - 1)) AS c
+        FROM t WHERE len(toks) > 0
+    ),
+    chunks AS (
+        SELECT doc_id, c::BIGINT AS idx,
+               array_to_string(
+                   toks[c * {_LINE_W} + 1 : c * {_LINE_W} + {_LINE_W}],
+                   ' ') AS line
+        FROM idxs
+    )
+"""
+
+_LINE_SCRUB_ORACLE = f"""
+    WITH {_SQL_CHUNKS},
+    hashed AS (SELECT *, {md5_long_sql('line')} AS h FROM chunks),
+    kept AS (
+        SELECT * FROM (
+            SELECT *, row_number() OVER (
+                PARTITION BY h ORDER BY doc_id, idx) AS rn
+            FROM hashed
+        ) WHERE rn = 1
+    ),
+    reb AS (
+        SELECT doc_id, count(*)::BIGINT AS n_kept,
+               string_agg(line, ' ' ORDER BY idx) AS rebuilt
+        FROM kept GROUP BY doc_id
+    )
+    SELECT t.doc_id,
+           CAST(ceil(len(t.toks) / {_LINE_W}.0) AS BIGINT) AS n_lines,
+           coalesce(reb.n_kept, 0)::BIGINT AS n_kept,
+           {md5_long_sql("coalesce(reb.rebuilt, '')")} AS rebuilt_fp,
+           length(coalesce(reb.rebuilt, ''))::BIGINT AS n_chars_kept
+    FROM t LEFT JOIN reb ON t.doc_id = reb.doc_id
+"""
+
+
+@register(
+    "line_dedup_scrub",
+    _LINE_SCRUB_ORACLE,
+    survey_ids=("A7",),
+    doc="CCNet/C4-style GLOBAL line dedup with rebuild: every line "
+    "(derived here as consecutive 8-token chunks — the synthetic "
+    "corpus has no newlines; the chunker is the only text-specific "
+    "piece) is hashed, only the corpus-wide first occurrence by "
+    "(doc_id, line_idx) survives, and documents are rebuilt from "
+    "their kept lines (fingerprint emitted, not the text — output "
+    "stays one row per doc at any duplication factor).  Scale shape: "
+    "NO pair relation ever exists — unlike the passage-span family, "
+    "a 10x-verbatim corpus costs 1x here, not 100x: one shuffle on "
+    "the line hash (keep-first window), one keyed agg on doc_id for "
+    "the rebuild.  Hash skew (a boilerplate line in every doc) is "
+    "bounded by the window's per-key ORDER BY — at 100 TB a "
+    "pathological key would use the two-phase min-struct agg "
+    "(groupBy h -> min(doc_id, idx)) which combines map-side; the "
+    "window form is kept here because the keep-first row itself is "
+    "what the rebuild joins on.",
+)
+def q_line_dedup_scrub(spark, sf_dir):
+    docs = load(spark, sf_dir, "documents")
+    n_lines = F.ceil(
+        F.size(tokens(F.lower(F.coalesce(F.col("text"), F.lit("")))))
+        / F.lit(float(_LINE_W))
+    ).cast("long")
+    base = docs.select("doc_id", n_lines.alias("n_lines"))
+    chunks = _doc_line_chunks(docs)
+    hashed = chunks.withColumn("h", md5_long("line"))
+    first = Window.partitionBy("h").orderBy("doc_id", "idx")
+    kept = (
+        hashed.withColumn("rn", F.row_number().over(first))
+        .filter(F.col("rn") == 1)
+        .drop("rn", "h")
+    )
+    reb = kept.groupBy("doc_id").agg(
+        F.count(F.lit(1)).cast("long").alias("n_kept"),
+        F.array_join(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("idx", "line"))),
+                lambda s: s["line"],
+            ),
+            " ",
+        ).alias("rebuilt"),
+    )
+    return (
+        base.join(reb, "doc_id", "left")
+        .select(
+            "doc_id",
+            "n_lines",
+            F.coalesce(F.col("n_kept"), F.lit(0)).cast("long").alias("n_kept"),
+            md5_long(F.coalesce(F.col("rebuilt"), F.lit(""))).alias("rebuilt_fp"),
+            F.length(F.coalesce(F.col("rebuilt"), F.lit("")))
+            .cast("long")
+            .alias("n_chars_kept"),
+        )
+    )
+
+
+# ===========================================================================
+# Keep-best over LSH candidates (the production keep-best)
+# ===========================================================================
+
+# The closure runs on the REP graph only (near edges).  Star members
+# inherit their rep's component through one join: rep = cluster MIN by
+# construction (operators/dedup.py:lsh_dedup_edges), so min-doc-id
+# reachable == min REP id in the rep-component — the same label the
+# full-graph closure yields.  This is what keeps the oracle feasible
+# on verbatim-duplicated corpora: a naive (id, reach) transitive-
+# closure walk is sum-of-cluster^2 rows and OOM'd DuckDB at sf1
+# (duplication multiplies cluster sizes), while the rep graph does
+# not grow with duplication at all.
+_KEEP_BEST_LSH_ORACLE = (
+    _SIG_CTES.replace("WITH ", "WITH RECURSIVE ", 1)
+    + D.sql_lsh_star_edges(LSH_K, LSH_BANDS, LSH_CAP, LSH_THRESH)
+    + f""",
+    sym AS (SELECT src_id AS u, dst_id AS v FROM edges WHERE kind = 'near'
+            UNION
+            SELECT dst_id, src_id FROM edges WHERE kind = 'near'),
+    nodes AS (SELECT DISTINCT u AS id FROM sym),
+    walk AS (
+      SELECT id, id AS reach FROM nodes
+      UNION
+      SELECT w.id, s.v AS reach FROM walk w JOIN sym s ON s.u = w.reach
+    ),
+    comp_rep AS (SELECT id, min(reach) AS component FROM walk GROUP BY id),
+    rep_of AS (SELECT dst_id AS doc_id, src_id AS rep
+               FROM edges WHERE kind = 'exact'),
+    q AS (SELECT doc_id, len({_SQL_TOKS})::BIGINT AS quality FROM documents),
+    memb AS (
+      SELECT q.doc_id, q.quality,
+             coalesce(cr.component, r.rep, cr2.component, q.doc_id) AS component
+      FROM q
+      LEFT JOIN rep_of r ON r.doc_id = q.doc_id
+      LEFT JOIN comp_rep cr ON cr.id = r.rep
+      LEFT JOIN comp_rep cr2 ON cr2.id = q.doc_id
+    ),
+    ranked AS (
+      SELECT *, row_number() OVER (
+          PARTITION BY component ORDER BY quality DESC, doc_id) AS rn
+      FROM memb
+    )
+    SELECT component,
+           count(*)::BIGINT AS n_members,
+           max(CASE WHEN rn = 1 THEN doc_id END)::BIGINT AS kept_doc_id,
+           max(CASE WHEN rn = 1 THEN quality END)::BIGINT AS kept_quality
+    FROM ranked
+    GROUP BY component
+"""
+)
+
+
+@register(
+    "dup_cluster_keep_best_lsh",
+    _KEEP_BEST_LSH_ORACLE,
+    survey_ids=(),
+    doc="Cluster-representative selection over the PRODUCTION candidate "
+    "generator — the round-10 verdict's item 4: dup_cluster_keep_best "
+    "builds clusters from a windowed Jaccard self-join bounded to "
+    "doc_id<200 (the oracle's recursive-CTE budget); this twin "
+    "consumes lsh_dup_star_edges' banded MinHash candidates at FULL "
+    "corpus width (identical-signature clusters collapse to rep->" 
+    "member star edges, near edges only between verified rep pairs), "
+    "runs the same min-label closure (operators/clusters.py — "
+    "per-round keyed shuffles on the edge vocabulary only), and keeps "
+    "the highest-quality member per component with ONE map-side-"
+    "combinable argmax: max(struct(quality, -doc_id)).  Scale shape: "
+    "no pair relation ever exceeds the banded candidate set (collapse-"
+    "first, bucket-capped — the lsh_near_dup discipline), the closure "
+    "shuffles ids only, and the keep decision adds a single keyed agg "
+    "over (doc_id, quality) — at 100 TB the corpus text is touched "
+    "once for signatures + once for the quality score, never joined "
+    "on volume.  Oracle replays the same star edges then closes over "
+    "them with a recursive CTE.",
+)
+def q_dup_cluster_keep_best_lsh(spark, sf_dir):
+    from ..operators.clusters import connected_components
+
+    d = load(spark, sf_dir, "documents")
+    sig = D.minhash_signature(d.select("doc_id", "text"), "text", k=LSH_K).drop(
+        "text"
+    )
+    edges = D.lsh_dedup_edges(
+        sig,
+        "doc_id",
+        k=LSH_K,
+        bands=LSH_BANDS,
+        max_bucket=LSH_CAP,
+        verify_min=LSH_THRESH,
+    ).localCheckpoint(eager=True)  # near + exact both consumed below
+    # Close over the REP graph only: star members inherit their rep's
+    # component (rep == cluster MIN, so the label is identical to the
+    # full-graph closure) — the propagation loop never touches the
+    # duplicated mass, only distinct-signature reps.
+    near = edges.filter(F.col("kind") == "near")
+    comps = connected_components(near, src="src_id", dst="dst_id")
+    rep_of = edges.filter(F.col("kind") == "exact").select(
+        F.col("dst_id").alias("m_doc"), F.col("src_id").alias("rep")
+    )
+    quality = d.select(
+        "doc_id",
+        F.size(
+            F.array_distinct(tokens(F.lower(F.coalesce(F.col("text"), F.lit("")))))
+        )
+        .cast("long")
+        .alias("quality"),
+    )
+    cr = comps.select(F.col("id").alias("cr_id"), F.col("component").alias("cr_c"))
+    cr2 = comps.select(F.col("id").alias("cr2_id"), F.col("component").alias("cr2_c"))
+    memb = (
+        quality.join(rep_of, quality.doc_id == rep_of.m_doc, "left")
+        .join(cr, F.col("rep") == F.col("cr_id"), "left")
+        .join(cr2, quality.doc_id == F.col("cr2_id"), "left")
+        .select(
+            "doc_id",
+            "quality",
+            F.coalesce("cr_c", "rep", "cr2_c", "doc_id").alias("component"),
+        )
+    )
+    best = F.max(
+        F.struct(F.col("quality"), (-F.col("doc_id")).alias("neg_id"))
+    ).alias("best")
+    return (
+        memb.groupBy("component")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_members"), best)
+        .select(
+            "component",
+            "n_members",
+            (-F.col("best.neg_id")).cast("long").alias("kept_doc_id"),
+            F.col("best.quality").cast("long").alias("kept_quality"),
+        )
+    )

@@ -556,7 +556,7 @@ def q_streaming_upsert_state(spark, sf_dir):
     from pyspark.sql import Window as W
 
     from ..session import scratch_dir
-    from ..streaming.pipelines import stream_events, stream_upsert
+    from ..streaming.pipelines import await_drain, stream_events, stream_upsert
 
     df = stream_events(spark, sf_dir).filter(F.col("value").isNotNull()).select(
         "event_id",
@@ -594,9 +594,7 @@ def q_streaming_upsert_state(spark, sf_dir):
         prepare=keep_last,
         order_by=["last_ts", "last_event_id"],
     ).start()
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("streaming_upsert_state drain timed out")
+    await_drain(q, "streaming_upsert_state")
     return spark.read.parquet(f"{d}/state").select("user_id", "last_qv", "last_ts")
 
 

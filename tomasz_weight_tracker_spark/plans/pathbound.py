@@ -159,7 +159,7 @@ _DAY_LIST_SQL = "[" + ", ".join(f"'{d}'" for d in _DAY_NAMES) + "]"
 
 def _weight_oracle(source: str = "events") -> str:
     """The weight-txt EAV oracle, parameterized by its events source so
-    the sf10 bounded-slice twin (round12: weight_txt_parse_fileslice)
+    the sf10 bounded-slice twin (weight_txt_parse_fileslice, below)
     can apply its file-slice predicate BEFORE the EAV union."""
     return f"""
 WITH e AS (
@@ -265,7 +265,7 @@ def q_weight_txt_parse(spark, sf_dir):
 def mime_blobs(ev):
     """Synthesize the W4 MIME documents from (event_id, ts) rows — one
     (path, content: binary) row per event.  Shared by ``block_capture``
-    and round-10's ``report_render_lines`` so the block relation and
+    and file_pipelines' ``report_render_lines`` so the block relation and
     the rendered report cannot drift."""
     h = F.col("event_id")
     hs = h.cast("string")
@@ -382,3 +382,44 @@ def q_block_capture(spark, sf_dir):
         F.size("lines").cast("long").alias("n_lines"),
         "signature",
     )
+
+
+# ===========================================================================
+# weight_txt_parse's sf10 bounded-slice twin (verdict r11 item 3)
+# ===========================================================================
+
+_WEIGHT_SLICE_MOD = 32
+_WEIGHT_SLICE_REM = 3
+
+
+@register(
+    "weight_txt_parse_fileslice",
+    _weight_oracle(
+        source=(
+            "(SELECT * FROM events "
+            f"WHERE event_id % {_WEIGHT_SLICE_MOD} = {_WEIGHT_SLICE_REM})"
+        )
+    ),
+    survey_ids=(),
+    doc="weight_txt_parse's sf10 value-check twin: the identical blob "
+    "synthesis + native array-expression parse over the deterministic "
+    f"1/{_WEIGHT_SLICE_MOD} FILE slice (event_id % {_WEIGHT_SLICE_MOD} "
+    f"= {_WEIGHT_SLICE_REM}).  event_id IS the file key — each event "
+    "becomes exactly one scale-app export and the parser is strictly "
+    "per-file (header split, EAV explode, rejection rules all within "
+    "one blob) — so a whole-file slice is exact, not approximate: "
+    "each kept file's EAV rows are bit-identical to its rows in the "
+    "full run (the electricity_15min_userslice argument on the F1 "
+    "key).  The full-scale run's check moves to tools/engine_only.py "
+    "(stable xor-hash), same as electricity/snm; the slice keeps the "
+    "family value-checked at sf10 without the 16g-driver, 22-minute "
+    "full compare.  Shares weight_parse_frame with the parent, so "
+    "synthesis and parser cannot drift.",
+)
+def q_weight_txt_parse_fileslice(spark, sf_dir):
+    ev = (
+        load(spark, sf_dir, "events")
+        .select("event_id", "ts")
+        .filter(F.col("event_id") % _WEIGHT_SLICE_MOD == _WEIGHT_SLICE_REM)
+    )
+    return weight_parse_frame(spark, ev)

@@ -326,6 +326,49 @@ def stream_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def await_drain(q, name: str) -> None:
+    """Wait up to 300 s for an availableNow query to finish.  On timeout
+    stop it and raise, so the caller never reads a partially drained
+    sink."""
+    if not q.awaitTermination(300):
+        q.stop()
+        raise RuntimeError(f"{name} drain timed out")
+
+
+def drain_residue_batches(
+    spark: SparkSession,
+    docs: DataFrame,
+    root: str,
+    batches: int,
+    apply_batch,
+    name: str,
+) -> None:
+    """Replay ``docs`` as a stream of ``batches`` micro-batches through
+    the foreachBatch sink ``apply_batch`` and wait for it to drain.
+
+    The corpus is laid out one file per doc_id residue under
+    ``{root}/src``; an availableNow file source with
+    ``maxFilesPerTrigger=1`` turns each file into one micro-batch, with
+    its checkpoint at ``{root}/ckpt``.  Timeouts raise (:func:`await_drain`).
+    """
+    src = f"{root}/src"
+    for r in range(batches):
+        docs.filter(F.col("doc_id") % batches == r).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+    schema = spark.read.parquet(src).schema
+    q = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+        .writeStream.foreachBatch(apply_batch)
+        .option("checkpointLocation", f"{root}/ckpt")
+        .trigger(availableNow=True)
+        .start()
+    )
+    await_drain(q, name)
+
+
 def drain_to_memory(
     spark: SparkSession,
     df: DataFrame,

@@ -15,7 +15,8 @@ sys.path.insert(0, ".")
 from tomasz_weight_tracker_spark.plans import REGISTRY  # noqa: E402
 
 
-def main() -> None:
+def render() -> str:
+    """docs/CATALOG.md's text for the current REGISTRY."""
     by_module: dict[str, list] = defaultdict(list)
     for name, q in sorted(REGISTRY.items()):
         mod = q.build.__module__.rsplit(".", 1)[-1]
@@ -36,8 +37,12 @@ def main() -> None:
             doc = " ".join((q.doc or "").split())
             lines.append(f"| `{name}` | {ids} | {doc} |")
         lines.append("")
+    return "\n".join(lines)
+
+
+def main() -> None:
     with open("docs/CATALOG.md", "w") as f:
-        f.write("\n".join(lines))
+        f.write(render())
     print(f"wrote docs/CATALOG.md ({len(REGISTRY)} queries)")
 
 

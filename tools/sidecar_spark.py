@@ -18,7 +18,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import materialize  # noqa: E402
-from tomasz_weight_tracker_spark.plans.round6 import LAYOUT_WRITE_S  # noqa: E402
+from tomasz_weight_tracker_spark.plans.catalog import LAYOUT_WRITE_S  # noqa: E402
 from tomasz_weight_tracker_spark.caching import release_caches  # noqa: E402
 from tomasz_weight_tracker_spark.plans import REGISTRY  # noqa: E402
 from tomasz_weight_tracker_spark.session import get_spark, tune_for_scale  # noqa: E402

@@ -43,7 +43,7 @@ def main() -> None:
     ks = [int(a) for a in sys.argv[2:]] or [1, 2, 4, 8]
 
     from tomasz_weight_tracker_spark.caching import release_caches
-    from tomasz_weight_tracker_spark.plans.round11 import (
+    from tomasz_weight_tracker_spark.plans.similarity_ann import (
         ivf_candidate_pairs,
         mine_bitext_ivf,
     )

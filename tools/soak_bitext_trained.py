@@ -51,7 +51,7 @@ def main() -> None:
 
     from tomasz_weight_tracker_spark.caching import release_caches
     from tomasz_weight_tracker_spark.operators import similarity as S
-    from tomasz_weight_tracker_spark.plans.round11 import ivf_candidate_pairs
+    from tomasz_weight_tracker_spark.plans.similarity_ann import ivf_candidate_pairs
     from tomasz_weight_tracker_spark.session import get_spark
 
     spark = get_spark("soak-bitext-trained")
