@@ -6,16 +6,23 @@ partitions sized to the local core count rather than the 200 default.
 On a real cluster the same factory is used with a different master and
 a shuffle-partition count sized to the input (see ``for_scale``).
 
-Also the one place that knows session lifetime (:class:`SessionState`)
-and the one that knows input size (:func:`parquet_file_sizes`).
+Also the one place that knows how the driver JVM starts (its
+class-data-sharing archive, :func:`launch_plan`), session lifetime
+(:class:`SessionState`) and input size (:func:`parquet_file_sizes`).
 """
 
 from __future__ import annotations
 
+import contextlib
+import hashlib
 import os
+import shutil
+import subprocess
 import threading
+from collections.abc import Callable, Iterator, Mapping
 from dataclasses import dataclass, field
 
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import DataFrame, SparkSession
 
 _DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -27,32 +34,234 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Create (or reuse) the engine's SparkSession.
+    """Create the engine's SparkSession, or return the active one
+    untouched (its caller's settings and log level stay as they are).
 
     Local mode is a single JVM; ``spark.driver.memory`` must be set
     before the JVM starts, so callers that need it should set
-    ``SPARK_DRIVER_MEMORY`` in the environment.
+    ``SPARK_DRIVER_MEMORY`` in the environment.  A new driver JVM
+    starts from a class-data-sharing archive when one is cached (see
+    :func:`launch_plan`).
     """
-    master = master or f"local[{_DEFAULT_CPUS}]"
-    shuffle_partitions = shuffle_partitions or _DEFAULT_CPUS
-    builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
+    conf = {
+        "spark.master": master or f"local[{_DEFAULT_CPUS}]",
+        "spark.app.name": app_name,
+        "spark.sql.shuffle.partitions": str(shuffle_partitions or _DEFAULT_CPUS),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
+        "spark.ui.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        **(extra_conf or {}),
+    }
+    spark_home = _find_spark_home()
+    cache_dir = cds_cache_dir()
+    with contextlib.suppress(OSError):
+        os.makedirs(os.path.join(cache_dir, "conf"), exist_ok=True)
+    java_opts, conf_dir = launch_plan(
+        os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf"),
+        conf, cache_dir, lambda: _cds_key_promoted(cache_dir, spark_home),
     )
-    for k, v in (extra_conf or {}).items():
+    conf[_DEFAULT_JAVA_OPTS] = java_opts
+    builder = SparkSession.builder
+    for k, v in conf.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    with _env_var("SPARK_CONF_DIR", conf_dir):
+        spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# -- Driver JVM start-up: a dynamic class-data-sharing (AppCDS) archive ------
+#
+# A cold driver JVM spends most of its start-up and first query loading
+# classes.  JDK 17 can dump the classes a JVM loaded into an archive when
+# it exits (-XX:ArchiveClassesAtExit) and map that archive at the next
+# launch (-XX:SharedArchiveFile).  The archive lives in the user cache,
+# keyed by the Java build and the Spark jar list:
+#   - no archive for the key: the session trains <key>.<pid>.part, written
+#     by its JVM at exit, so no query waits for the dump;
+#   - a later launch promotes a part whose writer is gone and whose probe
+#     passes to <key>.jsa, and deletes every other part and archive;
+#   - archive present: the session maps it.
+
+_DEFAULT_JAVA_OPTS = "spark.driver.defaultJavaOptions"
+_EXTRA_JAVA_OPTS = "spark.driver.extraJavaOptions"
+# JVM warnings (a CDS "Unable to use shared archive" among them) print on
+# stdout by default, where CLI and benchmark callers read their result.
+# The [cds] tag alone logs one line per class the dump skips (~600).
+_JVM_LOG_OPTS = "-Xlog:disable -Xlog:all=warning:stderr -Xlog:cds=error:stderr"
+_CDS_FLAGS = ("-Xshare", "SharedArchiveFile", "ArchiveClasses")
+# JDK 13+ dynamic archive magic.  The JVM writes the header last, so a
+# part whose writer died mid-dump starts with zeros: -Xshare:auto then
+# ignores the file and the probe would still exit 0.
+_CDS_MAGIC = (0xF00BABA8).to_bytes(4, "little")
+
+
+def cds_cache_dir() -> str:
+    """Where the driver's class-data-sharing archive is kept."""
+    base = os.environ.get("XDG_CACHE_HOME") or os.path.join(os.path.expanduser("~"), ".cache")
+    return os.path.join(base, "tomasz_weight_tracker_spark", "cds")
+
+
+def launch_plan(
+    conf_dir: str,
+    caller_conf: Mapping[str, str],
+    cache_dir: str,
+    cds_key: Callable[[], str | None],
+) -> tuple[str, str | None]:
+    """The driver JVM's ``spark.driver.defaultJavaOptions`` and the
+    ``SPARK_CONF_DIR`` to launch it with (``None``: leave it as it is).
+
+    The options send JVM warnings to stderr and keep the caller's own
+    default options after them.  Class-data sharing is added, and
+    ``cds_key()`` (which names the archive) is called, only when all of
+    these hold:
+
+    - ``conf_dir`` holds nothing but ``*.template`` files.  CDS refuses
+      a non-empty directory on the classpath, so the launch uses an
+      empty conf directory instead, which loses nothing only then;
+    - the caller's Java options do not already choose a CDS mode;
+    - ``cache_dir`` is a writable directory.
+    """
+    caller_default = caller_conf.get(_DEFAULT_JAVA_OPTS, "")
+    opts = f"{_JVM_LOG_OPTS} {caller_default}".strip()
+    caller_opts = f"{caller_default} {caller_conf.get(_EXTRA_JAVA_OPTS, '')}"
+    try:
+        templates_only = all(n.endswith(".template") for n in os.listdir(conf_dir))
+    except FileNotFoundError:
+        templates_only = True
+    except OSError:
+        templates_only = False
+    if (not templates_only or any(f in caller_opts for f in _CDS_FLAGS)
+            or not (os.path.isdir(cache_dir) and os.access(cache_dir, os.W_OK | os.X_OK))):
+        return opts, None
+    key = cds_key()
+    if key is None:
+        return opts, None
+    jsa = os.path.join(cache_dir, f"{key}.jsa")
+    if os.path.isfile(jsa):
+        flag = f"-XX:SharedArchiveFile={jsa}"
+    else:
+        flag = f"-XX:ArchiveClassesAtExit={os.path.join(cache_dir, f'{key}.{os.getpid()}.part')}"
+    # Spark splits the option string like a shell; the cache path may hold spaces.
+    return f'"{flag}" {opts}', os.path.join(cache_dir, "conf")
+
+
+def _java() -> str | None:
+    """The java binary Spark's launcher runs."""
+    home = os.environ.get("JAVA_HOME")
+    return os.path.join(home, "bin", "java") if home else shutil.which("java")
+
+
+def cds_key(java: str, spark_home: str) -> str:
+    """Archive key: the ``java -version`` text and the Spark jar list
+    (names and sizes); an archive serves only the classes it was
+    dumped from."""
+    version = subprocess.run(
+        [java, "-version"], capture_output=True, text=True, check=True, timeout=60,
+    ).stderr
+    jars = sorted((e.name, e.stat().st_size) for e in os.scandir(os.path.join(spark_home, "jars")))
+    return hashlib.sha256(repr((version, jars)).encode()).hexdigest()[:16]
+
+
+def _cds_key_promoted(cache_dir: str, spark_home: str) -> str | None:
+    """The archive key, after promoting a finished part; ``None`` (no
+    CDS) when Java or the Spark jars cannot be read."""
+    java = _java()
+    if java is None:
+        return None
+    try:
+        key = cds_key(java, spark_home)
+        promote_archive(cache_dir, key, java, spark_home)
+    except (OSError, subprocess.SubprocessError):
+        return None
+    return key
+
+
+def promote_archive(cache_dir: str, key: str, java: str, spark_home: str) -> None:
+    """Promote one finished ``<key>.<pid>.part`` to ``<key>.jsa`` and
+    delete every other archive and part whose writer is gone.
+
+    A part qualifies only when the process that launched its writer has
+    exited and :func:`probe_archive` passes.  So the cache holds at most
+    one archive, and no session maps an unprobed file.
+    """
+    jsa = os.path.join(cache_dir, f"{key}.jsa")
+    have = os.path.isfile(jsa)
+    for name in sorted(os.listdir(cache_dir)):
+        path = os.path.join(cache_dir, name)
+        if path == jsa or not name.endswith((".jsa", ".part")):
+            continue
+        # A concurrent launch may promote or delete the same file first.
+        with contextlib.suppress(FileNotFoundError):
+            if name.endswith(".part"):
+                pid = name.split(".")[-2]
+                if pid.isdigit() and _alive(int(pid)):
+                    continue
+                if not have and name.startswith(f"{key}.") and probe_archive(java, spark_home, path, cache_dir):
+                    os.replace(path, jsa)
+                    have = True
+                    continue
+            os.remove(path)
+
+
+def probe_archive(java: str, spark_home: str, path: str, cache_dir: str) -> bool:
+    """Whether a JVM maps the archive at ``path`` and exits 0.
+
+    On JDK 17 a truncated archive does not fall back under
+    ``-Xshare:auto``: the JVM dies with SIGBUS while relocating it.  So
+    the probe runs in its own JVM, with its crash log in the cache
+    directory rather than the caller's working directory.
+    """
+    with open(path, "rb") as f:
+        if f.read(4) != _CDS_MAGIC:
+            return False
+    err = os.path.join(cache_dir, "probe_hs_err.log")
+    try:
+        return subprocess.run(
+            [java, f"-XX:SharedArchiveFile={path}", "-Xshare:auto", f"-XX:ErrorFile={err}",
+             "-XX:-CreateCoredumpOnCrash", "-cp", os.path.join(spark_home, "jars", "*"), "-version"],
+            stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL, timeout=60,
+        ).returncode == 0
+    except subprocess.TimeoutExpired:
+        return False
+    finally:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(err)
+
+
+def _alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # another user's process
+        pass
+    return True
+
+
+@contextlib.contextmanager
+def _env_var(name: str, value: str | None) -> Iterator[None]:
+    """Set ``name`` for the block (``None``: leave it), then restore it."""
+    if value is None:
+        yield
+        return
+    old = os.environ.get(name)
+    os.environ[name] = value
+    try:
+        yield
+    finally:
+        if old is None:
+            os.environ.pop(name, None)
+        else:
+            os.environ[name] = old
 
 
 _SCRATCH_ROOT: str | None = None
@@ -73,7 +282,6 @@ def scratch_dir(tag: str = "q") -> str:
     """
     global _SCRATCH_ROOT
     import atexit
-    import shutil
     import tempfile
 
     if _SCRATCH_ROOT is None:
