@@ -266,13 +266,14 @@ def main() -> None:
     if os.environ.get("SPARK_GRAFT_QUERIES_FULL", "1") != "0":
         import duckdb
 
-        # Fresh JVM for the sidecar: by this point the session has run
-        # ~150 headline executions, and the sidecar itself compiles
-        # ~470 more plan shapes — a single long-lived driver JVM
-        # accumulates codegen classes/GC pressure that inflated the
-        # late-alphabet tail ~50% (pq_recall_audit 6.9 s standalone vs
-        # 16.4 s at position ~400 of the round-11 run).  Production
-        # runs one query shape per job; the restart measures that.
+        # Fresh SparkContext for the sidecar, NOT a fresh JVM: stop() and
+        # get_spark() reuse the same py4j gateway JVM (same pid), so the
+        # ~150 headline executions' codegen classes and GC state carry
+        # over into the ~470 plan shapes the sidecar compiles.  The
+        # restart drops the session's state (memos, caches, listeners,
+        # executors); it does not remove the late-alphabet JVM drag seen
+        # in the round-11 run (pq_recall_audit 6.9 s standalone vs
+        # 16.4 s at position ~400).
         spark.stop()
         spark = get_spark("bench-sidecar")
         tune_for_scale(spark, full_sf_dir)

@@ -8,6 +8,7 @@ startup.
 from __future__ import annotations
 
 import os
+import struct
 import sys
 
 import pytest
@@ -54,3 +55,27 @@ def duck(sf_path):
         )
     yield con
     con.close()
+
+
+def _make_wav(samples: list[int], sample_rate: int = 8000, n_channels: int = 1) -> bytes:
+    """Serialize a 16-bit PCM mono/interleaved WAV."""
+    data = struct.pack(f"<{len(samples)}h", *samples)
+    block_align = 2 * n_channels
+    fmt = struct.pack("<HHIIHH", 1, n_channels, sample_rate, sample_rate * block_align, block_align, 16)
+    return (
+        b"RIFF"
+        + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(data))
+        + b"WAVE"
+        + b"fmt "
+        + struct.pack("<I", len(fmt))
+        + fmt
+        + b"data"
+        + struct.pack("<I", len(data))
+        + data
+    )
+
+
+@pytest.fixture(scope="session")
+def make_wav():
+    """WAV fixture writer: ``make_wav(samples, sample_rate, n_channels)``."""
+    return _make_wav

@@ -1,4 +1,4 @@
-"""plans/advanced.py: SCD2 history, fixed-iteration PageRank,
+"""SCD2 history, fixed-iteration PageRank,
 sorted-neighborhood near-dup, bitmap exact-distinct — semantic
 invariants beyond the parity gate's hash equality.
 """
@@ -10,13 +10,10 @@ import datetime
 import pytest
 from pyspark.sql import functions as F
 
-from tomasz_weight_tracker_spark.plans.advanced import (
-    _SNM_WINDOW,
-    q_bitmap_distinct_users,
-    q_pagerank_part_supplier,
-    q_scd2_user_state,
-    q_snm_near_dup,
-)
+from tomasz_weight_tracker_spark.plans.dedup_lsh import _SNM_WINDOW, q_snm_near_dup
+from tomasz_weight_tracker_spark.plans.relational import q_pagerank_part_supplier
+from tomasz_weight_tracker_spark.plans.sketches import q_bitmap_distinct_users
+from tomasz_weight_tracker_spark.plans.time_series import q_scd2_user_state
 from tomasz_weight_tracker_spark.streaming.tuning import state_partitions
 
 
@@ -108,7 +105,7 @@ class TestSortedNeighborhood:
         # output blowup); capped, only the first _SNM_MAX_RUN docs
         # take part.  A distinct doc beyond the run must still pair
         # with nothing (it differs by more than the threshold).
-        from tomasz_weight_tracker_spark.plans.advanced import _SNM_MAX_RUN
+        from tomasz_weight_tracker_spark.plans.dedup_lsh import _SNM_MAX_RUN
 
         base = "identical boilerplate text repeated verbatim everywhere"
         rows = [(i, base, "en", "s", len(base)) for i in range(500)]
@@ -146,8 +143,6 @@ class TestBitmapDistinct:
         df = spark.range(5000).select(
             F.lit("t").alias("event_type"), (F.col("id") % 321).alias("user_id")
         )
-        import tomasz_weight_tracker_spark.plans.advanced as A
-
         def count(frame):
             words = frame.groupBy(
                 "event_type", F.expr("user_id div 64").alias("word")
@@ -164,7 +159,6 @@ class TestBitmapDistinct:
             )
 
         assert count(df.repartition(1)) == count(df.repartition(7, "user_id")) == 321
-        assert A is not None
 
 
 class TestStatePartitions:
@@ -188,7 +182,7 @@ class TestStatePartitions:
 
 class TestSnapshotDiff:
     def test_statuses_match_residue_construction(self, spark, sf):
-        from tomasz_weight_tracker_spark.plans.advanced import (
+        from tomasz_weight_tracker_spark.plans.relational import (
             _DIFF_CHANGE,
             _DIFF_DELETE,
             _DIFF_INSERT,
@@ -212,7 +206,7 @@ class TestSnapshotDiff:
 
 class TestSequencePacking:
     def test_offsets_tile_the_token_stream(self, spark, sf):
-        from tomasz_weight_tracker_spark.plans.advanced import (
+        from tomasz_weight_tracker_spark.plans.text_curation import (
             _PACK_BUDGET,
             q_sequence_packing,
         )
@@ -230,7 +224,7 @@ class TestSequencePacking:
         # per-document window must be shard-partitioned.
         import io, contextlib
 
-        from tomasz_weight_tracker_spark.plans.advanced import q_sequence_packing
+        from tomasz_weight_tracker_spark.plans.text_curation import q_sequence_packing
 
         df = q_sequence_packing(spark, sf)
         buf = io.StringIO()
@@ -246,7 +240,7 @@ class TestSequencePacking:
 
 class TestValueDeciles:
     def test_bins_are_ordered_and_balanced(self, spark, sf):
-        from tomasz_weight_tracker_spark.plans.advanced import q_value_deciles
+        from tomasz_weight_tracker_spark.plans.relational import q_value_deciles
 
         rows = q_value_deciles(spark, sf).collect()
         by_type = {}
@@ -265,7 +259,7 @@ class TestValueDeciles:
 class TestDatasetSplit:
     def test_user_disjoint_and_total(self, spark, sf):
         from tomasz_weight_tracker_spark.functions import md5_long
-        from tomasz_weight_tracker_spark.plans.advanced import q_dataset_split
+        from tomasz_weight_tracker_spark.plans.text_curation import q_dataset_split
         from tomasz_weight_tracker_spark.plans.catalog import load
 
         out = {r.split: r for r in q_dataset_split(spark, sf).collect()}
@@ -282,7 +276,7 @@ class TestTriangleStats:
     def test_known_graph_k4(self, spark, tmp_path):
         # One part supplied by 4 suppliers -> co-supply graph K4:
         # 6 edges, 12 wedges, 4 triangles, clustering 1.0.
-        from tomasz_weight_tracker_spark.plans.advanced import q_graph_triangle_stats
+        from tomasz_weight_tracker_spark.plans.relational import q_graph_triangle_stats
 
         rows = [(1, s, 1, 1, 1.0, 1.0, 0.0, 0.0, "N", "O", _ts(9)) for s in (1, 2, 3, 4)]
         df = spark.createDataFrame(
@@ -300,7 +294,7 @@ class TestTriangleStats:
     def test_triangle_free_bipartite(self, spark, tmp_path):
         # Two parts with disjoint supplier pairs -> 2 disjoint edges, no
         # wedges/triangles.
-        from tomasz_weight_tracker_spark.plans.advanced import q_graph_triangle_stats
+        from tomasz_weight_tracker_spark.plans.relational import q_graph_triangle_stats
 
         rows = [(1, 1, 1), (1, 2, 1), (2, 3, 2), (2, 4, 2)]
         df = spark.createDataFrame(
@@ -323,7 +317,7 @@ class TestTriangleStats:
         # fix, asserted structurally.
         from pyspark.sql import functions as F
 
-        from tomasz_weight_tracker_spark.plans.advanced import degree_oriented_edges
+        from tomasz_weight_tracker_spark.plans.relational import degree_oriented_edges
 
         edges = spark.createDataFrame(
             [(0, v) for v in range(1, 201)], "u long, v long"
@@ -348,7 +342,7 @@ class TestTriangleStats:
         # Lollipop: K4 clique {1,2,3,4} via part 1 plus a hub 1
         # co-supplying parts 2..30 with singleton partners — skewed
         # degrees, known count: 4 triangles from the clique only.
-        from tomasz_weight_tracker_spark.plans.advanced import q_graph_triangle_stats
+        from tomasz_weight_tracker_spark.plans.relational import q_graph_triangle_stats
 
         rows = [(1, s, 1) for s in (1, 2, 3, 4)]
         rows += [(p, 1, p) for p in range(2, 31)]
@@ -370,7 +364,7 @@ class TestTriangleStats:
 
 class TestInvertedIndex:
     def test_df_and_posting_cap(self, spark, tmp_path):
-        from tomasz_weight_tracker_spark.plans.advanced import (
+        from tomasz_weight_tracker_spark.plans.similarity_ann import (
             _IDX_MIN_DF,
             _IDX_POSTINGS,
             q_inverted_index,
@@ -396,7 +390,7 @@ class TestInvertedIndex:
 
 class TestDedupThrottle:
     def test_suppresses_within_horizon(self, spark, tmp_path):
-        from tomasz_weight_tracker_spark.plans.advanced import q_dedup_throttle
+        from tomasz_weight_tracker_spark.plans.time_series import q_dedup_throttle
 
         base = datetime.datetime(2024, 1, 1, 9, 0, 0)
         rows = [
@@ -416,7 +410,7 @@ class TestDedupThrottle:
 
 class TestStreamingJoinClicks:
     def test_matches_batch_interval_join(self, spark, sf):
-        from tomasz_weight_tracker_spark.plans.advanced import q_streaming_join_clicks
+        from tomasz_weight_tracker_spark.plans.streaming_ingest import q_streaming_join_clicks
         from tomasz_weight_tracker_spark.plans.catalog import load
 
         got = {
@@ -446,7 +440,7 @@ class TestStreamingJoinClicks:
 
 class TestIntervalUnion:
     def test_islands_merge_overlaps(self, spark, tmp_path):
-        from tomasz_weight_tracker_spark.plans.advanced import q_interval_union_time
+        from tomasz_weight_tracker_spark.plans.time_series import q_interval_union_time
 
         base = datetime.datetime(2024, 1, 1, 9, 0, 0)
         mins = datetime.timedelta(minutes=1)
@@ -494,7 +488,7 @@ class TestReviewRegressions:
     def test_interval_union_deterministic_on_tied_timestamps(self, spark, tmp_path):
         # Two events at the SAME ts after a gap: island assignment must
         # not depend on sort stability of a non-unique (s, e) order.
-        from tomasz_weight_tracker_spark.plans.advanced import q_interval_union_time
+        from tomasz_weight_tracker_spark.plans.time_series import q_interval_union_time
 
         base = datetime.datetime(2024, 1, 1, 0, 0, 0)
         rows = [
@@ -516,7 +510,7 @@ class TestReviewRegressions:
     def test_snm_head_is_ascii_normalized(self, spark, tmp_path):
         # Multibyte chars must not reach levenshtein (byte-counted in
         # DuckDB, codepoint-counted in Spark).
-        from tomasz_weight_tracker_spark.plans.advanced import q_snm_near_dup
+        from tomasz_weight_tracker_spark.plans.dedup_lsh import q_snm_near_dup
 
         base = "café latte ritual " * 4
         rows = [
@@ -550,7 +544,7 @@ class TestReviewRegressions:
 
 class TestDocChunking:
     def test_chunks_tile_with_overlap(self, spark, tmp_path):
-        from tomasz_weight_tracker_spark.plans.advanced import (
+        from tomasz_weight_tracker_spark.plans.text_curation import (
             _CHUNK_LEN,
             _CHUNK_STRIDE,
             q_doc_chunking,
@@ -584,7 +578,7 @@ class TestDocChunking:
 
 class TestSourceRebalance:
     def test_kept_counts_approach_uniform_target(self, spark, sf):
-        from tomasz_weight_tracker_spark.plans.advanced import q_source_rebalance
+        from tomasz_weight_tracker_spark.plans.text_curation import q_source_rebalance
 
         rows = q_source_rebalance(spark, sf).collect()
         per_source = min(r.n_total for r in rows)
@@ -600,9 +594,7 @@ class TestSourceRebalance:
 
 class TestBitmapRolling:
     def test_trailing_window_carries_silent_words(self, spark, tmp_path):
-        from tomasz_weight_tracker_spark.plans.advanced import (
-            q_bitmap_rolling_users_7d,
-        )
+        from tomasz_weight_tracker_spark.plans.sketches import q_bitmap_rolling_users_7d
 
         # user 100 appears only on day 1; user 1 on days 1 and 3.
         # Day 3's 7-day window must still count user 100 (whose word is
@@ -629,7 +621,7 @@ class TestBitmapRolling:
 
 class TestDocNovelty:
     def test_unique_vs_boilerplate(self, spark, tmp_path):
-        from tomasz_weight_tracker_spark.plans.advanced import q_doc_novelty
+        from tomasz_weight_tracker_spark.plans.dedup_lsh import q_doc_novelty
 
         shared = "abcdefghij" * 6  # 60 chars shared verbatim
         rows = [
@@ -653,7 +645,6 @@ class TestEmptyInputs:
     day-one state of any incremental pipeline."""
 
     def test_all_advanced_queries_tolerate_empty_tables(self, spark, tmp_path, sf_path):
-        import tomasz_weight_tracker_spark.plans.advanced as A
         from tomasz_weight_tracker_spark.plans import REGISTRY
         from tomasz_weight_tracker_spark.plans.catalog import load
 
@@ -664,11 +655,16 @@ class TestEmptyInputs:
                 f"{path}/{table}.parquet"
             )
         advanced_queries = [
-            n
-            for n, q in REGISTRY.items()
-            if q.build.__module__ == A.__name__ and not n.startswith("streaming_")
+            "scd2_user_state", "pagerank_part_supplier", "snm_near_dup",
+            "bitmap_distinct_users", "snapshot_diff", "snapshot_patch_apply",
+            "sequence_packing", "value_deciles", "dataset_split",
+            "graph_triangle_stats", "graph_degree_profile", "inverted_index",
+            "dedup_throttle", "interval_union_time", "doc_chunking",
+            "source_rebalance", "bitmap_rolling_users_7d", "doc_novelty",
+            "value_histogram", "pretraining_prep", "table_profile_orders",
+            "incremental_agg_events", "incremental_topk_events",
+            "snm_near_dup_blockslice",
         ]
-        assert len(advanced_queries) >= 14
         for name in advanced_queries:
             rows = REGISTRY[name].build(spark, path).collect()
             if name == "graph_triangle_stats":

@@ -308,7 +308,7 @@ class TestFuzzyBlocking:
     cap goes quadratic per hot token at corpus scale)."""
 
     def test_hot_block_dropped_bounded_emission(self, spark):
-        from tomasz_weight_tracker_spark.plans.llm_ops import fuzzy_candidate_pairs
+        from tomasz_weight_tracker_spark.plans.dedup_lsh import fuzzy_candidate_pairs
 
         # 600 same-first-token, same-length names (one hot block, over
         # any small cap) + one honest typo pair in a cold block.
@@ -324,7 +324,7 @@ class TestFuzzyBlocking:
         assert all(not a.startswith("azure") for a, _ in got), got
 
     def test_length_probe_keeps_cross_bucket_pairs(self, spark):
-        from tomasz_weight_tracker_spark.plans.llm_ops import fuzzy_candidate_pairs
+        from tomasz_weight_tracker_spark.plans.dedup_lsh import fuzzy_candidate_pairs
 
         # Lengths 15 and 17 (buckets 7 and 8 at width 2): same first
         # token, dist 2 — must still be a candidate via the probe arm.
@@ -335,7 +335,7 @@ class TestFuzzyBlocking:
         assert ("teal widget nut", "teal widget nutty") in got
 
     def test_uncapped_when_disabled(self, spark):
-        from tomasz_weight_tracker_spark.plans.llm_ops import fuzzy_candidate_pairs
+        from tomasz_weight_tracker_spark.plans.dedup_lsh import fuzzy_candidate_pairs
 
         rows = [(f"plum brass bolt {i:02d}",) for i in range(10)]
         names = spark.createDataFrame(rows, "name string")

@@ -11,10 +11,26 @@ import pytest
 from pyspark.sql import functions as F
 
 from tomasz_weight_tracker_spark.pipelines.electricity import (
-    conservation_check,
     fifteen_minute_usage,
     read_meter_csv,
 )
+
+
+def conservation_check(readings, usage) -> dict[str, float]:
+    """SURVEY §5.1.3 invariant: total allocated usage equals the meter
+    delta over the covered span (driver-side)."""
+    first_last = readings.orderBy("LocalDateTime").agg(
+        (F.max("P") - F.min("P")).alias("dP"), (F.max("OP") - F.min("OP")).alias("dOP")
+    ).first()
+    sums = usage.agg(
+        F.sum("P_Usage").alias("sP"), F.sum("OP_Usage").alias("sOP")
+    ).first()
+    return {
+        "meter_dP": float(first_last["dP"]),
+        "meter_dOP": float(first_last["dOP"]),
+        "allocated_P": float(sums["sP"] or 0.0),
+        "allocated_OP": float(sums["sOP"] or 0.0),
+    }
 
 
 def make_readings(spark, n_days=4, per_day=4, start="2024-06-01 06:00:00"):

@@ -76,20 +76,6 @@ class TestCoercion:
         got = [r.v for r in df.select(FN.strip_units("s").alias("v")).collect()]
         assert got == ["90.4", "22", "1680"]
 
-    def test_mixed_timestamp_formats(self, spark):
-        df = spark.createDataFrame(
-            [("2024-01-02 03:04:05",), ("02/01/2024 03:04:05",), ("2024-01-02",), ("junk",)],
-            "s string",
-        )
-        got = [r.t for r in df.select(FN.try_timestamp_any("s").alias("t")).collect()]
-        assert got[0] == got[1]  # dd/MM/yyyy parses to the same instant
-        assert got[2] is not None and got[3] is None
-
-    def test_nan_to_null(self, spark):
-        df = spark.createDataFrame([(float("nan"),), (1.0,)], "v double")
-        got = [r.o for r in df.select(FN.nan_to_null("v").alias("o")).collect()]
-        assert got == [None, 1.0]
-
 
 class TestSanitizeFilename:
     def test_strips_illegal(self):

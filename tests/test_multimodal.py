@@ -78,12 +78,10 @@ class TestRealCodecs:
         # Row-major top-down: (x=0,y=0), (1,0), (0,1), (1,1).
         assert out["pixels"] == [(0, 0, 100), (10, 0, 100), (0, 10, 100), (10, 10, 100)]
 
-    def test_wav_decode_duration_and_features(self, spark):
-        from tomasz_weight_tracker_spark.operators import codecs
-
+    def test_wav_decode_duration_and_features(self, spark, make_wav):
         # 8000 samples at 8 kHz = exactly 1000 ms; square wave at half amplitude.
         samples = [16384 if (i // 4) % 2 == 0 else -16384 for i in range(8000)]
-        raw = codecs.make_wav(samples, sample_rate=8000)
+        raw = make_wav(samples, sample_rate=8000)
         r = MM.decode_media(media_df(spark, [(raw, None)])).first()
         assert r.decoder == "wav"
         assert r.duration_ms == 1000
@@ -265,25 +263,3 @@ class TestRealCodecs:
         )
         out = MM.decode_media(df).collect()
         assert {r.decoder for r in out} == {"stub"}
-
-
-class TestFrameSampling:
-    def test_fanout_matches_duration(self, spark):
-        df = media_df(spark, [(b"video-a", 3500), (b"video-b", 1000)])
-        out = MM.sample_frames(df, every_ms=1000).collect()
-        by_id = {}
-        for r in out:
-            by_id.setdefault(r.media_id, []).append(r)
-        assert len(by_id[0]) == 4  # 0,1000,2000,3000 ms
-        assert len(by_id[1]) == 1
-        frames = sorted(by_id[0], key=lambda r: r.frame_idx)
-        assert [f.frame_ts_ms for f in frames] == [0, 1000, 2000, 3000]
-        # Per-frame features differ (the frame index salts the stub).
-        assert frames[0].features != frames[1].features
-
-    def test_resize_features(self, spark):
-        df = media_df(spark, [(b"img", None)])
-        out = MM.decode_media(df).select(
-            MM.resize_features(F.col("features"), 3).alias("f")
-        ).first()
-        assert len(out.f) == 3

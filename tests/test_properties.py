@@ -236,8 +236,8 @@ def test_bmp_serialize_parse_round_trip(w, h, seed):
     seed=st.integers(min_value=0, max_value=2**31 - 1),
 )
 @settings(max_examples=40, deadline=None)
-def test_wav_serialize_parse_round_trip(n, rate, seed):
-    from tomasz_weight_tracker_spark.operators.codecs import make_wav, parse_wav
+def test_wav_serialize_parse_round_trip(make_wav, n, rate, seed):
+    from tomasz_weight_tracker_spark.operators.codecs import parse_wav
 
     samples = [((i * 2654435761 + seed) % 65536) - 32768 for i in range(n)]
     raw = make_wav(samples, sample_rate=rate)
@@ -363,7 +363,7 @@ def test_scd2_reconstructs_pointwise_state(rows):
     needs)."""
     import tempfile
 
-    from tomasz_weight_tracker_spark.plans.advanced import q_scd2_user_state
+    from tomasz_weight_tracker_spark.plans.time_series import q_scd2_user_state
 
     df = _events_df(rows)
     with tempfile.TemporaryDirectory() as d:
@@ -394,10 +394,7 @@ def test_interval_union_bounds(rows):
     never exceeds event count."""
     import tempfile
 
-    from tomasz_weight_tracker_spark.plans.advanced import (
-        _COVER_MIN,
-        q_interval_union_time,
-    )
+    from tomasz_weight_tracker_spark.plans.time_series import _COVER_MIN, q_interval_union_time
 
     df = _events_df(rows)
     with tempfile.TemporaryDirectory() as d:
@@ -422,7 +419,7 @@ def test_throttle_keeps_first_and_gaps(rows):
     kept subset can only widen gaps)."""
     import tempfile
 
-    from tomasz_weight_tracker_spark.plans.advanced import q_dedup_throttle
+    from tomasz_weight_tracker_spark.plans.time_series import q_dedup_throttle
 
     df = _events_df(rows)
     with tempfile.TemporaryDirectory() as d:

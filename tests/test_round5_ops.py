@@ -39,7 +39,7 @@ def _ts(h, m=0, s=0):
 
 class TestBm25Search:
     def test_tf_and_idf_ordering(self, spark, tmp_path):
-        from tomasz_weight_tracker_spark.plans.llm_ops import q_bm25_search
+        from tomasz_weight_tracker_spark.plans.similarity_ann import q_bm25_search
 
         # doc 1: 'hash' thrice; doc 2: once; doc 3: no query terms at
         # all (must be absent); doc 4: only the common term 'join',
@@ -80,7 +80,7 @@ class TestWeightedSample:
         a = [tuple(r) for r in REGISTRY["weighted_sample_events"].build(spark, sf).collect()]
         b = [tuple(r) for r in REGISTRY["weighted_sample_events"].build(spark, sf).collect()]
         assert a == b  # no RNG state anywhere
-        from tomasz_weight_tracker_spark.plans.scale_ops import _WSAMP_K
+        from tomasz_weight_tracker_spark.plans.sketches import _WSAMP_K
 
         assert len(a) == _WSAMP_K
 
@@ -88,9 +88,7 @@ class TestWeightedSample:
         # Two strata: weight 100.0 vs weight 1.0, equal counts.  The
         # heavy stratum must dominate the sample (in expectation 100:1;
         # assert a conservative majority).
-        from tomasz_weight_tracker_spark.plans.scale_ops import (
-            q_weighted_sample_events,
-        )
+        from tomasz_weight_tracker_spark.plans.sketches import q_weighted_sample_events
 
         rows = [(i, 1, "view", _ts(9, 0, i % 60), 100.0) for i in range(500)]
         rows += [(1000 + i, 2, "view", _ts(10, 0, i % 60), 1.0) for i in range(500)]
@@ -116,9 +114,7 @@ class TestWeightedSample:
 
 class TestIntervalBucketJoin:
     def test_boundaries_and_cross_bucket_dedup(self, spark, tmp_path):
-        from tomasz_weight_tracker_spark.plans.scale_ops import (
-            q_interval_bucket_join,
-        )
+        from tomasz_weight_tracker_spark.plans.time_series import q_interval_bucket_join
 
         rows = [
             # Window 1 opens 09:10 -> [09:10, 09:40): spans buckets.
@@ -165,9 +161,7 @@ class TestIntervalBucketJoin:
         # round-1..5 bucketized equi-join would emit ~120k candidate
         # pairs from this slice alone; the prefix-sum plan touches each
         # row once.  Assert exact counts against a brute-force oracle.
-        from tomasz_weight_tracker_spark.plans.scale_ops import (
-            q_interval_bucket_join,
-        )
+        from tomasz_weight_tracker_spark.plans.time_series import q_interval_bucket_join
 
         rows = []
         wins = {}
@@ -198,9 +192,7 @@ class TestIntervalBucketJoin:
 
 class TestGraphDegreeProfile:
     def test_known_bipartite_graph(self, spark, tmp_path):
-        from tomasz_weight_tracker_spark.plans.advanced import (
-            q_graph_degree_profile,
-        )
+        from tomasz_weight_tracker_spark.plans.relational import q_graph_degree_profile
 
         # part 1 <- suppliers {1,2,3}; part 2 <- {1}; supplier 1 spans
         # both parts.  Degrees: parts (3, 1); suppliers (2, 1, 1).
@@ -247,9 +239,7 @@ class TestTriangleProjectionCap:
         the hot part drags a tail quantile (p99.9 of 4 parts = the
         max) up to itself, but cannot move the median of the normal
         parts (2), so the derived cap is 32 and degree 100 is out."""
-        from tomasz_weight_tracker_spark.plans.advanced import (
-            q_graph_triangle_stats,
-        )
+        from tomasz_weight_tracker_spark.plans.relational import q_graph_triangle_stats
 
         # Normal parts 1-3 wire suppliers {1,2,3} into one triangle
         # (each part shared by a distinct supplier pair).
@@ -277,7 +267,7 @@ class TestTriangleProjectionCap:
         this pins the degree precondition the no-op relies on,
         deriving the cap the same way the query does)."""
         from tomasz_weight_tracker_spark.plans import REGISTRY
-        from tomasz_weight_tracker_spark.plans.advanced import _TRI_CAP_MARGIN
+        from tomasz_weight_tracker_spark.plans.relational import _TRI_CAP_MARGIN
 
         prof = (
             REGISTRY["graph_degree_profile"]
@@ -299,9 +289,7 @@ class TestTriangleProjectionCap:
 
 class TestLexicalCosinePairs:
     def test_finds_embedded_copy_jaccard_misses(self, spark, tmp_path):
-        from tomasz_weight_tracker_spark.plans.llm_ops import (
-            q_lexical_cosine_pairs,
-        )
+        from tomasz_weight_tracker_spark.plans.similarity_ann import q_lexical_cosine_pairs
 
         # doc 2 contains doc 1 verbatim inside 3x unrelated filler —
         # the size-asymmetric case cosine handles: shared rare
@@ -322,7 +310,7 @@ class TestLexicalCosinePairs:
         assert all(3 not in pair for pair in out)
 
     def test_pair_emission_bounded_by_df_cap(self, spark, tmp_path):
-        from tomasz_weight_tracker_spark.plans.llm_ops import (
+        from tomasz_weight_tracker_spark.plans.similarity_ann import (
             _LEXCOS_DF_MAX,
             q_lexical_cosine_pairs,
         )
@@ -337,9 +325,7 @@ class TestLexicalCosinePairs:
 
 class TestJoinKeySkewProfile:
     def test_hot_key_tops_profile(self, spark, tmp_path):
-        from tomasz_weight_tracker_spark.plans.scale_ops import (
-            q_join_key_skew_profile,
-        )
+        from tomasz_weight_tracker_spark.plans.relational import q_join_key_skew_profile
 
         rows = [(i, 7, "view", _ts(9, 0, i % 60), 1.0) for i in range(900)]
         rows += [(10000 + i, 100 + i, "view", _ts(10), 1.0) for i in range(100)]
@@ -354,9 +340,7 @@ class TestJoinKeySkewProfile:
 
 class TestReferentialIntegrity:
     def test_injected_orphans_counted(self, spark, tmp_path):
-        from tomasz_weight_tracker_spark.plans.scale_ops import (
-            q_referential_integrity_audit,
-        )
+        from tomasz_weight_tracker_spark.plans.relational import q_referential_integrity_audit
 
         path = str(tmp_path / "ri")
         spark.createDataFrame(
@@ -532,10 +516,7 @@ class TestStreamingUpsertState:
 class TestSnapshotPatchApply:
     def test_roundtrip_counts_and_membership(self, spark, sf):
         from tomasz_weight_tracker_spark.plans import REGISTRY
-        from tomasz_weight_tracker_spark.plans.advanced import (
-            _DIFF_DELETE,
-            _DIFF_INSERT,
-        )
+        from tomasz_weight_tracker_spark.plans.relational import _DIFF_DELETE, _DIFF_INSERT
         from tomasz_weight_tracker_spark.plans.catalog import load
 
         out = REGISTRY["snapshot_patch_apply"].build(spark, sf)
@@ -576,9 +557,9 @@ class TestEmbedDupClusters:
 
 class TestRound5EmptyInputs:
     def test_new_queries_tolerate_empty_tables(self, spark, tmp_path, sf_path):
-        """Day-one totality for the round-5 queries living outside
-        plans/advanced.py (whose module-wide empty sweep already
-        covers patch-apply, degree profile, and incremental agg)."""
+        """Day-one totality for the round-5 queries outside the
+        test_advanced.py empty sweep (which already covers patch-apply,
+        degree profile, and incremental agg)."""
         from tomasz_weight_tracker_spark.plans import REGISTRY
         from tomasz_weight_tracker_spark.plans.catalog import load
 

@@ -321,6 +321,15 @@ class TestIvfadcRecallAudit:
         assert (p.n_queries, p.n_true) == (r.n_queries, r.n_true)
 
 
+class TestAnnAuditsShareInstrument:
+    def test_pq_and_ivfadc_audits_report_one_sample_and_truth(self, spark, sf_small):
+        # Both audits score against the same md5 query sample and the
+        # same exact integer-L2 truth, so their denominators agree.
+        p = REGISTRY["pq_recall_audit"].build(spark, sf_small).first()
+        i = REGISTRY["ivfadc_recall_audit"].build(spark, sf_small).first()
+        assert (p.n_queries, p.k, p.n_true) == (i.n_queries, i.k, i.n_true)
+
+
 class TestTrainingShardWrite:
     def test_roundtrip_manifest_and_contiguous_files(self, spark, sf_small):
         from pyspark.sql import functions as SF

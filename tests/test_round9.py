@@ -157,11 +157,7 @@ class TestStreamingLshAssign:
 
         from tomasz_weight_tracker_spark.operators import dedup as D
         from tomasz_weight_tracker_spark.plans.catalog import load
-        from tomasz_weight_tracker_spark.plans.llm_ops import (
-            LSH_BANDS,
-            LSH_K,
-            LSH_THRESH,
-        )
+        from tomasz_weight_tracker_spark.plans.dedup_lsh import LSH_BANDS, LSH_K, LSH_THRESH
 
         drained = {
             (r.doc_id, r.dup_of)

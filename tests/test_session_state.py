@@ -75,12 +75,12 @@ class TestSizeGatesOnDirectoryLayouts:
 
 
 class TestTrackCachePatchable:
-    def test_patch_reaches_top_revenue_supplier(self, spark, sf_path, monkeypatch):
+    def test_patch_reaches_source_rebalance(self, spark, sf_path, monkeypatch):
         from tomasz_weight_tracker_spark import caching
 
         seen = []
         monkeypatch.setattr(caching, "track_cache", lambda df: seen.append(df) or df)
-        REGISTRY["top_revenue_supplier"].build(spark, sf_path("sf0.001"))
+        REGISTRY["source_rebalance"].build(spark, sf_path("sf0.001"))
         assert len(seen) == 1
 
 

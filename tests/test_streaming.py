@@ -158,34 +158,6 @@ class TestRunningStats:
         assert out2["m1"].n == 3 and out2["m1"].total == 12.0 and out2["m1"].mean == 4.0
 
 
-class TestProgressReporter:
-    def test_listener_collects_batches(self, spark, tmp_path):
-        from tomasz_weight_tracker_spark.streaming.progress import ProgressReporter
-
-        src = str(tmp_path / "pr")
-        write_events(spark, src, minute_rows("2024-06-01 10:00:00", 5))
-        lines = []
-        listener = ProgressReporter(on_line=lines.append)
-        spark.streams.addListener(listener)
-        try:
-            stream = spark.readStream.schema(SCHEMA).parquet(src)
-            q = (stream.groupBy("meter").count()
-                 .writeStream.format("memory").queryName("prog")
-                 .outputMode("complete").trigger(availableNow=True).start())
-            q.awaitTermination(120)
-            # Listener events arrive asynchronously after termination.
-            import time
-            for _ in range(50):
-                if listener.stats.batches:
-                    break
-                time.sleep(0.2)
-        finally:
-            spark.streams.removeListener(listener)
-        assert listener.stats.batches >= 1
-        assert listener.stats.total_rows == 5
-        assert lines and "rows" in lines[0]
-
-
 class TestStreamStaticJoin:
     def test_stream_enriched_by_broadcast_dim(self, spark, tmp_path):
         """Stream-static join: each micro-batch joins against a static

@@ -154,21 +154,6 @@ class TestAnchoredResample:
         assert got == {"2024-02-29": 5.0, "2024-03-31": 9.0}  # leap-year Feb end
 
 
-class TestRelativeDates:
-    def test_days_ago(self, spark):
-        df = spark.createDataFrame(
-            [(dt.date(2024, 5, 10), "Updated 3 days ago"), (dt.date(2024, 5, 10), "no match")],
-            "ref date, line string",
-        )
-        got = [
-            r.d
-            for r in df.select(
-                TO.resolve_days_ago(F.col("ref"), F.col("line")).alias("d")
-            ).collect()
-        ]
-        assert got == [dt.date(2024, 5, 7), None]
-
-
 class TestGapFill:
     def test_linear_interpolation(self, spark):
         from tomasz_weight_tracker_spark.operators.resample_fill import fill_minute_gaps

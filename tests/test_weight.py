@@ -1,6 +1,6 @@
 """W1 weight-pipeline tests: native blob parse (F1), incremental sync
-anti-join (ST1), deterministic pivot (A4), coercion, rolling trend
-(W3), anchored periodic summary (A5/W2)."""
+anti-join (ST1), deterministic pivot (A4), coercion, anchored periodic
+summary (A5/W2)."""
 
 from __future__ import annotations
 
@@ -10,15 +10,12 @@ import math
 from pyspark.sql import functions as F
 
 from tomasz_weight_tracker_spark.pipelines.weight import (
-    bmi_to_kg_table,
     incremental_sync,
     numeric_coercion,
     parse_weight_txt,
     periodic_summary,
     pivot_eav,
     read_txt_blobs,
-    recent_window,
-    rolling_trend,
 )
 
 SAMPLE = (
@@ -102,19 +99,6 @@ def make_wide(spark, days, start="2025-01-01", weight0=90.0):
 
 
 class TestAnalytics:
-    def test_recent_window(self, spark):
-        wide = make_wide(spark, 10)
-        out = recent_window(wide, cutoff_date="2025-01-03", recent_n=5)
-        got = [r.date_time.day for r in out.collect()]
-        assert got == [10, 9, 8, 7, 6]
-
-    def test_rolling_trend_trailing_mean(self, spark):
-        wide = make_wide(spark, 3)  # weights 90.0, 89.9, 89.8 on days 1..3
-        out = {r.date_time.day: r.Weight_trend for r in rolling_trend(wide, days=28).collect()}
-        assert math.isclose(out[1], 90.0)
-        assert math.isclose(out[2], (90.0 + 89.9) / 2)
-        assert math.isclose(out[3], (90.0 + 89.9 + 89.8) / 3)
-
     def test_periodic_summary_weekly(self, spark):
         # 2025-01-01 (Wed) .. 2025-01-10; W-FRI periods end 01-03 and 01-10.
         wide = make_wide(spark, 10)
@@ -132,9 +116,3 @@ class TestAnalytics:
         wide = make_wide(spark, 40)  # spans Jan + early Feb
         out = periodic_summary(wide, freq="ME").collect()
         assert [r.period.isoformat() for r in out] == ["2025-02-28", "2025-01-31"]
-
-
-class TestBmiTable:
-    def test_known_values(self):
-        table = bmi_to_kg_table([20.0, 25.0], 180.0)
-        assert table == [(20.0, 64.8), (25.0, 81.0)]

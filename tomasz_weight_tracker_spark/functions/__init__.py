@@ -80,35 +80,12 @@ def tokens(col: Column | str, pattern: str = r"\s+") -> Column:
 
 
 # ---------------------------------------------------------------------------
-# Best-effort numeric coercion (G9, pd.to_numeric(errors='coerce')) and
-# mixed-format timestamp parsing (G10).
+# Best-effort numeric coercion (G9, pd.to_numeric(errors='coerce')).
 
 
 def try_double(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return c.try_cast("double")
-
-
-def try_timestamp_any(col: Column | str, formats: list[str] | None = None) -> Column:
-    """First format that parses wins; NULL if none do (G10)."""
-    c = F.col(col) if isinstance(col, str) else col
-    formats = formats or [
-        "yyyy-MM-dd HH:mm:ss",
-        "yyyy-MM-dd HH:mm",
-        "dd/MM/yyyy HH:mm:ss",
-        "yyyy/MM/dd HH:mm:ss",
-        "yyyy-MM-dd",
-    ]
-    return F.coalesce(*[F.try_to_timestamp(c, F.lit(f)) for f in formats])
-
-
-# ---------------------------------------------------------------------------
-# NaN -> NULL normalization (G8, utils/polars_electricity.py:160-169).
-
-
-def nan_to_null(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.when(F.isnan(c), F.lit(None)).otherwise(c)
 
 
 # ---------------------------------------------------------------------------

@@ -96,6 +96,21 @@ def connected_components(
     return labels
 
 
+def sql_connected_components(pairs: str, out: str = "comp") -> str:
+    """DuckDB twin of :func:`connected_components` as a recursive-CTE
+    walk (the query needs ``WITH RECURSIVE``): CTEs sym, nodes, walk and
+    ``out`` = (id, component = min reachable id) over the (u, v) edges
+    of CTE ``pairs``."""
+    return f"""sym AS (SELECT u, v FROM {pairs} UNION SELECT v, u FROM {pairs}),
+    nodes AS (SELECT DISTINCT u AS id FROM sym),
+    walk AS (
+      SELECT id, id AS reach FROM nodes
+      UNION
+      SELECT w.id, s.v AS reach FROM walk w JOIN sym s ON s.u = w.reach
+    ),
+    {out} AS (SELECT id, min(reach) AS component FROM walk GROUP BY id)"""
+
+
 def canonicalize(components: DataFrame) -> DataFrame:
     """One row per cluster: (component, n_members, canonical_id=min)."""
     return components.groupBy("component").agg(

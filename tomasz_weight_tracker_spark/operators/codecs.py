@@ -556,24 +556,6 @@ def make_png(width: int, height: int, pixel_fn, filter_type: int = 0) -> bytes:
     return PNG_SIG + chunk(b"IHDR", ihdr) + chunk(b"IDAT", idat) + chunk(b"IEND", b"")
 
 
-def make_wav(samples: list[int], sample_rate: int = 8000, n_channels: int = 1) -> bytes:
-    """Serialize a 16-bit PCM mono/interleaved WAV (test fixture)."""
-    data = struct.pack(f"<{len(samples)}h", *samples)
-    block_align = 2 * n_channels
-    fmt = struct.pack("<HHIIHH", 1, n_channels, sample_rate, sample_rate * block_align, block_align, 16)
-    return (
-        b"RIFF"
-        + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(data))
-        + b"WAVE"
-        + b"fmt "
-        + struct.pack("<I", len(fmt))
-        + fmt
-        + b"data"
-        + struct.pack("<I", len(data))
-        + data
-    )
-
-
 def resize_nearest(decoded: dict, out_w: int, out_h: int) -> dict | None:
     """Nearest-neighbor resize of decoded BMP pixels.
 

@@ -307,6 +307,92 @@ def lsh_store_probe_read(
     ).dropDuplicates(["doc_id"])
 
 
+def _collapse(signatures: DataFrame, id_col: str, k: int, *cols):
+    """Identical-signature collapse, the first step of every
+    collapse-first banding path: member rows (id, *cols, __fsig,
+    __rep = the signature's min id) and the signature window, over
+    which callers add their cluster-level columns."""
+    fsig = F.array(*[F.col(f"mh{i}") for i in range(k)])
+    wsig = Window.partitionBy("__fsig")
+    members = signatures.select(F.col(id_col), *cols, fsig.alias("__fsig")).withColumn(
+        "__rep", F.min(id_col).over(wsig)
+    )
+    return members, wsig
+
+
+def _rep_bands(
+    reps: DataFrame, id_col: str, k: int, bands: int, *cols
+) -> DataFrame:
+    """One row per (representative, band): (rid, *cols, band_id,
+    skey), skey = the full signature in :func:`lsh_band_order`, band
+    positions first."""
+    band_structs = [
+        F.struct(
+            F.lit(b).alias("band_id"),
+            F.array(
+                *[F.element_at("__fsig", i + 1) for i in lsh_band_order(k, bands, b)]
+            ).alias("skey"),
+        )
+        for b in range(bands)
+    ]
+    return reps.select(
+        F.col(id_col).alias("rid"),
+        *cols,
+        F.explode(F.array(*band_structs)).alias("band"),
+    ).select("rid", *cols, "band.band_id", "band.skey")
+
+
+def _agreement(sig_a: Column, sig_b: Column) -> Column:
+    """Number of positions where two signature arrays agree (bigint)."""
+    return F.size(
+        F.filter(F.zip_with(sig_a, sig_b, lambda x, y: x == y), lambda m: m)
+    ).cast("long")
+
+
+def _probe_rep_pairs(
+    reps: DataFrame,
+    id_col: str,
+    k: int,
+    bands: int,
+    verify_min: int,
+    flag: str,
+    touches_new,
+    names: tuple[str, str],
+) -> DataFrame:
+    """Uncapped rep-level band self-join of the refresh probes:
+    distinct verified (ra, rb, ``names`` = both reps' ``flag``,
+    sig_matches).  ``touches_new(flag_a, flag_b)`` gates a rep-pair
+    BEFORE the verify work, so history is never re-paired against
+    itself."""
+    rows_per_band = k // bands
+    banded = _rep_bands(reps, id_col, k, bands, flag).select(
+        "rid",
+        flag,
+        "band_id",
+        F.slice("skey", 1, rows_per_band).alias("__eff"),
+        F.col("skey").alias("__sig"),
+    )
+    a, b = banded.alias("a"), banded.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band_id") == F.col("b.band_id"))
+            & (F.col("a.__eff") == F.col("b.__eff"))
+            & (F.col("a.rid") < F.col("b.rid"))
+            & touches_new(F.col(f"a.{flag}"), F.col(f"b.{flag}")),
+        )
+        .select(
+            F.col("a.rid").alias("ra"),
+            F.col("b.rid").alias("rb"),
+            F.col(f"a.{flag}").alias(names[0]),
+            F.col(f"b.{flag}").alias(names[1]),
+            _agreement(F.col("a.__sig"), F.col("b.__sig")).alias("sig_matches"),
+        )
+        .distinct()
+        .filter(F.col("sig_matches") >= verify_min)
+    )
+
+
 def lsh_candidate_pairs(
     signatures: DataFrame,
     id_col: str,
@@ -420,18 +506,7 @@ def lsh_candidate_pairs(
         a = banded.alias("a")
         b = banded.alias("b")
         extra_out = (
-            [
-                F.size(
-                    F.filter(
-                        F.zip_with(
-                            F.col("a.__sig"), F.col("b.__sig"), lambda x, y: x == y
-                        ),
-                        lambda m: m,
-                    )
-                )
-                .cast("long")
-                .alias("sig_matches")
-            ]
+            [_agreement(F.col("a.__sig"), F.col("b.__sig")).alias("sig_matches")]
             if emit_sig_matches
             else []
         )
@@ -538,37 +613,15 @@ def _lsh_rep_pairs(
     rows_per_band = k // bands
     levels = k - rows_per_band  # split depths beyond the band itself
 
-    fsig = F.array(*[F.col(f"mh{i}") for i in range(k)])
-    wsig = Window.partitionBy("__fsig")
-    members = (
-        signatures.select(F.col(id_col), *carry, fsig.alias("__fsig"))
-        .withColumn("__rep", F.min(id_col).over(wsig))
-        .withColumn("__cnt", F.count(F.lit(1)).over(wsig))
-    )
+    members, wsig = _collapse(signatures, id_col, k, *carry)
+    members = members.withColumn("__cnt", F.count(F.lit(1)).over(wsig))
     # The rep keeps ITS OWN carry columns (it is a real member row),
     # which is what the singleton side of the expansion coalesces to.
     reps = members.filter(F.col(id_col) == F.col("__rep"))
     multi = members.filter(F.col("__cnt") > 1).drop("__fsig", "__cnt")
 
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band_id"),
-            F.array(
-                *[F.element_at("__fsig", i + 1) for i in lsh_band_order(k, bands, b)]
-            ).alias("skey"),
-        )
-        for b in range(bands)
-    ]
-    banded = (
-        reps.select(
-            F.col(id_col).alias("rid"),
-            *carry,
-            F.explode(F.array(*band_structs)).alias("band"),
-        )
-        .select("rid", *carry, "band.band_id", "band.skey")
-        .select(
-            "*", *[F.element_at("skey", i + 1).alias(f"__e{i}") for i in range(k)]
-        )
+    banded = _rep_bands(reps, id_col, k, bands, *carry).select(
+        "*", *[F.element_at("skey", i + 1).alias(f"__e{i}") for i in range(k)]
     )
 
     # ONE exchange + ONE within-partition sort serve the whole split
@@ -643,17 +696,11 @@ def _lsh_rep_pairs(
     )
     exploded = buckets.select(F.explode(pair_structs).alias("p"))
     flip = F.col("p.x.rid") > F.col("p.y.rid")
-    sm_cols = []
-    if need_sig:
-        zip_matches = F.size(
-            F.filter(
-                F.zip_with(
-                    F.col("p.x.sig"), F.col("p.y.sig"), lambda x, y: x == y
-                ),
-                lambda m: m,
-            )
-        )
-        sm_cols = [zip_matches.cast("long").alias("sig_matches")]
+    sm_cols = (
+        [_agreement(F.col("p.x.sig"), F.col("p.y.sig")).alias("sig_matches")]
+        if need_sig
+        else []
+    )
 
     def _oriented_carry(c: str):
         a_val = F.when(flip, F.col(f"p.y.{c}")).otherwise(F.col(f"p.x.{c}"))
@@ -749,66 +796,15 @@ def lsh_probe_pairs(
     exist.  Within-cluster emission is new-member x cluster, linear
     in the batch's duplicate count.
     """
-    rows_per_band = k // bands
-    fsig = F.array(*[F.col(f"mh{i}") for i in range(k)])
-    wsig = Window.partitionBy("__fsig")
-    members = (
-        all_sigs.select(
-            F.col(id_col), F.col(is_new_col).alias("__new"), fsig.alias("__fsig")
-        )
-        .withColumn("__rep", F.min(id_col).over(wsig))
-        .withColumn("__cnt", F.count(F.lit(1)).over(wsig))
-        .withColumn("__has_new", F.max(F.col("__new").cast("int")).over(wsig) == 1)
+    members, wsig = _collapse(all_sigs, id_col, k, F.col(is_new_col).alias("__new"))
+    members = members.withColumn("__cnt", F.count(F.lit(1)).over(wsig)).withColumn(
+        "__has_new", F.max(F.col("__new").cast("int")).over(wsig) == 1
     )
-    reps = members.filter(F.col(id_col) == F.col("__rep"))
-
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band_id"),
-            F.array(
-                *[F.element_at("__fsig", i + 1) for i in lsh_band_order(k, bands, b)]
-            ).alias("skey"),
-        )
-        for b in range(bands)
-    ]
-    banded = reps.select(
-        F.col(id_col).alias("rid"),
-        "__has_new",
-        F.explode(F.array(*band_structs)).alias("band"),
-    ).select(
-        "rid",
-        "__has_new",
-        "band.band_id",
-        F.slice("band.skey", 1, rows_per_band).alias("__eff"),
-        F.col("band.skey").alias("__sig"),
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    zip_matches = F.size(
-        F.filter(
-            F.zip_with(F.col("a.__sig"), F.col("b.__sig"), lambda x, y: x == y),
-            lambda m: m,
-        )
-    )
-    rep_pairs = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.__eff") == F.col("b.__eff"))
-            & (F.col("a.rid") < F.col("b.rid"))
-            # pre-join gate: a rep-pair with no new-touching cluster
-            # cannot emit anything — drop it before the verify work,
-            # so history is never re-paired against itself.
-            & (F.col("a.__has_new") | F.col("b.__has_new")),
-        )
-        .select(
-            F.col("a.rid").alias("ra"),
-            F.col("b.rid").alias("rb"),
-            F.col("a.__has_new").alias("__ha"),
-            F.col("b.__has_new").alias("__hb"),
-            zip_matches.cast("long").alias("sig_matches"),
-        )
-        .distinct()
-        .filter(F.col("sig_matches") >= verify_min)
+    rep_pairs = _probe_rep_pairs(
+        members.filter(F.col(id_col) == F.col("__rep")),
+        id_col, k, bands, verify_min, "__has_new",
+        lambda ha, hb: ha | hb,
+        ("__ha", "__hb"),
     )
 
     multi = members.filter(F.col("__cnt") > 1)
@@ -902,71 +898,19 @@ def lsh_probe_assign(
     members-x-rep-pair-direction join — linear in cluster sizes times
     rep-degree, with no member-x-member term anywhere.
     """
-    rows_per_band = k // bands
-    fsig = F.array(*[F.col(f"mh{i}") for i in range(k)])
-    wsig = Window.partitionBy("__fsig")
     # __rep is the cluster MIN id (the collapse representative), which
     # is exactly the "cluster min" the assignment rules need; __minnew
     # is the min NEW member (NULL <=> cluster has no new member, so it
     # doubles as the has_new flag).
-    members = (
-        all_sigs.select(
-            F.col(id_col), F.col(is_new_col).alias("__new"), fsig.alias("__fsig")
-        )
-        .withColumn("__rep", F.min(id_col).over(wsig))
-        .withColumn(
-            "__minnew",
-            F.min(F.when(F.col("__new"), F.col(id_col))).over(wsig),
-        )
+    members, wsig = _collapse(all_sigs, id_col, k, F.col(is_new_col).alias("__new"))
+    members = members.withColumn(
+        "__minnew", F.min(F.when(F.col("__new"), F.col(id_col))).over(wsig)
     )
-    reps = members.filter(F.col(id_col) == F.col("__rep"))
-
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band_id"),
-            F.array(
-                *[F.element_at("__fsig", i + 1) for i in lsh_band_order(k, bands, b)]
-            ).alias("skey"),
-        )
-        for b in range(bands)
-    ]
-    banded = reps.select(
-        F.col(id_col).alias("rid"),
-        "__minnew",
-        F.explode(F.array(*band_structs)).alias("band"),
-    ).select(
-        "rid",
-        "__minnew",
-        "band.band_id",
-        F.slice("band.skey", 1, rows_per_band).alias("__eff"),
-        F.col("band.skey").alias("__sig"),
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    zip_matches = F.size(
-        F.filter(
-            F.zip_with(F.col("a.__sig"), F.col("b.__sig"), lambda x, y: x == y),
-            lambda m: m,
-        )
-    )
-    rep_pairs = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.__eff") == F.col("b.__eff"))
-            & (F.col("a.rid") < F.col("b.rid"))
-            # no-new-touching rep-pairs cannot produce an update:
-            # drop before the verify work (history never re-probed).
-            & (F.col("a.__minnew").isNotNull() | F.col("b.__minnew").isNotNull()),
-        )
-        .select(
-            F.col("a.rid").alias("ra"),
-            F.col("b.rid").alias("rb"),
-            F.col("a.__minnew").alias("__na"),
-            F.col("b.__minnew").alias("__nb"),
-            zip_matches.cast("long").alias("sig_matches"),
-        )
-        .distinct()
-        .filter(F.col("sig_matches") >= verify_min)
+    rep_pairs = _probe_rep_pairs(
+        members.filter(F.col(id_col) == F.col("__rep")),
+        id_col, k, bands, verify_min, "__minnew",
+        lambda na, nb: na.isNotNull() | nb.isNotNull(),
+        ("__na", "__nb"),
     )
     # Two direction rows per verified rep-pair: members of the cluster
     # keyed by ``rep`` see the OTHER cluster's min (valid for NEW

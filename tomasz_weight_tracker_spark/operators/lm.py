@@ -11,7 +11,7 @@ papers) run over raw crawls, re-expressed Spark-first (the third,
    trained on an in-domain reference split and applied to the rest of
    the corpus (the CCNet "perplexity bucket" step).  ``ln()`` is not
    bit-portable across engines (last-ulp differences; see BM25's
-   rational idf in plans/llm_ops.py), so the score is the *mean
+   rational idf in plans/similarity_ann.py), so the score is the *mean
    smoothed bigram likelihood*, e9-quantized per token with pure
    BIGINT arithmetic: ``p_e9 = (1e9 * (c(w1 w2)+1)) div (c(w1)+V)``.
    Monotone in the model's probability estimates, so the keep/drop
@@ -37,7 +37,7 @@ Scale posture:
   at real scale: df-1 hapax rows add nothing to smoothing accuracy);
   the bigram lookup is a keyed shuffle whose build side is unique per
   key, so AQE's skew-join split handles the Zipf head ("of the")
-  exactly like plans/scale_ops.py:skew_join_events documents.
+  exactly like plans/relational.py:skew_join_events documents.
 - perceptron_train: the corpus is touched ONCE to build a dense
   (B+1)-wide integer feature row per document (md5 bucket hashing,
   zero shuffle, localCheckpoint); every round is one scan + one

@@ -90,16 +90,6 @@ DECODED_SCHEMA = StructType(
     ]
 )
 
-FRAME_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("frame_idx", IntegerType()),
-        StructField("frame_ts_ms", LongType()),
-        StructField("features", ArrayType(DoubleType())),
-    ]
-)
-
-
 def binary_meta(content: Column) -> Column:
     """Native (JVM-side) metadata over an opaque binary column: byte
     length + md5 — the cheap pass that runs BEFORE any decode, e.g. for
@@ -240,44 +230,3 @@ def decode_media(df: DataFrame, id_col: str = "media_id", content_col: str = "co
         id_col, content_col, F.length(content_col).cast("long").alias("__n_bytes")
     )
     return src.mapInPandas(decode, DECODED_SCHEMA)
-
-
-def sample_frames(
-    df: DataFrame,
-    every_ms: int = 1000,
-    id_col: str = "media_id",
-    content_col: str = "content",
-    duration_col: str = "meta.duration_ms",
-) -> DataFrame:
-    """Frame sampling for video blobs: one row per sampled frame at
-    ``every_ms`` intervals across the clip duration.  The frame decode
-    is the same stubbed codec; the fan-out (explode-like row
-    amplification inside the UDF batch) is the real plumbing."""
-
-    def sample(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for batch in batches:
-            rows = []
-            for _, r in batch.iterrows():
-                raw = bytes(r[content_col])
-                duration = int(r["duration_ms"]) if r["duration_ms"] is not None else 0
-                for idx, ts_ms in enumerate(range(0, max(duration, 1), every_ms)):
-                    rows.append(
-                        {
-                            "media_id": r[id_col],
-                            "frame_idx": idx,
-                            "frame_ts_ms": ts_ms,
-                            "features": _stub_features(raw + idx.to_bytes(4, "big")),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in FRAME_SCHEMA.fields])
-
-    return df.select(
-        id_col, content_col, F.col(duration_col).alias("duration_ms")
-    ).mapInPandas(sample, FRAME_SCHEMA)
-
-
-def resize_features(features: Column, out_dim: int) -> Column:
-    """Down-sample a feature vector by slicing (native, no UDF)."""
-    return F.slice(features, 1, out_dim)

@@ -111,12 +111,6 @@ def bucket_end_labeled(ts: Column, minutes: int = 15) -> Column:
     return F.timestamp_seconds(F.floor(shifted / secs) * secs)
 
 
-def resolve_days_ago(ref_date: Column, line: Column, pattern: str = r"(\d+)\s+day[^\s]*\s+ago") -> Column:
-    """T8: '<N> days ago' -> ref_date - N days (utils/loose_thoughts.py:191-196)."""
-    n = F.regexp_extract(line, pattern, 1)
-    return F.when(n != "", F.date_sub(ref_date, n.cast("int")))
-
-
 # ---------------------------------------------------------------------------
 # A5: anchored resample (pandas .resample("W-Fri"/"ME").mean(), reference
 # utils/20251223-weight-for-streamlit.py:327-345).

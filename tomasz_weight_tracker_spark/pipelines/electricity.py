@@ -286,19 +286,3 @@ def fifteen_minute_usage(
     # range-partition exchange at scale).
     return out.orderBy(*keys, "Bucket") if ordered else out
 
-
-def conservation_check(readings: DataFrame, usage: DataFrame) -> dict[str, float]:
-    """SURVEY §5.1.3 invariant: total allocated usage equals the meter
-    delta over the covered span (driver-side, test support)."""
-    first_last = readings.orderBy("LocalDateTime").agg(
-        (F.max("P") - F.min("P")).alias("dP"), (F.max("OP") - F.min("OP")).alias("dOP")
-    ).first()
-    sums = usage.agg(
-        F.sum("P_Usage").alias("sP"), F.sum("OP_Usage").alias("sOP")
-    ).first()
-    return {
-        "meter_dP": float(first_last["dP"]),
-        "meter_dOP": float(first_last["dOP"]),
-        "allocated_P": float(sums["sP"] or 0.0),
-        "allocated_OP": float(sums["sOP"] or 0.0),
-    }

@@ -153,36 +153,6 @@ def numeric_coercion(wide: DataFrame, cols: Sequence[str] | None = None) -> Data
     return out
 
 
-def recent_window(
-    wide: DataFrame, cutoff_date: str | None = None, recent_n: int | None = None
-) -> DataFrame:
-    """P6 + P8 + O2: newest-first, optional date cutoff and head-N."""
-    out = wide.orderBy(F.col("date_time").desc())
-    if cutoff_date is not None:
-        out = out.filter(F.col("date_time") >= F.lit(cutoff_date))
-    if recent_n is not None:
-        out = out.limit(recent_n)
-    return out
-
-
-def rolling_trend(
-    df: DataFrame,
-    value_col: str = "Weight",
-    days: int = 28,
-    series_keys: Sequence[str] = (),
-) -> DataFrame:
-    """W3: trailing time-range rolling mean (the 28D trendline,
-    utils/20251223-weight-for-streamlit.py:300-310).  Partitioned by
-    series keys when present; the reference's single series is the
-    degenerate global window."""
-    w = (
-        (Window.partitionBy(*series_keys) if series_keys else Window.partitionBy())
-        .orderBy(F.unix_timestamp("date_time"))
-        .rangeBetween(-days * 86400, 0)
-    )
-    return df.withColumn(f"{value_col}_trend", F.avg(value_col).over(w))
-
-
 def periodic_summary(
     wide: DataFrame,
     freq: str = "W-FRI",
@@ -211,11 +181,3 @@ def periodic_summary(
         if old in res.columns:
             res = res.withColumnRenamed(old, new)
     return res.orderBy(F.col("period").desc())
-
-
-def bmi_to_kg_table(bmi_values: Sequence[float], height_cm: float) -> list[tuple[float, float]]:
-    """G11: BMI -> kg conversion table for a given height (driver-side,
-    feeds a UI string in the reference at
-    utils/20251223-weight-for-streamlit.py:191-198)."""
-    h = height_cm / 100.0
-    return [(b, round(b * h * h, 1)) for b in bmi_values]

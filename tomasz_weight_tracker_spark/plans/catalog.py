@@ -958,7 +958,7 @@ def electricity_15min_frame(ev):
 # (PARITY_r10_sf10: electricity_15min's per-minute explode CTE spills
 # ~70 GB; snm_near_dup's pair CTEs exhaust the 24 GB cap on the
 # 100x-verbatim corpus) get value-checked slice twins, each next to its
-# parent (snm_near_dup_blockslice in advanced.py,
+# parent (snm_near_dup_blockslice in dedup_lsh.py,
 # weight_txt_parse_fileslice in pathbound.py): the SAME engine plan over
 # a deterministic, semantics-preserving subset, with the oracle bounding
 # itself BEFORE its expensive materialization.  These run at every

@@ -1,26 +1,42 @@
-"""Dedup catalog queries: MinHash-LSH near-dup edges, clusters and their
-keep policies, passage spans, line and URL dedup, and the LSH audits.
+"""Dedup catalog queries: exact dedup and fingerprints, MinHash/SimHash
+signatures, MinHash-LSH near-dup edges, clusters and their keep
+policies, sorted-neighborhood and fuzzy matching, passage spans, line
+and URL dedup, and the LSH audits.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, Window
 
 from ..functions import md5_long, md5_long_sql, tokens
 from ..operators import dedup as D
 from ..operators import similarity as S
+from ..operators import text_analysis as TA
+from ..operators.clusters import canonicalize, connected_components, sql_connected_components
+from ..operators.dedup import dedup_keep_last
 from ..operators.text_analysis import sql_tokens
+
 from .catalog import load, register, trained_ivf_centroids
-from .llm_ops import (
-    LSH_BANDS,
-    LSH_CAP,
-    LSH_K,
-    LSH_THRESH,
-    TOKS,
-    _BANDED_SQL,
-    _SIG_MATCHES,
+
+
+TOKS = TA.sql_tokens("lower(text)")
+
+
+# LSH tuning (round-2 re-tune after the 4.6M-pairs-from-5k-docs blowup):
+# 16 hashes in 4 bands of 4 (vs 8/2) halves per-band collision odds and
+# quadruples the OR-recall paths; the hot-bucket cap kills the
+# quadratic buckets outright.  Verify threshold stays at 0.75
+# estimated Jaccard (12/16, was 6/8).
+LSH_K, LSH_BANDS, LSH_ROWS, LSH_CAP, LSH_THRESH = 16, 4, 4, 64, 12
+
+
+_SIG_MATCHES = " + ".join(
+    f"CASE WHEN sa.mh{i} = sb.mh{i} THEN 1 ELSE 0 END" for i in range(LSH_K)
 )
+
+
+_BANDED_SQL = D.sql_lsh_banded(LSH_K, LSH_BANDS)
 
 
 # ===========================================================================
@@ -801,10 +817,19 @@ def _pspan_base_ctes() -> str:
     )"""
 
 
-def _pspan_ctes() -> str:
+_PSPAN_PAIRS = """
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.p AS pa, b.p AS pb
+        FROM g a JOIN g b USING (h) JOIN df USING (h)
+        WHERE a.doc_id < b.doc_id"""
+
+
+def _pspan_ctes(pairs: str = _PSPAN_PAIRS) -> str:
     """Open CTE chain ending in ``spans`` (id_a, id_b, a_start,
-    b_start, span_toks) — shared by the measuring query and the
-    rebuild so the two cannot drift (the sql_lm_chain lesson).
+    b_start, span_toks) — shared by the measuring query, the rebuild
+    and the eval decontamination so they cannot drift (the
+    sql_lm_chain lesson).  ``pairs`` selects the matched gram pairs
+    (id_a, id_b, pa, pb) from ``g`` and ``df``; the default pairs
+    every two documents in id order.
 
     Islands bridge same-diagonal gaps of up to k matched positions:
     a gap can only come from grams the df cap dropped (an intermediate
@@ -816,10 +841,7 @@ def _pspan_ctes() -> str:
     across real differences.  span_toks is max(pa)-min(pa)+k (equal to
     count+k-1 when no gram was capped)."""
     k, mn = PSPAN_K, PSPAN_MIN
-    return _pspan_base_ctes() + f""", m AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.p AS pa, b.p AS pb
-        FROM g a JOIN g b USING (h) JOIN df USING (h)
-        WHERE a.doc_id < b.doc_id
+    return _pspan_base_ctes() + f""", m AS ({pairs}
     ), ib AS (
         SELECT id_a, id_b, pa, pb, pa - pb AS diag,
                CASE WHEN pa - lag(pa) OVER (PARTITION BY id_a, id_b, pa - pb
@@ -876,12 +898,15 @@ def q_dup_passage_spans(spark, sf_dir):
     return _passage_spans(spark, sf_dir)
 
 
-def _passage_spans(spark, sf_dir):
+def _rolling_grams(spark, sf_dir):
+    """(doc_id, p, h): every rolling PSPAN_K-token gram hash of every
+    document, p its 1-based start token — the Spark twin of
+    ``_pspan_base_ctes``' ``g``."""
     k = PSPAN_K
     docs = load(spark, sf_dir, "documents")
     toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     d = docs.select("doc_id", toks.alias("toks")).filter(F.size("toks") >= k)
-    g = d.select(
+    return d.select(
         "doc_id",
         F.explode(
             F.transform(
@@ -893,38 +918,18 @@ def _passage_spans(spark, sf_dir):
             )
         ).alias("s"),
     ).select("doc_id", "s.p", "s.h")
-    posts = (
-        g.groupBy("h")
-        .agg(F.sort_array(F.collect_list(F.struct("doc_id", "p"))).alias("ps"))
-        .filter((F.size("ps") >= 2) & (F.size("ps") <= PSPAN_DF_MAX))
-    )
-    # (x, i) -> pairs (ps[i], ps[j]) for i < j over the (doc_id, p)-
-    # sorted list: id_a <= id_b by construction, same-doc repeats
-    # filtered below (a within-doc repeat is doc_repetition's signal,
-    # not a cross-doc passage).
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("ps"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ps"), i + 2, F.size(F.col("ps"))),
-                lambda y: F.struct(
-                    x["doc_id"].alias("id_a"),
-                    x["p"].alias("pa"),
-                    y["doc_id"].alias("id_b"),
-                    y["p"].alias("pb"),
-                ),
-            ),
-        )
-    )
-    m = (
-        posts.select(F.explode(pair_structs).alias("pr"))
-        .select("pr.id_a", "pr.pa", "pr.id_b", "pr.pb")
-        .filter(F.col("id_a") != F.col("id_b"))
-    )
-    # Cap-tolerant islands: bridge same-diagonal gaps <= k (only the
-    # df cap can create them, and the flanking gram windows still
-    # cover every bridged token — see _pspan_ctes' docstring); a real
-    # token mismatch forces a gap >= k+1 and still splits.
+
+
+def _diagonal_spans(m):
+    """Maximal shared spans (id_a, id_b, a_start, b_start, span_toks
+    >= PSPAN_MIN) of the matched gram pairs ``m`` = (id_a, pa, id_b,
+    pb) — the Spark twin of ``_pspan_ctes``' ib/i/spans.  Cap-tolerant
+    islands per (pair, diagonal = pa - pb): bridge same-diagonal gaps
+    <= k (only the df cap can create them, and the flanking gram
+    windows still cover every bridged token — see _pspan_ctes'
+    docstring); a real token mismatch forces a gap >= k+1 and still
+    splits."""
+    k = PSPAN_K
     w = Window.partitionBy("id_a", "id_b", F.col("pa") - F.col("pb")).orderBy("pa")
     brk = F.when(F.col("pa") - F.lag("pa").over(w) <= k, F.lit(0)).otherwise(
         F.lit(1)
@@ -951,6 +956,39 @@ def _passage_spans(spark, sf_dir):
         .filter(F.col("span_toks") >= PSPAN_MIN)
         .select("id_a", "id_b", "a_start", "b_start", "span_toks")
     )
+
+
+def _passage_spans(spark, sf_dir):
+    posts = (
+        _rolling_grams(spark, sf_dir)
+        .groupBy("h")
+        .agg(F.sort_array(F.collect_list(F.struct("doc_id", "p"))).alias("ps"))
+        .filter((F.size("ps") >= 2) & (F.size("ps") <= PSPAN_DF_MAX))
+    )
+    # (x, i) -> pairs (ps[i], ps[j]) for i < j over the (doc_id, p)-
+    # sorted list: id_a <= id_b by construction, same-doc repeats
+    # filtered below (a within-doc repeat is doc_repetition's signal,
+    # not a cross-doc passage).
+    pair_structs = F.flatten(
+        F.transform(
+            F.col("ps"),
+            lambda x, i: F.transform(
+                F.slice(F.col("ps"), i + 2, F.size(F.col("ps"))),
+                lambda y: F.struct(
+                    x["doc_id"].alias("id_a"),
+                    x["p"].alias("pa"),
+                    y["doc_id"].alias("id_b"),
+                    y["p"].alias("pb"),
+                ),
+            ),
+        )
+    )
+    m = (
+        posts.select(F.explode(pair_structs).alias("pr"))
+        .select("pr.id_a", "pr.pa", "pr.id_b", "pr.pb")
+        .filter(F.col("id_a") != F.col("id_b"))
+    )
+    return _diagonal_spans(m)
 
 
 def _pspan_rebuild_oracle() -> str:
@@ -1068,34 +1106,15 @@ DECON_EVAL_MOD = 7  # doc_id % MOD == 0 plays the held-out eval set
 
 
 def _decontam_oracle() -> str:
-    k, mn, mod = PSPAN_K, PSPAN_MIN, DECON_EVAL_MOD
-    return (
-        _pspan_base_ctes()
-        + f""", m AS (
-        SELECT e.doc_id AS eval_id, t2.doc_id AS train_id,
-               e.p AS pe, t2.p AS pt
+    mod = DECON_EVAL_MOD
+    return _pspan_ctes(f"""
+        SELECT e.doc_id AS id_a, t2.doc_id AS id_b, e.p AS pa, t2.p AS pb
         FROM g e JOIN g t2 USING (h) JOIN df USING (h)
-        WHERE e.doc_id % {mod} = 0 AND t2.doc_id % {mod} <> 0
-    ), ib AS (
-        SELECT eval_id, train_id, pe, pt, pe - pt AS diag,
-               CASE WHEN pe - lag(pe) OVER (PARTITION BY eval_id, train_id,
-                                                         pe - pt
-                                            ORDER BY pe) <= {k}
-                    THEN 0 ELSE 1 END AS brk
-        FROM m
-    ), i AS (
-        SELECT eval_id, train_id, pe, pt, diag,
-               sum(brk) OVER (PARTITION BY eval_id, train_id, diag
-                              ORDER BY pe ROWS UNBOUNDED PRECEDING) AS isl
-        FROM ib
-    )
-    SELECT eval_id, train_id,
-           min(pe)::BIGINT AS eval_start, min(pt)::BIGINT AS train_start,
-           (max(pe) - min(pe) + {k})::BIGINT AS span_toks
-    FROM i GROUP BY eval_id, train_id, diag, isl
-    HAVING max(pe) - min(pe) + {k} >= {mn}
+        WHERE e.doc_id % {mod} = 0 AND t2.doc_id % {mod} <> 0""") + """
+    SELECT id_a AS eval_id, id_b AS train_id, a_start AS eval_start,
+           b_start AS train_start, span_toks
+    FROM spans
     """
-    )
 
 
 @register(
@@ -1120,25 +1139,10 @@ def _decontam_oracle() -> str:
     "gram postings broadcast; the train side is touched once.",
 )
 def q_eval_decontam_spans(spark, sf_dir):
-    k, mod = PSPAN_K, DECON_EVAL_MOD
-    docs = load(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    d = docs.select("doc_id", toks.alias("toks")).filter(F.size("toks") >= k)
-    g = d.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.size("toks") - k + 1),
-                lambda p: F.struct(
-                    p.cast("long").alias("p"),
-                    md5_long(F.array_join(F.slice("toks", p, k), " ")).alias("h"),
-                ),
-            )
-        ).alias("s"),
-    ).select("doc_id", "s.p", "s.h")
-    is_eval = F.col("doc_id") % mod == 0
+    is_eval = F.col("doc_id") % DECON_EVAL_MOD == 0
     posts = (
-        g.groupBy("h")
+        _rolling_grams(spark, sf_dir)
+        .groupBy("h")
         .agg(
             F.sort_array(
                 F.collect_list(F.when(is_eval, F.struct("doc_id", "p")))
@@ -1160,46 +1164,25 @@ def q_eval_decontam_spans(spark, sf_dir):
             lambda x: F.transform(
                 F.col("ts"),
                 lambda y: F.struct(
-                    x["doc_id"].alias("eval_id"),
-                    x["p"].alias("pe"),
-                    y["doc_id"].alias("train_id"),
-                    y["p"].alias("pt"),
+                    x["doc_id"].alias("id_a"),
+                    x["p"].alias("pa"),
+                    y["doc_id"].alias("id_b"),
+                    y["p"].alias("pb"),
                 ),
             ),
         )
     )
     m = posts.select(F.explode(pair_structs).alias("pr")).select(
-        "pr.eval_id", "pr.pe", "pr.train_id", "pr.pt"
+        "pr.id_a", "pr.pa", "pr.id_b", "pr.pb"
     )
-    # Cap-tolerant islands (same bridge rule as _passage_spans).
-    w = Window.partitionBy(
-        "eval_id", "train_id", F.col("pe") - F.col("pt")
-    ).orderBy("pe")
-    brk = F.when(F.col("pe") - F.lag("pe").over(w) <= k, F.lit(0)).otherwise(
-        F.lit(1)
+    return _diagonal_spans(m).select(
+        F.col("id_a").alias("eval_id"),
+        F.col("id_b").alias("train_id"),
+        F.col("a_start").alias("eval_start"),
+        F.col("b_start").alias("train_start"),
+        "span_toks",
     )
-    staged = m.select(
-        "eval_id",
-        "train_id",
-        "pe",
-        "pt",
-        (F.col("pe") - F.col("pt")).alias("diag"),
-        brk.alias("__brk"),
-    )
-    w2 = Window.partitionBy("eval_id", "train_id", "diag").orderBy(
-        "pe"
-    ).rowsBetween(Window.unboundedPreceding, 0)
-    isl = staged.withColumn("isl", F.sum("__brk").over(w2))
-    return (
-        isl.groupBy("eval_id", "train_id", "diag", "isl")
-        .agg(
-            F.min("pe").alias("eval_start"),
-            F.min("pt").alias("train_start"),
-            (F.max("pe") - F.min("pe") + F.lit(k)).cast("long").alias("span_toks"),
-        )
-        .filter(F.col("span_toks") >= PSPAN_MIN)
-        .select("eval_id", "train_id", "eval_start", "train_start", "span_toks")
-    )
+
 
 # ===========================================================================
 # Source-level leakage matrix (passage spans rolled up to sources)
@@ -1974,23 +1957,21 @@ def q_dup_passage_rebuild_maximal(spark, sf_dir):
 # Cluster-representative selection (keep best per near-dup cluster)
 # ===========================================================================
 
-# Same candidate generation + closure as dup_clusters (extended.py) so
-# the two queries agree on what a cluster IS; this query adds the
-# keep-policy.  Quality = distinct-vocabulary size (a stand-in for any
-# per-doc quality score — the plan shape is identical for a model
-# score column).
+# dup_clusters and dup_cluster_keep_best share what a cluster IS:
+# Jaccard>0.5 same-source candidate edges (doc-id window 40) over the
+# distinct-token sets of the first 200 documents, closed by min-label
+# propagation.  The doc_id bound keeps the oracle's recursive walk
+# small, not the engine.
 _SQL_TOKS = (
     "CASE WHEN trim(lower(coalesce(text, ''))) = '' THEN []::VARCHAR[] "
     "ELSE list_distinct(string_split_regex(trim(lower(coalesce(text, ''))), "
     "'\\s+')) END"
 )
 
-_KEEP_BEST_ORACLE = f"""
-    WITH RECURSIVE t AS (
+_SQL_JACCARD_CLUSTERS = f"""t AS (
         SELECT doc_id, source, {_SQL_TOKS} AS toks
         FROM documents WHERE doc_id < 200
     ),
-    q AS (SELECT doc_id, len(toks)::BIGINT AS quality FROM t),
     edges0 AS (
       SELECT a.doc_id AS u, b.doc_id AS v
       FROM t a JOIN t b
@@ -2002,19 +1983,38 @@ _KEEP_BEST_ORACLE = f"""
                - len(list_filter(a.toks, x -> list_contains(b.toks, x))))::DOUBLE
             > 0.5
     ),
-    edges AS (SELECT u, v FROM edges0 UNION SELECT v, u FROM edges0),
-    nodes AS (SELECT DISTINCT u AS id FROM edges),
-    walk AS (
-      SELECT id, id AS reach FROM nodes
-      UNION
-      SELECT w.id, e.v AS reach FROM walk w JOIN edges e ON e.u = w.reach
-    ),
-    comp AS (SELECT id, min(reach) AS component FROM walk GROUP BY id),
-    memb AS (
-      SELECT q.doc_id, q.quality,
-             coalesce(c.component, q.doc_id) AS component
-      FROM q LEFT JOIN comp c ON c.id = q.doc_id
-    ),
+    {sql_connected_components("edges0")}"""
+
+
+def _jaccard_clusters(spark, sf_dir):
+    """Spark twin of ``_SQL_JACCARD_CLUSTERS``: the documents (doc_id,
+    source, toks) and their components (id, component)."""
+    d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
+    t = d.select(
+        "doc_id",
+        "source",
+        F.array_distinct(
+            tokens(F.lower(F.coalesce(F.col("text"), F.lit(""))))
+        ).alias("toks"),
+    )
+    a, b = t.alias("a"), t.alias("b")
+    pairs = (
+        a.join(
+            b,
+            (F.col("a.source") == F.col("b.source"))
+            & (F.col("a.doc_id") < F.col("b.doc_id"))
+            & (F.col("b.doc_id") - F.col("a.doc_id") <= 40),
+        )
+        .withColumn("j", D.jaccard_exprs(F.col("a.toks"), F.col("b.toks")))
+        .filter(F.col("j") > 0.5)
+        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
+    )
+    return t, connected_components(pairs)
+
+
+# The keep policy over CTE memb (doc_id, quality, component): the
+# highest-quality member per component, tiebreak min doc_id.
+_SQL_KEEP_BEST = """,
     ranked AS (
       SELECT *, row_number() OVER (
           PARTITION BY component ORDER BY quality DESC, doc_id) AS rn
@@ -2029,9 +2029,37 @@ _KEEP_BEST_ORACLE = f"""
 """
 
 
+def _keep_best(memb):
+    """Spark twin of ``_SQL_KEEP_BEST``: argmax(quality, then MIN
+    doc_id) as one combinable max over a lexicographic struct —
+    (quality, -doc_id) ascending-max == quality DESC then doc_id ASC."""
+    best = F.max(
+        F.struct(F.col("quality"), (-F.col("doc_id")).alias("neg_id"))
+    ).alias("best")
+    return (
+        memb.groupBy("component")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_members"), best)
+        .select(
+            "component",
+            "n_members",
+            (-F.col("best.neg_id")).cast("long").alias("kept_doc_id"),
+            F.col("best.quality").cast("long").alias("kept_quality"),
+        )
+    )
+
+
 @register(
     "dup_cluster_keep_best",
-    _KEEP_BEST_ORACLE,
+    "WITH RECURSIVE "
+    + _SQL_JACCARD_CLUSTERS
+    + """,
+    q AS (SELECT doc_id, len(toks)::BIGINT AS quality FROM t),
+    memb AS (
+      SELECT q.doc_id, q.quality,
+             coalesce(c.component, q.doc_id) AS component
+      FROM q LEFT JOIN comp c ON c.id = q.doc_id
+    )"""
+    + _SQL_KEEP_BEST,
     survey_ids=("A7",),
     doc="Cluster-representative selection — the dedup CONSUMER policy: "
     "within each near-dup cluster keep the highest-quality member "
@@ -2048,32 +2076,9 @@ _KEEP_BEST_ORACLE = f"""
     "doc_id<200 bounds the oracle's recursive CTE, not the engine.",
 )
 def q_dup_cluster_keep_best(spark, sf_dir):
-    from ..operators.clusters import connected_components
-
-    d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    t = d.select(
-        "doc_id",
-        "source",
-        F.array_distinct(
-            tokens(F.lower(F.coalesce(F.col("text"), F.lit(""))))
-        ).alias("toks"),
-    )
-    t = t.withColumn("quality", F.size("toks").cast("long"))
-    a, b = t.alias("a"), t.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.source") == F.col("b.source"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (F.col("b.doc_id") - F.col("a.doc_id") <= 40),
-        )
-        .withColumn("j", D.jaccard_exprs(F.col("a.toks"), F.col("b.toks")))
-        .filter(F.col("j") > 0.5)
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-    )
-    comps = connected_components(pairs)
+    t, comps = _jaccard_clusters(spark, sf_dir)
     memb = (
-        t.select("doc_id", "quality")
+        t.select("doc_id", F.size("toks").cast("long").alias("quality"))
         .join(comps, t.doc_id == comps.id, "left")
         .select(
             "doc_id",
@@ -2081,22 +2086,7 @@ def q_dup_cluster_keep_best(spark, sf_dir):
             F.coalesce(F.col("component"), F.col("doc_id")).alias("component"),
         )
     )
-    # argmax(quality, then MIN doc_id) as one combinable max over a
-    # lexicographic struct: (quality, -doc_id) ascending-max ==
-    # quality DESC then doc_id ASC.
-    best = F.max(
-        F.struct(F.col("quality"), (-F.col("doc_id")).alias("neg_id"))
-    ).alias("best")
-    return (
-        memb.groupBy("component")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_members"), best)
-        .select(
-            "component",
-            "n_members",
-            (-F.col("best.neg_id")).cast("long").alias("kept_doc_id"),
-            F.col("best.quality").cast("long").alias("kept_quality"),
-        )
-    )
+    return _keep_best(memb)
 
 
 # ===========================================================================
@@ -2254,16 +2244,8 @@ _KEEP_BEST_LSH_ORACLE = (
     _SIG_CTES.replace("WITH ", "WITH RECURSIVE ", 1)
     + D.sql_lsh_star_edges(LSH_K, LSH_BANDS, LSH_CAP, LSH_THRESH)
     + f""",
-    sym AS (SELECT src_id AS u, dst_id AS v FROM edges WHERE kind = 'near'
-            UNION
-            SELECT dst_id, src_id FROM edges WHERE kind = 'near'),
-    nodes AS (SELECT DISTINCT u AS id FROM sym),
-    walk AS (
-      SELECT id, id AS reach FROM nodes
-      UNION
-      SELECT w.id, s.v AS reach FROM walk w JOIN sym s ON s.u = w.reach
-    ),
-    comp_rep AS (SELECT id, min(reach) AS component FROM walk GROUP BY id),
+    near AS (SELECT src_id AS u, dst_id AS v FROM edges WHERE kind = 'near'),
+    {sql_connected_components("near", "comp_rep")},
     rep_of AS (SELECT dst_id AS doc_id, src_id AS rep
                FROM edges WHERE kind = 'exact'),
     q AS (SELECT doc_id, len({_SQL_TOKS})::BIGINT AS quality FROM documents),
@@ -2274,19 +2256,8 @@ _KEEP_BEST_LSH_ORACLE = (
       LEFT JOIN rep_of r ON r.doc_id = q.doc_id
       LEFT JOIN comp_rep cr ON cr.id = r.rep
       LEFT JOIN comp_rep cr2 ON cr2.id = q.doc_id
-    ),
-    ranked AS (
-      SELECT *, row_number() OVER (
-          PARTITION BY component ORDER BY quality DESC, doc_id) AS rn
-      FROM memb
-    )
-    SELECT component,
-           count(*)::BIGINT AS n_members,
-           max(CASE WHEN rn = 1 THEN doc_id END)::BIGINT AS kept_doc_id,
-           max(CASE WHEN rn = 1 THEN quality END)::BIGINT AS kept_quality
-    FROM ranked
-    GROUP BY component
-"""
+    )"""
+    + _SQL_KEEP_BEST
 )
 
 
@@ -2314,8 +2285,6 @@ _KEEP_BEST_LSH_ORACLE = (
     "them with a recursive CTE.",
 )
 def q_dup_cluster_keep_best_lsh(spark, sf_dir):
-    from ..operators.clusters import connected_components
-
     d = load(spark, sf_dir, "documents")
     sig = D.minhash_signature(d.select("doc_id", "text"), "text", k=LSH_K).drop(
         "text"
@@ -2357,16 +2326,725 @@ def q_dup_cluster_keep_best_lsh(spark, sf_dir):
             F.coalesce("cr_c", "rep", "cr2_c", "doc_id").alias("component"),
         )
     )
-    best = F.max(
-        F.struct(F.col("quality"), (-F.col("doc_id")).alias("neg_id"))
-    ).alias("best")
+    return _keep_best(memb)
+
+
+@register(
+    "doc_fingerprint",
+    f"SELECT doc_id, {TA.sql_fingerprint('text')} AS fp FROM documents",
+    survey_ids=("A7",),
+    doc="Document fingerprint: md5 of whitespace-normalized lowercase text.",
+)
+def q_doc_fingerprint(spark, sf_dir):
+    d = load(spark, sf_dir, "documents")
+    return d.select("doc_id", TA.fingerprint(F.col("text")).alias("fp"))
+
+
+@register(
+    "exact_dedup",
+    f"""
+    SELECT {TA.sql_fingerprint('text')} AS fp, count(*) AS n_docs,
+           min(doc_id) AS canonical_id
+    FROM documents GROUP BY fp
+    """,
+    survey_ids=("A6", "A7"),
+    doc="Exact dedup: hash-groupBy on fingerprint, keep min doc_id.",
+)
+def q_exact_dedup(spark, sf_dir):
+    # widen=False: one cheap fingerprint per row then a keyed agg — the
+    # exchange doubles the wall (measured x0.51 at sf0.1, 0.22 -> 0.43 s).
+    d = load(spark, sf_dir, "documents", widen=False)
     return (
-        memb.groupBy("component")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_members"), best)
-        .select(
-            "component",
-            "n_members",
-            (-F.col("best.neg_id")).cast("long").alias("kept_doc_id"),
-            F.col("best.quality").cast("long").alias("kept_quality"),
+        d.withColumn("fp", TA.fingerprint(F.col("text")))
+        .groupBy("fp")
+        .agg(F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("canonical_id"))
+    )
+
+
+@register(
+    "minhash_signature",
+    f"WITH h AS (SELECT doc_id, {D.sql_minhash_pairs(TOKS)} AS hs FROM documents)\n"
+    "SELECT doc_id, "
+    + ", ".join(f"{D.sql_minhash_from_pairs('hs', i)} AS mh{i}" for i in range(4))
+    + " FROM h",
+    survey_ids=(),
+    doc="MinHash signatures: ONE md5 per distinct token yields (h1,h2); "
+    "salt i's hash is the integer mix h1 + i*h2 (double-hashing "
+    "family), so signature width is nearly free.  Round 1 paid one "
+    "md5-of-concat per token PER SALT (5.1x DuckDB).",
+)
+def q_minhash_signature(spark, sf_dir):
+    d = load(spark, sf_dir, "documents")
+    return D.minhash_signature(d.select("doc_id", "text"), "text", k=4).drop("text")
+
+
+@register(
+    "simhash",
+    f"SELECT doc_id, {D.sql_simhash(TOKS, 16)} AS simhash FROM documents",
+    survey_ids=(),
+    doc="SimHash (16-bit, frequency-weighted bitwise majority).",
+)
+def q_simhash(spark, sf_dir):
+    d = load(spark, sf_dir, "documents")
+    toks = tokens(F.lower(F.col("text")))
+    return d.select("doc_id", D.simhash_exprs(toks, 16).alias("simhash"))
+
+
+@register(
+    "ngram_jaccard_pairs",
+    f"""
+    WITH t AS (SELECT doc_id, source, {TOKS} AS toks FROM documents)
+    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+           {D.sql_jaccard('a.toks', 'b.toks')} AS jaccard
+    FROM t a JOIN t b
+      ON a.source = b.source AND a.doc_id < b.doc_id AND b.doc_id - a.doc_id <= 40
+    """,
+    survey_ids=("J1",),
+    doc="Token-set Jaccard over bounded candidate pairs (near-dup verify).",
+)
+def q_ngram_jaccard_pairs(spark, sf_dir):
+    d = load(spark, sf_dir, "documents")
+    t = d.select("doc_id", "source", tokens(F.lower(F.col("text"))).alias("toks"))
+    a = t.alias("a")
+    b = t.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.source") == F.col("b.source"))
+            & (F.col("a.doc_id") < F.col("b.doc_id"))
+            & (F.col("b.doc_id") - F.col("a.doc_id") <= 40),
         )
+        .select(
+            F.col("a.doc_id").alias("id_a"),
+            F.col("b.doc_id").alias("id_b"),
+            D.jaccard_exprs(F.col("a.toks"), F.col("b.toks")).alias("jaccard"),
+        )
+    )
+
+
+@register(
+    "lsh_near_dup",
+    f"WITH h AS (SELECT doc_id, {D.sql_minhash_pairs(TOKS)} AS hs FROM documents),\n"
+    "    sig AS (SELECT doc_id, "
+    + ", ".join(f"{D.sql_minhash_from_pairs('hs', i)} AS mh{i}" for i in range(LSH_K))
+    + " FROM h),"
+    + D.sql_lsh_candidates(LSH_K, LSH_BANDS, LSH_CAP, LSH_THRESH)
+    + f"""
+    SELECT id_a, id_b, ({_SIG_MATCHES})::BIGINT AS sig_matches
+    FROM cand JOIN sig sa ON cand.id_a = sa.doc_id JOIN sig sb ON cand.id_b = sb.doc_id
+    WHERE {_SIG_MATCHES} >= {LSH_THRESH}""",
+    survey_ids=(),
+    doc=f"MinHash-LSH near-dup: {LSH_K} hashes, {LSH_BANDS} bands of {LSH_ROWS} "
+    "generate candidates (shingle->minhash->band->bucket-join), "
+    "COLLAPSE-FIRST (round-8 fix for the recall collapse the round-7 "
+    "drop-the-bucket cap measured: 0.45% vs 90.8% uncapped on "
+    "lsh_recall_audit): identical signatures collapse to one "
+    "representative before banding, a band bucket of distinct "
+    f"signatures over {LSH_CAP} members recursively splits on further "
+    "signature positions, verified rep-pairs expand back to member "
+    "pairs, and identical-signature clusters emit their (true, "
+    "output-bound) all-pairs once.  The full signature estimates "
+    f"Jaccard; pairs under {LSH_THRESH}/{LSH_K} agreement are dropped "
+    "BEFORE expansion (verify_min), so a false rep-pair between two "
+    "big clusters never fans out.",
+)
+def q_lsh_near_dup(spark, sf_dir):
+    d = load(spark, sf_dir, "documents")
+    # Single-pass plan: sig_matches is computed from the band-shuffled
+    # signature array itself (emit_sig_matches) — no second join back
+    # to the signature table and no 2k-wide carry.  The earlier design
+    # broadcast both sides of a verify join; a signature table is
+    # corpus-cardinality (one row per document), so at 100 TB that
+    # broadcast OOMs every executor.
+    sig = D.minhash_signature(d.select("doc_id", "text"), "text", k=LSH_K).drop("text")
+    pairs = D.lsh_candidate_pairs(
+        sig,
+        "doc_id",
+        k=LSH_K,
+        bands=LSH_BANDS,
+        max_bucket=LSH_CAP,
+        emit_sig_matches=True,
+        verify_min=LSH_THRESH,
+    )
+    return pairs.filter(F.col("sig_matches") >= LSH_THRESH).select(
+        "id_a", "id_b", "sig_matches"
+    )
+
+
+@register(
+    "doc_shingle_fp",
+    r"""
+    WITH n AS (
+      SELECT doc_id, regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS t
+      FROM documents
+    ),
+    s AS (
+      SELECT doc_id,
+             CASE WHEN length(t) >= 5
+                  THEN list_transform(range(1, length(t) - 3), i -> substr(t, i::INT, 5))
+                  ELSE [t] END AS sh
+      FROM n
+    )
+    SELECT doc_id,
+           len(list_distinct(sh))::BIGINT AS n_shingles,
+           list_min(list_transform(list_distinct(sh),
+                                   g -> ('0x' || substr(md5(g),1,15))::BIGINT)) AS shingle_fp
+    FROM s
+    """,
+    survey_ids=("A7",),
+    doc="Rolling-hash document fingerprint: character 5-gram shingles "
+    "over whitespace-normalized text, min md5-derived hash over the "
+    "distinct shingle set (robust to word-boundary edits that break "
+    "token-level fingerprints).  Shingle explosion stays inside a "
+    "per-row array — no row amplification, no shuffle.",
+)
+def q_doc_shingle_fp(spark, sf_dir):
+    d, sh = TA.char_shingles(load(spark, sf_dir, "documents"))
+    d = d.select("doc_id", sh.alias("__sh"))
+    return d.select(
+        "doc_id",
+        F.size("__sh").cast("long").alias("n_shingles"),
+        F.array_min(F.transform(F.col("__sh"), lambda g: md5_long(g))).alias("shingle_fp"),
+    )
+
+
+# Block-size cap for the fuzzy join (same role as lsh_candidate_pairs'
+# max_bucket): a (first_token, length-bucket) block with more members
+# than this is key degeneracy — near-constant strings — and is dropped
+# before the self-join, bounding pair emission per block at cap^2/2
+# instead of (|names|/|blocks|)^2 growing with the corpus.
+_FUZZY_MAX_BLOCK = 512
+_FUZZY_MAX_DIST = 2
+# Length-bucket width 2 with a probe into the bucket BELOW: any pair
+# within edit distance 2 differs in length by <= 2, so their width-2
+# buckets differ by <= 1 and the (home, home-1) double emission
+# guarantees a shared key — no recall loss from the secondary blocking.
+_FUZZY_LEN_W = 2
+
+
+def fuzzy_candidate_pairs(
+    names: DataFrame, max_block: int | None = _FUZZY_MAX_BLOCK
+) -> DataFrame:
+    """Capped blocking for an edit-distance (<= 2) self-join over a
+    ``name`` column: candidates must share (first token, width-2
+    length bucket), with each name probing its lower neighbor bucket
+    so cross-boundary pairs are kept.  Blocks larger than
+    ``max_block`` are dropped entirely (count-over-window on the block
+    key — shares the hash partitioning with the join that follows, so
+    the cap adds no extra shuffle), exactly the
+    ``lsh_candidate_pairs(max_bucket=...)`` discipline: a block that
+    hot is first-token degeneracy, not typo signal, and AQE cannot
+    help because it splits a partition's rows, not the quadratic pair
+    emission.  Returns distinct (name_a < name_b) candidate pairs.
+    """
+    lb = F.expr(f"length(name) div {_FUZZY_LEN_W}")
+    banded = names.select(
+        "name",
+        F.substring_index("name", " ", 1).alias("blk"),
+        F.explode(F.array(lb, lb - 1)).alias("key"),
+    )
+    if max_block is not None:
+        w = Window.partitionBy("blk", "key")
+        banded = (
+            banded.withColumn("__n", F.count(F.lit(1)).over(w))
+            .filter(F.col("__n") <= max_block)
+            .drop("__n")
+        )
+    a, b = banded.alias("a"), banded.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.blk") == F.col("b.blk"))
+            & (F.col("a.key") == F.col("b.key"))
+            & (F.col("a.name") < F.col("b.name")),
+        )
+        .select(F.col("a.name").alias("name_a"), F.col("b.name").alias("name_b"))
+        .distinct()
+    )
+
+
+@register(
+    "fuzzy_name_match",
+    f"""
+    WITH names AS (SELECT DISTINCT p_name AS name FROM part
+               WHERE regexp_matches(p_name, '^[ -~]*$')),
+    vars AS (
+        SELECT DISTINCT name FROM (
+            SELECT name FROM names
+            UNION ALL
+            SELECT substring(name, 1, length(name) - 1) FROM names
+        )
+    ),
+    v AS (SELECT name, split_part(name, ' ', 1) AS blk,
+                 length(name) // {_FUZZY_LEN_W} AS lb
+          FROM vars),
+    banded AS (
+        SELECT name, blk, lb AS key FROM v
+        UNION ALL
+        SELECT name, blk, lb - 1 AS key FROM v
+    ),
+    capped AS (
+        SELECT name, blk, key FROM (
+            SELECT name, blk, key,
+                   count(*) OVER (PARTITION BY blk, key) AS n
+            FROM banded
+        ) WHERE n <= {_FUZZY_MAX_BLOCK}
+    ),
+    pairs AS (
+        SELECT DISTINCT a.name AS name_a, b.name AS name_b
+        FROM capped a JOIN capped b
+          ON a.blk = b.blk AND a.key = b.key AND a.name < b.name
+    )
+    SELECT name_a, name_b, levenshtein(name_a, name_b)::BIGINT AS dist
+    FROM pairs WHERE levenshtein(name_a, name_b) <= {_FUZZY_MAX_DIST}
+    """,
+    survey_ids=("A7", "G5"),
+    doc="Edit-distance similarity join with CAPPED candidate blocking: "
+    "distinct part names plus a deterministic typo variant (last char "
+    "dropped), blocked on (first token, width-2 length bucket) with a "
+    "lower-neighbor probe, block size capped at "
+    f"{_FUZZY_MAX_BLOCK} members, verified with levenshtein <= "
+    f"{_FUZZY_MAX_DIST}.  Round-4 verdict fix: first-token-only "
+    "blocking had NO cap, so each block was |names|/~90 and pair "
+    "emission grew quadratically in vocabulary — the same defect the "
+    "text LSH fixed in round 1.  The secondary length bucket cuts "
+    "block size ~10x with ZERO recall loss (dist <= 2 bounds the "
+    "length gap at 2, within one width-2 bucket step, covered by the "
+    "home+probe double emission — the oracle mirrors both), and the "
+    "window-count cap bounds any residual hot block.  Scale "
+    "discipline: the pairwise stage runs on the distinct-NAME domain "
+    "(vocabulary-bounded), never the row domain.  levenshtein is "
+    "engine-identical ONLY on single-byte text (DuckDB counts bytes, "
+    "Spark codepoints), so the domain is explicitly restricted to "
+    "printable ASCII in both engines and the oracle stays exact.",
+)
+def q_fuzzy_name_match(spark, sf_dir):
+    # Domain restricted to printable-ASCII names: DuckDB's levenshtein
+    # counts BYTES, Spark's counts codepoints — identical only on
+    # single-byte text (a no-op on TPC-H names, a contract elsewhere).
+    names = (
+        load(spark, sf_dir, "part")
+        .filter(F.col("p_name").rlike("^[ -~]*$"))
+        .select(F.col("p_name").alias("name"))
+        .distinct()
+    )
+    variants = names.union(
+        names.select(F.expr("substring(name, 1, length(name) - 1)").alias("name"))
+    ).distinct()
+    return (
+        fuzzy_candidate_pairs(variants)
+        .withColumn("dist", F.levenshtein("name_a", "name_b").cast("long"))
+        .filter(F.col("dist") <= _FUZZY_MAX_DIST)
+        .select("name_a", "name_b", "dist")
+    )
+
+
+@register(
+    "dedup_keep_last_global",
+    """
+    SELECT source, doc_id, lang FROM documents
+    QUALIFY row_number() OVER (PARTITION BY source, lang ORDER BY doc_id DESC) = 1
+    """,
+    survey_ids=("A6",),
+    doc="Keep-last dedup over the documents table (per source+lang).",
+)
+def q_dedup_keep_last_global(spark, sf_dir):
+    d = load(spark, sf_dir, "documents")
+    return dedup_keep_last(d, ["source", "lang"], [F.col("doc_id")]).select(
+        "source", "doc_id", "lang"
+    )
+
+
+@register(
+    "dup_clusters",
+    "WITH RECURSIVE "
+    + _SQL_JACCARD_CLUSTERS
+    + """
+    SELECT component, count(*) AS n_members, min(id) AS canonical_id
+    FROM comp GROUP BY component
+    """,
+    survey_ids=("A7",),
+    doc="Duplicate-cluster resolution: Jaccard>0.5 candidate pairs -> "
+    "transitive closure via iterative min-label propagation (the "
+    "iterative-algorithm surface; driver loop + localCheckpoint per "
+    "round).  Oracle computes the same components with a recursive CTE.",
+)
+def q_dup_clusters(spark, sf_dir):
+    return canonicalize(_jaccard_clusters(spark, sf_dir)[1])
+
+
+def _edit_pairs_oracle() -> str:
+    from ..functions import sql_codepoint_relabel, sql_portable_lower
+
+    norm = sql_portable_lower(
+        r"regexp_replace(text, '[^\p{L}\p{Nd} ]', '', 'g')"
+    )
+    return (
+        f"""
+    WITH t0 AS (SELECT doc_id, source,
+                      substr({norm}, 1, 40) AS head
+               FROM documents)"""
+        + sql_codepoint_relabel("t0", "t", carry=("source",))
+        + """
+    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+           levenshtein(a.head, b.head)::BIGINT AS edit_dist
+    FROM t a JOIN t b
+      ON a.source = b.source AND a.doc_id < b.doc_id AND b.doc_id - a.doc_id <= 20
+    """
+    )
+
+
+@register(
+    "doc_edit_distance_pairs",
+    _edit_pairs_oracle(),
+    survey_ids=("J1",),
+    doc="Edit-distance near-dup verification: Levenshtein over bounded "
+    "40-char case-folded prefixes within bounded candidate pairs (the "
+    "O(n*m) DP must never see full documents or unbounded pairs at "
+    "scale — prefix-block then verify, same shape as the Jaccard "
+    "verifier).  UNICODE-CORRECT: the prefix keeps unicode letters/"
+    "digits, Spark's codepoint levenshtein is the semantics, and the "
+    "oracle relabels non-ASCII codepoints to free single-byte chars "
+    "(edit distance is relabel-invariant) so DuckDB's byte distance "
+    "matches exactly — CJK/diacritic text no longer needs stripping.  "
+    "(BMP codepoints: Spark substring counts UTF-16 units, so "
+    "astral-plane chars would offset the 40-char window.)",
+)
+def q_doc_edit_distance_pairs(spark, sf_dir):
+    from ..functions import portable_lower
+
+    d = load(spark, sf_dir, "documents")
+    # portable_lower: fold İ/Σ before lower so the head matches the
+    # oracle's utf8proc simple case mapping byte-for-byte.
+    t = d.select(
+        "doc_id",
+        "source",
+        F.substring(
+            portable_lower(F.regexp_replace("text", r"[^\p{L}\p{Nd} ]", "")),
+            1, 40,
+        ).alias("head"),
+    )
+    a, b = t.alias("a"), t.alias("b")
+    dist = F.levenshtein(F.col("a.head"), F.col("b.head"))
+    return (
+        a.join(
+            b,
+            (F.col("a.source") == F.col("b.source"))
+            & (F.col("a.doc_id") < F.col("b.doc_id"))
+            & (F.col("b.doc_id") - F.col("a.doc_id") <= 20),
+        )
+        .withColumn("edit_dist", dist.cast("long"))
+        .select(
+            F.col("a.doc_id").alias("id_a"),
+            F.col("b.doc_id").alias("id_b"),
+            "edit_dist",
+        )
+    )
+
+
+_SNM_KEY_LEN = 24  # normalized sort-key length
+_SNM_BLK_LEN = 6  # coarse block = sort-key prefix (the partition key)
+_SNM_HEAD = 40  # compare prefix (caps the O(len^2) edit distance)
+_SNM_MAX_DIST = 12
+_SNM_WINDOW = 2  # compare each doc to its next w neighbors
+# Degenerate-run cap (round-4 verdict item 6): only the first
+# _SNM_MAX_RUN docs of an exact-sort-key run take part in the
+# neighborhood pass.  SNM's O(n*w) pair bound is per POSITION, but a
+# run of identical keys (mass-duplicated boilerplate) makes every one
+# of its pairs a sub-threshold match — the 10x-duplicated soak grew
+# output 321x.  Identical-skey docs beyond the first few add no
+# information (they are the same near-dup class by construction; the
+# dup_clusters operator is the tool for enumerating members), so the
+# cap trades nothing on non-degenerate data — runs there are 1-2 long.
+# 4, not 8: the 10x soak builds runs of exactly 10 (verbatim copies),
+# and a cap of 8 barely bound them (output still grew 232x); 4 keeps
+# two pairs per degenerate clump, which is all the signal there is.
+_SNM_MAX_RUN = 4
+
+
+def _snm_oracle(slice_mod: int | None = None) -> str:
+    """``slice_mod=m`` bounds BOTH engines to the ~1/m of coarse BLOCKS
+    whose md5(block-key) residue is 0 — blocks are the window partition
+    key, so whole-block slicing is exact (no window is cut mid-frame).
+    This is the sf10 value-check path: the full oracle's pair CTEs
+    exhaust DuckDB's 24 GB cap on a 100x-verbatim corpus."""
+    leads = []
+    arms = []
+    for off in range(1, _SNM_WINDOW + 1):
+        leads.append(
+            f"lead(doc_id, {off}) OVER win AS n{off}_id, "
+            f"lead(head, {off}) OVER win AS n{off}_head"
+        )
+        arms.append(
+            f"""
+        SELECT doc_id AS doc_a, n{off}_id AS doc_b,
+               levenshtein(head, n{off}_head)::BIGINT AS dist
+        FROM w WHERE n{off}_id IS NOT NULL"""
+        )
+    from ..functions import sql_codepoint_relabel, sql_portable_lower
+
+    head_norm = sql_portable_lower(
+        "regexp_replace(text, '[^\\p{L}\\p{Nd} ]', '', 'g')"
+    )
+    skey_norm = sql_portable_lower(
+        "regexp_replace(text, '[^\\p{L}\\p{Nd}]', '', 'g')"
+    )
+    from ..functions import md5_long_sql
+
+    # The slice must apply BEFORE the per-character relabel explode
+    # (__chars is |docs| x head_len rows — the memory hog at sf10):
+    # k00 computes the keys for everyone, k0 keeps only the sliced
+    # blocks, and everything downstream (relabel, run-cap windows,
+    # neighbor leads) runs on the 1/slice_mod subset.
+    k0_body = (
+        f"""k00 AS (
+        SELECT doc_id,
+               substr({head_norm}, 1, {_SNM_HEAD}) AS head,
+               substr({skey_norm}, 1, {_SNM_KEY_LEN}) AS skey
+        FROM documents
+    ), k0 AS (
+        SELECT * FROM k00
+        WHERE {md5_long_sql(f'substr(skey, 1, {_SNM_BLK_LEN})')} % {slice_mod} = 0
+    )"""
+        if slice_mod
+        else f"""k0 AS (
+        SELECT doc_id,
+               substr({head_norm}, 1, {_SNM_HEAD}) AS head,
+               substr({skey_norm}, 1, {_SNM_KEY_LEN}) AS skey
+        FROM documents
+    )"""
+    )
+    return f"""
+    WITH {k0_body}{sql_codepoint_relabel("k0", "k", carry=("skey",))}, r AS (
+        SELECT doc_id, head, skey,
+               row_number() OVER win AS rn,
+               CASE WHEN lag(skey) OVER win IS DISTINCT FROM skey
+                    THEN 1 ELSE 0 END AS flag
+        FROM k
+        WINDOW win AS (PARTITION BY substr(skey, 1, {_SNM_BLK_LEN})
+                       ORDER BY skey, doc_id)
+    ), p AS (
+        SELECT doc_id, head, skey,
+               rn - max(flag * rn) OVER
+                   (PARTITION BY substr(skey, 1, {_SNM_BLK_LEN})
+                    ORDER BY skey, doc_id ROWS UNBOUNDED PRECEDING) AS pos
+        FROM r
+    ), f AS (
+        SELECT doc_id, head, skey FROM p WHERE pos < {_SNM_MAX_RUN}
+    ), w AS (
+        SELECT doc_id, head, {", ".join(leads)}
+        FROM f
+        WINDOW win AS (PARTITION BY substr(skey, 1, {_SNM_BLK_LEN})
+                       ORDER BY skey, doc_id)
+    ), pairs AS ({" UNION ALL ".join(arms)})
+    SELECT doc_a, doc_b, dist FROM pairs WHERE dist <= {_SNM_MAX_DIST}
+    """
+
+
+@register(
+    "snm_near_dup",
+    _snm_oracle(),
+    survey_ids=("A7",),
+    doc="Sorted-neighborhood near-dup detection: normalize text to a "
+    "sort key, order within coarse key-prefix blocks, compare each "
+    "doc to its next w=2 neighbors with edit distance over a capped "
+    "prefix.  The classic record-linkage alternative to LSH banding: "
+    "ONE sort-shuffle on the block key, pair count O(n*w) by "
+    "construction (never quadratic), and edit distance is "
+    "bit-portable so the oracle is exact.  Blocks are key-prefix "
+    "partitions, so AQE's skew split applies if one prefix is hot; "
+    "near-identical docs share normalized prefixes, which is exactly "
+    "what sorting exploits.  UNICODE-CORRECT compare: the head keeps "
+    "unicode letters/digits (CJK, diacritics), Spark's codepoint "
+    "levenshtein is the semantics, and the oracle relabels non-ASCII "
+    "codepoints to free single-byte chars (edit distance is relabel-"
+    "invariant) so DuckDB's byte-based levenshtein matches exactly.  "
+    "Sort keys compare identically on both engines (binary UTF-8 "
+    "order); BMP-only for substr parity (UTF-16 units vs codepoints)."
+    "  A degenerate run of IDENTICAL sort keys "
+    "(mass-duplicated boilerplate — the 10x soak grew output 321x) "
+    "is capped: only the first _SNM_MAX_RUN docs of an exact-skey "
+    "run enter the pass, computed with the islands trick (running "
+    "max of run-start row numbers) over the SAME partitioning as the "
+    "neighbor window, so the cap adds no exchange.",
+)
+def q_snm_near_dup(spark, sf_dir):
+    return snm_near_dup_frame(load(spark, sf_dir, "documents"))
+
+
+def snm_near_dup_frame(docs, slice_mod: int | None = None):
+    """The SNM chain over a documents frame — shared by the flagship
+    query and its sf10 bounded-slice twin (below).  ``slice_mod``
+    keeps only blocks with md5(block-key) % slice_mod == 0 (whole-block
+    slicing — exact, since every window partitions by the block key)."""
+    # Unicode-correct compare head: keep letters/digits of ANY script.
+    # Spark levenshtein counts codepoints (the semantics we define);
+    # the oracle relabels non-ASCII codepoints to single-byte chars so
+    # DuckDB's byte-based distance agrees (functions.sql_codepoint_relabel).
+    # portable_lower: Spark's full case mapping diverges from DuckDB's
+    # simple mapping on İ/Σ (functions.portable_lower) — fold them
+    # first so head AND skey are byte-identical across engines.
+    from ..functions import portable_lower
+
+    k = docs.select(
+        "doc_id",
+        F.substring(
+            portable_lower(F.regexp_replace("text", r"[^\p{L}\p{Nd} ]", "")),
+            1, _SNM_HEAD,
+        ).alias("head"),
+        F.substring(
+            portable_lower(F.regexp_replace("text", r"[^\p{L}\p{Nd}]", "")),
+            1, _SNM_KEY_LEN,
+        ).alias("skey"),
+    )
+    # The block key is materialized as a COLUMN, not left as an inline
+    # partition expression: each Window would otherwise stage its own
+    # fresh `_w0 = substring(...)` projection, and the mismatched
+    # attributes force one exchange PER window (3 total, measured)
+    # instead of one shared clustering.
+    k = k.withColumn("__blk", F.substring("skey", 1, _SNM_BLK_LEN))
+    if slice_mod:
+        from ..functions import md5_long
+
+        k = k.filter(md5_long(F.col("__blk")) % slice_mod == 0)
+    win = Window.partitionBy("__blk").orderBy("skey", "doc_id")
+    # Degenerate-run cap: position within the exact-skey run via the
+    # islands trick — run starts flagged by lag, running max of
+    # flag*rn gives the run's first row number.  Every window here
+    # shares win's partition+order, so the filter costs no shuffle.
+    rn = F.row_number().over(win)
+    flag = F.when(
+        F.lag("skey").over(win).eqNullSafe(F.col("skey")), F.lit(0)
+    ).otherwise(F.lit(1))
+    run_win = win.rowsBetween(Window.unboundedPreceding, 0)
+    k = (
+        # rn/flag staged in their own projection: window expressions
+        # cannot nest inside another window function's argument.
+        k.select("*", rn.alias("__rn"), flag.alias("__flag"))
+        .withColumn("__start", F.max(F.col("__flag") * F.col("__rn")).over(run_win))
+        .filter(F.col("__rn") - F.col("__start") < _SNM_MAX_RUN)
+        .drop("__rn", "__flag", "__start")
+    )
+    # All neighbors from ONE window pass, exploded — a UNION of
+    # per-offset arms would duplicate the scan+sort subtree per arm.
+    # (Leads are projected before the explode: generators cannot host
+    # window expressions.)
+    led = k.select(
+        "doc_id",
+        "head",
+        F.array(
+            *[
+                F.struct(
+                    F.lead("doc_id", off).over(win).alias("id"),
+                    F.lead("head", off).over(win).alias("head"),
+                )
+                for off in range(1, _SNM_WINDOW + 1)
+            ]
+        ).alias("neighbors"),
+    )
+    w = led.select("doc_id", "head", F.explode("neighbors").alias("n"))
+    return (
+        w.filter(F.col("n.id").isNotNull())
+        .select(
+            F.col("doc_id").alias("doc_a"),
+            F.col("n.id").alias("doc_b"),
+            F.levenshtein("head", F.col("n.head")).cast("long").alias("dist"),
+        )
+        .filter(F.col("dist") <= _SNM_MAX_DIST)
+    )
+
+
+@register(
+    "doc_novelty",
+    r"""
+    WITH n AS (
+      SELECT doc_id, regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS t
+      FROM documents
+    ),
+    s AS (
+      SELECT doc_id,
+             CASE WHEN length(t) >= 5
+                  THEN list_distinct(list_transform(range(1, length(t) - 3),
+                                                    i -> substr(t, i::INT, 5)))
+                  ELSE [t] END AS sh
+      FROM n
+    ),
+    pairs AS (SELECT doc_id, unnest(sh) AS g FROM s),
+    df AS (SELECT g, count(*)::BIGINT AS df FROM pairs GROUP BY g)
+    SELECT p.doc_id,
+           count(*)::BIGINT AS n_shingles,
+           sum(CASE WHEN df.df = 1 THEN 1 ELSE 0 END)::BIGINT AS n_unique,
+           (sum(CASE WHEN df.df = 1 THEN 1 ELSE 0 END)::BIGINT
+                / count(*)::BIGINT) AS novelty
+    FROM pairs p JOIN df ON p.g = df.g
+    GROUP BY p.doc_id
+    """,
+    survey_ids=("A7", "A1"),
+    doc="Document novelty scoring: the fraction of a doc's distinct "
+    "5-gram shingles that appear NOWHERE else in the corpus — the "
+    "diversity-contribution metric curation uses to keep the long "
+    "tail that dedup thresholds would miss (novelty ~0 means the doc "
+    "is assembled from boilerplate even if no single document "
+    "near-matches it).  Shingles dedupe inside the row, then are "
+    "HASHED to xxhash64 longs before anything shuffles (round-4 "
+    "advice): the shingle string is never needed downstream — only "
+    "its document frequency — so the df aggregate and the join back "
+    "key on fixed-width longs.  Measured honestly (A/B at sf0.1, "
+    "fresh plans): wall 3.97 s -> 3.79 s (~5%, from long-vs-string "
+    "hashing and comparison in two aggregates and a join), while "
+    "COMPRESSED shuffle bytes are a wash (87 KB -> 90 KB — lz4 "
+    "squeezes redundant 5-char shingles to about the size of an "
+    "incompressible hash; the advice's several-fold byte cut "
+    "materializes only for LONGER grams, where the string arm grows "
+    "and the hash arm stays 8 bytes).  A 64-bit collision would "
+    "merge two shingles' counts — at 2^30 distinct shingles the "
+    "collision odds are ~2^-5 per corpus, the standard trade for "
+    "hashed shuffle keys (the same one MinHash makes); the exact-"
+    "hash parity gate proves no collision at gate scales.  Two keyed "
+    "shuffles regardless of corpus size.  The ratio divides two "
+    "exact BIGINTs, so the double is bit-identical across engines.",
+)
+def q_doc_novelty(spark, sf_dir):
+    d, sh = TA.char_shingles(load(spark, sf_dir, "documents"))
+    pairs = d.select("doc_id", F.explode(sh).alias("__g")).select(
+        "doc_id", F.xxhash64("__g").alias("g")
+    )
+    df_counts = pairs.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
+    return (
+        pairs.join(df_counts, "g")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_shingles"),
+            F.sum(F.when(F.col("df") == 1, 1).otherwise(0)).alias("n_unique"),
+        )
+        .select(
+            "doc_id",
+            "n_shingles",
+            "n_unique",
+            (F.col("n_unique") / F.col("n_shingles")).alias("novelty"),
+        )
+    )
+
+
+_SNM_SLICE_MOD = 8
+
+
+@register(
+    "snm_near_dup_blockslice",
+    _snm_oracle(slice_mod=_SNM_SLICE_MOD),
+    survey_ids=(),
+    doc="snm_near_dup's sf10 value-check twin: the identical sorted-"
+    "neighborhood chain over the ~1/8 of coarse BLOCKS whose "
+    "md5(block-key) % 8 == 0.  Blocks (6-char sort-key prefixes) are "
+    "the partition key of every window in the chain — run cap, "
+    "neighbor leads — so whole-block slicing is exact: every kept "
+    "block's pairs are bit-identical to the full run's.  The oracle "
+    "filters blocks BEFORE its pair CTEs, cutting the intermediate "
+    "the 100x-verbatim sf10 corpus used to OOM (24 GB cap) by the "
+    "slice factor.  The block hash is the portable md5_long pair, so "
+    "both engines select the same blocks.",
+)
+def q_snm_near_dup_blockslice(spark, sf_dir):
+    return snm_near_dup_frame(
+        load(spark, sf_dir, "documents"), slice_mod=_SNM_SLICE_MOD
     )

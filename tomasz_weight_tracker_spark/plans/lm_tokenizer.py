@@ -1,11 +1,12 @@
-"""LM and tokenizer catalog queries: BPE training and segmentation, the
-bigram-LM filter, perceptron classifiers and DSIR weights.
+"""LM and tokenizer catalog queries: regex tokens and n-grams, BPE
+training and segmentation, the bigram-LM filter, perceptron classifiers
+and DSIR weights.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
+from pyspark.sql import Window
 
 from ..operators.bpe import bpe_train, sql_bpe_chain, sql_bpe_segments
 from ..operators.lm import (
@@ -15,6 +16,7 @@ from ..operators.lm import (
     sql_perceptron_apply,
     sql_perceptron_chain,
 )
+
 from .catalog import lm_broadcast_model, load, register
 
 
@@ -474,3 +476,64 @@ def q_tokenizer_fertility_by_lang(spark, sf_dir):
             .alias("fertility_ppm"),
         )
     )
+
+
+@register(
+    "doc_regex_tokens",
+    r"""
+    SELECT doc_id,
+           len(regexp_extract_all(text, '\w+|[^\w\s]'))::BIGINT AS n_tokens,
+           len(regexp_extract_all(text, '\w+'))::BIGINT AS n_words,
+           len(list_distinct(regexp_extract_all(lower(text), '\w+')))::BIGINT AS n_distinct_words
+    FROM documents
+    """,
+    survey_ids=("G2",),
+    doc="BPE-style pre-tokenization: the GPT-2-ish regex '\\w+|[^\\w\\s]' "
+    "splits words from punctuation runs (the step before BPE merges). "
+    "Java and RE2 agree on this ASCII pattern class, so counts are "
+    "exact across engines.  Per-row, zero shuffle.",
+)
+def q_doc_regex_tokens(spark, sf_dir):
+    d = load(spark, sf_dir, "documents")
+    t = F.col("text")
+    full = F.regexp_extract_all(t, F.lit(r"\w+|[^\w\s]"), 0)
+    words = F.regexp_extract_all(t, F.lit(r"\w+"), 0)
+    lwords = F.regexp_extract_all(F.lower(t), F.lit(r"\w+"), 0)
+    return d.select(
+        "doc_id",
+        F.size(full).cast("long").alias("n_tokens"),
+        F.size(words).cast("long").alias("n_words"),
+        F.size(F.array_distinct(lwords)).cast("long").alias("n_distinct_words"),
+    )
+
+
+def _trigrams_outer_oracle() -> str:
+    from ..operators.pipeline_text import sql_trigrams
+    from ..operators.text_analysis import sql_tokens
+
+    tg = sql_trigrams(sql_tokens("text"))
+    return f"""
+    SELECT d.doc_id, u.ngram
+    FROM (
+        SELECT doc_id, {tg} AS tg FROM documents WHERE doc_id < 100
+    ) d
+    LEFT JOIN LATERAL (SELECT unnest(d.tg) AS ngram) u ON true
+    """
+
+
+@register(
+    "doc_trigrams_outer",
+    _trigrams_outer_oracle(),
+    survey_ids=("T4", "P4"),
+    doc="explode_outer null-preservation: documents too short for a "
+    "trigram keep their row with a NULL ngram (an inner explode would "
+    "silently drop them — the off-by-one that breaks per-document "
+    "accounting downstream).  Oracle is a LEFT JOIN LATERAL unnest.",
+)
+def q_doc_trigrams_outer(spark, sf_dir):
+    from ..functions import tokens
+    from ..operators.pipeline_text import trigram_array
+
+    d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
+    d = d.select("doc_id", trigram_array(tokens(F.col("text"))).alias("__tg"))
+    return d.select("doc_id", F.explode_outer("__tg").alias("ngram"))

@@ -1,4 +1,5 @@
-"""Media catalog queries: GIF/JPEG decode and perceptual-hash near-dups."""
+"""Media catalog queries: blob metadata, BMP/GIF/JPEG decode and
+perceptual-hash near-dups."""
 
 from __future__ import annotations
 
@@ -310,6 +311,117 @@ def q_media_decode_jpeg(spark, sf_dir):
         "decoder",
         "width",
         "height",
+        (
+            F.floor(F.element_at("features", 1) * F.lit(1000000.0)) / F.lit(1000000.0)
+        ).alias("mean_r"),
+    )
+
+
+@register(
+    "media_meta_stats",
+    """
+    SELECT source, count(*)::BIGINT AS n_media,
+           sum(octet_length(encode(text)))::BIGINT AS total_bytes,
+           max(octet_length(encode(text)))::BIGINT AS max_bytes,
+           min(md5(text)) AS min_md5
+    FROM documents GROUP BY source
+    """,
+    survey_ids=(),
+    doc="Native (JVM-side) metadata over opaque binary media columns: "
+    "byte length + content md5 via binary_meta, aggregated per source. "
+    "Blobs are the utf-8 bytes of document text (the testdata has no "
+    "binary table); DuckDB's md5(VARCHAR) hashes the same utf-8 bytes "
+    "Spark's md5(BINARY) sees, so the check is exact.",
+)
+def q_media_meta_stats(spark, sf_dir):
+    from ..operators import multimodal as MM
+
+    d = load(spark, sf_dir, "documents")
+    m = d.select(
+        "source",
+        MM.binary_meta(F.encode(F.col("text"), "UTF-8")).alias("bm"),
+    )
+    return m.groupBy("source").agg(
+        F.count(F.lit(1)).alias("n_media"),
+        F.sum(F.col("bm.n_bytes")).alias("total_bytes"),
+        F.max(F.col("bm.n_bytes")).alias("max_bytes"),
+        F.min(F.col("bm.content_md5")).alias("min_md5"),
+    )
+
+
+@register(
+    "media_decode",
+    # The oracle recomputes the decode CLOSED-FORM: blob content is
+    # deterministic arithmetic in doc_id, so DuckDB can derive the
+    # expected dims / byte size / channel mean without parsing BMP or
+    # PNG — an independent check that serialize -> header parse ->
+    # inflate/unfilter -> pixel walk -> feature extract round-trips
+    # exactly.  Even doc_ids serialize as BMP, odd as PNG (stored-block
+    # zlib, so the PNG byte size is closed-form too: 68 + h*(1+3w), see
+    # codecs.make_png).  mean_r: Python's sum_r/(w*h) and the oracle's
+    # rowsum/w divide different integer pairs with the same rational
+    # value, so IEEE correctly-rounded division yields the identical
+    # double; floor-quantization then keeps the comparison bit-exact.
+    """
+    SELECT doc_id AS media_id,
+           CASE WHEN doc_id % 2 = 0 THEN 'bmp' ELSE 'png' END AS decoder,
+           (1 + doc_id % 8)::INT AS width, (1 + doc_id % 4)::INT AS height,
+           CASE WHEN doc_id % 2 = 0
+                THEN 54 + ((1 + doc_id % 8) * 3 + 3) // 4 * 4 * (1 + doc_id % 4)
+                ELSE 68 + (1 + doc_id % 4) * (1 + 3 * (1 + doc_id % 8))
+           END::BIGINT AS n_bytes,
+           floor(list_sum(list_transform(range(0, (1 + doc_id % 8)::INT),
+                                         x -> (x * 37 + doc_id) % 256))::DOUBLE
+                 / (1 + doc_id % 8) / 255.0 * 1000000) / 1000000 AS mean_r
+    FROM documents
+    """,
+    survey_ids=(),
+    doc="Real media decode at the engine surface: synthesize one image "
+    "blob per document (stdlib serializers, deterministic from doc_id; "
+    "even ids BMP, odd ids PNG with a Paeth-filtered zlib stream), "
+    "then decode_media parses headers + pixels — for PNG that is a "
+    "real inflate + scanline unfilter — and extracts channel features "
+    "via the Arrow-batched codec chain.  The stub path is never taken.",
+)
+def q_media_decode(spark, sf_dir):
+    from ..operators import codecs
+    from ..operators.multimodal import decode_media
+
+    d = load(spark, sf_dir, "documents").select("doc_id")
+
+    def gen(batches):
+        import pandas as pd
+
+        for batch in batches:
+            rows = []
+            for i in batch["doc_id"]:
+                i = int(i)
+                w, h = 1 + i % 8, 1 + i % 4
+                if i % 2 == 0:
+                    # pixel_fn returns (b, g, r): the x-varying ramp goes
+                    # in RED (last) — the oracle recomputes mean_r from it.
+                    raw = codecs.make_bmp(
+                        w,
+                        h,
+                        lambda x, y: (i % 256, (y * 53 + i) % 256, (x * 37 + i) % 256),
+                    )
+                else:
+                    # make_png's pixel_fn is (r, g, b); same red ramp.
+                    # Paeth filter so the gate exercises a non-trivial
+                    # unfilter path, not just filter 0.
+                    raw = codecs.make_png(
+                        w,
+                        h,
+                        lambda x, y: ((x * 37 + i) % 256, (y * 53 + i) % 256, i % 256),
+                        filter_type=4,
+                    )
+                rows.append({"media_id": i, "content": raw})
+            yield pd.DataFrame(rows, columns=["media_id", "content"])
+
+    media = d.mapInPandas(gen, "media_id long, content binary")
+    out = decode_media(media)
+    return out.select(
+        "media_id", "decoder", "width", "height", "n_bytes",
         (
             F.floor(F.element_at("features", 1) * F.lit(1000000.0)) / F.lit(1000000.0)
         ).alias("mean_r"),

@@ -1,8 +1,13 @@
-"""Streaming-ingestion catalog queries: documents arrive as a file-source
+"""Streaming catalog queries: watermarked window aggregates, stateful
+counts, sessionization, stream-stream joins and dedup over the events
+stream, and ingestion queries where documents arrive as a file-source
 stream and a foreachBatch sink folds each micro-batch into state.
 """
 
 from __future__ import annotations
+
+import os
+from importlib.util import find_spec
 
 from pyspark.sql import functions as F
 
@@ -10,14 +15,13 @@ from ..functions import md5_long, md5_long_sql
 from ..operators import dedup as D
 from ..operators.lm import LM_TRAIN_MOD, lm_apply, lm_model, sql_lm_score
 from ..session import scratch_dir
-from ..streaming.pipelines import (
-    await_drain,
-    drain_residue_batches,
-    stream_docs,
-    stream_upsert,
-)
-from .catalog import lm_broadcast_model, load, register
+from ..streaming.pipelines import await_drain, drain_residue_batches, stream_docs, stream_upsert
+
+from .catalog import lm_broadcast_model, load, register, sql_dsum
 from .dedup_lsh import (
+    LSH_BANDS,
+    LSH_K,
+    LSH_THRESH,
     _SQL_CHUNKS,
     _URL_CTES,
     _doc_line_chunks,
@@ -25,7 +29,6 @@ from .dedup_lsh import (
     _url_gen_spark,
     url_canonicalize,
 )
-from .llm_ops import LSH_BANDS, LSH_K, LSH_THRESH
 
 
 @register(
@@ -385,3 +388,385 @@ def q_streaming_line_dedup(spark, sf_dir):
         make_line_dedup_batch(log), "streaming_line_dedup",
     )
     return line_dedup_fold(spark, log)
+
+
+_PEAK_MIN = "(hour(ts) * 60 + minute(ts)) > 390 AND (hour(ts) * 60 + minute(ts)) <= 1410"
+
+
+@register(
+    "streaming_bucket_15min",
+    f"""
+    SELECT make_timestamp(((floor(floor(epoch(ts - INTERVAL 1 MINUTE)) / 900) * 900)::BIGINT) * 1000000) AS bucket,
+           count(*) AS n_events,
+           {sql_dsum(f"CASE WHEN {_PEAK_MIN} THEN value ELSE 0.0 END")} AS p_value,
+           {sql_dsum(f"CASE WHEN {_PEAK_MIN} THEN 0.0 ELSE value END")} AS op_value
+    FROM events GROUP BY bucket
+    """,
+    survey_ids=("ST1", "A1", "T7"),
+    doc="A REAL Structured Streaming execution inside the correctness "
+    "gate: the events table is replayed through a file-source stream "
+    "into the watermarked end-labeled 15-minute aggregation with an "
+    "availableNow trigger; the drained result must equal the batch SQL "
+    "oracle — stream/batch parity, oracle-checked.",
+)
+def q_streaming_bucket_15min(spark, sf_dir):
+    from ..operators.time_ops import peak_category
+    from ..streaming.pipelines import drain_to_memory, stream_events
+
+    df = stream_events(spark, sf_dir)
+    shifted = F.col("ts") - F.expr("INTERVAL 1 MINUTE")
+    agg = (
+        df.withWatermark("ts", "1 hour")
+        .withColumn("__cat", peak_category(F.col("ts")))
+        .groupBy(F.window(shifted, "15 minutes").alias("w"))
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(
+                F.when(F.col("__cat") == "P", F.col("value")).otherwise(F.lit(0.0)).cast("decimal(18,4)")
+            ).cast("double").alias("p_value"),
+            F.sum(
+                F.when(F.col("__cat") == "OP", F.col("value")).otherwise(F.lit(0.0)).cast("decimal(18,4)")
+            ).cast("double").alias("op_value"),
+        )
+        .select(F.col("w.start").alias("bucket"), "n_events", "p_value", "op_value")
+    )
+    return drain_to_memory(spark, agg, "sbucket", "complete")
+
+
+@register(
+    "streaming_hopping_counts",
+    """
+    WITH b AS (
+        SELECT event_type, epoch_us(ts) // 900000000 AS bk FROM events
+    ), u AS (
+        SELECT event_type, bk * 900000000 AS start_us FROM b
+        UNION ALL
+        SELECT event_type, (bk - 1) * 900000000 FROM b
+    )
+    SELECT make_timestamp(start_us) AS w_start, event_type,
+           count(*)::BIGINT AS n_events
+    FROM u GROUP BY 1, 2
+    """,
+    survey_ids=("ST1", "A1", "T7"),
+    doc="HOPPING (sliding) window counts in the streaming gate: 30-"
+    "minute windows every 15 minutes, so each event lands in exactly "
+    "two overlapping windows — the dashboard smoothing shape tumbling "
+    "windows can't express.  F.window(ts, '30 minutes', '15 minutes') "
+    "replicates rows to their windows BEFORE the keyed aggregation "
+    "(state is per (window, type), bounded by the watermark horizon; "
+    "the replication factor is window/slide = 2, a constant).  The "
+    "batch oracle derives both window starts per event with integer "
+    "microsecond arithmetic and must match the drained stream "
+    "hash-exactly.",
+)
+def q_streaming_hopping_counts(spark, sf_dir):
+    from ..streaming.pipelines import drain_to_memory, stream_events
+
+    df = stream_events(spark, sf_dir)
+    agg = (
+        df.withWatermark("ts", "1 hour")
+        .groupBy(
+            F.window("ts", "30 minutes", "15 minutes").alias("w"), "event_type"
+        )
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select(F.col("w.start").alias("w_start"), "event_type", "n_events")
+    )
+    return drain_to_memory(spark, agg, "shop", "complete")
+
+
+@register(
+    "streaming_upsert_state",
+    """
+    SELECT user_id, qv AS last_qv, ts AS last_ts FROM (
+        SELECT user_id, floor(value * 1e4)::BIGINT AS qv, ts, event_id,
+               row_number() OVER (PARTITION BY user_id
+                                  ORDER BY ts DESC, event_id DESC) AS rn
+        FROM events WHERE value IS NOT NULL
+    ) WHERE rn = 1
+    """,
+    survey_ids=("ST1", "S11", "W4"),
+    doc="Streaming CDC-apply in the gate: the events stream drains "
+    "through stream_upsert's foreachBatch MERGE sink into a keyed "
+    "parquet state table — each batch keeps its last row per user "
+    "(row_number inside foreachBatch, where window functions are "
+    "legal) and merges RECENCY-wins on (ts, event_id) via the sink's "
+    "order_by, so the table converges to global keep-last-per-key "
+    "however the source batches the input (round-5 advice: plain "
+    "replace-by-key is last-BATCH-wins and only matched the oracle "
+    "because availableNow read one file in one batch).  The final "
+    "table must equal the batch keep-last oracle.  This is the "
+    "exactly-once sink path (checkpoint tracks input; the merge is "
+    "idempotent, so batch replay after a crash is a no-op).",
+)
+def q_streaming_upsert_state(spark, sf_dir):
+    from pyspark.sql import Window as W
+
+    from ..session import scratch_dir
+    from ..streaming.pipelines import await_drain, stream_events, stream_upsert
+
+    df = stream_events(spark, sf_dir).filter(F.col("value").isNotNull()).select(
+        "event_id",
+        "user_id",
+        "ts",
+        F.floor(F.col("value") * F.lit(1e4)).cast("long").alias("qv"),
+    )
+
+    def keep_last(batch):
+        w = W.partitionBy("user_id").orderBy(
+            F.col("ts").desc(), F.col("event_id").desc()
+        )
+        return (
+            batch.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1)
+            .select(
+                "user_id",
+                F.col("qv").alias("last_qv"),
+                F.col("ts").alias("last_ts"),
+                # Recency tiebreaker for the merge: stored so a later
+                # batch with an equal-ts row resolves deterministically.
+                F.col("event_id").alias("last_event_id"),
+            )
+        )
+
+    # Process-lifetime scratch: the state table outlives this function,
+    # so the result is a plain parquet read — no driver-side collect of
+    # per-key state (round-5 verdict item 4).
+    d = scratch_dir("stream_upsert")
+    q = stream_upsert(
+        df,
+        f"{d}/state",
+        keys=["user_id"],
+        checkpoint=f"{d}/ckpt",
+        prepare=keep_last,
+        order_by=["last_ts", "last_event_id"],
+    ).start()
+    await_drain(q, "streaming_upsert_state")
+    return spark.read.parquet(f"{d}/state").select("user_id", "last_qv", "last_ts")
+
+
+@register(
+    "streaming_join_clicks",
+    """
+    SELECT p.event_id AS purchase_id, c.event_id AS click_id
+    FROM events p JOIN events c
+      ON c.user_id = p.user_id
+     AND c.ts >= p.ts AND c.ts <= p.ts + INTERVAL 15 MINUTE
+    WHERE p.event_type = 'purchase' AND c.event_type = 'click'
+    """,
+    survey_ids=("ST1", "J2"),
+    doc="Watermarked stream-STREAM inner join replayed in the gate: "
+    "purchases and clicks (two filtered views of one file-source "
+    "stream) join on user within a 15-minute event-time range; the "
+    "drained pairs must equal the batch interval-join oracle.  Both "
+    "sides carry watermarks and the range bound lets Spark evict "
+    "buffered rows once the watermark passes ts+15min — join state "
+    "is rate x interval, never stream length, which is what makes "
+    "attribution viable on an unbounded stream.",
+)
+def q_streaming_join_clicks(spark, sf_dir):
+    from ..streaming.pipelines import (
+        drain_to_memory,
+        stream_events,
+        stream_stream_join,
+    )
+
+    df = stream_events(spark, sf_dir)
+    purchases = df.filter(F.col("event_type") == "purchase").select(
+        F.col("event_id").alias("purchase_id"), "user_id", "ts"
+    )
+    clicks = df.filter(F.col("event_type") == "click").select(
+        F.col("event_id").alias("click_id"),
+        "user_id",
+        F.col("ts").alias("c_ts"),
+    )
+    joined = stream_stream_join(
+        purchases, clicks, key="user_id", left_ts="ts", right_ts="c_ts",
+        watermark="1 hour", within="15 minutes",
+    ).select("purchase_id", "click_id")
+    return drain_to_memory(spark, joined, "sjoin", "append")
+
+
+@register(
+    "streaming_stateful_counts",
+    "SELECT user_id, count(*)::BIGINT AS n_events FROM events GROUP BY user_id",
+    survey_ids=("ST1", "A1"),
+    doc="applyInPandasWithState in the gate: a per-user running counter "
+    "maintained in the state store across micro-batches (the "
+    "arbitrary-state API built-in aggs can't express), replayed over "
+    "the events file and checked against the batch GROUP BY.  Output "
+    "is integer-only so the Python state path stays hash-exact; "
+    "state is O(keys), independent of stream length.",
+)
+def q_streaming_stateful_counts(spark, sf_dir):
+    from ..streaming.pipelines import drain_to_memory, stream_events
+
+    df = stream_events(spark, sf_dir)
+
+    def update(key, pdfs, state):
+        import pandas as pd
+
+        (n,) = state.get if state.exists else (0,)  # .get is a property
+        for pdf in pdfs:
+            n += len(pdf)
+        state.update((n,))
+        yield pd.DataFrame([{"user_id": key[0], "n_events": n}])
+
+    counted = (
+        df.withWatermark("ts", "1 hour")
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            update,
+            outputStructType="user_id long, n_events long",
+            stateStructType="n long",
+            outputMode="update",
+            timeoutConf="NoTimeout",
+        )
+    )
+    table = drain_to_memory(spark, counted, "sstate", "update")
+    # Update-mode emits one row per key PER MICRO-BATCH that touched
+    # the key.  The running counter is monotone, so keep-last-per-key
+    # is exactly max(n_events): correct for the single-file replay
+    # (no-op) AND for any multi-batch replay (keeps each key's final
+    # count), instead of relying on the one-file/one-batch layout.
+    return table.groupBy("user_id").agg(F.max("n_events").alias("n_events"))
+
+
+# --- transformWithState in the gate (conditional on protobuf) ---------------
+
+# Spark 4's transformWithStateInPandas needs the public `protobuf`
+# package for its Python state server (declared in pyproject.toml's
+# [streaming-tws] extra).  Registration requires an EXPLICIT opt-in
+# (SPARK_GRAFT_ENABLE_TWS=1) on top of the importable runtime: keying
+# the catalog on import availability alone made the gate size itself
+# environment-dependent — installing the extra silently changed parity
+# and bench from 170 to 171 queries with no signal (round-5 advice).
+# With the flag unset the catalog is 170 everywhere; setting it on a
+# protobuf-equipped install adds the typed-state replay as a
+# first-class oracle row.  The construction-level API surface is
+# tested unconditionally (tests/test_streaming.py); see docs/SCALE.md
+# for the closure note on why the wheel cannot be vendored here.
+if (
+    os.environ.get("SPARK_GRAFT_ENABLE_TWS") == "1"
+    and find_spec("google") is not None
+    and find_spec("google.protobuf") is not None
+):
+
+    @register(
+        "streaming_tws_counts",
+        """
+        SELECT user_id, count(*)::BIGINT AS n_events,
+               floor(max(value * 1000000.0))::BIGINT AS max_qv
+        FROM events WHERE value IS NOT NULL
+        GROUP BY user_id
+        """,
+        survey_ids=("ST1", "A1"),
+        doc="transformWithStateInPandas in the gate: per-user (count, "
+        "running max) maintained in typed ValueState handles on the "
+        "RocksDB store, replayed over the events file and compared "
+        "keep-last-per-key (both state fields are monotone, so the "
+        "update-mode drain folds with max) against the batch GROUP "
+        "BY.  Output is integer-quantized so the Python state path "
+        "stays hash-exact.  Registered only where the protobuf "
+        "runtime exists — see the module comment.",
+    )
+    def q_streaming_tws_counts(spark, sf_dir):
+        from ..streaming.pipelines import (
+            drain_to_memory,
+            stream_events,
+            tws_user_stats,
+        )
+
+        key = "spark.sql.streaming.stateStore.providerClass"
+        prior = spark.conf.get(key, None)
+        spark.conf.set(
+            key,
+            "org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider",
+        )
+        try:
+            df = stream_events(spark, sf_dir)
+            q = (
+                df.filter(F.col("value").isNotNull())
+                .select("user_id", "ts", F.floor(F.col("value") * 1e6).alias("qv"))
+                .withWatermark("ts", "1 hour")
+            )
+            table = drain_to_memory(spark, tws_user_stats(q), "stws", "update")
+            return table.groupBy("user_id").agg(
+                F.max("n_events").alias("n_events"),
+                F.max("max_qv").alias("max_qv"),
+            )
+        finally:
+            if prior is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, prior)
+
+
+# --- streaming sessionization ----------------------------------------------
+
+
+@register(
+    "streaming_sessionize",
+    """
+    WITH flagged AS (
+        SELECT user_id, ts,
+               CASE WHEN lag(ts) OVER w IS NULL
+                         OR epoch_us(ts) - epoch_us(lag(ts) OVER w)
+                            >= 1800000000
+                    THEN 1 ELSE 0 END AS new_s
+        FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)
+    ), sess AS (
+        SELECT user_id, ts,
+               sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
+                                ROWS UNBOUNDED PRECEDING) AS sid
+        FROM flagged
+    )
+    SELECT user_id, min(ts) AS session_start, count(*)::BIGINT AS n_events
+    FROM sess GROUP BY user_id, sid
+    """,
+    survey_ids=("ST1", "W1"),
+    doc="session_window sessionization in the gate: file-source replay "
+    "-> watermark -> per-user session windows (30-minute gap), one "
+    "output row per session.  The batch oracle replays the EXACT "
+    "session_window merge rule (new session iff gap >= 30 min — "
+    "strict window-overlap semantics, not the lag-gap > convention "
+    "the batch sessionize query uses).  Session state is bounded by "
+    "the watermark horizon at scale.",
+)
+def q_streaming_sessionize(spark, sf_dir):
+    from ..streaming.pipelines import (
+        drain_to_memory,
+        stream_events,
+        stream_sessionize,
+    )
+
+    df = stream_events(spark, sf_dir)
+    sess = stream_sessionize(df).select("user_id", "session_start", "n_events")
+    return drain_to_memory(spark, sess, "ssess", "complete")
+
+
+# --- streaming dedup -------------------------------------------------------
+
+
+@register(
+    "streaming_dedup_events",
+    "SELECT DISTINCT user_id, event_type FROM events",
+    survey_ids=("ST1", "A6"),
+    doc="Stateful streaming deduplication: file-source replay of the "
+    "events table -> watermark -> dropDuplicates on the key, keys-only "
+    "output so the batch oracle is SELECT DISTINCT.  The watermark "
+    "bounds the dedup state for unbounded streams — without it the "
+    "key set grows forever; with it, state older than the horizon is "
+    "evicted (the bounded-state posture streaming_bucket_15min uses "
+    "for windows, applied to dedup).",
+)
+def q_streaming_dedup_events(spark, sf_dir):
+    from ..streaming.pipelines import drain_to_memory, stream_events
+
+    df = stream_events(spark, sf_dir)
+    deduped = (
+        df.withWatermark("ts", "1 hour")
+        .dropDuplicates(["user_id", "event_type"])
+        .select("user_id", "event_type")
+    )
+    return drain_to_memory(spark, deduped, "sdedup", "append")

@@ -8,6 +8,11 @@ pure-aggregate tail over the full result, and compare medians.  Both
 variants' bit_xor(xxhash64(struct(*))) checksums are asserted equal —
 the no-cache variant must be value-identical, caching is plan-only.
 
+Sites: ``margin_mine`` (the bitext queries), ``sensor_merge_fold``,
+``source_rebalance``, ``curation_end_to_end`` and
+``gopher_rule_attribution``.  The caches of ``important_parts`` and
+``top_revenue_supplier`` lost this A/B (x0.75, x0.81) and are gone.
+
 Usage: python tools/ab_track_cache.py SF_DIR REPS QUERY [QUERY ...]
 """
 

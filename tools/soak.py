@@ -167,7 +167,7 @@ _COPY_TABLES = ("customer", "supplier", "part", "nation", "region", "embeddings"
 # rare-feature posting lists — at 10x verbatim duplication every feature's
 # document frequency exceeds the df cap, so pair discovery intentionally
 # yields to exact dedup, which runs first in the curation ordering
-# (plans/llm_ops.py lexical_cosine docstring).  These carry an explicit
+# (plans/similarity_ann.py lexical_cosine docstring).  These carry an explicit
 # OUTPUT_COLLAPSE (documented) marker in the soak report instead of
 # failing the run; any OTHER query collapsing is a red flag.
 _COLLAPSE_DOCUMENTED = {"lexical_cosine_pairs"}
