@@ -54,7 +54,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F
 
-from tomasz_weight_tracker_spark.caching import release_caches
 from tomasz_weight_tracker_spark.plans import REGISTRY
 from tomasz_weight_tracker_spark.session import get_spark, tune_for_scale
 
@@ -171,15 +170,13 @@ def main() -> None:
         # are per-plan-shape constants, irrelevant at scale), then time
         # THREE executions of the SAME compiled plan and report the
         # MEDIAN — the engine's marginal cost, the number that
-        # extrapolates to a 1000-executor run.  The storage cache is
-        # cleared before every timed pass, so plans containing an
-        # explicit .cache() (e.g. salient_terms' term-frequency frame)
-        # recompute their intermediates inside the timed window — each
-        # pass re-scans parquet and re-executes the FULL operator tree;
-        # only plan COMPILATION is reused (as any repeated production
-        # query would via the plan cache).  The median absorbs a noise
-        # spike in either direction without hiding real cost; min/max
-        # per query go to BENCH_STATS.json so jitter is auditable.
+        # extrapolates to a 1000-executor run.  No catalog plan caches a
+        # relation, so each pass re-scans parquet and re-executes the
+        # FULL operator tree; only plan COMPILATION is reused (as any
+        # repeated production query would via the plan cache).  The
+        # median absorbs a noise spike in either direction without
+        # hiding real cost; min/max per query go to BENCH_STATS.json so
+        # jitter is auditable.
         df = q.build(spark, sf_dir)
         agg = df.agg(
             F.count(F.lit(1)).alias("n"),
@@ -188,7 +185,6 @@ def main() -> None:
         n = agg.first()["n"]  # warm pass
         walls = []
         for _ in range(3):
-            spark.catalog.clearCache()
             t0 = time.time()
             agg.first()
             walls.append(time.time() - t0)
@@ -206,7 +202,6 @@ def main() -> None:
             file=sys.stderr,
             flush=True,
         )
-        release_caches()  # per-query caches must not outlive the query
 
     # Streaming flagship vs its batch twin: one drain pass (the stream
     # executes eagerly inside build, so the timer wraps build too; no
@@ -229,8 +224,6 @@ def main() -> None:
         print(f"# streaming_bucket_15min: {stream_wall}s", file=sys.stderr, flush=True)
     except Exception as e:  # noqa: BLE001 — bench must still emit its line
         streaming = {"error": str(e)[:300]}
-    finally:
-        release_caches()
 
     # Layout-lever queries at headline scale: the write is the 100 TB
     # investment, the query is what it buys — report both components
@@ -256,8 +249,6 @@ def main() -> None:
             print(f"# layout {name}: {layout[name]}", file=sys.stderr, flush=True)
         except Exception as e:  # noqa: BLE001 — bench must still emit its line
             layout[name] = {"error": str(e)[:120]}
-        finally:
-            release_caches()
 
     queries_full = {}
     full_sf_dir = os.environ.get(
@@ -270,7 +261,7 @@ def main() -> None:
         # get_spark() reuse the same py4j gateway JVM (same pid), so the
         # ~150 headline executions' codegen classes and GC state carry
         # over into the ~470 plan shapes the sidecar compiles.  The
-        # restart drops the session's state (memos, caches, listeners,
+        # restart drops the session's state (memos, listeners,
         # executors); it does not remove the late-alphabet JVM drag seen
         # in the round-11 run (pq_recall_audit 6.9 s standalone vs
         # 16.4 s at position ~400).
@@ -296,8 +287,7 @@ def main() -> None:
                 # pass — Catalyst analysis + codegen JIT are per-plan-
                 # shape constants, irrelevant at scale and absent from
                 # DuckDB's ms-level compile — then ONE timed execution
-                # with storage caches cleared, so track_cache subtrees
-                # recompute inside the timed window.  Until round 10
+                # of a fresh build.  Until round 10
                 # the sidecar timed the COLD build, charging Spark
                 # ~0.5-1 s of JIT per entry that the oracle side never
                 # pays; t_cold records what that was, so the change
@@ -310,8 +300,6 @@ def main() -> None:
                 fdf = q.build(spark, full_sf_dir)
                 materialize(fdf)
                 entry["t_cold"] = round(time.time() - t0, 2)
-                release_caches()
-                spark.catalog.clearCache()
                 LAYOUT_WRITE_S.pop(name, None)
                 t0 = time.time()
                 fdf = q.build(spark, full_sf_dir)
@@ -326,9 +314,6 @@ def main() -> None:
                     )
             except Exception as e:  # noqa: BLE001
                 entry["t_spark_err"] = str(e)[:200]
-            finally:
-                release_caches()
-                spark.catalog.clearCache()
             if q.oracle is not None:
                 try:
                     con.execute(q.oracle).fetchall()  # warm

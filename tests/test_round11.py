@@ -44,8 +44,19 @@ class TestBitextIvfPlanShape:
         relation — every BroadcastNestedLoopJoin must build on an
         IdentityBroadcastMode exchange (the <=8-row centroid side),
         and the src-tgt candidate cut must be an equi-join keyed on
-        centroid_id."""
-        df = REGISTRY["bitext_mine_margin_ivf"].build(spark, sf)
+        centroid_id.  margin_mine materializes the ranked pairs eagerly,
+        so the invariants are checked on the plan of the pair relation
+        it materializes."""
+        from tomasz_weight_tracker_spark.plans.catalog import load
+        from tomasz_weight_tracker_spark.plans.similarity_ann import (
+            _IVF_NCENT,
+            _IVF_NPROBE,
+            ivf_candidate_pairs,
+        )
+
+        df = ivf_candidate_pairs(
+            load(spark, sf, "embeddings"), n_cent=_IVF_NCENT, nprobe=_IVF_NPROBE
+        )
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan
         # the candidate cut is a keyed join on centroid_id
@@ -61,14 +72,10 @@ class TestBitextIvfPlanShape:
             f"{n_bnlj} nested-loop joins but only {n_ident} bounded "
             "broadcast builds — a corpus-sized unkeyed join crept in"
         )
-        from tomasz_weight_tracker_spark.caching import release_caches
-
-        release_caches()
 
 
 class TestBitextIvfProperties:
     def test_candidate_cut_and_policy(self, spark, sf):
-        from tomasz_weight_tracker_spark.caching import release_caches
         from tomasz_weight_tracker_spark.plans.similarity_ann import (
             _BITEXT_K,
             ivf_candidate_pairs,
@@ -84,7 +91,6 @@ class TestBitextIvfProperties:
         assert 0 < n_pairs < 0.5 * n_src * n_tgt
 
         rows = REGISTRY["bitext_mine_margin_ivf"].build(spark, sf).collect()
-        release_caches()
         assert len(rows) > 0
         for r in rows:
             assert r["src_id"] % 2 == 0 and r["tgt_id"] % 2 == 1

@@ -39,9 +39,22 @@ class TestTrainedMinerPlanShape:
         CartesianProduct; the candidate cut is an equi-join on
         centroid_id; every unkeyed join builds on a bounded
         (IdentityBroadcastMode) centroid exchange.  ivf_train's Lloyd
-        rounds run eagerly (localCheckpoint) before this plan, so the
-        mining plan itself is what we inspect."""
-        df = REGISTRY["bitext_mine_margin_ivf_trained"].build(spark, sf)
+        rounds and margin_mine's ranked pairs both run eagerly
+        (localCheckpoint), so the plan inspected is that of the pair
+        relation margin_mine materializes, on the trained centroids."""
+        from tomasz_weight_tracker_spark.plans.catalog import load, trained_ivf_centroids
+        from tomasz_weight_tracker_spark.plans.similarity_ann import (
+            _IVF_NCENT,
+            _IVF_NPROBE,
+            ivf_candidate_pairs,
+        )
+
+        df = ivf_candidate_pairs(
+            load(spark, sf, "embeddings"),
+            n_cent=_IVF_NCENT,
+            nprobe=_IVF_NPROBE,
+            centroids=trained_ivf_centroids(spark, sf, _IVF_NCENT, 2),
+        )
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan
         assert re.search(
@@ -54,19 +67,15 @@ class TestTrainedMinerPlanShape:
             f"{n_bnlj} nested-loop joins but only {n_ident} bounded "
             "broadcast builds — a corpus-sized unkeyed join crept in"
         )
-        from tomasz_weight_tracker_spark.caching import release_caches
-
-        release_caches()
 
     def test_no_forced_corpus_broadcast(self, spark, sf):
         """ADVICE r11: the kx/ky top-k sum relations are O(corpus) and
         must not carry a broadcast HINT.  The candidate stage's bounded
-        centroid broadcasts live inside the cached pair subtree, so the
-        OPTIMIZED plan of the margin tail must print zero join hints —
+        centroid broadcasts live inside the checkpointed ranked pairs,
+        so the OPTIMIZED plan of the margin tail must print zero join hints —
         a forced broadcast on kx/ky renders as 'rightHint=(strategy=
         broadcast)' (verified: F.broadcast on a join side produces
         exactly that marker)."""
-        from tomasz_weight_tracker_spark.caching import release_caches
         from tomasz_weight_tracker_spark.plans.similarity_ann import mine_bitext_ivf
 
         e = spark.read.parquet(f"{sf}/embeddings.parquet")
@@ -76,7 +85,6 @@ class TestTrainedMinerPlanShape:
             "forced broadcast hint on a margin-tail join — kx/ky are "
             "O(corpus)-sized and must shuffle on their keys"
         )
-        release_caches()
 
 
 class TestTrainedMinerSemantics:
@@ -84,7 +92,6 @@ class TestTrainedMinerSemantics:
         """mine_bitext_ivf(centroids=first-8) must equal the default
         first-8 path bit-for-bit — the centroids parameter only swaps
         the quantizer, never the mining semantics."""
-        from tomasz_weight_tracker_spark.caching import release_caches
         from tomasz_weight_tracker_spark.plans.similarity_ann import mine_bitext_ivf
 
         e = spark.read.parquet(f"{sf}/embeddings.parquet")
@@ -100,7 +107,6 @@ class TestTrainedMinerSemantics:
             key=lambda r: (r.src_id, r.tgt_id),
         )
         assert default == explicit
-        release_caches()
 
 
 class TestJpeg420:
@@ -157,7 +163,6 @@ class TestRecallAudit:
         """Count consistency: hits bound by both pair sets, ppm is the
         exact integer division, and the sampled universe is bounded by
         _BAUD_N."""
-        from tomasz_weight_tracker_spark.caching import release_caches
         from tomasz_weight_tracker_spark.plans.similarity_ann import _BAUD_N
 
         row = REGISTRY["bitext_recall_audit"].build(spark, sf).collect()[0]
@@ -169,7 +174,6 @@ class TestRecallAudit:
             assert (
                 row.recall_trained_ppm == row.n_hit_trained * 1000000 // row.n_brute
             )
-        release_caches()
 
 
 class TestTuneForScale:

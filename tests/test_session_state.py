@@ -74,16 +74,6 @@ class TestSizeGatesOnDirectoryLayouts:
         assert C.star_preagg(spark, str(tmp_path / "absent"))
 
 
-class TestTrackCachePatchable:
-    def test_patch_reaches_source_rebalance(self, spark, sf_path, monkeypatch):
-        from tomasz_weight_tracker_spark import caching
-
-        seen = []
-        monkeypatch.setattr(caching, "track_cache", lambda df: seen.append(df) or df)
-        REGISTRY["source_rebalance"].build(spark, sf_path("sf0.001"))
-        assert len(seen) == 1
-
-
 _CYCLES = """
 import gc, json, sys, weakref
 sys.path.insert(0, {root!r})
@@ -122,3 +112,21 @@ class TestSessionStateLifetime:
         assert out["apps"][0] != out["apps"][1]
         assert out["states"] == [out["apps"][1]]
         assert out["first_alive"] == [False, False, False]
+
+
+class TestNoCachedRelations:
+    def test_former_cache_sites_leave_the_cache_manager_empty(self, spark, sf_path):
+        """The queries that share a subtree between several readers
+        materialize it with an eager localCheckpoint or read it twice,
+        never through a cache, so building and collecting them leaves
+        nothing for a runner to release."""
+        sf = sf_path("sf0.001")
+        for name in (
+            "bitext_mine_margin_ivf",
+            "sensor_merge_fold",
+            "curation_end_to_end",
+            "gopher_rule_attribution",
+            "source_rebalance",
+        ):
+            assert REGISTRY[name].build(spark, sf).collect()
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -20,8 +20,6 @@ from __future__ import annotations
 import argparse
 import sys
 
-from pyspark.sql import functions as F
-
 
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="tomasz_weight_tracker_spark")

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import conflict, conflict_tag
-from ..sources.csv_normalized import SensorFile, normalized_sensor_scan, sensor_files
+from ..sources.csv_normalized import normalized_sensor_scan, sensor_files
 
 
 def _is_conflict_col(name: str) -> bool:

@@ -27,10 +27,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions import md5_long, md5_long_sql
 from ..operators import dedup as D
 from ..operators import similarity as S
-from ..operators import text_analysis as TA
 from ..operators import time_ops as TO
 from ..pipelines.electricity import fifteen_minute_usage
 from ..session import parquet_file_sizes, session_state

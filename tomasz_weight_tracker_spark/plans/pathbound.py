@@ -104,8 +104,6 @@ FROM m2
     "Oracle replays the same fold as a DuckDB full-outer-join chain.",
 )
 def q_sensor_merge_fold(spark, sf_dir):
-    from ..caching import track_cache
-
     ev = load(spark, sf_dir, "events")
     anchors = spark.createDataFrame(
         [(0,), (216000,)], "s long"
@@ -115,11 +113,12 @@ def q_sensor_merge_fold(spark, sf_dir):
         .union(anchors)
         .distinct()
     )
-    # The grid feeds f0/f1/f2 AND merge_step's probe actions — cache it
-    # or every probe re-runs the events scan + distinct.
-    hh = track_cache(
-        hours.withColumn("__h", F.expr("unix_timestamp(Timestamp) div 3600"))
-    )
+    # The grid feeds f0/f1/f2 AND merge_step's probe actions — separate
+    # jobs that share no exchange, so materialize it once or every probe
+    # re-runs the events scan + distinct.
+    hh = hours.withColumn(
+        "__h", F.expr("unix_timestamp(Timestamp) div 3600")
+    ).localCheckpoint(eager=True)
     h = F.col("__h")
     f0 = hh.filter(h % 2 == 0).select(
         "Timestamp", (h % 97).cast("double").alias("temp")

@@ -332,7 +332,6 @@ def _pqa_sample_exact(spark, sf_dir):
             ),
         )
         .filter(F.col("rnk") <= PQA_TOPK)
-        .localCheckpoint(eager=True)
     )
     return samp, exact
 
@@ -802,6 +801,9 @@ def _ivfadc_autotune_oracle() -> str:
 def q_ivfadc_autotune(spark, sf_dir):
     c, pct, k = IVFADC_COARSE, IVFADC_TUNE_PCT, PQA_TOPK
     samp, exact = _pqa_sample_exact(spark, sf_dir)
+    # The truth is read twice below (hits and n_true); the audits read
+    # it once, so only the tuner materializes it.
+    exact = exact.localCheckpoint(eager=True)
     adc = _ivfadc_rank(
         spark, sf_dir, samp.select("q_id", "qv_raw"), k,
         nprobe=c, probe_rank=True,
@@ -1011,16 +1013,15 @@ def margin_mine(pairs, k: int):
     candidate relation — shared by the brute miner, the IVF miner, the
     trained-quantizer variant, and the recall audit so the margin arithmetic
     cannot drift between them."""
-    from ..caching import track_cache
-
     ws = Window.partitionBy("src_id").orderBy(F.col("qdot").desc(), "tgt_id")
     wt = Window.partitionBy("tgt_id").orderBy(F.col("qdot").desc(), "src_id")
     # Ranked candidates feed THREE consumers (kx, ky, mutual); Catalyst
-    # does not CSE shared subtrees, so cache once (runners release it).
-    r = track_cache(
-        pairs.withColumn("rs", F.row_number().over(ws)).withColumn(
-            "rt", F.row_number().over(wt)
-        )
+    # does not CSE shared subtrees and the rank windows sit above the
+    # last shared exchange, so materialize them once.
+    r = (
+        pairs.withColumn("rs", F.row_number().over(ws))
+        .withColumn("rt", F.row_number().over(wt))
+        .localCheckpoint(eager=True)
     )
     kx = (
         r.filter(F.col("rs") <= k)

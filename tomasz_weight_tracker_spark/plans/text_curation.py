@@ -327,19 +327,13 @@ def q_curation_end_to_end(spark, sf_dir):
     # construction (the lsh_recall_audit TreeNode lesson).
     survivors = docs.join(dst, "doc_id", "left_anti").localCheckpoint(eager=True)
 
-    from ..caching import track_cache
-
-    # The two other shared stages are cached, not re-derived: `scored`
-    # feeds the kept join AND the per-source audit, `kept_docs` feeds
-    # the mix design AND the selection — without the cache Catalyst
-    # duplicates each subtree per reference (no CSE), which measured
-    # 69 exchanges / 100 broadcasts of pure textual blowup in the
-    # static plan.  cache() (not localCheckpoint) keeps lineage while
-    # collapsing every reference to one InMemoryTableScan.
-    scored = track_cache(lm_score(survivors))
-    kept_docs = track_cache(
-        survivors.join(scored.filter(F.col("kept")).select("doc_id"), "doc_id")
-    )
+    # `scored` feeds the kept join AND the per-source audit; left lazy,
+    # Catalyst duplicates the LM subtree per reference (no CSE), which
+    # measured 69 exchanges / 100 broadcasts of pure textual blowup in
+    # the static plan.  `kept_docs` (mix design AND selection) is a join
+    # of two materialized frames, cheaper to read twice than to store.
+    scored = lm_score(survivors).localCheckpoint(eager=True)
+    kept_docs = survivors.join(scored.filter(F.col("kept")).select("doc_id"), "doc_id")
     mix = mix_design(kept_docs).select("source", "accept_ppm")
     ntok = F.size(tokens(F.lower(F.coalesce(F.col("text"), F.lit(""))))).cast("long")
     sel = (
@@ -571,28 +565,22 @@ def _gopher_attr_oracle() -> str:
     "gopher_quality_rules (round8c.GOPHER_RULES_SQL / gopher_rules — "
     "the attribution and the boolean view cannot drift).  Plan "
     "shape: ONE fused-token projection pass computes all four flags, "
-    "then a single global aggregate per rule arm over the cached "
-    "flag frame — no shuffle carries anything wider than the "
-    "counters; at 100 TB this is a scan plus map-side partial "
+    "then a single global aggregate per rule arm over the "
+    "checkpointed flag frame — no shuffle carries anything wider "
+    "than the counters; at 100 TB this is a scan plus map-side partial "
     "aggregation, the cheapest audit in the stack.",
 )
 def q_gopher_rule_attribution(spark, sf_dir):
-    from ..caching import track_cache
-
     rules = list(GOPHER_RULES_SQL)
     m = gopher_metrics(spark, sf_dir)
     r = gopher_rules(m)
-    # One projection computes every flag; cached because each rule arm
-    # and the totals re-read it (Catalyst does no CSE across branches).
-    # Re-measured round 13 (A/B at sf0.1): 1.15 s cached vs 1.13 s
-    # without — a wash HERE, kept because the cached frame is 9 narrow
-    # columns per doc while recompute is ~9 full text-metric passes
-    # (gopher_metrics tokenizes) with no shared exchange to reuse —
-    # the un-cached wash at sf0.1 is the scan being cheap, not the
-    # recompute being free.
-    f = track_cache(
-        m.select("doc_id", *[r[name].alias(f"r_{name}") for name in rules])
-    )
+    # One projection computes every flag; each rule arm and the totals
+    # re-read it, and no exchange is shared between the arms, so the
+    # narrow flag frame is materialized once (without it every arm
+    # re-runs the tokenizing metric pass).
+    f = m.select(
+        "doc_id", *[r[name].alias(f"r_{name}") for name in rules]
+    ).localCheckpoint(eager=True)
     keep_all = None
     for name in rules:
         c = F.col(f"r_{name}")
@@ -1169,12 +1157,17 @@ def q_doc_chunking(spark, sf_dir):
     "the same frame without the final aggregate.)",
 )
 def q_source_rebalance(spark, sf_dir):
-    from ..caching import track_cache
     from ..functions import md5_long
 
     docs = load(spark, sf_dir, "documents")
-    counts = track_cache(
-        docs.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
+    # Two readers (the target and the broadcast join) whose exchanges
+    # differ (the join pushes a null filter below its side), so
+    # materialize the per-source counts once instead of re-aggregating
+    # the corpus per reader.
+    counts = (
+        docs.groupBy("source")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
     )
     target = counts.agg(F.min("n").alias("per_source"))
     decided = (

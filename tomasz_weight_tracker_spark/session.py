@@ -368,9 +368,7 @@ class SessionState:
     - ``loads``: ``plans.catalog.load``'s DataFrames, so file listing,
       footer reads and the widen decision happen once per table;
     - ``ivf_centroids``: ``plans.catalog.trained_ivf_centroids``;
-    - ``lsh_audit``: the LSH audit sample and its exact ground truth;
-    - ``caches``: ``caching.track_cache``'d per-query relations,
-      unpersisted by ``caching.release_caches``.
+    - ``lsh_audit``: the LSH audit sample and its exact ground truth.
 
     The memos are pure functions of the input files, so every query of
     the application shares them.  The memoized DataFrames hold their
@@ -384,7 +382,6 @@ class SessionState:
     loads: dict[tuple, DataFrame] = field(default_factory=dict)
     ivf_centroids: dict[tuple, DataFrame] = field(default_factory=dict)
     lsh_audit: dict[str, tuple[DataFrame, DataFrame]] = field(default_factory=dict)
-    caches: list[DataFrame] = field(default_factory=list)
 
 
 _STATE: SessionState | None = None

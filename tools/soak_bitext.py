@@ -42,7 +42,6 @@ def main() -> None:
     base = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     ks = [int(a) for a in sys.argv[2:]] or [1, 2, 4, 8]
 
-    from tomasz_weight_tracker_spark.caching import release_caches
     from tomasz_weight_tracker_spark.plans.similarity_ann import (
         ivf_candidate_pairs,
         mine_bitext_ivf,
@@ -86,7 +85,6 @@ def main() -> None:
         t0 = time.monotonic()
         n_mined = mine_bitext_ivf(e, n_cent=n_cent, nprobe=2, k=4).count()
         t_full = time.monotonic() - t0
-        release_caches()
 
         print(
             json.dumps(

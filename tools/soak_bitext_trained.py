@@ -49,7 +49,6 @@ def occupancy(assigned) -> dict:
 def main() -> None:
     base = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 
-    from tomasz_weight_tracker_spark.caching import release_caches
     from tomasz_weight_tracker_spark.operators import similarity as S
     from tomasz_weight_tracker_spark.plans.similarity_ann import ivf_candidate_pairs
     from tomasz_weight_tracker_spark.session import get_spark
@@ -91,7 +90,6 @@ def main() -> None:
         occ = occupancy(S.ivf_assign(e, cents))
         n_pairs = ivf_candidate_pairs(e, n_cent=8, nprobe=2, centroids=cents).count()
         wall = time.monotonic() - t0
-        release_caches()
         print(
             json.dumps(
                 {
