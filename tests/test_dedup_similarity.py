@@ -60,7 +60,7 @@ class TestMinHashLsh:
         df = spark.createDataFrame(rows, "doc_id int, text string")
         sig = D.minhash_signature(df, "text", k=16)
         out = D.lsh_candidate_pairs(
-            sig, "doc_id", k=16, bands=4, max_bucket=10, emit_sig_matches=True
+            sig, "doc_id", k=16, bands=4, max_bucket=10
         ).collect()
         got = {(r.id_a, r.id_b) for r in out}
         assert (100, 101) in got
@@ -249,11 +249,12 @@ class TestMinHashLsh:
         )
 
     def test_aqe_splits_skewed_band_join(self, spark):
-        """SCALE.md claims skewed band buckets (under the cap) are
-        handled by AQE skew-join splitting.  Pin it: build a band join
-        with one hot bucket, force the sort-merge path with scaled-down
-        skew thresholds (the local-mode stand-in for 256 MB partitions),
-        execute, and assert the skew split actually fired."""
+        """SCALE.md claims skewed buckets of the refresh probe's
+        uncapped rep-level band join are handled by AQE skew-join
+        splitting.  Pin it: build a probe with one hot band bucket,
+        force the sort-merge path with scaled-down skew thresholds (the
+        local-mode stand-in for 256 MB partitions), execute, and assert
+        the skew split actually fired."""
         confs = {
             # 8 reduce partitions give the skew detector a meaningful
             # median (4 partitions put cold keys next to the hot one).
@@ -269,15 +270,26 @@ class TestMinHashLsh:
         try:
             for k, v in confs.items():
                 spark.conf.set(k, v)
-            # One hot band bucket (150 identical docs) among many cold
-            # ones; cap disabled so the skew reaches the join.
-            rows = [(i, "hot shared text") for i in range(150)]
-            rows += [(1000 + i, f"cold unique {i} doc {i * 7}") for i in range(50)]
-            df = spark.createDataFrame(rows, "doc_id int, text string")
-            sig = D.minhash_signature(df, "text", k=16)
-            pairs = D.lsh_candidate_pairs(
-                sig, "doc_id", k=16, bands=4, max_bucket=None
+            # One hot band-0 bucket among many cold ones.  The hot
+            # signatures must be DISTINCT (identical ones collapse to a
+            # single representative before the band join): 150 docs
+            # share mh0..3 and are unique elsewhere; 50 cold docs are
+            # unique everywhere.  Skew detection depends on where the
+            # keys hash, and this data puts the hot key in a partition
+            # the detector flags.
+            rows = [
+                (i, True, *([7] * 4 + [1000 + 16 * i + j for j in range(12)]))
+                for i in range(150)
+            ]
+            rows += [
+                (10000 + i, True, *[900000 + 16 * i + j for j in range(16)])
+                for i in range(50)
+            ]
+            cols = "doc_id int, is_new boolean, " + ", ".join(
+                f"mh{i} long" for i in range(16)
             )
+            sig = spark.createDataFrame(rows, cols)
+            pairs = D.lsh_probe_pairs(sig, "is_new", "doc_id", k=16, bands=4)
             # Materialize THIS DataFrame's own query execution: AQE
             # finalizes (and records the skew split) per-execution, so
             # a derived count() would leave this plan un-adapted.
@@ -297,9 +309,65 @@ class TestMinHashLsh:
         df = spark.createDataFrame(rows, "doc_id int, text string")
         sig = D.minhash_signature(df, "text", k=16)
         got = D.lsh_candidate_pairs(
-            sig, "doc_id", k=16, bands=4, max_bucket=None
+            sig, "doc_id", k=16, bands=4, max_bucket=5
         ).count()
         assert got == 10  # 5*4/2 all-pairs of identical docs
+
+    @staticmethod
+    def _seeded_sigs(seed, n=48, k=16, dups=12):
+        # Small per-position alphabet so bands collide often; the last
+        # ``dups`` rows copy earlier signatures (identical clusters).
+        import random
+
+        rng = random.Random(seed)
+        sigs = [[rng.randrange(3) for _ in range(k)] for _ in range(n - dups)]
+        sigs += [list(sigs[rng.randrange(len(sigs))]) for _ in range(dups)]
+        return {i: s for i, s in enumerate(sigs)}
+
+    @staticmethod
+    def _brute_banding(sigs, k=16, bands=4):
+        rpb = k // bands
+        out = set()
+        for a in sigs:
+            for b in sigs:
+                sa, sb = sigs[a], sigs[b]
+                if a < b and any(
+                    sa[j * rpb:(j + 1) * rpb] == sb[j * rpb:(j + 1) * rpb]
+                    for j in range(bands)
+                ):
+                    out.add((a, b, sum(x == y for x, y in zip(sa, sb))))
+        return out
+
+    def _pairs(self, spark, sigs, max_bucket):
+        cols = "doc_id int, " + ", ".join(f"mh{i} long" for i in range(16))
+        df = spark.createDataFrame([(i, *s) for i, s in sigs.items()], cols)
+        out = D.lsh_candidate_pairs(
+            df, "doc_id", k=16, bands=4, max_bucket=max_bucket
+        ).collect()
+        got = {(r.id_a, r.id_b, r.sig_matches) for r in out}
+        assert len(got) == len(out)  # distinct pairs
+        return got
+
+    def test_uncapped_equals_brute_force_banding(self, spark):
+        # A cap of at least the number of documents never splits a
+        # bucket: the collapse-first path must then be plain banding.
+        for seed in (1, 2):
+            sigs = self._seeded_sigs(seed)
+            ref = self._brute_banding(sigs)
+            assert self._pairs(spark, sigs, len(sigs)) == ref
+            assert any(m == 16 for _, _, m in ref)  # identical pairs present
+            assert any(m < 16 for _, _, m in ref)  # and near ones
+
+    def test_small_cap_is_subset_keeping_identical_pairs(self, spark):
+        # Splitting only drops candidates; identical signatures
+        # collapse before banding, so their pairs always survive.
+        for seed in (1, 2):
+            sigs = self._seeded_sigs(seed)
+            ref = self._brute_banding(sigs)
+            got = self._pairs(spark, sigs, 2)
+            assert got <= ref
+            assert got < ref  # the cap did split something
+            assert {p for p in ref if p[2] == 16} <= got
 
 
 class TestFuzzyBlocking:

@@ -259,22 +259,6 @@ class TestRound4PlanShape:
                 else:
                     spark.conf.set(k, v)
 
-    def test_lsh_pairs_carry_signature_columns(self, spark):
-        # The carried a_mh*/b_mh* columns make the verify stage a pure
-        # projection over the pair stream.
-        from tomasz_weight_tracker_spark.operators import dedup as D
-
-        df = spark.createDataFrame(
-            [("a", "x y z"), ("b", "x y z")], ["doc_id", "text"]
-        )
-        sig = D.minhash_signature(df, "text", k=4)
-        pairs = D.lsh_candidate_pairs(
-            sig, "doc_id", k=4, bands=2, carry=["mh0", "mh1", "mh2", "mh3"]
-        )
-        assert {"id_a", "id_b", "a_mh0", "b_mh3"} <= set(pairs.columns)
-        row = pairs.collect()[0]
-        assert row.a_mh0 == row.b_mh0  # identical docs -> identical sigs
-
 
 class TestJoinStrategyHints:
     """The engine exposes all three equi-join physical strategies via

@@ -748,6 +748,43 @@ def _category(v: int) -> int:
     return n
 
 
+def _encode_block(bw, plane, stride, bx, by, qt, dcm, acm, pred: int) -> int:
+    """Level-shift, FDCT-quantize and Huffman-code the 8x8 block at
+    (bx, by) of ``plane`` (row stride ``stride``) against DC predictor
+    ``pred``; returns the block's DC, the next predictor."""
+    block = [
+        plane[(by + y) * stride + (bx + x)] - 128
+        for y in range(8)
+        for x in range(8)
+    ]
+    coefs = _fdct_quant(block, qt)
+    zz = [coefs[_ZIGZAG[i]] for i in range(64)]
+    diff = zz[0] - pred
+    cat = _category(diff)
+    code, ln = dcm[cat]
+    bw.write(code, ln)
+    if cat:
+        bw.write(diff if diff > 0 else diff + (1 << cat) - 1, cat)
+    run = 0
+    for i in range(1, 64):
+        if zz[i] == 0:
+            run += 1
+            continue
+        while run > 15:
+            code, ln = acm[0xF0]  # ZRL
+            bw.write(code, ln)
+            run -= 16
+        cat = _category(zz[i])
+        code, ln = acm[(run << 4) | cat]
+        bw.write(code, ln)
+        bw.write(zz[i] if zz[i] > 0 else zz[i] + (1 << cat) - 1, cat)
+        run = 0
+    if run:
+        code, ln = acm[0x00]  # EOB
+        bw.write(code, ln)
+    return zz[0]
+
+
 def make_jpeg(
     width: int,
     height: int,
@@ -833,8 +870,6 @@ def make_jpeg(
     if ncomp == 3:
         dc_maps += [_huff_encode_map(*_DC_CHROMA)] * 2
         ac_maps += [_huff_encode_map(*_AC_CHROMA)] * 2
-    else:
-        dc_maps *= 1
     bw = _BitWriter()
     pred = [0] * ncomp
     mcu_count = 0
@@ -848,40 +883,10 @@ def make_jpeg(
                 pred = [0] * ncomp
             mcu_count += 1
             for ci in range(ncomp):
-                plane = planes[ci]
-                block = [
-                    plane[(by + y) * pw + (bx + x)] - 128
-                    for y in range(8)
-                    for x in range(8)
-                ]
-                coefs = _fdct_quant(block, qts[comp_qt[ci]])
-                zz = [coefs[_ZIGZAG[i]] for i in range(64)]
-                dcm = dc_maps[ci if ncomp == 3 else 0]
-                acm = ac_maps[ci if ncomp == 3 else 0]
-                diff = zz[0] - pred[ci]
-                pred[ci] = zz[0]
-                cat = _category(diff)
-                code, ln = dcm[cat]
-                bw.write(code, ln)
-                if cat:
-                    bw.write(diff if diff > 0 else diff + (1 << cat) - 1, cat)
-                run = 0
-                for i in range(1, 64):
-                    if zz[i] == 0:
-                        run += 1
-                        continue
-                    while run > 15:
-                        code, ln = acm[0xF0]  # ZRL
-                        bw.write(code, ln)
-                        run -= 16
-                    cat = _category(zz[i])
-                    code, ln = acm[(run << 4) | cat]
-                    bw.write(code, ln)
-                    bw.write(zz[i] if zz[i] > 0 else zz[i] + (1 << cat) - 1, cat)
-                    run = 0
-                if run:
-                    code, ln = acm[0x00]  # EOB
-                    bw.write(code, ln)
+                pred[ci] = _encode_block(
+                    bw, planes[ci], pw, bx, by, qts[comp_qt[ci]],
+                    dc_maps[ci], ac_maps[ci], pred[ci],
+                )
     bw.flush()
     out += bw.buf
     out += b"\xff\xd9"  # EOI
@@ -892,7 +897,7 @@ def _make_jpeg_420(width: int, height: int, pixel_fn, restart_interval: int) -> 
     """4:2:0 color JPEG: luma 2x2 sampling, chroma averaged over 2x2
     pixel quads, MCU = four Y blocks (raster order) + Cb + Cr.  Split
     out of :func:`make_jpeg` because the MCU geometry differs (16-px
-    tiles, interleave order); entropy coding and tables are shared."""
+    tiles, interleave order); the block coder and tables are shared."""
 
     def sample(x: int, y: int):
         return pixel_fn(min(x, width - 1), min(y, height - 1))
@@ -940,39 +945,11 @@ def _make_jpeg_420(width: int, height: int, pixel_fn, restart_interval: int) -> 
     pred = [0, 0, 0]
 
     def emit(plane, stride, bx, by, ci):
-        block = [
-            plane[(by + y) * stride + (bx + x)] - 128
-            for y in range(8)
-            for x in range(8)
-        ]
-        coefs = _fdct_quant(block, _JPEG_QT_LUMA if ci == 0 else _JPEG_QT_CHROMA)
-        zz = [coefs[_ZIGZAG[i]] for i in range(64)]
-        dcm = dc_maps[0] if ci == 0 else dc_maps[1]
-        acm = ac_maps[0] if ci == 0 else ac_maps[1]
-        diff = zz[0] - pred[ci]
-        pred[ci] = zz[0]
-        cat = _category(diff)
-        code, ln = dcm[cat]
-        bw.write(code, ln)
-        if cat:
-            bw.write(diff if diff > 0 else diff + (1 << cat) - 1, cat)
-        run = 0
-        for i in range(1, 64):
-            if zz[i] == 0:
-                run += 1
-                continue
-            while run > 15:
-                code, ln = acm[0xF0]
-                bw.write(code, ln)
-                run -= 16
-            cat = _category(zz[i])
-            code, ln = acm[(run << 4) | cat]
-            bw.write(code, ln)
-            bw.write(zz[i] if zz[i] > 0 else zz[i] + (1 << cat) - 1, cat)
-            run = 0
-        if run:
-            code, ln = acm[0x00]
-            bw.write(code, ln)
+        pred[ci] = _encode_block(
+            bw, plane, stride, bx, by,
+            _JPEG_QT_LUMA if ci == 0 else _JPEG_QT_CHROMA,
+            dc_maps[min(ci, 1)], ac_maps[min(ci, 1)], pred[ci],
+        )
 
     mcu_count = 0
     rst_n = 0

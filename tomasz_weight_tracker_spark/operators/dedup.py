@@ -15,8 +15,10 @@ Scale posture:
 - signatures are per-row narrow projections (no shuffle);
 - LSH banding shuffles once on the band key — band width trades
   recall vs. the size of each bucket's candidate cross-product;
-- the pair join uses the band key as join key, so skewed buckets are
-  handled by AQE skew-join splitting;
+- the capped generator bounds every bucket by construction (split
+  cascade + bucket collect, no band join); the refresh probe's
+  uncapped rep-level band join uses the band key as join key, so its
+  skewed buckets are handled by AQE skew-join splitting;
 - Jaccard verification is a per-pair map over two token arrays
   (no further shuffle after the candidate join).
 """
@@ -393,19 +395,84 @@ def _probe_rep_pairs(
     )
 
 
+def expand_rep_pairs(
+    rep_pairs: DataFrame,
+    multi: DataFrame,
+    id_col: str,
+    verify: str,
+    within: int,
+    flag: str | None = None,
+) -> DataFrame:
+    """Expand verified rep-pairs (ra, rb, ``verify``) back to member
+    pairs (id_a, id_b, ``verify``) with id_a < id_b — the last step of
+    every collapse-first pair generator.  ``multi`` holds the member
+    rows (``id_col``, __rep) of the identical-signature clusters with
+    two or more members.
+
+    Cross-cluster pairs: each side of a rep-pair fans out to its
+    cluster members via a LEFT join to ``multi``; singleton clusters
+    (the common case) pass through coalesce with no matching row, so
+    the join sides are (bounded rep-pairs) x (duplicated docs only),
+    never the corpus.  Member ids are not ordered like their reps, so
+    the pair is re-oriented with a swap (clusters are disjoint, hence
+    no duplicate risk and no distinct).  Within-cluster all-pairs
+    carry ``within`` as their verify value (members share the rep's
+    signature exactly), emitted once — output-bound, the floor for
+    pair enumeration.
+
+    ``flag`` names a boolean member column of ``multi`` (the probe's
+    is-new mark); with it, ``rep_pairs`` carries the reps'
+    cluster-level flags as __fa/__fb and only pairs with a flagged
+    endpoint are emitted.  A singleton cluster's only member IS the
+    rep, so the singleton side takes the rep's flag — no join back to
+    the store."""
+
+    def side(rep: str, x: str, f: str) -> DataFrame:
+        return multi.select(
+            F.col("__rep").alias(rep),
+            F.col(id_col).alias(x),
+            *([F.col(flag).alias(f)] if flag else []),
+        )
+
+    exp = (
+        rep_pairs.join(side("ra", "__xa", "__xfa"), "ra", "left")
+        .join(side("rb", "__xb", "__xfb"), "rb", "left")
+        .withColumn("__ia", F.coalesce("__xa", "ra"))
+        .withColumn("__ib", F.coalesce("__xb", "rb"))
+    )
+    if flag:
+        exp = exp.filter(F.coalesce("__xfa", "__fa") | F.coalesce("__xfb", "__fb"))
+    flip = F.col("__ia") > F.col("__ib")
+    cross = exp.select(
+        F.when(flip, F.col("__ib")).otherwise(F.col("__ia")).alias("id_a"),
+        F.when(flip, F.col("__ia")).otherwise(F.col("__ib")).alias("id_b"),
+        verify,
+    )
+    same = (F.col("a.__rep") == F.col("b.__rep")) & (
+        F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
+    )
+    if flag:
+        same = same & (F.col(f"a.{flag}") | F.col(f"b.{flag}"))
+    within_pairs = multi.alias("a").join(multi.alias("b"), same).select(
+        F.col(f"a.{id_col}").alias("id_a"),
+        F.col(f"b.{id_col}").alias("id_b"),
+        F.lit(within).cast("long").alias(verify),
+    )
+    return cross.unionByName(within_pairs)
+
+
 def lsh_candidate_pairs(
     signatures: DataFrame,
     id_col: str,
     k: int = 16,
     bands: int = 4,
-    max_bucket: int | None = 64,
-    carry: Sequence[str] = (),
-    emit_sig_matches: bool = False,
+    max_bucket: int = 64,
     verify_min: int | None = None,
 ) -> DataFrame:
     """LSH banding: split the k-wide signature into ``bands`` bands of
     k/bands rows each; docs sharing any full band become a candidate
-    pair.  Returns distinct (id_a, id_b) with id_a < id_b.
+    pair.  Returns distinct (id_a, id_b, sig_matches) with id_a < id_b,
+    ``sig_matches`` = the number of agreeing signature positions.
 
     ``max_bucket`` bounds FALSE-candidate emission with a
     COLLAPSE-FIRST split design (round-8 fix — the round-7 rule
@@ -425,11 +492,10 @@ def lsh_candidate_pairs(
        signature, so the recursion always terminates under any
        ``max_bucket >= 1`` and no bucket is ever dropped;
     3. verified rep-pairs and the identical-signature clusters are
-       EXPANDED back to member pairs: within-cluster all-pairs
-       (``sig_matches == k`` by construction — true dups, the query's
-       own output) plus cross-cluster pairs via a left join to the
-       multi-member table (singleton clusters — the overwhelming
-       majority — expand join-free through coalesce).
+       EXPANDED back to member pairs (:func:`expand_rep_pairs`).
+
+    A ``max_bucket`` of at least the number of distinct signatures
+    never splits, so the output is then exactly plain banding.
 
     ``verify_min`` gates the expansion: a FALSE rep-pair between two
     large clusters would otherwise expand to |A|*|B| junk pairs, so at
@@ -454,144 +520,15 @@ def lsh_candidate_pairs(
     a band self-join.  The collapse window shuffles the signature
     table once on the signature itself; the expansion joins touch only
     the rep-pair set and the multi-member subset (duplicated docs),
-    never the full corpus.
-
-    ``carry`` lists signature columns to thread THROUGH the band join,
-    emitted as ``a_<col>`` / ``b_<col>`` on each pair.  This is how a
-    verify stage (Jaccard, metadata screens) gets both sides' data
-    without a second join back to the signature table — which at
-    corpus scale would either shuffle the whole signature table twice
-    more or (worse) broadcast a corpus-cardinality frame.  Carried
-    values are functionally dependent on the id, so the pair-level
-    ``distinct`` stays exact.
-
-    ``emit_sig_matches`` adds a ``sig_matches`` column — the count of
-    agreeing signature positions — computed from the band-shuffled
-    signature array itself (position-permuted per band, which leaves
-    the agreement COUNT invariant), so full-signature verify needs no
-    ``carry`` at all: the shuffle stays k longs per doc-band instead
-    of 2k.
+    never the full corpus.  ``sig_matches`` is computed from the
+    band-shuffled signature array itself (position-permuted per band,
+    which leaves the agreement COUNT invariant), so verify needs no
+    second join back to the signature table.
     """
-    rows_per_band = k // bands
-    if max_bucket is None:
-        # Uncapped path: plain banding, no split machinery.
-        band_structs = []
-        for b in range(bands):
-            cols = [
-                F.col(f"mh{b * rows_per_band + j}") for j in range(rows_per_band)
-            ]
-            band_structs.append(
-                F.struct(
-                    F.lit(b).alias("band_id"),
-                    F.concat_ws("_", *cols).alias("band_key"),
-                )
-            )
-        sig_cols = (
-            [F.array(*[F.col(f"mh{i}") for i in range(k)]).alias("__sig")]
-            if emit_sig_matches
-            else []
-        )
-        banded = signatures.select(
-            F.col(id_col),
-            *carry,
-            *sig_cols,
-            F.explode(F.array(*band_structs)).alias("band"),
-        ).select(
-            id_col,
-            *carry,
-            *(["__sig"] if emit_sig_matches else []),
-            "band.band_id",
-            "band.band_key",
-        )
-        a = banded.alias("a")
-        b = banded.alias("b")
-        extra_out = (
-            [_agreement(F.col("a.__sig"), F.col("b.__sig")).alias("sig_matches")]
-            if emit_sig_matches
-            else []
-        )
-        return (
-            a.join(
-                b,
-                (F.col("a.band_id") == F.col("b.band_id"))
-                & (F.col("a.band_key") == F.col("b.band_key"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
-            .select(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-                *extra_out,
-                *[F.col(f"a.{c}").alias(f"a_{c}") for c in carry],
-                *[F.col(f"b.{c}").alias(f"b_{c}") for c in carry],
-            )
-            .distinct()
-        )
-
     rep_pairs, multi = _lsh_rep_pairs(
-        signatures, id_col, k, bands, max_bucket, carry,
-        need_sig=emit_sig_matches or verify_min is not None,
-        verify_min=verify_min,
+        signatures, id_col, k, bands, max_bucket, verify_min
     )
-
-    sm_pass = [F.col("sig_matches")] if emit_sig_matches else []
-    # Cross-cluster expansion: each side of a rep-pair fans out to its
-    # cluster members via a LEFT join to the multi-member subset —
-    # singleton clusters (the common case) pass through coalesce with
-    # no matching row, so the join sides are (bounded rep-pairs) x
-    # (duplicated docs only), never the corpus.  Member ids are not
-    # ordered like their reps, so the pair is re-oriented with a swap
-    # (clusters are disjoint, hence no duplicate risk and no distinct).
-    ma = multi.select(
-        F.col("__rep").alias("ra"),
-        F.col(id_col).alias("__xa"),
-        *[F.col(c).alias(f"ma_{c}") for c in carry],
-    )
-    mb = multi.select(
-        F.col("__rep").alias("rb"),
-        F.col(id_col).alias("__xb"),
-        *[F.col(c).alias(f"mb_{c}") for c in carry],
-    )
-    exp = (
-        rep_pairs.join(ma, "ra", "left")
-        .join(mb, "rb", "left")
-        .withColumn("__ia", F.coalesce("__xa", "ra"))
-        .withColumn("__ib", F.coalesce("__xb", "rb"))
-    )
-    flip = F.col("__ia") > F.col("__ib")
-
-    def _oriented(c: str):
-        a_val = F.coalesce(F.col(f"ma_{c}"), F.col(f"ra_{c}"))
-        b_val = F.coalesce(F.col(f"mb_{c}"), F.col(f"rb_{c}"))
-        return (
-            F.when(flip, b_val).otherwise(a_val).alias(f"a_{c}"),
-            F.when(flip, a_val).otherwise(b_val).alias(f"b_{c}"),
-        )
-
-    carry_cols = [col for c in carry for col in _oriented(c)]
-    cross = exp.select(
-        F.when(flip, F.col("__ib")).otherwise(F.col("__ia")).alias("id_a"),
-        F.when(flip, F.col("__ia")).otherwise(F.col("__ib")).alias("id_b"),
-        *sm_pass,
-        *carry_cols,
-    )
-
-    # Within-cluster all-pairs: members of one identical-signature
-    # cluster agree on all k positions, so these ARE the query's
-    # output (sig_matches == k passes any sane verify), emitted once —
-    # output-bound, the floor for pair enumeration.
-    wa, wb = multi.alias("a"), multi.alias("b")
-    within = wa.join(
-        wb,
-        (F.col("a.__rep") == F.col("b.__rep"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-    ).select(
-        F.col(f"a.{id_col}").alias("id_a"),
-        F.col(f"b.{id_col}").alias("id_b"),
-        *([F.lit(k).cast("long").alias("sig_matches")] if emit_sig_matches else []),
-        *[F.col(f"a.{c}").alias(f"a_{c}") for c in carry],
-        *[F.col(f"b.{c}").alias(f"b_{c}") for c in carry],
-    )
-    return cross.unionByName(within)
+    return expand_rep_pairs(rep_pairs, multi, id_col, "sig_matches", k)
 
 
 def _lsh_rep_pairs(
@@ -600,27 +537,22 @@ def _lsh_rep_pairs(
     k: int,
     bands: int,
     max_bucket: int,
-    carry: Sequence[str],
-    need_sig: bool,
     verify_min: int | None,
 ) -> tuple[DataFrame, DataFrame]:
     """Collapse-first banding core shared by :func:`lsh_candidate_pairs`
     and :func:`lsh_dedup_edges`: returns (rep_pairs, multi) where
-    ``rep_pairs`` is the distinct (ra, rb[, sig_matches][, ra_*/rb_*
-    carry]) candidate pairs over cluster REPRESENTATIVES and ``multi``
-    is the member rows of clusters with >= 2 identical signatures
-    (columns: id, __rep, __cnt, carry)."""
+    ``rep_pairs`` is the distinct (ra, rb, sig_matches) candidate pairs
+    over cluster REPRESENTATIVES and ``multi`` is the member rows of
+    clusters with >= 2 identical signatures (columns: id, __rep)."""
     rows_per_band = k // bands
     levels = k - rows_per_band  # split depths beyond the band itself
 
-    members, wsig = _collapse(signatures, id_col, k, *carry)
+    members, wsig = _collapse(signatures, id_col, k)
     members = members.withColumn("__cnt", F.count(F.lit(1)).over(wsig))
-    # The rep keeps ITS OWN carry columns (it is a real member row),
-    # which is what the singleton side of the expansion coalesces to.
     reps = members.filter(F.col(id_col) == F.col("__rep"))
     multi = members.filter(F.col("__cnt") > 1).drop("__fsig", "__cnt")
 
-    banded = _rep_bands(reps, id_col, k, bands, *carry).select(
+    banded = _rep_bands(reps, id_col, k, bands).select(
         "*", *[F.element_at("skey", i + 1).alias(f"__e{i}") for i in range(k)]
     )
 
@@ -655,7 +587,6 @@ def _lsh_rep_pairs(
         lvl = F.when(counts[l] <= max_bucket, F.lit(l)).otherwise(lvl)
     keyed = banded.select(
         "rid",
-        *carry,
         "band_id",
         *[f"__e{i}" for i in range(rows_per_band)],
         lvl.alias("__lvl"),
@@ -663,7 +594,7 @@ def _lsh_rep_pairs(
         # Full signature in band order, for the verify column: bucket
         # members share a band, hence the same position permutation,
         # so the zip_with agreement COUNT equals agreement over mh0..k.
-        *([F.col("skey").alias("__sig")] if need_sig else []),
+        F.col("skey").alias("__sig"),
     )
 
     # Pair formation WITHOUT the self-join: every effective bucket is
@@ -676,11 +607,7 @@ def _lsh_rep_pairs(
     # partitioning as the windows: zero exchanges where the self-join
     # paid two full ones plus its own sorts (measured: the join half of
     # lsh_near_dup was 1.4 s of the 2.6 s sf0.1 wall).
-    m_struct = F.struct(
-        F.col("rid").alias("rid"),
-        *([F.col("__sig").alias("sig")] if need_sig else []),
-        *[F.col(c).alias(c) for c in carry],
-    )
+    m_struct = F.struct(F.col("rid").alias("rid"), F.col("__sig").alias("sig"))
     buckets = keyed.groupBy(
         "band_id", *[f"__e{i}" for i in range(rows_per_band)], "__lvl", "__eff"
     ).agg(F.collect_list(m_struct).alias("__ms"))
@@ -696,23 +623,10 @@ def _lsh_rep_pairs(
     )
     exploded = buckets.select(F.explode(pair_structs).alias("p"))
     flip = F.col("p.x.rid") > F.col("p.y.rid")
-    sm_cols = (
-        [_agreement(F.col("p.x.sig"), F.col("p.y.sig")).alias("sig_matches")]
-        if need_sig
-        else []
-    )
-
-    def _oriented_carry(c: str):
-        a_val = F.when(flip, F.col(f"p.y.{c}")).otherwise(F.col(f"p.x.{c}"))
-        b_val = F.when(flip, F.col(f"p.x.{c}")).otherwise(F.col(f"p.y.{c}"))
-        return a_val.alias(f"ra_{c}"), b_val.alias(f"rb_{c}")
-
-    carry_cols = [col for c in carry for col in _oriented_carry(c)]
     rep_pairs = exploded.select(
         F.when(flip, F.col("p.y.rid")).otherwise(F.col("p.x.rid")).alias("ra"),
         F.when(flip, F.col("p.x.rid")).otherwise(F.col("p.y.rid")).alias("rb"),
-        *sm_cols,
-        *carry_cols,
+        _agreement(F.col("p.x.sig"), F.col("p.y.sig")).alias("sig_matches"),
     )
     if verify_min is not None:
         # Pre-distinct: the filter is a function of (ra, rb), so
@@ -740,8 +654,7 @@ def lsh_dedup_edges(
     pattern at 100 TB, where enumerating within-cluster pairs would be
     quadratic in cluster size for no information gain."""
     rep_pairs, multi = _lsh_rep_pairs(
-        signatures, id_col, k, bands, max_bucket, (),
-        need_sig=True, verify_min=verify_min,
+        signatures, id_col, k, bands, max_bucket, verify_min
     )
     near = rep_pairs.select(
         F.col("ra").alias("src_id"),
@@ -804,51 +717,12 @@ def lsh_probe_pairs(
         members.filter(F.col(id_col) == F.col("__rep")),
         id_col, k, bands, verify_min, "__has_new",
         lambda ha, hb: ha | hb,
-        ("__ha", "__hb"),
+        ("__fa", "__fb"),
     )
-
-    multi = members.filter(F.col("__cnt") > 1)
-    ma = multi.select(
-        F.col("__rep").alias("ra"),
-        F.col(id_col).alias("__xa"),
-        F.col("__new").alias("__na"),
+    out = expand_rep_pairs(
+        rep_pairs, members.filter(F.col("__cnt") > 1), id_col, "sig_matches", k,
+        flag="__new",
     )
-    mb = multi.select(
-        F.col("__rep").alias("rb"),
-        F.col(id_col).alias("__xb"),
-        F.col("__new").alias("__nb"),
-    )
-    # Singleton sides expand through coalesce; a singleton cluster's
-    # only member IS the rep, so its is_new equals the cluster-level
-    # has_new already riding the pair — no join back to the store.
-    exp = (
-        rep_pairs.join(ma, "ra", "left")
-        .join(mb, "rb", "left")
-        .withColumn("__ia", F.coalesce("__xa", "ra"))
-        .withColumn("__ib", F.coalesce("__xb", "rb"))
-        .withColumn("__ina", F.coalesce("__na", "__ha"))
-        .withColumn("__inb", F.coalesce("__nb", "__hb"))
-        .filter(F.col("__ina") | F.col("__inb"))
-    )
-    flip = F.col("__ia") > F.col("__ib")
-    cross = exp.select(
-        F.when(flip, F.col("__ib")).otherwise(F.col("__ia")).alias("id_a"),
-        F.when(flip, F.col("__ia")).otherwise(F.col("__ib")).alias("id_b"),
-        "sig_matches",
-    )
-
-    wa, wb = multi.alias("a"), multi.alias("b")
-    within = wa.join(
-        wb,
-        (F.col("a.__rep") == F.col("b.__rep"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        & (F.col("a.__new") | F.col("b.__new")),
-    ).select(
-        F.col(f"a.{id_col}").alias("id_a"),
-        F.col(f"b.{id_col}").alias("id_b"),
-        F.lit(k).cast("long").alias("sig_matches"),
-    )
-    out = cross.unionByName(within)
     if verify_min > k:  # degenerate caller threshold: nothing verifies
         out = out.filter(F.col("sig_matches") >= verify_min)
     return out

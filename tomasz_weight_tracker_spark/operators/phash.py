@@ -40,6 +40,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .dedup import expand_rep_pairs
+
 PHASH_BITS = 62
 PHASH_GRID_W, PHASH_GRID_H = 9, 8  # resample target; 8 comparisons/row
 PHASH_BANDS = 4  # 16/16/16/14-bit Hamming bands
@@ -122,9 +124,9 @@ def phash_near_dup_pairs(
     exact-duplicate images — the dominant mass in a crawl, and the
     thing a Hamming-ball cap would otherwise see as one giant bucket —
     never inflate a band bucket; the cap applies to DISTINCT hashes
-    per bucket, verified rep-pairs expand back through the
-    multi-member subset, and within-cluster pairs emit directly at
-    hamming 0 (true dups, output-bound).  The first version capped
+    per bucket, and verified rep-pairs expand back to member pairs
+    through :func:`dedup.expand_rep_pairs` (within-cluster pairs at
+    hamming 0 — true dups, output-bound).  The first version capped
     member-level buckets and the 10x soak measured exactly the
     round-7 LSH failure mode: every bucket over the cap, output 0.
     One band exchange over distinct hashes + one hash-keyed collapse
@@ -174,29 +176,6 @@ def phash_near_dup_pairs(
         )
         .distinct()
     )
-    multi = members.filter(F.col("__cnt") > 1)
-    ma = multi.select(F.col("__rep").alias("ra"), F.col(id_col).alias("__xa"))
-    mb = multi.select(F.col("__rep").alias("rb"), F.col(id_col).alias("__xb"))
-    exp = (
-        rep_pairs.join(ma, "ra", "left")
-        .join(mb, "rb", "left")
-        .withColumn("__ia", F.coalesce("__xa", "ra"))
-        .withColumn("__ib", F.coalesce("__xb", "rb"))
+    return expand_rep_pairs(
+        rep_pairs, members.filter(F.col("__cnt") > 1), id_col, "hamming", 0
     )
-    flip = F.col("__ia") > F.col("__ib")
-    cross = exp.select(
-        F.when(flip, F.col("__ib")).otherwise(F.col("__ia")).alias("id_a"),
-        F.when(flip, F.col("__ia")).otherwise(F.col("__ib")).alias("id_b"),
-        "hamming",
-    )
-    wa, wb = multi.alias("a"), multi.alias("b")
-    within = wa.join(
-        wb,
-        (F.col("a.__rep") == F.col("b.__rep"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-    ).select(
-        F.col(f"a.{id_col}").alias("id_a"),
-        F.col(f"b.{id_col}").alias("id_b"),
-        F.lit(0).cast("long").alias("hamming"),
-    )
-    return cross.unionByName(within)

@@ -299,9 +299,8 @@ def _lsh_audit_sample_truth(spark, sf_dir):
 def q_lsh_recall_audit(spark, sf_dir):
     samp, truth = _lsh_audit_sample_truth(spark, sf_dir)
     sig = D.minhash_signature(samp, "text", k=LSH_K).drop("text")
-    # sig_matches comes from the band-shuffled signature array
-    # (emit_sig_matches), the same verify the production lsh_near_dup
-    # runs.  Neither pair frame is checkpointed any more: the round-12
+    # sig_matches comes from the band-shuffled signature array, the
+    # same verify the production lsh_near_dup runs.  Neither pair frame is checkpointed any more: the round-12
     # tagged-union restructure below references each exactly ONCE, so
     # the TreeNode blowup that forced eager materialization (16-wide
     # signature trees re-inlined per downstream reference) cannot
@@ -313,22 +312,22 @@ def q_lsh_recall_audit(spark, sf_dir):
             k=LSH_K,
             bands=LSH_BANDS,
             max_bucket=LSH_CAP,
-            emit_sig_matches=True,
             verify_min=LSH_THRESH,
         )
         .filter(F.col("sig_matches") >= LSH_THRESH)
         .select("id_a", "id_b")
     )
-    # The uncapped twin isolates the bucket-handling recall cost
-    # (sample-bounded: at most N*(N-1)/2 pairs, safe without the cap).
+    # The uncapped twin isolates the bucket-handling recall cost: a
+    # cap of the sample size never splits a bucket, which is plain
+    # banding (sample-bounded: at most N*(N-1)/2 pairs).
     nocap = (
         D.lsh_candidate_pairs(
             sig,
             "doc_id",
             k=LSH_K,
             bands=LSH_BANDS,
-            max_bucket=None,
-            emit_sig_matches=True,
+            max_bucket=_AUDIT_N,
+            verify_min=LSH_THRESH,
         )
         .filter(F.col("sig_matches") >= LSH_THRESH)
         .select("id_a", "id_b")
@@ -2451,8 +2450,8 @@ def q_ngram_jaccard_pairs(spark, sf_dir):
 def q_lsh_near_dup(spark, sf_dir):
     d = load(spark, sf_dir, "documents")
     # Single-pass plan: sig_matches is computed from the band-shuffled
-    # signature array itself (emit_sig_matches) — no second join back
-    # to the signature table and no 2k-wide carry.  The earlier design
+    # signature array itself — no second join back to the signature
+    # table and no 2k-wide carry.  The earlier design
     # broadcast both sides of a verify join; a signature table is
     # corpus-cardinality (one row per document), so at 100 TB that
     # broadcast OOMs every executor.
@@ -2463,7 +2462,6 @@ def q_lsh_near_dup(spark, sf_dir):
         k=LSH_K,
         bands=LSH_BANDS,
         max_bucket=LSH_CAP,
-        emit_sig_matches=True,
         verify_min=LSH_THRESH,
     )
     return pairs.filter(F.col("sig_matches") >= LSH_THRESH).select(

@@ -8,6 +8,32 @@ from pyspark.sql import functions as F
 from .catalog import load, register
 
 
+def _synthetic_media(spark, sf_dir, blob):
+    """(media_id, content) with one synthetic blob per document:
+    ``blob(i)`` serializes document ``i``'s image, deterministic from
+    the id.  One Arrow-batched pass over doc_id."""
+    d = load(spark, sf_dir, "documents").select("doc_id")
+
+    def gen(batches):
+        import pandas as pd
+
+        for batch in batches:
+            rows = [
+                {"media_id": int(i), "content": blob(int(i))} for i in batch["doc_id"]
+            ]
+            yield pd.DataFrame(rows, columns=["media_id", "content"])
+
+    return d.mapInPandas(gen, "media_id long, content binary")
+
+
+def _mean_r():
+    """Decoded red-channel mean, floor-quantized to 1e-6 so the oracle's
+    closed-form value compares bit-exactly."""
+    return (
+        F.floor(F.element_at("features", 1) * F.lit(1000000.0)) / F.lit(1000000.0)
+    ).alias("mean_r")
+
+
 # ===========================================================================
 # GIF decode at the engine surface (round-7 codec: real LZW)
 # ===========================================================================
@@ -52,30 +78,14 @@ def q_media_decode_gif(spark, sf_dir):
     from ..operators import codecs
     from ..operators.multimodal import decode_media
 
-    d = load(spark, sf_dir, "documents").select("doc_id")
+    def blob(i):
+        w, h = 1 + i % 8, 1 + i % 4
+        pal = [((j * 40 + i) % 256, (j * 11 + i) % 256, (j * 3 + i) % 256)
+               for j in range(4)]
+        return codecs.make_gif(w, h, lambda x, y: (x + y + i) % 4, pal)
 
-    def gen(batches):
-        import pandas as pd
-
-        for batch in batches:
-            rows = []
-            for i in batch["doc_id"]:
-                i = int(i)
-                w, h = 1 + i % 8, 1 + i % 4
-                pal = [((j * 40 + i) % 256, (j * 11 + i) % 256, (j * 3 + i) % 256)
-                       for j in range(4)]
-                raw = codecs.make_gif(w, h, lambda x, y: (x + y + i) % 4, pal)
-                rows.append({"media_id": i, "content": raw})
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
-
-    media = d.mapInPandas(gen, "media_id long, content binary")
-    out = decode_media(media)
-    return out.select(
-        "media_id", "decoder", "width", "height",
-        (
-            F.floor(F.element_at("features", 1) * F.lit(1000000.0)) / F.lit(1000000.0)
-        ).alias("mean_r"),
-    )
+    out = decode_media(_synthetic_media(spark, sf_dir, blob))
+    return out.select("media_id", "decoder", "width", "height", _mean_r())
 
 
 # ===========================================================================
@@ -189,35 +199,21 @@ def q_media_phash_near_dup(spark, sf_dir):
     from ..operators import codecs
     from ..operators.phash import phash_media, phash_near_dup_pairs
 
-    d = load(spark, sf_dir, "documents").select("doc_id")
+    def blob(i):
+        w, h = 12 + i % 5, 10 + i % 3
+        base = i % _PHGROUP
 
-    def gen(batches):
-        import pandas as pd
+        def v(x, y):
+            v0 = (x * 31 + y * 17 + base * 29) % 256
+            if i % 4 != 0 and x < 2 and y < 2:
+                return (v0 + 128) % 256
+            return v0
 
-        for batch in batches:
-            rows = []
-            for i in batch["doc_id"]:
-                i = int(i)
-                w, h = 12 + i % 5, 10 + i % 3
-                base = i % _PHGROUP
+        if i % 2 == 0:
+            return codecs.make_bmp(w, h, lambda x, y: (v(x, y),) * 3)
+        return codecs.make_gif(w, h, v, [(j, j, j) for j in range(256)])
 
-                def v(x, y):
-                    v0 = (x * 31 + y * 17 + base * 29) % 256
-                    if i % 4 != 0 and x < 2 and y < 2:
-                        return (v0 + 128) % 256
-                    return v0
-
-                if i % 2 == 0:
-                    raw = codecs.make_bmp(w, h, lambda x, y: (v(x, y),) * 3)
-                else:
-                    raw = codecs.make_gif(
-                        w, h, v, [(j, j, j) for j in range(256)]
-                    )
-                rows.append({"media_id": i, "content": raw})
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
-
-    media = d.mapInPandas(gen, "media_id long, content binary")
-    return phash_near_dup_pairs(phash_media(media))
+    return phash_near_dup_pairs(phash_media(_synthetic_media(spark, sf_dir, blob)))
 
 
 # ===========================================================================
@@ -286,35 +282,14 @@ def q_media_decode_jpeg(spark, sf_dir):
     from ..operators import codecs
     from ..operators.multimodal import decode_media
 
-    d = load(spark, sf_dir, "documents").select("doc_id")
+    def blob(i):
+        w, h = 16 + 8 * (i % 3), 8 + 8 * (i % 2)
+        return codecs.make_jpeg(
+            w, h, lambda x, y: (i * 31 + (x // 8) * 7 + (y // 8) * 13) % 256
+        )
 
-    def gen(batches):
-        import pandas as pd
-
-        for batch in batches:
-            rows = []
-            for i in batch["doc_id"]:
-                i = int(i)
-                w, h = 16 + 8 * (i % 3), 8 + 8 * (i % 2)
-                raw = codecs.make_jpeg(
-                    w,
-                    h,
-                    lambda x, y, i=i: (i * 31 + (x // 8) * 7 + (y // 8) * 13) % 256,
-                )
-                rows.append({"media_id": i, "content": raw})
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
-
-    media = d.mapInPandas(gen, "media_id long, content binary")
-    out = decode_media(media)
-    return out.select(
-        "media_id",
-        "decoder",
-        "width",
-        "height",
-        (
-            F.floor(F.element_at("features", 1) * F.lit(1000000.0)) / F.lit(1000000.0)
-        ).alias("mean_r"),
-    )
+    out = decode_media(_synthetic_media(spark, sf_dir, blob))
+    return out.select("media_id", "decoder", "width", "height", _mean_r())
 
 
 @register(
@@ -387,42 +362,25 @@ def q_media_decode(spark, sf_dir):
     from ..operators import codecs
     from ..operators.multimodal import decode_media
 
-    d = load(spark, sf_dir, "documents").select("doc_id")
+    def blob(i):
+        w, h = 1 + i % 8, 1 + i % 4
+        if i % 2 == 0:
+            # pixel_fn returns (b, g, r): the x-varying ramp goes
+            # in RED (last) — the oracle recomputes mean_r from it.
+            return codecs.make_bmp(
+                w,
+                h,
+                lambda x, y: (i % 256, (y * 53 + i) % 256, (x * 37 + i) % 256),
+            )
+        # make_png's pixel_fn is (r, g, b); same red ramp.  Paeth
+        # filter so the gate exercises a non-trivial unfilter path,
+        # not just filter 0.
+        return codecs.make_png(
+            w,
+            h,
+            lambda x, y: ((x * 37 + i) % 256, (y * 53 + i) % 256, i % 256),
+            filter_type=4,
+        )
 
-    def gen(batches):
-        import pandas as pd
-
-        for batch in batches:
-            rows = []
-            for i in batch["doc_id"]:
-                i = int(i)
-                w, h = 1 + i % 8, 1 + i % 4
-                if i % 2 == 0:
-                    # pixel_fn returns (b, g, r): the x-varying ramp goes
-                    # in RED (last) — the oracle recomputes mean_r from it.
-                    raw = codecs.make_bmp(
-                        w,
-                        h,
-                        lambda x, y: (i % 256, (y * 53 + i) % 256, (x * 37 + i) % 256),
-                    )
-                else:
-                    # make_png's pixel_fn is (r, g, b); same red ramp.
-                    # Paeth filter so the gate exercises a non-trivial
-                    # unfilter path, not just filter 0.
-                    raw = codecs.make_png(
-                        w,
-                        h,
-                        lambda x, y: ((x * 37 + i) % 256, (y * 53 + i) % 256, i % 256),
-                        filter_type=4,
-                    )
-                rows.append({"media_id": i, "content": raw})
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
-
-    media = d.mapInPandas(gen, "media_id long, content binary")
-    out = decode_media(media)
-    return out.select(
-        "media_id", "decoder", "width", "height", "n_bytes",
-        (
-            F.floor(F.element_at("features", 1) * F.lit(1000000.0)) / F.lit(1000000.0)
-        ).alias("mean_r"),
-    )
+    out = decode_media(_synthetic_media(spark, sf_dir, blob))
+    return out.select("media_id", "decoder", "width", "height", "n_bytes", _mean_r())
