@@ -120,7 +120,9 @@ def run(spark, args) -> int:
 
         for sensor, merged in consolidate_sensors(spark, args.input_dir).items():
             out = f"{args.out_dir}/{sanitize_filename(sensor)}.csv"
-            write_single_csv(merged, out)
+            # One output file: sorting its single partition needs no
+            # range-sampling job, unlike a global orderBy.
+            write_single_csv(merged.coalesce(1).sortWithinPartitions("Timestamp"), out)
             print(f"wrote {out}")
         return 0
 

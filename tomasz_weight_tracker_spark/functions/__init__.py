@@ -61,6 +61,12 @@ def conflict(a: Column, b: Column, rtol: float = 1e-5, atol: float = 1e-9) -> Co
     return ~values_close(a, b, rtol, atol)
 
 
+def conflict_sql(a: str, b: str, rtol: float = 1e-5, atol: float = 1e-9) -> str:
+    """:func:`conflict` as SQL text, for two operands known NON-NULL
+    (the null cases of np.isclose are the caller's guards)."""
+    return f"NOT (abs({a} - {b}) <= {float(atol)!r}D + {float(rtol)!r}D * abs({b}))"
+
+
 # ---------------------------------------------------------------------------
 # Unit stripping + tokenize (reference G1/G2,
 # utils/20251223-weight-for-streamlit.py:60-68).

@@ -16,28 +16,37 @@ full-outer join on Timestamp:
   columns sorted by name (P1).
 
 Spark posture: the conflict columns make the output schema
-data-dependent, which a static Spark plan cannot express — so ONE
-cheap probe aggregation (a single ``agg(max(cond))`` pass over the
-rank-aggregated frame) decides which conflict columns enter the
-schema.  :func:`merge_step` is the executable step-wise specification
-(one full-outer join + probe per file, the reference's literal fold);
-:func:`merge_sensor_frames` is the production path — the fold
-collapsed algebraically into one union + one Timestamp-keyed
-aggregation (see its docstring), property-tested equivalent to the
-step-wise fold.  At 100 TB scale with many sensors the union scan is
-embarrassingly parallel and the single aggregation shuffles each
-sensor's rows once.
+data-dependent, which a static Spark plan cannot express, so ONE probe
+action decides the schema.  :func:`merge_step` is the executable
+step-wise specification (one full-outer join + probe per file, the
+reference's literal fold).  The production core collapses the fold
+algebraically into one union + one Timestamp-keyed aggregation (see
+:func:`merge_sensor_frames`, property-tested equivalent to the
+step-wise fold), and its single probe returns both the conflict flags
+and the per-measure non-null counts (a conflict column is non-null
+exactly where its flag is set, so P4 pruning needs no pass of its own).
+
+:func:`consolidate_sensors` reads every header on the driver, unions the
+sensor's per-file scans tagged with the file rank, and runs the
+within-file keep-last dedup once over the union, partitioned by
+``(rank, Timestamp)`` on top of the aggregation's own ``Timestamp``
+exchange.  One sensor therefore costs the same few jobs (the probe
+and the write) whatever its number of exports.  At 100 TB scale with
+many sensors the union scan is embarrassingly parallel and the single
+exchange shuffles each sensor's rows once.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import conflict, conflict_tag
-from ..sources.csv_normalized import normalized_sensor_scan, sensor_files
+from ..functions import conflict, conflict_sql, conflict_tag
+from ..operators.dedup import dedup_keep_last
+from ..sources.csv_normalized import read_sensor_header, sensor_files, sensor_rows
 
 
 def _is_conflict_col(name: str) -> bool:
@@ -118,6 +127,101 @@ def order_columns(df: DataFrame) -> DataFrame:
     return df.select("Timestamp", *[F.col(f"`{c}`") for c in regular + conflicts])
 
 
+def _ranked_union(
+    frames: Sequence[DataFrame],
+    per_file_cols: Sequence[Sequence[str]],
+    jdx: dict[str, int],
+    *carry: str,
+) -> DataFrame:
+    """Tag each frame with its file rank as a literal and union them,
+    measure c renamed ``__m_<jdx[c]>`` (null where a file lacks it)."""
+    tagged = [
+        f.select(
+            F.lit(i).alias("__rank"),
+            "Timestamp",
+            *carry,
+            *[F.col(f"`{c}`").alias(f"__m_{jdx[c]}") for c in cols],
+        )
+        for i, (f, cols) in enumerate(zip(frames, per_file_cols))
+    ]
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), tagged)
+
+
+def _measure_index(per_file_cols: Sequence[Sequence[str]]) -> dict[str, int]:
+    """Measure -> index, in first-seen order across files."""
+    jdx: dict[str, int] = {}
+    for cols in per_file_cols:
+        for c in cols:
+            jdx.setdefault(c, len(jdx))
+    return jdx
+
+
+def _merge_ranked(
+    u: DataFrame,
+    per_file_cols: Sequence[Sequence[str]],
+    jdx: dict[str, int],
+    rtol: float = 1e-5,
+    atol: float = 1e-9,
+) -> DataFrame:
+    """The merge core over a ranked union (``__rank``, Timestamp,
+    ``__m_<j>``) that is unique on (rank, Timestamp); rows come back in
+    no particular order.  Runs one action, the schema probe (none when
+    there is nothing to probe)."""
+    # Potential conflict sites (s, c): column c arrives in file s AND
+    # was already present in some earlier file — the only pairs where
+    # merge_step could have raised a conflict.  Order matches the
+    # fold: step-major, then the incoming file's own column order.
+    seen = set(per_file_cols[0])
+    potential: list[tuple[int, str]] = []
+    for s in range(1, len(per_file_cols)):
+        potential += [(s, c) for c in per_file_cols[s] if c in seen]
+        seen |= set(per_file_cols[s])
+
+    # The expressions are SQL text: one parse on the JVM each, where the
+    # Column API pays a Py4J round trip per operator (thousands per
+    # sensor, most of the driver's time).
+    aggs = [
+        f"min(IF(__m_{j} IS NULL, NULL, named_struct('r', __rank, 'v', __m_{j})))"
+        f" AS __first_{j}"
+        for j in jdx.values()
+    ] + [
+        # (rank, Timestamp) unique per the dedup contract, so max()
+        # selects THE value file s holds at this Timestamp (or null).
+        f"max(IF(__rank = {s}, __m_{jdx[c]}, NULL)) AS __at_{s}_{jdx[c]}"
+        for s, c in potential
+    ]
+    agg = u.groupBy("Timestamp").agg(*[F.expr(e) for e in aggs])
+
+    # merge_step's test verbatim: accumulated existed before step s
+    # (first rank < s), incoming non-null, genuinely disagree — same
+    # argument order into the tolerance (rtol scales |incoming|).
+    conds: dict[tuple[int, str], str] = {}
+    for s, c in potential:
+        first, vs = f"__first_{jdx[c]}", f"__at_{s}_{jdx[c]}"
+        conds[s, c] = f"{first}.r < {s} AND {vs} IS NOT NULL AND " + conflict_sql(
+            f"{first}.v", vs, rtol, atol
+        )
+    # ONE probe action: which measures hold any value (P4) and which
+    # (step, column) sites conflict.  A conflict column is non-null
+    # exactly where its flag is set, so it never needs pruning.
+    probe_cols = [f"count(__first_{j}) AS n_{j}" for j in jdx.values()] + [
+        f"bool_or({conds[s, c]}) AS p_{s}_{jdx[c]}" for s, c in potential
+    ]
+    probe = agg.selectExpr(*probe_cols).first() if probe_cols else None
+    kept = [c for c, j in jdx.items() if probe[f"n_{j}"] > 0]
+    conflicted = [(s, c) for s, c in potential if probe[f"p_{s}_{jdx[c]}"]]
+
+    out_cols = [F.col("Timestamp")] + [
+        F.expr(f"__first_{jdx[c]}.v").alias(c) for c in kept
+    ]
+    for idx, (s, c) in enumerate(conflicted):
+        tag = conflict_tag(idx)
+        out_cols.append(
+            F.expr(f"IF({conds[s, c]}, __at_{s}_{jdx[c]}, NULL)").alias(f"{tag} {c}")
+        )
+    return order_columns(agg.select(*out_cols))
+
+
 def merge_sensor_frames(
     frames: Sequence[DataFrame], rtol: float = 1e-5, atol: float = 1e-9
 ) -> DataFrame:
@@ -134,114 +238,45 @@ def merge_sensor_frames(
     c non-null at that Timestamp.  Therefore the conflict test at
     step s — accumulated vs incoming — is exactly first-non-null vs
     file s's value, computable per row from the (rank, value) set
-    without ever materializing the intermediate folds.  The verdict's
-    suggested rank-carrying tree fold would cut sequential depth to
-    log2(n); this is the same priority-by-rank idea taken to its
-    fixed point — depth 1, a single Timestamp-keyed shuffle, and ONE
-    probe action for every (step, column) conflict decision at once
-    (merge_step remains as the executable step-wise specification;
-    the equivalence is property-tested in tests/test_properties.py).
+    without ever materializing the intermediate folds: depth 1, a
+    single Timestamp-keyed shuffle, and ONE probe action for every
+    (step, column) conflict decision and every measure's non-null
+    count at once (merge_step remains as the executable step-wise
+    specification; the equivalence is property-tested in
+    tests/test_properties.py).
 
     Scale posture: 100 TB of exports is one union scan + one
     hash-aggregate on Timestamp (map-side partial per file-partition),
     versus n-1 shuffling joins whose lineage the old fold had to
     localCheckpoint every 4 steps.
     """
-    if len(frames) == 1:
-        return order_columns(drop_all_null_columns(frames[0])).orderBy("Timestamp")
-
     per_file_cols = [[c for c in f.columns if c != "Timestamp"] for f in frames]
-    measures: list[str] = []  # first-seen order across files
-    for cols in per_file_cols:
-        for c in cols:
-            if c not in measures:
-                measures.append(c)
-    jdx = {c: j for j, c in enumerate(measures)}
-
-    tagged = [
-        f.select(
-            F.lit(i).alias("__rank"),
-            "Timestamp",
-            *[F.col(f"`{c}`").alias(f"__m_{jdx[c]}") for c in cols],
-        )
-        for i, (f, cols) in enumerate(zip(frames, per_file_cols))
-    ]
-    u = tagged[0]
-    for t in tagged[1:]:
-        u = u.unionByName(t, allowMissingColumns=True)
-
-    # Potential conflict sites (s, c): column c arrives in file s AND
-    # was already present in some earlier file — the only pairs where
-    # merge_step could have raised a conflict.  Order matches the
-    # fold: step-major, then the incoming file's own column order.
-    seen = set(per_file_cols[0])
-    potential: list[tuple[int, str]] = []
-    for s in range(1, len(frames)):
-        potential += [(s, c) for c in per_file_cols[s] if c in seen]
-        seen |= set(per_file_cols[s])
-
-    aggs = [
-        F.min(
-            F.when(
-                F.col(f"__m_{jdx[c]}").isNotNull(),
-                F.struct(F.col("__rank").alias("r"), F.col(f"__m_{jdx[c]}").alias("v")),
-            )
-        ).alias(f"__first_{jdx[c]}")
-        for c in measures
-    ] + [
-        # (rank, Timestamp) unique per the dedup contract, so max()
-        # selects THE value file s holds at this Timestamp (or null).
-        F.max(F.when(F.col("__rank") == s, F.col(f"__m_{jdx[c]}"))).alias(
-            f"__at_{s}_{jdx[c]}"
-        )
-        for s, c in potential
-    ]
-    agg = u.groupBy("Timestamp").agg(*aggs)
-
-    def cond(s: int, c: str):
-        first, vs = F.col(f"__first_{jdx[c]}"), F.col(f"__at_{s}_{jdx[c]}")
-        # merge_step's test verbatim: accumulated existed before step s
-        # (first rank < s), incoming non-null, genuinely disagree —
-        # same argument order into conflict() (rtol scales |incoming|).
-        return (
-            first.isNotNull()
-            & (first["r"] < s)
-            & vs.isNotNull()
-            & conflict(first["v"], vs, rtol, atol)
-        )
-
-    # ONE probe action decides every conflict column in the schema.
-    if potential:
-        probe = agg.agg(
-            *[
-                F.max(cond(s, c).cast("int")).alias(f"p_{s}_{jdx[c]}")
-                for s, c in potential
-            ]
-        ).first()
-        conflicted = [(s, c) for s, c in potential if probe[f"p_{s}_{jdx[c]}"] == 1]
-    else:
-        conflicted = []
-
-    out_cols = [F.col("Timestamp")] + [
-        F.col(f"__first_{jdx[c]}")["v"].alias(c) for c in measures
-    ]
-    for idx, (s, c) in enumerate(conflicted):
-        tag = conflict_tag(idx)
-        out_cols.append(
-            F.when(cond(s, c), F.col(f"__at_{s}_{jdx[c]}")).alias(f"{tag} {c}")
-        )
-    combined = agg.select(*out_cols)
-    combined = drop_all_null_columns(combined)
-    return order_columns(combined).orderBy("Timestamp")
+    jdx = _measure_index(per_file_cols)
+    u = _ranked_union(frames, per_file_cols, jdx)
+    return _merge_ranked(u, per_file_cols, jdx, rtol, atol).orderBy("Timestamp")
 
 
 def consolidate_sensors(
     spark: SparkSession, input_dir: str
 ) -> dict[str, DataFrame]:
-    """Full W2 entry point: group files by sensor (S5), scan+normalize
-    each (S4), fold-merge per sensor.  Returns {sensor: merged frame}."""
+    """Full W2 entry point: group files by sensor (S5), read and check
+    every header on the driver, scan and normalize each file (S4), and
+    merge per sensor.  Returns {sensor: merged frame}, rows in no
+    particular order (sort when writing: the CLI sorts its single
+    output partition, which needs no range-sampling job).
+
+    Raises ``SensorFileError`` (``sources/csv_normalized.py``) naming
+    the file for an export it cannot read, before any Spark job runs."""
     out: dict[str, DataFrame] = {}
     for sensor, files in sensor_files(input_dir).items():
-        frames = [normalized_sensor_scan(spark, f.path) for f in files]
-        out[sensor] = merge_sensor_frames(frames)
+        headers = [read_sensor_header(f.path) for f in files]
+        per_file_cols = [h.measures for h in headers]
+        jdx = _measure_index(per_file_cols)
+        scans = [sensor_rows(spark, f.path, h) for f, h in zip(files, headers)]
+        # Hash-partitioning on Timestamp alone satisfies both the
+        # (rank, Timestamp) dedup window and the Timestamp aggregation:
+        # one exchange for the whole sensor.
+        u = _ranked_union(scans, per_file_cols, jdx, "__order").repartition("Timestamp")
+        u = dedup_keep_last(u, ["__rank", "Timestamp"], [F.col("__order")]).drop("__order")
+        out[sensor] = _merge_ranked(u, per_file_cols, jdx)
     return out

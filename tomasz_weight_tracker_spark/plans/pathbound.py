@@ -46,7 +46,7 @@ from .catalog import load, register
 #          file1 wherever both present, i.e. h%15==0); pressure all
 #          NULL -> pruned by drop_all_null_columns (P4).
 # Expected output schema: Timestamp, temp, humidity, '!A! temp',
-# '!B! humidity' — the conflict columns materialize via merge_step's
+# '!B! humidity' — the conflict columns materialize via the merge's
 # probe aggregation, so this query exercises the data-dependent-schema
 # machinery end to end.
 # Two ANCHOR hours (epoch hours 0 and 60) are unioned into the grid on
@@ -113,9 +113,10 @@ def q_sensor_merge_fold(spark, sf_dir):
         .union(anchors)
         .distinct()
     )
-    # The grid feeds f0/f1/f2 AND merge_step's probe actions — separate
-    # jobs that share no exchange, so materialize it once or every probe
-    # re-runs the events scan + distinct.
+    # The grid feeds f0/f1/f2, which merge_sensor_frames reads twice: in
+    # its one probe action and in the caller's output action.  These
+    # share no exchange, so materialize the grid once or both re-run
+    # the events scan + distinct.
     hh = hours.withColumn(
         "__h", F.expr("unix_timestamp(Timestamp) div 3600")
     ).localCheckpoint(eager=True)

@@ -11,23 +11,38 @@ The reference's raw sensor exports (reference ``data/*.csv``) have:
   ``Temperature_Celsius`` — schema drift ACROSS files of one sensor;
 - leading spaces in header cells.
 
-Spark-first treatment: one ``spark.read.csv`` per file (schema drift
-makes per-file reads the unit of planning — SURVEY §3.2), header
-normalization via ``toDF``, timestamp parse + null filter + keep-last
-dedup (A6) + ``try_cast`` numeric coercion (G9).  File→sensor grouping
-(S5) is driver-side path logic exactly like the reference's glob, but
-returns keys usable with ``input_file_name()`` when reading many files
-in one plan.
+Spark-first treatment: the header line of each export is read on the
+driver (:func:`read_sensor_header` — :func:`sensor_files` already globs
+the local directory there), normalized and validated, and the file is
+scanned with an explicit all-string schema (:func:`sensor_rows`), so a
+scan costs no header-inference job and the plan is fixed before any
+data moves.  Each scan parses the timestamp (P5 drops unparseable
+ones), numbers the rows in file order for keep-last dedup (A6), and
+``try_cast``s every measure (G9).  :func:`normalized_sensor_scan` is
+the deduplicated per-file frame; the W2 consolidation unions the
+undeduplicated scans of a sensor and dedups them once (see
+``pipelines/sensors.py``).
+
+Bad files have a defined outcome.  A 0-byte file, a header without a
+timestamp-like column, and a header whose normalized names repeat
+(case-insensitively, as Spark resolves names) raise
+:class:`SensorFileError` with the path.  A header-only file contributes
+no rows (its columns are pruned unless another file fills them).  A
+truncated last line keeps the cells it has: missing trailing cells are
+null, and a line cut inside its timestamp fails the parse and is
+dropped like any unparseable timestamp.
 """
 
 from __future__ import annotations
 
+import csv
 import re
 from dataclasses import dataclass
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions import try_double
 from ..operators.dedup import dedup_keep_last
@@ -75,30 +90,78 @@ def normalize_header(name: str) -> str:
     return CALIBRATION_RE.sub("", n)
 
 
-def normalized_sensor_scan(spark: SparkSession, path: str) -> DataFrame:
-    """S4: one sensor export -> typed (Timestamp, measures...) frame.
+class SensorFileError(ValueError):
+    """A sensor export the W2 consolidation cannot read; names the file."""
 
-    Steps (mirroring utils/20251223-csv-to-separate-sensors.py:52-85,
-    each as a native Spark op):  header normalization (toDF), timestamp
-    parse with coerce semantics, null-timestamp filter (P5), keep-last
-    dedup on Timestamp in file order (A6), try_cast numeric coercion of
-    every measure column (G9).
+
+@dataclass(frozen=True)
+class SensorHeader:
+    raw: tuple[str, ...]  # header cells as written: the scan schema's names
+    columns: tuple[str, ...]  # normalized; exactly one is "Timestamp"
+
+    @property
+    def measures(self) -> list[str]:
+        return [c for c in self.columns if c != "Timestamp"]
+
+
+def read_sensor_header(path: str) -> SensorHeader:
+    """Read and validate one export's header line on the driver.
+
+    Like Spark's CSV header, the header is the first non-blank line;
+    empty cells are named ``_c<i>``.  Raises :class:`SensorFileError`
+    for a 0-byte file, a header without a timestamp-like column, or
+    normalized names that repeat.
     """
-    raw = spark.read.option("header", True).csv(path)
-    df = raw.toDF(*[normalize_header(c) for c in raw.columns])
-    if "Timestamp" not in df.columns:
-        raise ValueError(f"no timestamp-like column in {path}: {raw.columns}")
-    measures = [c for c in df.columns if c != "Timestamp"]
-    df = (
-        df.withColumn("Timestamp", F.try_to_timestamp(F.col("Timestamp")))
-        .filter(F.col("Timestamp").isNotNull())
-        # File order = row order within the file; keep-last uses a
-        # monotonic id as the within-file tiebreak, matching pandas
-        # drop_duplicates(keep='last') on a sorted frame.
-        .withColumn("__file_order", F.monotonically_increasing_id())
+    # utf-8-sig drops a leading BOM, as Spark's CSV reader does.
+    with open(path, encoding="utf-8-sig", errors="replace", newline="") as f:
+        line = next((ln for ln in f if ln.strip()), None)
+    if line is None:
+        raise SensorFileError(f"empty sensor export (no header line): {path}")
+    raw = tuple(
+        cell if cell else f"_c{i}" for i, cell in enumerate(next(csv.reader([line])))
     )
-    df = dedup_keep_last(df, ["Timestamp"], [F.col("__file_order")]).drop("__file_order")
-    return df.select("Timestamp", *[try_double(c).alias(c) for c in measures])
+    columns = tuple(normalize_header(c) for c in raw)
+    if "Timestamp" not in columns:
+        raise SensorFileError(f"no timestamp-like column in {path}: {list(raw)}")
+    folded = [c.lower() for c in columns]
+    repeated = sorted({c for c in columns if folded.count(c.lower()) > 1})
+    if repeated:
+        raise SensorFileError(
+            f"header of {path} repeats {repeated} after normalization: {list(raw)}"
+        )
+    return SensorHeader(raw, columns)
+
+
+def sensor_rows(spark: SparkSession, path: str, header: SensorHeader) -> DataFrame:
+    """S4 scan of one export, NOT deduplicated: Timestamp (rows whose
+    timestamp does not parse are dropped, P5), ``__order`` (the row's
+    position in the file, the keep-last tiebreak), then every measure
+    coerced to double (G9).  The explicit schema means no job runs
+    until the caller's action."""
+    schema = T.StructType([T.StructField(n, T.StringType()) for n in header.raw])
+    # Positional names: the scan's names are the file's own, and a
+    # measure name may hold characters that column resolution parses.
+    pos = [f"__c{i}" for i in range(len(header.raw))]
+    raw = spark.read.schema(schema).option("header", True).csv(path).toDF(*pos)
+    by_name = dict(zip(header.columns, pos))
+    return (
+        raw.select(
+            F.try_to_timestamp(F.col(by_name["Timestamp"])).alias("Timestamp"),
+            # File order = row order within the file (matching pandas
+            # drop_duplicates(keep='last') on the file as read).
+            F.monotonically_increasing_id().alias("__order"),
+            *[try_double(by_name[c]).alias(c) for c in header.measures],
+        )
+        .filter(F.col("Timestamp").isNotNull())
+    )
+
+
+def normalized_sensor_scan(spark: SparkSession, path: str) -> DataFrame:
+    """S4: one sensor export -> typed (Timestamp, measures...) frame,
+    unique on Timestamp (keep-last in file order, A6)
+    (utils/20251223-csv-to-separate-sensors.py:52-85)."""
+    rows = sensor_rows(spark, path, read_sensor_header(path))
+    return dedup_keep_last(rows, ["Timestamp"], [F.col("__order")]).drop("__order")
 
 
 def inferred_csv_scan(spark: SparkSession, path: str) -> DataFrame:
