@@ -75,9 +75,7 @@ FROM rated GROUP BY bucket
 class TestElectricityGolden:
     def test_full_chain_matches_duckdb(self, spark, duck):
         readings = read_meter_csv(spark, str(METER_CSV))
-        got = fifteen_minute_usage(
-            readings, tz="Europe/London", max_gap_minutes=None, ordered=False
-        )
+        got = fifteen_minute_usage(readings, tz="Europe/London", max_gap_minutes=None)
         srows = {
             r.Bucket: (r.MinDateTime, r.MaxDateTime, r.Minutes, r.P_Usage, r.OP_Usage)
             for r in got.collect()
@@ -96,7 +94,7 @@ class TestElectricityGolden:
         """Σ allocated == meter delta over intervals that have matching
         minutes (all reference intervals span both categories)."""
         readings = read_meter_csv(spark, str(METER_CSV))
-        usage = fifteen_minute_usage(readings, tz="Europe/London", ordered=False)
+        usage = fifteen_minute_usage(readings, tz="Europe/London")
         sums = usage.agg(
             F.sum("P_Usage").alias("p"), F.sum("OP_Usage").alias("op")
         ).first()

@@ -174,6 +174,26 @@ class TestHtmlTables:
         assert by_key[(0, 1)].cells == ["Acme Engineer", "Applied"]  # whitespace squashed
         assert by_key[(1, 0)].row_text == "solo"
 
+    def test_part_charset_decodes_cells(self, spark, tmp_path):
+        """A latin-1 part decodes by its charset on both header paths:
+        the single-part fast path and the multipart stdlib walk.  A
+        charset without a codec reads as UTF-8 instead of failing."""
+        from tomasz_weight_tracker_spark.pipelines.jobsearch import extract_html_tables
+
+        html = "<table><tr><td>Z\xfcrich</td><td>caf\xe9</td></tr></table>"
+        single = f"Content-Type: text/html; charset=iso-8859-1\r\n\r\n{html}"
+        multi = (
+            'MIME-Version: 1.0\nContent-Type: multipart/related; boundary="B"\n\n'
+            "--B\nContent-Type: text/html; charset=iso-8859-1\n"
+            f"Content-Transfer-Encoding: 8bit\n\n{html}\n--B--\n"
+        )
+        (tmp_path / "20251120single.mhtml").write_bytes(single.encode("latin-1"))
+        (tmp_path / "20251120multi.mhtml").write_bytes(multi.encode("latin-1"))
+        bogus = single.replace("iso-8859-1", "x-no-such-codec")
+        (tmp_path / "20251120bogus.mhtml").write_bytes(bogus.encode("utf-8"))
+        out = extract_html_tables(spark, str(tmp_path / "*.mhtml")).collect()
+        assert sorted(r.row_text for r in out) == ["Z\xfcrich | caf\xe9"] * 3
+
 
 class TestFastPartsEquivalence:
     """The round-13 header fast path must agree byte-for-byte with the

@@ -61,7 +61,7 @@ def test_minutes_and_conservation(series):
         rows.append((t0 + dt.timedelta(minutes=o), p, op))
         p, op = p + dp, op + dop
     readings = spark.createDataFrame(rows, "LocalDateTime timestamp, P bigint, OP bigint")
-    usage = fifteen_minute_usage(readings, tz=None, ordered=False)
+    usage = fifteen_minute_usage(readings, tz=None)
     agg = usage.agg(
         F.sum("Minutes").alias("mins"),
         F.sum("P_Usage").alias("p"),

@@ -177,10 +177,9 @@ class TestRecallAudit:
 
 
 class TestTuneForScale:
-    """Partitions-follow-data (session.tune_for_scale): the local
-    mirror of shuffle_partitions_for — small corpora must not pay a
-    32-empty-reduce-task scheduler floor per exchange, big local
-    corpora must keep the machine wide."""
+    """Partitions-follow-data (session.tune_for_scale): small corpora
+    must not pay a 32-empty-reduce-task scheduler floor per exchange,
+    big local corpora must keep the machine wide."""
 
     def test_proportionality_and_bounds(self, spark, tmp_path):
         from tomasz_weight_tracker_spark.session import _DEFAULT_CPUS, tune_for_scale

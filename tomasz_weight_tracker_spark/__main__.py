@@ -110,7 +110,7 @@ def run(spark, args) -> int:
 
         readings = read_meter_csv(spark, args.meter_csv)
         usage = fifteen_minute_usage(readings, tz=args.tz)
-        write_single_csv(usage, args.out_csv)
+        write_single_csv(usage.coalesce(1).sortWithinPartitions("Bucket"), args.out_csv)
         print(f"wrote {args.out_csv}")
         return 0
 

@@ -18,12 +18,12 @@ per-key aggregate table (see sources/writers.upsert_by_key) instead.
 
 from __future__ import annotations
 
-import os
-import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..sources.writers import live_table, replace_table
 
 
 def incremental_topk(
@@ -45,43 +45,23 @@ def incremental_topk(
     stored state is deterministic (same discipline as the catalog's
     ordered queries).
 
-    Crash safety: the new top-k is written to a SIBLING directory and
-    swapped in with directory renames (state -> .bak, .tmp -> state),
-    never overwriting live state in place — a failure at any point
-    leaves either the old state or the old state's ``.bak`` intact,
-    and the read path falls back to ``.bak`` when a crash happened
-    between the two renames.  (The previous read-checkpoint-overwrite
-    cycle could truncate the only copy mid-write.)
+    Crash safety: the state is rewritten the way every stored table
+    is, by ``sources/writers.replace_table`` — the new top-k goes to a
+    hidden sibling that is swapped in with two renames, never over the
+    live state in place, and ``live_table`` puts the backup back when
+    a crash fell between the renames.
     """
-    state_path = Path(state_path)
-    tmp = state_path.parent / (state_path.name + ".tmp")
-    bak = state_path.parent / (state_path.name + ".bak")
+    state_path = live_table(state_path)
     order = [F.col(order_col).desc()] + [
         F.col(c).asc() for c in (tiebreak_cols or [])
     ]
-    live = state_path if state_path.exists() else bak
-    if live.exists():
-        prev = spark.read.parquet(str(live)).select(*new_batch.columns)
+    if state_path.exists():
+        prev = spark.read.parquet(str(state_path)).select(*new_batch.columns)
         merged = prev.unionByName(new_batch)
     else:
         merged = new_batch
-    # The plan reads the live directory and writes a DIFFERENT one, so
-    # no checkpoint is needed to break a read-then-overwrite cycle.
-    merged.orderBy(*order).limit(k).write.mode("overwrite").parquet(str(tmp))
-    _swap_state(state_path, tmp, bak)
+    replace_table(merged.orderBy(*order).limit(k), state_path)
     return spark.read.parquet(str(state_path))
-
-
-def _swap_state(state_path: Path, tmp: Path, bak: Path) -> None:
-    """Atomic-enough two-rename state swap (see incremental_topk's
-    crash-safety note): state -> .bak, .tmp -> state; a crash at any
-    point leaves a complete copy under one of the two names."""
-    if bak.exists():
-        shutil.rmtree(bak)
-    if state_path.exists():
-        os.rename(state_path, bak)
-    os.rename(tmp, state_path)
-    shutil.rmtree(bak, ignore_errors=True)
 
 
 def incremental_agg(
@@ -107,12 +87,10 @@ def incremental_agg(
 
     ``value_col`` must be integer-typed (quantize floats upstream —
     integer sums are order-insensitive and engine-exact; a double sum
-    would depend on partition merge order).  Same two-rename crash
-    safety as incremental_topk.
+    would depend on partition merge order).  Same crash safety as
+    incremental_topk.
     """
-    state_path = Path(state_path)
-    tmp = state_path.parent / (state_path.name + ".tmp")
-    bak = state_path.parent / (state_path.name + ".bak")
+    state_path = live_table(state_path)
     v = F.col(value_col)
     partial = new_batch.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("n"),
@@ -120,9 +98,8 @@ def incremental_agg(
         F.min(v).alias("min_v"),
         F.max(v).alias("max_v"),
     )
-    live = state_path if state_path.exists() else bak
-    if live.exists():
-        prev = spark.read.parquet(str(live)).select(*partial.columns)
+    if state_path.exists():
+        prev = spark.read.parquet(str(state_path)).select(*partial.columns)
         merged = (
             prev.unionByName(partial)
             .groupBy(*keys)
@@ -135,6 +112,5 @@ def incremental_agg(
         )
     else:
         merged = partial
-    merged.write.mode("overwrite").parquet(str(tmp))
-    _swap_state(state_path, tmp, bak)
+    replace_table(merged, state_path)
     return spark.read.parquet(str(state_path))

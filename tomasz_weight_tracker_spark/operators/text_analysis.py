@@ -46,21 +46,6 @@ def marker_hits(text: Column, markers: tuple[str, ...]) -> Column:
     return F.size(F.filter(tokens(F.lower(text)), lambda t: F.array_contains(arr, t))).cast("long")
 
 
-def lang_scores(text: Column) -> dict[str, Column]:
-    return {lang: marker_hits(text, m) for lang, m in LANG_MARKERS.items()}
-
-
-def predict_lang(text: Column) -> Column:
-    """Argmax of marker hits with fixed priority order (en > de > es > fr),
-    CJK characters short-circuit to 'zh'; all-zero scores -> 'und'."""
-    s = lang_scores(text)
-    best = F.greatest(*s.values())
-    expr = F.when(text.rlike(CJK_PATTERN), F.lit("zh")).when(best == 0, F.lit("und"))
-    for lang in ("en", "de", "es", "fr"):
-        expr = expr.when(s[lang] == best, F.lit(lang))
-    return expr
-
-
 def punct_ratio(text: Column) -> Column:
     n = F.length(text)
     stripped = F.length(F.regexp_replace(text, PUNCT_CLASS, ""))
@@ -71,13 +56,6 @@ def stopword_ratio(text: Column) -> Column:
     n = token_count(text)
     hits = marker_hits(text, STOPWORDS)
     return F.when(n > 0, hits.cast("double") / n.cast("double")).otherwise(F.lit(0.0))
-
-
-def mean_token_len(text: Column) -> Column:
-    toks = tokens(text)
-    n = F.size(toks)
-    total = F.aggregate(F.transform(toks, F.length), F.lit(0), lambda acc, x: acc + x)
-    return F.when(n > 0, total.cast("double") / n.cast("double")).otherwise(F.lit(0.0))
 
 
 def quality_score(text: Column) -> Column:

@@ -200,9 +200,11 @@ def html_to_lines(html: bytes, charset: str | None) -> list[str]:
     return [ln.strip() for ln in text.splitlines() if ln.strip()]
 
 
-def mhtml_text_lines(raw: bytes) -> list[str]:
-    """S7: MIME walk -> concatenated clean text lines of all text/html
-    parts (utils/loose_thoughts.py:138-153)."""
+def _html_parts(raw: bytes) -> list[tuple[bytes, str | None]]:
+    """The non-empty text/html parts of a MIME document as (payload,
+    charset): the header fast path when it decides, else the stdlib
+    parser.  A charset Python has no text codec for reads as None
+    (UTF-8)."""
     parts = _fast_parts(raw)
     if parts is None:
         msg = BytesParser(policy=policy.default).parsebytes(raw)
@@ -211,10 +213,23 @@ def mhtml_text_lines(raw: bytes) -> list[str]:
             for part in msg.walk()
             if part.get_content_type() == "text/html"
         ]
+    return [(payload, _text_codec(charset)) for payload, charset in parts if payload]
+
+
+def _text_codec(charset: str | None) -> str | None:
+    try:
+        b"x".decode(charset or "utf-8", errors="replace")
+    except LookupError:  # no such codec, or not a text encoding
+        return None
+    return charset
+
+
+def mhtml_text_lines(raw: bytes) -> list[str]:
+    """S7: MIME walk -> concatenated clean text lines of all text/html
+    parts (utils/loose_thoughts.py:138-153)."""
     lines: list[str] = []
-    for payload, charset in parts:
-        if payload:
-            lines.extend(html_to_lines(payload, charset))
+    for payload, charset in _html_parts(raw):
+        lines.extend(html_to_lines(payload, charset))
     return lines
 
 
@@ -458,26 +473,13 @@ def extract_html_tables(spark: SparkSession, path_glob: str) -> DataFrame:
             rows = []
             for path, content in zip(batch["path"].values, batch["content"].values):
                 content = bytes(content)
-                payloads = _fast_parts(content)
-                if payloads is None:
-                    msg = BytesParser(policy=policy.default).parsebytes(content)
-                    payloads = (
-                        [
-                            (p.get_payload(decode=True), None)
-                            for p in msg.walk()
-                            if p.get_content_type() == "text/html"
-                        ]
-                        if msg.get_content_maintype() == "multipart"
-                        or msg.get_content_type() == "text/html"
-                        else []
-                    )
+                payloads = _html_parts(content)
                 if not payloads and path.endswith((".html", ".htm")):
                     # Plain HTML file (no MIME wrapper).
                     payloads = [(content, None)]
                 extractor = _TableExtractor()
-                for payload, _charset in payloads:
-                    if payload:
-                        extractor.feed(payload.decode("utf-8", errors="replace"))
+                for payload, charset in payloads:
+                    extractor.feed(payload.decode(charset or "utf-8", errors="replace"))
                 for t_idx, table in enumerate(extractor.tables):
                     for r_idx, cells in enumerate(table):
                         rows.append(

@@ -934,9 +934,7 @@ def electricity_15min_frame(ev):
         F.sum(p_delta.cast("decimal(18,6)")).over(w).alias("P"),
         F.sum(op_delta.cast("decimal(18,6)")).over(w).alias("OP"),
     )
-    out = fifteen_minute_usage(
-        readings, series_keys=("user_id",), tz=None, max_gap_minutes=60, ordered=False
-    )
+    out = fifteen_minute_usage(readings, series_keys=("user_id",), tz=None, max_gap_minutes=60)
     return out.select(
         "user_id",
         F.col("Bucket").alias("bucket"),

@@ -867,11 +867,11 @@ def q_doc_quality(spark, sf_dir):
 def q_doc_lang_id(spark, sf_dir):
     d = load(spark, sf_dir, "documents")
     t = F.col("text")
-    # Fused variant of predict_lang: the unfused expression re-splits
-    # lower(text) ~9 times (4 marker lists x 2 references + en_hits).
-    # Materialize the lowered token array once, score each language as
-    # a named column, then argmax over the columns — identical values,
-    # one split + 4 filters per row.
+    # Argmax of marker hits with fixed priority (en > de > es > fr), CJK
+    # short-circuits to 'zh', all-zero scores -> 'und'.  Fused: scoring
+    # per marker list re-splits lower(text) ~9 times, so the lowered
+    # token array is materialized once and each language scored as a
+    # named column — one split + 4 filters per row.
     d = d.select("doc_id", t, "lang", tokens(F.lower(t)).alias("__tkl"))
     def _hits(markers):
         # arity matters: F.filter treats a 2-arg lambda as (element,

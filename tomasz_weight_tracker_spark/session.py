@@ -306,14 +306,6 @@ def fixed_scratch_dir(tag: str) -> str:
     return _FIXED_SCRATCH[tag]
 
 
-def shuffle_partitions_for(input_bytes: int, target_partition_bytes: int = 128 << 20) -> int:
-    """Size shuffle parallelism to the data: ~128 MiB per post-shuffle
-    partition, floored at the core count.  At 100 TB this yields
-    ~800k partitions pre-AQE; AQE coalesces the small ones.
-    """
-    return max(_DEFAULT_CPUS, input_bytes // target_partition_bytes)
-
-
 def parquet_file_sizes(path: str | os.PathLike) -> list[int] | None:
     """Byte sizes of a parquet path's data files: the file itself, or
     every ``*.parquet`` file under a directory (recursively), skipping
@@ -339,13 +331,13 @@ def parquet_file_sizes(path: str | os.PathLike) -> list[int] | None:
 
 
 def tune_for_scale(spark: SparkSession, sf_dir: str) -> int:
-    """Apply the :func:`shuffle_partitions_for` proportionality rule to
-    a LOCAL test corpus: one shuffle partition per ~512 KiB of source
-    parquet, floored at 8 and capped at 4x the local cores (the cap
-    too when ``sf_dir`` cannot be listed).
+    """Size shuffle parallelism to a LOCAL test corpus: one shuffle
+    partition per ~512 KiB of source parquet, floored at 8 and capped
+    at 4x the local cores (the cap too when ``sf_dir`` cannot be
+    listed).
 
-    This is the same partitions-follow-data discipline scaled down —
-    a fixed count is wrong in both directions.  Measured on the
+    Partitions follow the data because a fixed count is wrong in both
+    directions.  Measured on the
     sf0.01 catalog sidecar: 32 fixed partitions over a 1.8 MB corpus
     schedule ~30 empty reduce tasks per exchange, and that scheduler
     floor (not compute) was 2-3x the wall of every small query; at

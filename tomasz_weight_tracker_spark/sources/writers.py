@@ -1,4 +1,5 @@
-"""Sinks (SURVEY.md §2.1 S9/S12).
+"""Sinks (SURVEY.md §2.1 S9/S12), and the one way a stored table is
+rewritten.
 
 S9 parity note: the reference writes ONE csv file per output
 (``result.to_csv(...)``, utils/pandas_electricity.py:173).  Spark's
@@ -7,21 +8,31 @@ coalesces to one partition for bit-parity mode and renames the part
 file.  At scale, callers should use ``df.write.csv`` directly (many
 part files) — single-file output is a small-data convenience, never
 the 100 TB path.
+
+Rewriting a stored table (``upsert_by_key``, ``compact_table``, the
+incremental views in ``operators/incremental.py``): the new contents
+are written to a hidden sibling ``.<name>.tmp`` and swapped in with
+two directory renames (table -> ``.<name>.bak``, tmp -> table), never
+overwriting the path the plan reads.  A crash at any point leaves a
+complete copy under the table's name or the backup's, and
+:func:`live_table` puts the backup back before the next rewrite reads.
+The siblings are hidden because Spark's partition discovery skips
+names that start with ``.``: a swap inside a partitioned table (a
+compaction of one partition directory) never shows up as a partition
+value.
 """
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
+from datetime import datetime
 from pathlib import Path
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-# Touched-partition count above which upsert_by_key's prune switches
-# from a static OR-chain predicate to a broadcast semi-join (see the
-# inline comment in upsert_by_key).
-_MAX_STATIC_PRUNE = 64
+from pyspark.sql.types import TimestampType
 
 
 def write_single_csv(df: DataFrame, out_path: str | Path, header: bool = True) -> Path:
@@ -34,6 +45,42 @@ def write_single_csv(df: DataFrame, out_path: str | Path, header: bool = True) -
     shutil.move(str(part), out_path)
     shutil.rmtree(tmp.parent, ignore_errors=True)
     return out_path
+
+
+def _sibling(path: Path, kind: str) -> Path:
+    return path.with_name(f".{path.name}.{kind}")
+
+
+def live_table(path: str | Path) -> Path:
+    """``path``, with its backup renamed back first when a crash fell
+    between the two renames of :func:`replace_table` (so only the
+    backup is left).  Every rewrite reads the table through this."""
+    path = Path(path)
+    bak = _sibling(path, "bak")
+    if not path.exists() and bak.exists():
+        _swap_in(path, bak)
+    return path
+
+
+def replace_table(df: DataFrame, path: str | Path) -> None:
+    """Rewrite the parquet table at ``path`` with ``df``, which may
+    read ``path`` itself: write the hidden tmp sibling, then swap it
+    in.  A failed write leaves the table as it was."""
+    path = Path(path)
+    tmp = _sibling(path, "tmp")
+    df.write.mode("overwrite").parquet(str(tmp))
+    _swap_in(path, tmp)
+
+
+def _swap_in(path: Path, src: Path) -> None:
+    """The two-rename swap: ``path`` -> backup, ``src`` -> ``path``,
+    then drop the backup."""
+    bak = _sibling(path, "bak")
+    if path.exists():
+        shutil.rmtree(bak, ignore_errors=True)
+        os.rename(path, bak)
+    os.rename(src, path)
+    shutil.rmtree(bak, ignore_errors=True)
 
 
 def upsert_by_key(
@@ -66,17 +113,17 @@ def upsert_by_key(
 
     Copy-on-write over plain parquet:
 
-    - without ``partition_by`` the whole table is rewritten — right for
-      the reference's human-scale state tables;
+    - without ``partition_by`` the whole table is rewritten through
+      :func:`replace_table` (tmp sibling, then swap) — right for the
+      reference's human-scale state tables;
     - with ``partition_by`` only partitions TOUCHED by the batch are
       rewritten (dynamic partition overwrite + partition-pruned read of
       the old rows), so the cost scales with the updated slice, not the
-      table — the 100 TB posture.  (A transactional table format would
-      add file-level manifests and concurrent-writer safety; plain
-      parquet gives single-writer partition-level MERGE.)
-
-    The merged frame is materialized (``localCheckpoint``) before the
-    write because the plan reads the same files it overwrites.
+      table — the 100 TB posture.  The writer stages the new partitions
+      in ``.spark-staging-*`` and moves them in at job commit, after
+      every task has read the old rows.  (A transactional table format
+      would add file-level manifests and concurrent-writer safety;
+      plain parquet gives single-writer partition-level MERGE.)
 
     Constraint of the partitioned path: a key's partition values must
     be stable across updates (key functionally determines partition) —
@@ -84,7 +131,7 @@ def upsert_by_key(
     untouched partition.  Date-keyed state tables satisfy this by
     construction.
     """
-    path = Path(path)
+    path = live_table(path)
     writer_cols = updates.columns
     if not path.exists():
         merged = updates
@@ -103,55 +150,7 @@ def upsert_by_key(
             )
         existing = existing.select(*writer_cols)
         if partition_by:
-            # Prune the rewrite to touched partitions.  Small batches
-            # (the normal shape) use a static OR-chain of per-partition
-            # equality predicates — pushed down as partition filters at
-            # analysis time.  A batch touching MANY partitions would
-            # make that a thousands-term predicate (quadratic analyzer
-            # cost, and past a point it defeats pushdown entirely —
-            # round-4 advice), so beyond _MAX_STATIC_PRUNE the pruning
-            # switches to a broadcast LEFT SEMI join against the
-            # touched-partition list: Spark's dynamic partition pruning
-            # turns the broadcast build into a partition filter on the
-            # parquet scan, constant-size plan regardless of batch
-            # spread.
-            parts = updates.select(*partition_by).distinct().collect()
-            # NULL partition values are legal (they land in Hive's
-            # default partition) — both prune paths must be null-safe
-            # or existing rows in a touched null partition are dropped
-            # from the merge while dynamic overwrite still rewrites
-            # that partition: silent row loss (round-5 advice).
-            has_null = any(p[c] is None for p in parts for c in partition_by)
-            if not parts:
-                existing = existing.limit(0)
-            elif len(parts) <= _MAX_STATIC_PRUNE:
-                cond = None
-                for p in parts:
-                    this = None
-                    for c in partition_by:
-                        eq = F.col(c).eqNullSafe(F.lit(p[c]))
-                        this = eq if this is None else (this & eq)
-                    cond = this if cond is None else (cond | this)
-                existing = existing.filter(cond)
-            elif has_null:
-                # Null-safe semi-join: forgoes dynamic partition pruning
-                # (DPP keys on plain equality), but a batch touching the
-                # null partition is rare — correctness wins there.
-                touched = spark.createDataFrame(
-                    parts, updates.select(*partition_by).schema
-                )
-                jc = None
-                for c in partition_by:
-                    eq = existing[c].eqNullSafe(touched[c])
-                    jc = eq if jc is None else (jc & eq)
-                existing = existing.join(F.broadcast(touched), jc, "left_semi")
-            else:
-                touched = spark.createDataFrame(
-                    parts, updates.select(*partition_by).schema
-                )
-                existing = existing.join(
-                    F.broadcast(touched), on=list(partition_by), how="left_semi"
-                )
+            existing = _touched_only(existing, updates, partition_by)
         if order_by:
             from pyspark.sql import Window
 
@@ -168,17 +167,44 @@ def upsert_by_key(
             merged = existing.join(
                 updates.select(*keys).distinct(), on=list(keys), how="left_anti"
             ).unionByName(updates)
-    merged = merged.localCheckpoint()
-    writer = merged.write.mode("overwrite")
-    if partition_by:
-        # Writer-scoped dynamic overwrite: only partitions present in
-        # the merged batch are replaced.  Scoping via option() keeps the
-        # session conf untouched (a session-wide 'dynamic' would change
-        # the semantics of every other overwrite in the process).
-        writer = writer.option("partitionOverwriteMode", "dynamic").partitionBy(
-            *partition_by
-        )
-    writer.parquet(str(path))
+    if not partition_by:
+        replace_table(merged, path)
+        return
+    # Writer-scoped dynamic overwrite: only partitions present in the
+    # merged batch are replaced.  Scoping via option() keeps the
+    # session conf untouched (a session-wide 'dynamic' would change the
+    # semantics of every other overwrite in the process).
+    merged.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        *partition_by
+    ).parquet(str(path))
+
+
+def _touched_only(existing: DataFrame, updates: DataFrame, partition_by: list[str]) -> DataFrame:
+    """``existing`` filtered to the partitions ``updates`` touches, by
+    one ``struct(<partition cols>) IN (<touched tuples>)`` predicate
+    that Spark plans under the scan's partition filters however many
+    partitions the batch touches.  Struct equality treats NULL fields
+    as equal, so rows of a touched NULL partition (Hive's default
+    partition) stay in the merge that rewrites it.  The predicate is
+    SQL text: one Py4J call instead of several per touched tuple."""
+    parts = updates.select(*partition_by).distinct().collect()
+    if not parts:
+        return existing.limit(0)
+    types = [existing.schema[c].dataType for c in partition_by]
+
+    def lit(value, dtype) -> str:
+        if isinstance(dtype, TimestampType) and isinstance(value, datetime):
+            return f"timestamp_micros({dtype.toInternal(value)})"
+        text = "NULL"
+        if value is not None:
+            text = "'" + str(value).replace("\\", "\\\\").replace("'", "\\'") + "'"
+        return f"CAST({text} AS {dtype.simpleString()})"
+
+    cols = ", ".join("`" + c.replace("`", "``") + "`" for c in partition_by)
+    tuples = ", ".join(
+        "struct(" + ", ".join(lit(v, t) for v, t in zip(p, types)) + ")" for p in parts
+    )
+    return existing.filter(F.expr(f"struct({cols}) IN ({tuples})"))
 
 
 def write_text_report(lines: list[str], out_path: str | Path) -> Path:
@@ -203,14 +229,15 @@ def compact_table(
     overhead long before bytes — the operational fix is periodic
     compaction into scan-efficient file sizes.  Sizing uses the
     CURRENT on-disk bytes (compressed), so the rewrite preserves
-    density.  The rewrite is a read -> localCheckpoint -> overwrite of
-    the same path (same single-writer posture as ``upsert_by_key``);
-    on a partitioned table run it per partition directory.
+    density.  The rewrite goes through :func:`replace_table` (same
+    single-writer posture as ``upsert_by_key``); on a partitioned
+    table run it per partition directory, whose hidden siblings the
+    table's partition discovery skips.
     """
     from ..session import parquet_file_sizes
 
+    path = live_table(path)
     total = sum(parquet_file_sizes(path) or ())
     n_files = max(1, -(-total // target_file_bytes))
-    df = spark.read.parquet(str(path)).localCheckpoint()
-    df.repartition(n_files).write.mode("overwrite").parquet(str(path))
+    replace_table(spark.read.parquet(str(path)).repartition(n_files), path)
     return n_files
