@@ -415,7 +415,7 @@ class TestSimHash:
         rows = [(1, "aa bb cc dd"), (2, "aa bb cc dd"), (3, "qq rr ss tt uu vv")]
         df = spark.createDataFrame(rows, "doc_id int, text string")
         toks = F.split(F.lower(F.col("text")), r"\s+")
-        out = {r.doc_id: r.sh for r in df.select("doc_id", D.simhash_exprs(toks, 16).alias("sh")).collect()}
+        out = {r.doc_id: r.sh for r in df.select("doc_id", D.simhash_exprs(toks).alias("sh")).collect()}
         assert out[1] == out[2]
         assert 0 <= out[1] < 2**16
         assert out[1] != out[3]
@@ -475,7 +475,7 @@ class TestIvf:
         )
         assigned = S.ivf_assign(df, cents)
         q = df.filter(F.col("vec_id") == 0)
-        ivf = {(r.q_id, r.neighbor_id, r.rank) for r in S.ivf_topk(q, assigned, cents, k=3, nprobe=2).collect()}
+        ivf = {(r.q_id, r.neighbor_id, r.rank) for r in S.ivf_topk(q, assigned, cents, k=3).collect()}
         bf = {(r.q_id, r.neighbor_id, r.rank) for r in S.brute_force_topk(q, df, k=3).collect()}
         assert ivf == bf
 
@@ -530,7 +530,7 @@ class TestIvfTraining:
         assert cents.count() <= 8
         assigned = S.ivf_assign(e, cents)
         got: dict = {}
-        for r in S.ivf_topk(queries, assigned, cents, k=5, nprobe=2).collect():
+        for r in S.ivf_topk(queries, assigned, cents, k=5).collect():
             got.setdefault(r.q_id, set()).add(r.neighbor_id)
         recall = sum(len(truth[q] & got.get(q, set())) for q in truth) / sum(
             len(truth[q]) for q in truth
@@ -545,7 +545,7 @@ class TestIvfTraining:
         )
         n_assigned = S.ivf_assign(e, naive)
         n_got: dict = {}
-        for r in S.ivf_topk(queries, n_assigned, naive, k=5, nprobe=2).collect():
+        for r in S.ivf_topk(queries, n_assigned, naive, k=5).collect():
             n_got.setdefault(r.q_id, set()).add(r.neighbor_id)
         naive_recall = sum(len(truth[q] & n_got.get(q, set())) for q in truth) / sum(
             len(truth[q]) for q in truth

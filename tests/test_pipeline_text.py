@@ -103,7 +103,7 @@ class TestSalientTerms:
         # doc 2 (df=2) while 'bb' is unique (df=1) -> bb outranks cc.
         rows = [(1, "aa aa bb cc"), (2, "cc dd")]
         out = (
-            PT.salient_terms(_docs(spark, rows), top=3)
+            PT.salient_terms(_docs(spark, rows))
             .filter("doc_id = 1")
             .orderBy("rank")
             .collect()

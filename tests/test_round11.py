@@ -50,13 +50,10 @@ class TestBitextIvfPlanShape:
         from tomasz_weight_tracker_spark.plans.catalog import load
         from tomasz_weight_tracker_spark.plans.similarity_ann import (
             _IVF_NCENT,
-            _IVF_NPROBE,
             ivf_candidate_pairs,
         )
 
-        df = ivf_candidate_pairs(
-            load(spark, sf, "embeddings"), n_cent=_IVF_NCENT, nprobe=_IVF_NPROBE
-        )
+        df = ivf_candidate_pairs(load(spark, sf, "embeddings"), n_cent=_IVF_NCENT)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan
         # the candidate cut is a keyed join on centroid_id
@@ -85,7 +82,7 @@ class TestBitextIvfProperties:
         n = e.count()
         n_src = e.filter(F.col("vec_id") % 2 == 0).count()
         n_tgt = n - n_src
-        n_pairs = ivf_candidate_pairs(e, n_cent=8, nprobe=2).count()
+        n_pairs = ivf_candidate_pairs(e, n_cent=8).count()
         # nprobe=2 of 8 buckets: the relation must be well under the
         # cartesian (exactly nprobe/C of it in expectation)
         assert 0 < n_pairs < 0.5 * n_src * n_tgt

@@ -45,14 +45,12 @@ class TestTrainedMinerPlanShape:
         from tomasz_weight_tracker_spark.plans.catalog import load, trained_ivf_centroids
         from tomasz_weight_tracker_spark.plans.similarity_ann import (
             _IVF_NCENT,
-            _IVF_NPROBE,
             ivf_candidate_pairs,
         )
 
         df = ivf_candidate_pairs(
             load(spark, sf, "embeddings"),
             n_cent=_IVF_NCENT,
-            nprobe=_IVF_NPROBE,
             centroids=trained_ivf_centroids(spark, sf, _IVF_NCENT, 2),
         )
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -79,7 +77,7 @@ class TestTrainedMinerPlanShape:
         from tomasz_weight_tracker_spark.plans.similarity_ann import mine_bitext_ivf
 
         e = spark.read.parquet(f"{sf}/embeddings.parquet")
-        df = mine_bitext_ivf(e, n_cent=8, nprobe=2, k=4)
+        df = mine_bitext_ivf(e, n_cent=8, k=4)
         optimized = df._jdf.queryExecution().optimizedPlan().toString()
         assert "hint" not in optimized.lower(), (
             "forced broadcast hint on a margin-tail join — kx/ky are "
@@ -99,11 +97,11 @@ class TestTrainedMinerSemantics:
             F.col("vec_id").alias("centroid_id"), "embedding"
         )
         default = sorted(
-            mine_bitext_ivf(e, n_cent=8, nprobe=2, k=4).collect(),
+            mine_bitext_ivf(e, n_cent=8, k=4).collect(),
             key=lambda r: (r.src_id, r.tgt_id),
         )
         explicit = sorted(
-            mine_bitext_ivf(e, n_cent=8, nprobe=2, k=4, centroids=cents).collect(),
+            mine_bitext_ivf(e, n_cent=8, k=4, centroids=cents).collect(),
             key=lambda r: (r.src_id, r.tgt_id),
         )
         assert default == explicit

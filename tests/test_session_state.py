@@ -40,6 +40,19 @@ class TestParquetFileSizes:
         assert sorted(parquet_file_sizes(d)) == [1024, 2048]
         assert sum(parquet_file_sizes(str(d))) == 3072
 
+    def test_hidden_directories_are_not_read(self, tmp_path):
+        """Spark's listing skips ``.``-prefixed directories and
+        ``_``-prefixed ones that are not partitions, and so do the
+        sizes: a failed compaction's ``.day=a.tmp`` and a dying
+        overwrite's ``.spark-staging-1`` hold bytes no scan reads."""
+        d = tmp_path / "table"
+        _sparse(d / "day=a" / "part-0.parquet", 1000)
+        _sparse(d / ".day=a.tmp" / "part-0.parquet", 5000)
+        _sparse(d / ".spark-staging-1" / "day=b" / "part-0.parquet", 7000)
+        _sparse(d / "_temporary" / "0" / "part-1.parquet", 3000)
+        _sparse(d / "_p=x" / "part-2.parquet", 11)
+        assert sorted(parquet_file_sizes(d)) == [11, 1000]
+
     def test_file_empty_dir_and_missing(self, tmp_path):
         (tmp_path / "one.parquet").write_bytes(b"x" * 10)
         (tmp_path / "empty").mkdir()

@@ -202,9 +202,9 @@ class TestStreamStreamJoin:
 
         li = spark.readStream.schema(imp_schema).parquet(imp_dir)
         ri = spark.readStream.schema(clk_schema).parquet(clk_dir)
-        joined = stream_stream_join(
-            li, ri, key="meter", left_ts="ts", right_ts="cts"
-        ).select("l.meter", "l.ts", "r.cts", "r.action")
+        joined = stream_stream_join(li, ri, key="meter", right_ts="cts").select(
+            "l.meter", "l.ts", "r.cts", "r.action"
+        )
         got = {(r.meter, r.action) for r in run_stream_append(spark, joined, "ssj2").collect()}
         assert got == {("m1", "click"), ("m2", "click")}
 

@@ -4,11 +4,14 @@ summary (A5/W2)."""
 
 from __future__ import annotations
 
+import argparse
+import csv
 import datetime as dt
 import math
 
 from pyspark.sql import functions as F
 
+from tomasz_weight_tracker_spark.__main__ import run as cli_run
 from tomasz_weight_tracker_spark.pipelines.weight import (
     incremental_sync,
     numeric_coercion,
@@ -116,3 +119,30 @@ class TestAnalytics:
         wide = make_wide(spark, 40)  # spans Jan + early Feb
         out = periodic_summary(wide, freq="ME").collect()
         assert [r.period.isoformat() for r in out] == ["2025-02-28", "2025-01-31"]
+
+
+class TestJobFloor:
+    def test_cli_weight_jobs(self, spark, tmp_path):
+        """CLI ``weight``: one row per period in one partition, so the
+        newest-first order is a sort within it and no range-sampling
+        job runs — at most 3 jobs (4 with a global orderBy)."""
+        for i in range(30):
+            day = dt.date(2025, 11, 1) + dt.timedelta(days=i)
+            text = SAMPLE.replace("12/ 19/2025", day.strftime("%m/ %d/%Y")).replace(
+                "90.4", f"{90.4 - 0.1 * i:.1f}"
+            )
+            (tmp_path / f"w{i:02d}.txt").write_text(text, encoding="utf-8")
+        out = tmp_path / "weight.csv"
+        sc = spark.sparkContext
+        group = "weight-job-floor"
+        sc.setJobGroup(group, group)
+        try:
+            cli_run(spark, argparse.Namespace(
+                cmd="weight", txt_glob=str(tmp_path / "*.txt"), out_csv=str(out), freq="W-FRI",
+            ))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        rows = list(csv.DictReader(out.read_text(encoding="utf-8").splitlines()))
+        periods = [r["period"] for r in rows]
+        assert len(periods) == 5 and periods == sorted(periods, reverse=True)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3

@@ -67,13 +67,15 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("out_dir")
     p.add_argument("--sf-dir", default="/root/testdata/sf0.001")
 
+    from .operators.pipeline_text import QUALITY_MIN, TOP_TOKEN_MAX
+
     p = sub.add_parser(
         "curate", help="run the corpus-curation pass over a documents parquet"
     )
     p.add_argument("docs_parquet")
     p.add_argument("out_parquet")
-    p.add_argument("--quality-min", type=float, default=0.35)
-    p.add_argument("--top-token-max", type=float, default=0.2)
+    p.add_argument("--quality-min", type=float, default=QUALITY_MIN)
+    p.add_argument("--top-token-max", type=float, default=TOP_TOKEN_MAX)
 
     p = sub.add_parser("upsert", help="MERGE a parquet batch into a keyed table")
     p.add_argument("batch_path")

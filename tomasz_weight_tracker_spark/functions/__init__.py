@@ -41,10 +41,13 @@ def md5_long_sql(expr: str) -> str:
 # utils/20251223-csv-to-separate-sensors.py:118 vs absolute-only at
 # utils/20251223-csv-to-separate-sensors-polars.py:129); per SURVEY §7.4
 # we standardize on np.isclose semantics: both-null equal, one-null
-# unequal, |a-b| <= atol + rtol*|b|.
+# unequal, |a-b| <= ATOL + RTOL*|b|, with the reference's tolerances.
+
+RTOL = 1e-5
+ATOL = 1e-9
 
 
-def values_close(a: Column, b: Column, rtol: float = 1e-5, atol: float = 1e-9) -> Column:
+def values_close(a: Column, b: Column) -> Column:
     """np.isclose semantics as a native Column expression.
 
     Mirrors utils/20251223-csv-to-separate-sensors.py:108-121 behavior
@@ -52,19 +55,19 @@ def values_close(a: Column, b: Column, rtol: float = 1e-5, atol: float = 1e-9) -
     """
     both_null = a.isNull() & b.isNull()
     one_null = a.isNull() | b.isNull()
-    close = F.abs(a - b) <= (F.lit(atol) + F.lit(rtol) * F.abs(b))
+    close = F.abs(a - b) <= (F.lit(ATOL) + F.lit(RTOL) * F.abs(b))
     return F.when(both_null, F.lit(True)).when(one_null, F.lit(False)).otherwise(close)
 
 
-def conflict(a: Column, b: Column, rtol: float = 1e-5, atol: float = 1e-9) -> Column:
+def conflict(a: Column, b: Column) -> Column:
     """True where two merged values genuinely disagree (G5)."""
-    return ~values_close(a, b, rtol, atol)
+    return ~values_close(a, b)
 
 
-def conflict_sql(a: str, b: str, rtol: float = 1e-5, atol: float = 1e-9) -> str:
+def conflict_sql(a: str, b: str) -> str:
     """:func:`conflict` as SQL text, for two operands known NON-NULL
     (the null cases of np.isclose are the caller's guards)."""
-    return f"NOT (abs({a} - {b}) <= {float(atol)!r}D + {float(rtol)!r}D * abs({b}))"
+    return f"NOT (abs({a} - {b}) <= {ATOL!r}D + {RTOL!r}D * abs({b}))"
 
 
 # ---------------------------------------------------------------------------
@@ -78,11 +81,11 @@ def strip_units(col: Column | str) -> Column:
     return F.regexp_replace(c, "kg|%|kcal", "")
 
 
-def tokens(col: Column | str, pattern: str = r"\s+") -> Column:
+def tokens(col: Column | str) -> Column:
     """Whitespace tokens of a trimmed string (empty input -> empty array)."""
     c = F.col(col) if isinstance(col, str) else col
     t = F.trim(c)
-    return F.when(t == "", F.array().cast("array<string>")).otherwise(F.split(t, pattern))
+    return F.when(t == "", F.array().cast("array<string>")).otherwise(F.split(t, r"\s+"))
 
 
 # ---------------------------------------------------------------------------

@@ -34,42 +34,35 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     keys: Sequence[str],
-    ts_col: str = "ts",
-    value_cols: Sequence[str] = ("value",),
-    suffix: str = "_asof",
 ) -> DataFrame:
-    """Left as-of join: every left row gains ``<value>_asof`` = the
-    latest right value with ``right.ts <= left.ts`` per key (NULL when
-    no earlier right row exists).
+    """Left as-of join on ``ts``: every left row gains ``value_asof`` =
+    the latest right ``value`` with ``right.ts <= left.ts`` per key
+    (NULL when no earlier right row exists).
 
     The right side must be unique per (keys, ts); pre-dedup if not.
     """
     keys = list(keys)
-    lcols = [c for c in left.columns if c not in (*keys, ts_col)]
+    lcols = [c for c in left.columns if c not in (*keys, "ts")]
     l = left.select(
         *keys,
-        F.col(ts_col),
+        F.col("ts"),
         F.lit(1).alias("__side"),
         *[F.col(c) for c in lcols],
-        *[F.lit(None).cast(right.schema[c].dataType).alias(f"__r_{c}") for c in value_cols],
+        F.lit(None).cast(right.schema["value"].dataType).alias("__r_value"),
     )
     r = right.select(
         *keys,
-        F.col(ts_col),
+        F.col("ts"),
         F.lit(0).alias("__side"),
         *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in lcols],
-        *[F.col(c).alias(f"__r_{c}") for c in value_cols],
+        F.col("value").alias("__r_value"),
     )
     w = (
         Window.partitionBy(*keys)
-        .orderBy(ts_col, "__side")
+        .orderBy("ts", "__side")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    unioned = l.unionByName(r)
-    for c in value_cols:
-        unioned = unioned.withColumn(
-            f"{c}{suffix}", F.last(f"__r_{c}", ignorenulls=True).over(w)
-        )
-    return unioned.filter(F.col("__side") == 1).select(
-        *keys, ts_col, *lcols, *[f"{c}{suffix}" for c in value_cols]
+    unioned = l.unionByName(r).withColumn(
+        "value_asof", F.last("__r_value", ignorenulls=True).over(w)
     )
+    return unioned.filter(F.col("__side") == 1).select(*keys, "ts", *lcols, "value_asof")

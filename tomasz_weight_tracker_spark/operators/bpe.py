@@ -185,9 +185,9 @@ def sql_bpe_segments(words_cte: str, rounds: int) -> str:
     )
 
 
-def sql_bpe_segments_cte(words_cte: str, rounds: int, name: str = "seg") -> str:
+def sql_bpe_segments_cte(words_cte: str, rounds: int) -> str:
     """Like :func:`sql_bpe_segments`, but rendered as an OPEN CTE chain
-    (``WITH w0 AS (...), ..., {name} AS (<segmentations>)``) so a
+    (``WITH w0 AS (...), ..., seg AS (<segmentations>)``) so a
     caller can append further CTEs and its own final SELECT — the
     composition surface corpus-level consumers (bpe_corpus_tokens)
     build on without string surgery on a rendered query (the
@@ -195,7 +195,7 @@ def sql_bpe_segments_cte(words_cte: str, rounds: int, name: str = "seg") -> str:
     body, final, _ = _sql_bpe_body(words_cte, rounds)
     return (
         body
-        + f""", {name} AS (
+        + f""", seg AS (
         SELECT wid AS word, max(freq)::BIGINT AS freq,
                count(*)::BIGINT AS n_tokens,
                string_agg(sym, ' ' ORDER BY pos) AS segmented

@@ -845,20 +845,20 @@ def lsh_probe_assign(
     )
 
 
-def sql_lsh_banded(k: int, bands: int, sig_cte: str = "sig") -> str:
-    """DuckDB twin of the banded frame: one row per (doc, band) with
-    ``skey`` = the full signature as a list in :func:`lsh_band_order`
-    split order (band positions first)."""
+def sql_lsh_banded(k: int, bands: int) -> str:
+    """DuckDB twin of the banded frame over the ``sig`` CTE: one row per
+    (doc, band) with ``skey`` = the full signature as a list in
+    :func:`lsh_band_order` split order (band positions first)."""
     selects = []
     for b in range(bands):
         arr = "[" + ", ".join(f"mh{i}" for i in lsh_band_order(k, bands, b)) + "]"
         selects.append(
-            f"      SELECT doc_id, {b} AS band_id, {arr} AS skey FROM {sig_cte}"
+            f"      SELECT doc_id, {b} AS band_id, {arr} AS skey FROM sig"
         )
     return "\n      UNION ALL\n".join(selects)
 
 
-def _sql_lsh_rep_parts(k: int, bands: int, cap: int, verify_min: int | None) -> str:
+def _sql_lsh_rep_parts(k: int, bands: int, cap: int, verify_min: int) -> str:
     """Shared CTE chain of the collapse-first capped semantics
     (:func:`_lsh_rep_pairs`): ``members`` (rep/cnt windows over the
     full signature), ``bandedr`` (reps banded in split order), ``lv``
@@ -884,7 +884,6 @@ def _sql_lsh_rep_parts(k: int, bands: int, cap: int, verify_min: int | None) -> 
         f"len(list_filter(list_transform(range(1, {k + 1}), "
         "i -> a.skey[i] = b.skey[i]), x -> x))"
     )
-    verify = f"WHERE sig_matches >= {verify_min}" if verify_min is not None else ""
     return f"""
     members AS (
       SELECT doc_id, {fsig} AS fsig,
@@ -910,11 +909,11 @@ def _sql_lsh_rep_parts(k: int, bands: int, cap: int, verify_min: int | None) -> 
         FROM keyedr a JOIN keyedr b
           ON a.band_id = b.band_id AND a.lvl = b.lvl AND a.eff = b.eff
          AND a.rid < b.rid)
-      {verify}),
+      WHERE sig_matches >= {verify_min}),
     multi AS (SELECT rep, doc_id FROM members WHERE cnt > 1)"""
 
 
-def sql_lsh_candidates(k: int, bands: int, cap: int, verify_min: int | None = None) -> str:
+def sql_lsh_candidates(k: int, bands: int, cap: int, verify_min: int) -> str:
     """DuckDB twin of the capped collapse-first semantics of
     :func:`lsh_candidate_pairs`: CTE fragments ending in
     ``cand(id_a, id_b)`` — verified rep-pairs expanded to member
@@ -935,7 +934,7 @@ def sql_lsh_candidates(k: int, bands: int, cap: int, verify_min: int | None = No
     )
 
 
-def sql_lsh_star_edges(k: int, bands: int, cap: int, verify_min: int | None = None) -> str:
+def sql_lsh_star_edges(k: int, bands: int, cap: int, verify_min: int) -> str:
     """DuckDB twin of :func:`lsh_dedup_edges`: fragments ending in
     ``edges(src_id, dst_id, sig_matches, kind)``."""
     return (
@@ -949,9 +948,10 @@ def sql_lsh_star_edges(k: int, bands: int, cap: int, verify_min: int | None = No
     )
 
 
-def simhash_exprs(token_arr: Column, bits: int = 16) -> Column:
-    """SimHash over the token multiset (frequency-weighted): bit j of the
-    output is the sign of sum over tokens of (2*bit_j(hash(token)) - 1).
+def simhash_exprs(token_arr: Column) -> Column:
+    """16-bit SimHash over the token multiset (frequency-weighted): bit j
+    of the output is the sign of sum over tokens of
+    (2*bit_j(hash(token)) - 1).
 
     Built as a fold over the token array — per-row, no shuffle.
     """
@@ -964,17 +964,17 @@ def simhash_exprs(token_arr: Column, bits: int = 16) -> Column:
 
         return merge
 
-    bit_sums = [F.aggregate(token_arr, F.lit(0), bit_merge(j)) for j in range(bits)]
+    bit_sums = [F.aggregate(token_arr, F.lit(0), bit_merge(j)) for j in range(16)]
     out = F.lit(0).cast("long")
     for j, s in enumerate(bit_sums):
         out = out + F.when(s > 0, F.lit(1 << j)).otherwise(F.lit(0)).cast("long")
     return out
 
 
-def sql_simhash(tokens_expr: str, bits: int = 16) -> str:
+def sql_simhash(tokens_expr: str) -> str:
     h = md5_long_sql("t")
     terms = []
-    for j in range(bits):
+    for j in range(16):
         s = (
             f"list_sum(list_transform({tokens_expr}, "
             f"t -> ((({h} >> {j}) & 1) * 2 - 1)))"

@@ -26,7 +26,6 @@ def salted_agg(
     df: DataFrame,
     keys: Sequence[str],
     aggs: dict[str, tuple[str, str]],
-    salt_buckets: int = 16,
 ) -> DataFrame:
     """Two-phase aggregation for skewed grouping keys.
 
@@ -35,7 +34,7 @@ def salted_agg(
     'count' is the ROW count (count(*) semantics, the input column is
     ignored) — for a non-null count, sum an isnotnull indicator
     instead.  Phase 1 groups by (key, random salt) — the hot key's
-    rows spread over ``salt_buckets`` reducers; phase 2 re-aggregates
+    rows spread over 16 reducers; phase 2 re-aggregates
     the (tiny) partials by key alone.
     """
     phase1 = []
@@ -56,7 +55,7 @@ def salted_agg(
         else:
             raise ValueError(f"non-decomposable agg: {fn}")
     partial = df.withColumn(
-        "__salt", (F.rand(seed=7) * salt_buckets).cast("int")
+        "__salt", (F.rand(seed=7) * 16).cast("int")
     ).groupBy(*keys, "__salt").agg(*phase1)
     return partial.groupBy(*keys).agg(*phase2)
 
@@ -97,14 +96,13 @@ def write_bucketed(
     bucket_keys: Sequence[str],
     n_buckets: int = 32,
     sort_keys: Sequence[str] | None = None,
-    mode: str = "overwrite",
     path: str | None = None,
 ) -> None:
-    """Persist a table pre-hashed on the join key: subsequent equi-joins
+    """Overwrite a table pre-hashed on the join key: subsequent equi-joins
     between tables bucketed the same way plan with NO exchange on
     either side (asserted in tests/test_layout.py).  ``path`` makes it
     an external table (data outside the warehouse dir)."""
-    writer = df.write.mode(mode).format("parquet").bucketBy(n_buckets, *bucket_keys)
+    writer = df.write.mode("overwrite").format("parquet").bucketBy(n_buckets, *bucket_keys)
     if sort_keys:
         writer = writer.sortBy(*sort_keys)
     if path:
@@ -137,11 +135,11 @@ def zorder_key(a: Column, b: Column, bits: int = 16) -> Column:
     return expr
 
 
-def sql_zorder_key(a: str, b: str, bits: int = 16) -> str:
-    """DuckDB twin of :func:`zorder_key` (same bit placement, same
-    multiply-by-power-of-two arithmetic)."""
+def sql_zorder_key(a: str, b: str) -> str:
+    """DuckDB twin of :func:`zorder_key` at 16 bits (same bit placement,
+    same multiply-by-power-of-two arithmetic)."""
     terms = []
-    for i in range(bits):
+    for i in range(16):
         terms.append(f"(({a} >> {i}) & 1) * {1 << (2 * i + 1)}")
         terms.append(f"(({b} >> {i}) & 1) * {1 << (2 * i)}")
     return "(" + " + ".join(terms) + ")"

@@ -89,14 +89,12 @@ def _toked(docs: DataFrame) -> DataFrame:
     )
 
 
-def lm_model(
-    docs: DataFrame, train_mod: int = LM_TRAIN_MOD
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Train the bigram LM on the ``doc_id % train_mod == 0`` reference
+def lm_model(docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Train the bigram LM on the ``doc_id % LM_TRAIN_MOD == 0`` reference
     split: returns (unigram counts, bigram counts, vocab-size scalar) —
     all VOCABULARY-bounded frames, the model a stream scorer broadcasts
     (see plans/streaming_ingest.py:streaming_lm_filter)."""
-    train = _toked(docs).filter(F.col("doc_id") % train_mod == 0)
+    train = _toked(docs).filter(F.col("doc_id") % LM_TRAIN_MOD == 0)
     uni = (
         train.select(F.explode("t").alias("w"))
         .groupBy("w")
@@ -162,26 +160,20 @@ def lm_apply(
     )
 
 
-def lm_score(
-    docs: DataFrame,
-    train_mod: int = LM_TRAIN_MOD,
-    broadcast_bigrams: bool = False,
-) -> DataFrame:
+def lm_score(docs: DataFrame, broadcast_bigrams: bool = False) -> DataFrame:
     """Score held-out documents with a bigram LM trained on the
-    ``doc_id % train_mod == 0`` reference split.
+    ``doc_id % LM_TRAIN_MOD == 0`` reference split.
 
     Returns (doc_id, n_bigrams, lm_score_e9, kept) for every held-out
     document with at least one bigram (docs under 2 tokens are not
     scoreable — excluded on both engines by construction).
     """
-    uni, big, vocab = lm_model(docs, train_mod)
-    held = docs.filter(F.col("doc_id") % train_mod != 0)
+    uni, big, vocab = lm_model(docs)
+    held = docs.filter(F.col("doc_id") % LM_TRAIN_MOD != 0)
     return lm_apply(held, uni, big, vocab, broadcast_bigrams=broadcast_bigrams)
 
 
-def sql_lm_chain(
-    train_mod: int = LM_TRAIN_MOD, source: str = "documents", bare: bool = False
-) -> str:
+def sql_lm_chain(source: str = "documents", bare: bool = False) -> str:
     """The WITH-chain of :func:`sql_lm_score` up to the per-doc ``agg``
     relation — shared with the calibrated variant's oracle
     (plans/lm_tokenizer.py:lm_score_calibrated) and, via ``source``/``bare``,
@@ -195,7 +187,7 @@ def sql_lm_chain(
     lead = "" if bare else "WITH "
     return f"""
     {lead}tok AS (SELECT doc_id, {t} AS t FROM {source}),
-    tr AS (SELECT t FROM tok WHERE doc_id % {train_mod} = 0),
+    tr AS (SELECT t FROM tok WHERE doc_id % {LM_TRAIN_MOD} = 0),
     uni AS (SELECT w, count(*)::BIGINT AS cu
             FROM (SELECT unnest(t) AS w FROM tr) GROUP BY w),
     vv AS (SELECT count(*)::BIGINT AS v FROM uni),
@@ -207,7 +199,7 @@ def sql_lm_chain(
                    unnest(list_transform(range(1, len(t)), i -> t[i])) AS w1,
                    unnest(list_transform(range(1, len(t)),
                                          i -> t[i] || ' ' || t[i + 1])) AS g
-            FROM tok WHERE doc_id % {train_mod} <> 0),
+            FROM tok WHERE doc_id % {LM_TRAIN_MOD} <> 0),
     sc AS (SELECT doc_id,
                   ({SCALE_E9} * (coalesce(cb, 0) + 1))
                   // greatest(coalesce(cu, 0) + v, 1) AS p
@@ -218,12 +210,12 @@ def sql_lm_chain(
             FROM sc GROUP BY doc_id)"""
 
 
-def sql_lm_score(train_mod: int = LM_TRAIN_MOD) -> str:
+def sql_lm_score() -> str:
     """DuckDB oracle twin of :func:`lm_score` (same counts, same
     integer quantization — including the empty-vocabulary greatest()
     guard, see lm_apply — same threshold)."""
     return (
-        sql_lm_chain(train_mod)
+        sql_lm_chain()
         + f"""
     SELECT doc_id, n_bigrams, (s // n_bigrams)::BIGINT AS lm_score_e9,
            (s // n_bigrams) >= {LM_KEEP_E9} AS kept
@@ -596,8 +588,8 @@ DSIR_BUCKETS = 256
 DSIR_TOP_K = 100
 
 
-def dsir_weights(docs: DataFrame, train_mod: int = LM_TRAIN_MOD) -> DataFrame:
-    """Importance-weight the raw split (``doc_id % train_mod != 0``)
+def dsir_weights(docs: DataFrame) -> DataFrame:
+    """Importance-weight the raw split (``doc_id % LM_TRAIN_MOD != 0``)
     against the target split, rank, and mark the top-K selection.
 
     Scale posture: two bucket aggregations (map-side combined to at
@@ -608,7 +600,7 @@ def dsir_weights(docs: DataFrame, train_mod: int = LM_TRAIN_MOD) -> DataFrame:
     """
     toked = docs.select(
         "doc_id",
-        (F.col("doc_id") % train_mod == 0).alias("is_target"),
+        (F.col("doc_id") % LM_TRAIN_MOD == 0).alias("is_target"),
         tokens(F.lower(F.coalesce(F.col("text"), F.lit("")))).alias("t"),
     )
     tok = toked.select(
@@ -701,11 +693,11 @@ def dsir_weights(docs: DataFrame, train_mod: int = LM_TRAIN_MOD) -> DataFrame:
     )
 
 
-def sql_dsir_weights(train_mod: int = LM_TRAIN_MOD) -> str:
+def sql_dsir_weights() -> str:
     """DuckDB oracle twin of :func:`dsir_weights`."""
     t = sql_tokens("lower(coalesce(text, ''))")
     return f"""
-    WITH toked AS (SELECT doc_id, doc_id % {train_mod} = 0 AS is_target, {t} AS t
+    WITH toked AS (SELECT doc_id, doc_id % {LM_TRAIN_MOD} = 0 AS is_target, {t} AS t
                    FROM documents),
     tok AS (SELECT doc_id, is_target,
                    ('0x' || substr(md5(tk), 1, 15))::BIGINT % {DSIR_BUCKETS} AS b

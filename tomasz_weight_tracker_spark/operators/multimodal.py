@@ -100,11 +100,11 @@ def binary_meta(content: Column) -> Column:
     )
 
 
-def _stub_features(raw: bytes, dim: int = FEATURE_DIM) -> list[float]:
+def _stub_features(raw: bytes) -> list[float]:
     """Deterministic fake feature vector: md5-seeded, in [0, 1)."""
     digest = hashlib.md5(raw).digest()
     return [
-        int.from_bytes(digest[2 * i : 2 * i + 2], "big") / 65536.0 for i in range(dim)
+        int.from_bytes(digest[2 * i : 2 * i + 2], "big") / 65536.0 for i in range(FEATURE_DIM)
     ]
 
 
@@ -204,8 +204,9 @@ def _decode_one(raw: bytes) -> dict:
     }
 
 
-def decode_media(df: DataFrame, id_col: str = "media_id", content_col: str = "content") -> DataFrame:
-    """Arrow-batched decode/feature-extract over a binary column.
+def decode_media(df: DataFrame) -> DataFrame:
+    """Arrow-batched decode/feature-extract over the binary ``content``
+    column, keyed by ``media_id``.
 
     BMP/WAV decode for real (stdlib codecs); other formats fall back to
     Pillow or the flagged stub (module docstring).  Per-row map —
@@ -219,14 +220,14 @@ def decode_media(df: DataFrame, id_col: str = "media_id", content_col: str = "co
         for batch in batches:
             rows = []
             for _, r in batch.iterrows():
-                raw = bytes(r[content_col])
+                raw = bytes(r["content"])
                 rec = _decode_one(raw)
-                rec["media_id"] = r[id_col]
+                rec["media_id"] = r["media_id"]
                 rec["n_bytes"] = r["__n_bytes"]
                 rows.append(rec)
             yield pd.DataFrame(rows, columns=[f.name for f in DECODED_SCHEMA.fields])
 
     src = df.select(
-        id_col, content_col, F.length(content_col).cast("long").alias("__n_bytes")
+        "media_id", "content", F.length("content").cast("long").alias("__n_bytes")
     )
     return src.mapInPandas(decode, DECODED_SCHEMA)

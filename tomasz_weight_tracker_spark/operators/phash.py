@@ -71,11 +71,9 @@ def dhash62(decoded: dict) -> int | None:
     return h
 
 
-def phash_media(
-    media: DataFrame, id_col: str = "media_id", content_col: str = "content"
-) -> DataFrame:
-    """Decode (real codecs: BMP/PNG/GIF by magic bytes) and dHash a
-    binary media column: (id, phash) with NULL phash for undecodable
+def phash_media(media: DataFrame) -> DataFrame:
+    """Decode (real codecs: BMP/PNG/GIF by magic bytes) and dHash the
+    binary ``content`` column: (media_id, phash) with NULL phash for undecodable
     or header-only blobs.  One Arrow-batched pass; the blob is the
     unit of work (see module docstring)."""
 
@@ -86,7 +84,7 @@ def phash_media(
 
         for batch in batches:
             out = []
-            for mid, raw in zip(batch[id_col], batch[content_col]):
+            for mid, raw in zip(batch["media_id"], batch["content"]):
                 raw = bytes(raw) if raw is not None else b""
                 dec = None
                 if raw[:2] == b"BM":
@@ -96,10 +94,10 @@ def phash_media(
                 elif raw[:8] == b"\x89PNG\r\n\x1a\n":
                     dec = parse_png(raw)
                 h = dhash62(dec) if dec and dec.get("pixels") else None
-                out.append({id_col: mid, "phash": h})
-            yield pd.DataFrame(out, columns=[id_col, "phash"])
+                out.append({"media_id": mid, "phash": h})
+            yield pd.DataFrame(out, columns=["media_id", "phash"])
 
-    return media.mapInPandas(hash_batches, f"{id_col} long, phash long")
+    return media.mapInPandas(hash_batches, "media_id long, phash long")
 
 
 def _band_expr(j: int) -> Column:
@@ -109,15 +107,10 @@ def _band_expr(j: int) -> Column:
     ).cast("long")
 
 
-def phash_near_dup_pairs(
-    hashes: DataFrame,
-    id_col: str = "media_id",
-    max_hamming: int = PHASH_MAX_HAMMING,
-    max_bucket: int = PHASH_BAND_CAP,
-) -> DataFrame:
-    """Hamming-banded near-dup pairs over (id, phash) rows: distinct
-    (id_a, id_b, hamming) with id_a < id_b and
-    bit_count(xor) <= max_hamming.
+def phash_near_dup_pairs(hashes: DataFrame, max_bucket: int = PHASH_BAND_CAP) -> DataFrame:
+    """Hamming-banded near-dup pairs over (media_id, phash) rows:
+    distinct (id_a, id_b, hamming) with id_a < id_b and
+    bit_count(xor) <= PHASH_MAX_HAMMING.
 
     COLLAPSE-FIRST, like the MinHash generator (lsh_candidate_pairs):
     identical hashes collapse to a representative before banding, so
@@ -134,13 +127,13 @@ def phash_near_dup_pairs(
     never fan out."""
     members = (
         hashes.filter(F.col("phash").isNotNull())
-        .select(F.col(id_col), "phash")
-        .withColumn("__rep", F.min(id_col).over(Window.partitionBy("phash")))
+        .select("media_id", "phash")
+        .withColumn("__rep", F.min("media_id").over(Window.partitionBy("phash")))
         .withColumn("__cnt", F.count(F.lit(1)).over(Window.partitionBy("phash")))
     )
-    reps = members.filter(F.col(id_col) == F.col("__rep"))
+    reps = members.filter(F.col("media_id") == F.col("__rep"))
     banded = reps.select(
-        F.col(id_col).alias("rid"),
+        F.col("media_id").alias("rid"),
         "phash",
         F.explode(
             F.array(
@@ -168,7 +161,7 @@ def phash_near_dup_pairs(
             & (F.col("a.band_key") == F.col("b.band_key"))
             & (F.col("a.rid") < F.col("b.rid")),
         )
-        .filter(ham <= max_hamming)
+        .filter(ham <= PHASH_MAX_HAMMING)
         .select(
             F.col("a.rid").alias("ra"),
             F.col("b.rid").alias("rb"),
@@ -177,5 +170,5 @@ def phash_near_dup_pairs(
         .distinct()
     )
     return expand_rep_pairs(
-        rep_pairs, members.filter(F.col("__cnt") > 1), id_col, "hamming", 0
+        rep_pairs, members.filter(F.col("__cnt") > 1), "media_id", "hamming", 0
     )

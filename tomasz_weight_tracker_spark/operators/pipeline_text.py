@@ -31,8 +31,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
 from ..functions import tokens
+
+# The curation gates' thresholds: curate_corpus's defaults (and the
+# CLI's) and the oracle's SQL twin.
+QUALITY_MIN = 0.35
+TOP_TOKEN_MAX = 0.2
 
 # --- repetition signals (per-row, no shuffle) ------------------------------
 
@@ -95,8 +99,8 @@ def top_token_count(tok: Column) -> Column:
     return F.aggregate(F.array_sort(tok), init, step, lambda acc: acc["best"])
 
 
-def repetition_metrics(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Gopher-style repetition signals per document:
+def repetition_metrics(df: DataFrame) -> DataFrame:
+    """Gopher-style repetition signals per ``text`` document:
 
     - ``top_token_frac``: count of the single most frequent token /
       total tokens (high -> degenerate repetition);
@@ -105,8 +109,7 @@ def repetition_metrics(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     Both are per-row expressions; the plan is a single narrow
     projection over the scan."""
-    t = F.col(text_col)
-    d = df.select("doc_id", tokens(t).alias("__tk"))
+    d = df.select("doc_id", tokens(F.col("text")).alias("__tk"))
     d = d.select("doc_id", "__tk", bigram_array(F.col("__tk")).alias("__bg"))
     n = F.size("__tk").cast("long")
     nb = F.size("__bg").cast("long")
@@ -154,19 +157,16 @@ def sql_top_token_count(tokens_expr: str) -> str:
 # --- boilerplate n-grams (explode -> partial agg -> top-k) -----------------
 
 
-def boilerplate_ngrams(
-    df: DataFrame, text_col: str = "text", top: int = 20
-) -> DataFrame:
-    """Corpus-wide boilerplate detector: token trigrams ranked by the
-    number of DISTINCT documents containing them.
+def boilerplate_ngrams(df: DataFrame, top: int = 20) -> DataFrame:
+    """Corpus-wide boilerplate detector: ``text`` token trigrams ranked
+    by the number of DISTINCT documents containing them.
 
     Plan shape: per-row trigram set (array_distinct BEFORE explode, so
     a doc contributes each trigram once and the exploded relation is a
     set, not a bag) -> explode to (ngram) -> hash-agg count with map-
     side partial -> TakeOrderedAndProject for the top-k.  One shuffle
     total; the explode never leaves the executor that scanned the row."""
-    t = F.col(text_col)
-    d = df.select(tokens(t).alias("__tk"))
+    d = df.select(tokens(F.col("text")).alias("__tk"))
     d = d.select(F.explode(F.array_distinct(trigram_array(F.col("__tk")))).alias("ngram"))
     return (
         d.groupBy("ngram")
@@ -178,15 +178,15 @@ def boilerplate_ngrams(
 
 # --- benchmark-contamination screen (broadcast semi-join) ------------------
 
+BENCH_MOD = 53  # doc_id % BENCH_MOD == 0 is the pseudo-benchmark split
 
-def contamination_overlap(
-    df: DataFrame, bench_mod: int = 53, text_col: str = "text"
-) -> DataFrame:
-    """Screen every document against a benchmark set for n-gram
+
+def contamination_overlap(df: DataFrame) -> DataFrame:
+    """Screen every ``text`` document against a benchmark set for n-gram
     contamination.
 
     The benchmark here is the deterministic pseudo-holdout
-    ``doc_id % bench_mod == 0`` (in production it would be a separate
+    ``doc_id % BENCH_MOD == 0`` (in production it would be a separate
     small table — the plan is identical).  For each non-benchmark
     document: how many of its distinct trigrams appear anywhere in the
     benchmark, and what fraction of its trigrams that is.
@@ -204,10 +204,9 @@ def contamination_overlap(
     every corpus doc survives to the aggregate (null never equals a
     benchmark ngram, so such docs count 0 hits, exactly as the old
     left join coalesced them)."""
-    t = F.col(text_col)
-    tg = F.array_distinct(trigram_array(tokens(t)))
+    tg = F.array_distinct(trigram_array(tokens(F.col("text"))))
     bench = (
-        df.filter(F.col("doc_id") % bench_mod == 0)
+        df.filter(F.col("doc_id") % BENCH_MOD == 0)
         .select(F.explode(tg).alias("ngram"))
         .distinct()
     )
@@ -215,7 +214,7 @@ def contamination_overlap(
     # size() projection and the Generate then both read it instead of
     # re-running tokenize+trigrams per row.
     exploded = (
-        df.filter(F.col("doc_id") % bench_mod != 0)
+        df.filter(F.col("doc_id") % BENCH_MOD != 0)
         .select("doc_id", tg.alias("__tg"))
         .select(
             "doc_id",
@@ -259,14 +258,14 @@ PII_PATTERNS: dict[str, str] = {
 _REDACTED = {"email": "<EMAIL>", "phone": "<PHONE>", "ipv4": "<IP>"}
 
 
-def redact_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Replace emails / phone numbers / IPv4 addresses with typed
-    placeholder tokens and count each category.
+def redact_pii(df: DataFrame) -> DataFrame:
+    """Replace emails / phone numbers / IPv4 addresses in ``text`` with
+    typed placeholder tokens and count each category.
 
     Per-row ``regexp_replace`` / ``regexp_extract_all`` — shuffle-free,
     codegen'd, and linear in bytes scanned: the shape that holds at
     100 TB."""
-    t = F.col(text_col)
+    t = F.col("text")
     out = df
     clean = t
     for kind in ("email", "phone", "ipv4"):
@@ -296,8 +295,8 @@ def sql_redact_pii(expr: str) -> dict[str, str]:
 
 def curate_corpus(
     df: DataFrame,
-    quality_min: float = 0.35,
-    top_token_max: float = 0.2,
+    quality_min: float = QUALITY_MIN,
+    top_token_max: float = TOP_TOKEN_MAX,
 ) -> DataFrame:
     """The full pretraining-data curation pass, composed from this
     module's operators in the order a production pipeline runs them:
@@ -343,13 +342,10 @@ def curate_corpus(
     return red.select("doc_id", "quality", "n_tokens", "clean_text")
 
 
-def sql_curate_corpus(
-    table: str = "documents",
-    quality_min: float = 0.35,
-    top_token_max: float = 0.2,
-) -> str:
-    """DuckDB twin of :func:`curate_corpus`, composed from the same
-    SQL helper generators stage by stage."""
+def sql_curate_corpus() -> str:
+    """DuckDB twin of :func:`curate_corpus` at its default thresholds
+    over ``documents``, composed from the same SQL helper generators
+    stage by stage."""
     from .text_analysis import sql_fingerprint, sql_quality_score, sql_tokens
 
     quality = sql_quality_score("text")
@@ -360,8 +356,8 @@ def sql_curate_corpus(
     clean = sql_redact_pii("text")["clean"]
     return f"""
     WITH q AS (
-        SELECT doc_id, text, {quality} AS quality FROM {table}
-        WHERE {quality} >= {quality_min!r}
+        SELECT doc_id, text, {quality} AS quality FROM documents
+        WHERE {quality} >= {QUALITY_MIN!r}
     ), f1 AS (
         SELECT doc_id, text, quality, {fp} AS fp FROM q
     ), k1 AS (
@@ -381,7 +377,7 @@ def sql_curate_corpus(
         FROM d2
         WHERE CASE WHEN len({tok}) > 0
                    THEN {top}::DOUBLE / len({tok})::DOUBLE
-                   ELSE 0.0 END <= {top_token_max!r}
+                   ELSE 0.0 END <= {TOP_TOKEN_MAX!r}
     )
     SELECT doc_id, quality, n_tokens, {clean} AS clean_text FROM d3
     """
@@ -390,8 +386,8 @@ def sql_curate_corpus(
 # --- salient terms (tf + rarity, integer-ranked) ---------------------------
 
 
-def salient_terms(df: DataFrame, text_col: str = "text", top: int = 3) -> DataFrame:
-    """Per-document top-k salient terms: rank by term frequency
+def salient_terms(df: DataFrame) -> DataFrame:
+    """Per-document top-3 salient ``text`` terms: rank by term frequency
     descending, then document frequency ascending (rarer wins), then
     term ascending — an integer-only TF-IDF surrogate with a total
     deterministic order (no float log in the ranking, so the result
@@ -412,8 +408,7 @@ def salient_terms(df: DataFrame, text_col: str = "text", top: int = 3) -> DataFr
     wash at sf0.1 (round-13 A/B: 1.20 s cached vs 1.16 s without,
     checksum-identical) while materializing a corpus-rows relation —
     removed per guide §5."""
-    t = F.col(text_col)
-    toks = df.select("doc_id", F.explode(tokens(t)).alias("term"))
+    toks = df.select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     # The always-true tf > 0 guard references the count on the df
     # branch, so column pruning cannot strip it there — both branches'
@@ -430,6 +425,6 @@ def salient_terms(df: DataFrame, text_col: str = "text", top: int = 3) -> DataFr
     return (
         tf.join(F.broadcast(docfreq), "term")
         .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top)
+        .filter(F.col("rank") <= 3)
         .select("doc_id", "term", "tf", "df", F.col("rank").cast("long").alias("rank"))
     )

@@ -10,8 +10,8 @@ Two paths, per the training-data-pipeline mandate:
   parallel; cost is one pass.
 - **IVF-style bucketed search** — the scale path: assign every vector
   to its nearest of C coarse centroids (one broadcast-map pass), then
-  search only the query's ``nprobe`` closest buckets.  The candidate
-  set shrinks by ~C/nprobe; the bucket assignment is a deterministic
+  search only the query's ``IVF_NPROBE`` closest buckets.  The candidate
+  set shrinks by ~C/IVF_NPROBE; the bucket assignment is a deterministic
   argmax so results are reproducible (and testable) without trained
   centroids.
 
@@ -26,6 +26,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import md5_long
+
+IVF_NPROBE = 2  # coarse buckets probed per query vector
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -49,33 +51,24 @@ def sql_cosine(a: str, b: str) -> str:
     return f"list_cosine_similarity({a}, {b})"
 
 
-def brute_force_topk(
-    queries: DataFrame,
-    candidates: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    metric: str = "dot",
-) -> DataFrame:
-    """Exact top-k neighbors for every query vector.
+def brute_force_topk(queries: DataFrame, candidates: DataFrame, k: int = 5) -> DataFrame:
+    """Exact dot-product top-k neighbors for every query vector
+    (``vec_id``, ``embedding``).
 
     Returns (q_id, neighbor_id, rank, score).  Ties broken by neighbor
     id for determinism.  The query side is broadcast; the candidate
     side is scanned once with no shuffle before the per-query top-k.
     """
     q = queries.select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).cast("array<double>").alias("q_vec")
+        F.col("vec_id").alias("q_id"), F.col("embedding").cast("array<double>").alias("q_vec")
     )
     c = candidates.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("c_vec"),
-    )
-    score = dot(F.col("q_vec"), F.col("c_vec")) if metric == "dot" else cosine(
-        F.col("q_vec"), F.col("c_vec")
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").cast("array<double>").alias("c_vec"),
     )
     scored = (
         c.join(F.broadcast(q), F.col("q_id") != F.col("neighbor_id"))
-        .withColumn("score", score)
+        .withColumn("score", dot(F.col("q_vec"), F.col("c_vec")))
         .select("q_id", "neighbor_id", "score")
     )
     w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
@@ -86,14 +79,9 @@ def brute_force_topk(
     )
 
 
-def ivf_assign(
-    df: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_id: str = "centroid_id",
-) -> DataFrame:
-    """Assign each vector to its nearest centroid (max dot product,
+def ivf_assign(df: DataFrame, centroids: DataFrame) -> DataFrame:
+    """Assign each ``(vec_id, embedding)`` vector to its nearest
+    ``(centroid_id, embedding)`` centroid (max dot product,
     deterministic tiebreak on centroid id).
 
     Shuffle posture: the scoring join is map-side (broadcast
@@ -105,35 +93,30 @@ def ivf_assign(
     score DESC then centroid_id ASC, the same total order).  The
     vectors rejoin on id afterwards — N narrow rows, never N x C."""
     c = centroids.select(
-        F.col(centroid_id), F.col(vec_col).cast("array<double>").alias("cent_vec")
+        F.col("centroid_id"), F.col("embedding").cast("array<double>").alias("cent_vec")
     )
     narrow = (
-        df.select(id_col, F.col(vec_col).cast("array<double>").alias("__vec"))
+        df.select("vec_id", F.col("embedding").cast("array<double>").alias("__vec"))
         .join(F.broadcast(c))
         .select(
-            id_col,
+            "vec_id",
             F.struct(
                 dot(F.col("__vec"), F.col("cent_vec")).alias("s"),
-                (-F.col(centroid_id)).alias("n"),
+                (-F.col("centroid_id")).alias("n"),
             ).alias("__sc"),
         )
     )
     best = (
-        narrow.groupBy(id_col)
+        narrow.groupBy("vec_id")
         .agg(F.max("__sc").alias("__b"))
-        .select(id_col, (-F.col("__b.n")).alias(centroid_id))
+        .select("vec_id", (-F.col("__b.n")).alias("centroid_id"))
     )
-    return df.join(best, id_col)
+    return df.join(best, "vec_id")
 
 
-def ivf_train(
-    df: DataFrame,
-    n_centroids: int = 8,
-    iterations: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Train IVF coarse centroids: Lloyd's k-means in pure DataFrame ops.
+def ivf_train(df: DataFrame, n_centroids: int = 8, iterations: int = 2) -> DataFrame:
+    """Train IVF coarse centroids over ``(vec_id, embedding)``: Lloyd's
+    k-means in pure DataFrame ops.
 
     - **Init**: the ``n_centroids`` vectors with the smallest
       ``md5_long(id)`` — a deterministic pseudo-random sample, planned
@@ -149,11 +132,11 @@ def ivf_train(
     - ``localCheckpoint`` truncates lineage between rounds (iterative
       algorithm surface, same as connected_components).
 
-    Returns (centroid_id, ``vec_col``) with array<double> vectors.
+    Returns (centroid_id, embedding) with array<double> vectors.
     Empty clusters drop out deterministically (both engines agree).
     """
     e = df.select(
-        F.col(id_col).alias("__id"), F.col(vec_col).cast("array<double>").alias("__v")
+        F.col("vec_id").alias("__id"), F.col("embedding").cast("array<double>").alias("__v")
     )
     hashed = e.withColumn("__h", md5_long(F.col("__id").cast("string")))
     top = hashed.orderBy("__h", "__id").limit(n_centroids)
@@ -161,18 +144,15 @@ def ivf_train(
     w = Window.orderBy("__h", "__id")
     cents = top.select(
         (F.row_number().over(w) - 1).alias("centroid_id"),
-        F.col("__v").alias(vec_col),
+        F.col("__v").alias("embedding"),
     )
     for _ in range(iterations):
         assigned = ivf_assign(
-            e.select(F.col("__id").alias(id_col), F.col("__v").alias(vec_col)),
-            cents,
-            id_col=id_col,
-            vec_col=vec_col,
+            e.select(F.col("__id").alias("vec_id"), F.col("__v").alias("embedding")), cents
         )
         q = F.floor(F.col("col") * F.lit(1000000000.0)).cast("long")
         comp = (
-            assigned.select("centroid_id", F.posexplode(F.col(vec_col)))
+            assigned.select("centroid_id", F.posexplode(F.col("embedding")))
             .groupBy("centroid_id", "pos")
             .agg(
                 (
@@ -186,24 +166,19 @@ def ivf_train(
                 F.transform(
                     F.array_sort(F.collect_list(F.struct("pos", "c"))),
                     lambda s: s["c"],
-                ).alias(vec_col)
+                ).alias("embedding")
             )
             .localCheckpoint()
         )
     return cents
 
 
-def sql_ivf_train(
-    n_centroids: int = 8,
-    iterations: int = 2,
-    dim: int = 64,
-    source: str = "SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings",
-) -> str:
-    """DuckDB CTE chain replaying :func:`ivf_train` exactly (same init
-    order, same argmax assignment, same quantized means).  Returns the
-    CTE body; the final trained centroids are in ``cent`` as
-    (centroid_id, cv)."""
-    parts = [f"e AS ({source})"]
+def sql_ivf_train(n_centroids: int = 8, iterations: int = 2) -> str:
+    """DuckDB CTE chain replaying :func:`ivf_train` over the 64-dim
+    ``embeddings`` table exactly (same init order, same argmax
+    assignment, same quantized means).  Returns the CTE body; the final
+    trained centroids are in ``cent`` as (centroid_id, cv)."""
+    parts = ["e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)"]
     parts.append(
         "c0 AS (SELECT centroid_id, cv FROM ("
         "SELECT row_number() OVER (ORDER BY "
@@ -221,7 +196,7 @@ def sql_ivf_train(
         parts.append(
             f"comp{r} AS (SELECT centroid_id, i AS pos, "
             "sum(floor(v[i] * 1000000000)::BIGINT)::DOUBLE / count(*) / 1000000000 AS c "
-            f"FROM a{r}, generate_series(1, {dim}) t(i) GROUP BY centroid_id, pos)"
+            f"FROM a{r}, generate_series(1, 64) t(i) GROUP BY centroid_id, pos)"
         )
         parts.append(
             f"c{r} AS (SELECT centroid_id, list(c ORDER BY pos) AS cv "
@@ -231,23 +206,17 @@ def sql_ivf_train(
     return ",\n    ".join(parts)
 
 
-def ivf_probe(
-    queries: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    nprobe: int = 2,
-) -> DataFrame:
-    """Route each query to its ``nprobe`` nearest coarse centroids
+def ivf_probe(queries: DataFrame, centroids: DataFrame) -> DataFrame:
+    """Route each query to its ``IVF_NPROBE`` nearest coarse centroids
     (max dot product, deterministic centroid-id tiebreak).  Centroids
     are broadcast; one map-side pass plus a frame bounded by
     ``n_centroids`` per query — no corpus-sized shuffle.  Returns
     (q_id, q_vec, centroid_id), one row per probed bucket."""
     c = centroids.select(
-        F.col("centroid_id"), F.col(vec_col).cast("array<double>").alias("cent_vec")
+        F.col("centroid_id"), F.col("embedding").cast("array<double>").alias("cent_vec")
     )
     q = queries.select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).cast("array<double>").alias("q_vec")
+        F.col("vec_id").alias("q_id"), F.col("embedding").cast("array<double>").alias("q_vec")
     )
     probes = q.join(F.broadcast(c)).withColumn(
         "__score", dot(F.col("q_vec"), F.col("cent_vec"))
@@ -255,7 +224,7 @@ def ivf_probe(
     wq = Window.partitionBy("q_id").orderBy(F.col("__score").desc(), F.col("centroid_id"))
     return (
         probes.withColumn("__rn", F.row_number().over(wq))
-        .filter(F.col("__rn") <= nprobe)
+        .filter(F.col("__rn") <= IVF_NPROBE)
         .select("q_id", "q_vec", "centroid_id")
     )
 
@@ -264,21 +233,16 @@ def ivf_topk(
     queries: DataFrame,
     candidates_assigned: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
-    nprobe: int = 2,
 ) -> DataFrame:
-    """IVF search: probe only the ``nprobe`` centroids closest to each
-    query, then exact top-k within those buckets.  The candidate join is
-    an equi-join on centroid_id — candidates stay partitioned by bucket,
-    so only the (tiny) query×probe side moves."""
-    probes = ivf_probe(
-        queries, centroids, id_col=id_col, vec_col=vec_col, nprobe=nprobe
-    )
+    """IVF search: probe only the ``IVF_NPROBE`` centroids closest to
+    each query, then exact top-k within those buckets.  The candidate
+    join is an equi-join on centroid_id — candidates stay partitioned by
+    bucket, so only the (tiny) query×probe side moves."""
+    probes = ivf_probe(queries, centroids)
     cand = candidates_assigned.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("c_vec"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").cast("array<double>").alias("c_vec"),
         "centroid_id",
     )
     scored = (
@@ -348,13 +312,12 @@ def pq_train(
     m: int = PQ_M,
     k: int = PQ_K,
     iterations: int = PQ_ITERS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """Train the M*K PQ codebook: per-subspace Lloyd's k-means in the
-    integer domain.  Init is the K vectors with the smallest
-    md5_long(id) (one deterministic sample shared by all subspaces —
-    TakeOrderedAndProject, no full sort); each round assigns every
+    """Train the M*K PQ codebook over ``(vec_id, embedding)``:
+    per-subspace Lloyd's k-means in the integer domain.  Init is the K
+    vectors with the smallest md5_long(id) (one deterministic sample
+    shared by all subspaces — TakeOrderedAndProject, no full sort);
+    each round assigns every
     subvector to its nearest centroid (integer L2 argmin, centroid-id
     tiebreak) and re-centroids with the portable floor-div mean.
     Returns (m, centroid_id, qc: array<long>) — M*K rows, an
@@ -366,7 +329,7 @@ def pq_train(
     never shuffles on volume; the classic broadcast-the-model /
     aggregate-the-update loop (docs/SCALE.md §9)."""
     subdim = dim // m
-    e = df.select(F.col(id_col).alias("__id"), _qvec(F.col(vec_col)).alias("__qv"))
+    e = df.select(F.col("vec_id").alias("__id"), _qvec(F.col("embedding")).alias("__qv"))
     subs = e.select(
         "__id",
         F.explode(
@@ -439,11 +402,10 @@ def pq_codes(
     cents: DataFrame,
     dim: int = 64,
     m: int = PQ_M,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Encode every vector as its M nearest-subcentroid codes, packed
+    """Encode every ``(vec_id, embedding)`` vector as its M
+    nearest-subcentroid codes, packed
     little-endian into one BIGINT (code_j in bits [j*ceil(log2 K)..)).
     Broadcast codebook, map-side argmin per subspace, one id-keyed
     aggregation to pack — the corpus compresses to 8 bytes/vector of
@@ -457,8 +419,8 @@ def pq_codes(
     # argmin join below.
     cmap = {c: f"__carry_{i}" for i, c in enumerate(carry)}
     e = df.select(
-        F.col(id_col).alias("__id"),
-        _qvec(F.col(vec_col)).alias("__qv"),
+        F.col("vec_id").alias("__id"),
+        _qvec(F.col("embedding")).alias("__qv"),
         *[F.col(c).alias(a) for c, a in cmap.items()],
     )
     subs = e.select(
@@ -492,26 +454,23 @@ def pq_codes(
         .cast("long")
         .alias("pq_code"),
         *[F.min(a).alias(c) for c, a in cmap.items()],
-    ).select(F.col("__id").alias(id_col), "pq_code", *carry)
+    ).select(F.col("__id").alias("vec_id"), "pq_code", *carry)
 
 
 def sql_pq_chain(
-    dim: int = 64,
-    m: int = PQ_M,
-    k: int = PQ_K,
-    iterations: int = PQ_ITERS,
     source: str = "SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings",
     prefix: str = "",
 ) -> str:
-    """DuckDB CTE chain replaying :func:`pq_train` exactly (same e6
-    quantization, same shared md5 init sample, same integer-L2 argmin,
-    same portable floor-div means).  The trained codebook ends in
+    """DuckDB CTE chain replaying :func:`pq_train` at its defaults (64
+    dims, PQ_M subspaces, PQ_K centroids, PQ_ITERS rounds) exactly (same
+    e6 quantization, same shared md5 init sample, same integer-L2
+    argmin, same portable floor-div means).  The trained codebook ends in
     ``{prefix}cent`` as (m, centroid_id, qc); the quantized vectors in
     ``{prefix}e`` as (vec_id, qv).  ``prefix`` namespaces every CTE so
     the chain can compose with others that use the same conventional
     names (the IVFADC oracle stacks it on the sql_ivf_train chain)."""
-    subdim = dim // m
-    sub_ms = ", ".join(str(j) for j in range(m))
+    subdim = 64 // PQ_M
+    sub_ms = ", ".join(str(j) for j in range(PQ_M))
     isq = (
         f"list_sum(list_transform(range(1, {subdim + 1}), "
         "i -> (sv[i] - qc[i]) * (sv[i] - qc[i])))"
@@ -526,11 +485,11 @@ def sql_pq_chain(
         f"{p}init AS (SELECT centroid_id, qv FROM ("
         "SELECT row_number() OVER (ORDER BY "
         "('0x' || substr(md5(vec_id::VARCHAR), 1, 15))::BIGINT, vec_id) - 1"
-        f" AS centroid_id, qv FROM {p}e) WHERE centroid_id < {k})",
+        f" AS centroid_id, qv FROM {p}e) WHERE centroid_id < {PQ_K})",
         f"{p}c0 AS (SELECT t.m, centroid_id, list_slice(qv, t.m * {subdim} + 1,"
         f" (t.m + 1) * {subdim}) AS qc FROM {p}init, unnest([{sub_ms}]) t(m))",
     ]
-    for r in range(1, iterations + 1):
+    for r in range(1, PQ_ITERS + 1):
         parts.append(
             f"{p}a{r} AS (SELECT vec_id, m, centroid_id, sv FROM ("
             f"SELECT {p}subs.vec_id, {p}subs.m, c.centroid_id, {p}subs.sv, "
@@ -548,5 +507,5 @@ def sql_pq_chain(
             f"{p}c{r} AS (SELECT m, centroid_id, list(c ORDER BY pos) AS qc"
             f" FROM {p}comp{r} GROUP BY m, centroid_id)"
         )
-    parts.append(f"{p}cent AS (SELECT m, centroid_id, qc FROM {p}c{iterations})")
+    parts.append(f"{p}cent AS (SELECT m, centroid_id, qc FROM {p}c{PQ_ITERS})")
     return ",\n    ".join(parts)

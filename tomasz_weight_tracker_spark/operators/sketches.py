@@ -315,17 +315,16 @@ def stratified_sample(
     return df.filter(h < thr)
 
 
-def sql_stratified_predicate(
-    stratum_expr: str, rates: dict[str, float], key_expr: str, default_rate: float = 0.0
-) -> str:
-    """DuckDB WHERE-clause twin of :func:`stratified_sample`."""
+def sql_stratified_predicate(stratum_expr: str, rates: dict[str, float], key_expr: str) -> str:
+    """DuckDB WHERE-clause twin of :func:`stratified_sample` (unlisted
+    strata at rate 0)."""
     h = f"(('0x' || substr(md5('strat:' || CAST({key_expr} AS VARCHAR)), 1, 15))::BIGINT % {SCALE})"
     branches = " ".join(
         f"WHEN '{v}' THEN {int(round(r * SCALE))}" for v, r in sorted(rates.items())
     )
     return (
         f"{h} < (CASE {stratum_expr} {branches} "
-        f"ELSE {int(round(default_rate * SCALE))} END)"
+        "ELSE 0 END)"
     )
 
 

@@ -31,10 +31,10 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def combine_date_time(date_col: Column, time_col: Column, fmt: str = "dd/MM/yyyy HH:mm:ss") -> Column:
-    """T1: combine string date + time-of-day into one timestamp
-    (utils/pandas_electricity.py:46-47)."""
-    return F.to_timestamp(F.concat_ws(" ", date_col, time_col), fmt)
+def combine_date_time(date_col: Column, time_col: Column) -> Column:
+    """T1: combine string ``dd/MM/yyyy`` date + ``HH:mm:ss`` time-of-day
+    into one timestamp (utils/pandas_electricity.py:46-47)."""
+    return F.to_timestamp(F.concat_ws(" ", date_col, time_col), "dd/MM/yyyy HH:mm:ss")
 
 
 def local_to_utc(ts: Column, tz: str = "Europe/London") -> Column:
@@ -92,21 +92,27 @@ def minute_of_day(ts: Column) -> Column:
     return F.hour(ts) * 60 + F.minute(ts)
 
 
-def peak_category(ts: Column, peak_start_min: int = 390, peak_end_min: int = 1410) -> Column:
-    """T5: 'P' iff time-of-day in (06:30, 23:30], else 'OP'
-    (utils/duckdb_electricity_1-minute.py:97-107)."""
+# T5's peak window (06:30, 23:30] in minutes of the day
+# (utils/duckdb_electricity_1-minute.py:97-107).  Every module that
+# classifies peak minutes, in expressions or in SQL text, reads these.
+PEAK_START_MIN = 390
+PEAK_END_MIN = 1410
+
+
+def peak_category(ts: Column) -> Column:
+    """T5: 'P' iff time-of-day in (PEAK_START_MIN, PEAK_END_MIN], else 'OP'."""
     m = minute_of_day(ts)
-    return F.when((m > peak_start_min) & (m <= peak_end_min), F.lit("P")).otherwise(F.lit("OP"))
+    return F.when((m > PEAK_START_MIN) & (m <= PEAK_END_MIN), F.lit("P")).otherwise(F.lit("OP"))
 
 
-def bucket_end_labeled(ts: Column, minutes: int = 15) -> Column:
-    """T7: end-labeled bucket — floor(ts - 1 minute) to the bucket width.
+def bucket_end_labeled(ts: Column) -> Column:
+    """T7: end-labeled 15-minute bucket — floor(ts - 1 minute) to 15 minutes.
 
     A minute stamped 10:15:00 belongs to the (10:00, 10:15] bucket
     labeled 10:00 start / reference's TIME_BUCKET(15min, t - 1min)
     (utils/15-minute-duckdb_electricity.py:125).
     """
-    secs = minutes * 60
+    secs = 15 * 60
     shifted = F.unix_timestamp(ts - F.expr("INTERVAL 1 MINUTE"))
     return F.timestamp_seconds(F.floor(shifted / secs) * secs)
 
@@ -138,7 +144,6 @@ def resample_weekly_mean(
     ts_col: str,
     value_cols: Sequence[str],
     anchor_dow: str = "SUN",
-    round_digits: int = 1,
 ) -> DataFrame:
     """Weekly anchored mean: pandas .resample('W-<anchor>').mean().round(1).
 
@@ -147,7 +152,7 @@ def resample_weekly_mean(
     inside the window).
     """
     win = F.window(F.col(ts_col), "7 days", startTime=week_anchor_offset(anchor_dow))
-    aggs = [F.round(F.avg(c), round_digits).alias(c) for c in value_cols]
+    aggs = [F.round(F.avg(c), 1).alias(c) for c in value_cols]
     return (
         df.groupBy(win.alias("w"))
         .agg(*aggs)
@@ -156,11 +161,9 @@ def resample_weekly_mean(
     )
 
 
-def resample_monthly_mean(
-    df: DataFrame, ts_col: str, value_cols: Sequence[str], round_digits: int = 1
-) -> DataFrame:
+def resample_monthly_mean(df: DataFrame, ts_col: str, value_cols: Sequence[str]) -> DataFrame:
     """Month-end mean: pandas .resample('ME').mean().round(1)."""
-    aggs = [F.round(F.avg(c), round_digits).alias(c) for c in value_cols]
+    aggs = [F.round(F.avg(c), 1).alias(c) for c in value_cols]
     return (
         df.groupBy(F.date_trunc("month", F.col(ts_col)).alias("m"))
         .agg(*aggs)

@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+QUANTIZE = 100  # event values are floor-quantized to 1/QUANTIZE units
+
 # --- grouped-map: per-user z-scores (applyInPandas) ------------------------
 
 _Z_SCHEMA = "user_id long, event_id long, zscore double"
@@ -47,7 +49,7 @@ def _zscore_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def zscore_grouped_map(df: DataFrame, quantize: int = 100) -> DataFrame:
+def zscore_grouped_map(df: DataFrame) -> DataFrame:
     """Per-user z-score of quantized value via Arrow grouped-map.
 
     One shuffle (groupBy user_id), then each group crosses the Arrow
@@ -56,17 +58,17 @@ def zscore_grouped_map(df: DataFrame, quantize: int = 100) -> DataFrame:
     the per-group logic genuinely needs Python.
     """
     base = df.select(
-        "user_id", "event_id", F.floor(F.col("value") * quantize).cast("long").alias("q")
+        "user_id", "event_id", F.floor(F.col("value") * QUANTIZE).cast("long").alias("q")
     )
     return base.groupBy("user_id").applyInPandas(_zscore_pdf, _Z_SCHEMA)
 
 
-def sql_zscore(table: str = "events", quantize: int = 100) -> str:
+def sql_zscore() -> str:
     return f"""
     WITH q AS (
         SELECT user_id, event_id,
-               CAST(floor(value * {float(quantize)!r}) AS BIGINT) AS q
-        FROM {table}
+               CAST(floor(value * {float(QUANTIZE)!r}) AS BIGINT) AS q
+        FROM events
     ), s AS (
         SELECT user_id, count(*)::HUGEINT AS n, sum(q)::HUGEINT AS sq,
                sum(q*q)::HUGEINT AS sqq
@@ -92,7 +94,7 @@ def outlier_count_series(q_series: pd.Series) -> int:
     return sum(1 for v in q if (n * v - sq) ** 2 > bound)
 
 
-def outlier_counts_udaf(df: DataFrame, quantize: int = 100) -> DataFrame:
+def outlier_counts_udaf(df: DataFrame) -> DataFrame:
     """Per-event-type outlier count via an Arrow GROUPED_AGG pandas
     UDF.  The whole group's column arrives as one pandas Series per
     aggregation state — partial aggregation is NOT available to Python
@@ -101,19 +103,19 @@ def outlier_counts_udaf(df: DataFrame, quantize: int = 100) -> DataFrame:
     preferred."""
     count_outliers = F.pandas_udf(outlier_count_series, "long")
     base = df.select(
-        "event_type", F.floor(F.col("value") * quantize).cast("long").alias("q")
+        "event_type", F.floor(F.col("value") * QUANTIZE).cast("long").alias("q")
     )
     return base.groupBy("event_type").agg(
         count_outliers("q").alias("n_outliers")
     )
 
 
-def sql_outlier_counts(table: str = "events", quantize: int = 100) -> str:
+def sql_outlier_counts() -> str:
     return f"""
     WITH q AS (
         SELECT event_type,
-               CAST(floor(value * {float(quantize)!r}) AS BIGINT) AS q
-        FROM {table}
+               CAST(floor(value * {float(QUANTIZE)!r}) AS BIGINT) AS q
+        FROM events
     ), s AS (
         SELECT event_type, count(*)::HUGEINT AS n, sum(q)::HUGEINT AS sq,
                sum(q*q)::HUGEINT AS sqq
@@ -152,13 +154,13 @@ def make_sentence_udtf():
     return SentenceSplit
 
 
-def sql_sentences(table: str = "documents") -> str:
+def sql_sentences() -> str:
     # 1-based (x, i) lambda index mirrors enumerate(start=1).
     return f"""
     SELECT d.doc_id, u.s['i']::BIGINT AS sent_idx, u.s['sent'] AS sentence
     FROM (
         SELECT doc_id,
                string_split_regex(text, '{SENT_PATTERN}') AS sents
-        FROM {table}
+        FROM documents
     ) d, unnest(list_transform(d.sents, (x, i) -> {{'i': i, 'sent': x}})) AS u(s)
     """

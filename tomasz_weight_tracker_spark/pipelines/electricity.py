@@ -32,7 +32,13 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.time_ops import combine_date_time, lead_next, local_to_utc
+from ..operators.time_ops import (
+    PEAK_END_MIN,
+    PEAK_START_MIN,
+    combine_date_time,
+    lead_next,
+    local_to_utc,
+)
 
 
 def read_meter_csv(spark, path: str) -> DataFrame:
@@ -139,12 +145,13 @@ def fifteen_minute_usage(
     # lives at epoch second s0+60k, so its minute-of-day under the
     # engine's pinned-UTC session is (s0 div 60 + k) mod 1440, and
     # the number of peak minutes in [1..K] telescopes through
-    # cum(x) = #{y in [0..x] : y mod 1440 in (390, 1410]}:
+    # cum(x) = #{y in [0..x] : y mod 1440 in (PEAK_START_MIN, PEAK_END_MIN]}:
     m0 = F.floor(F.col("__s0") / 60)
+    peak_len = PEAK_END_MIN - PEAK_START_MIN
 
     def peak_cum(x):
-        return F.floor(x / 1440) * 1020 + F.least(
-            F.greatest(F.pmod(x, 1440) - 390, F.lit(0)), F.lit(1020)
+        return F.floor(x / 1440) * peak_len + F.least(
+            F.greatest(F.pmod(x, 1440) - PEAK_START_MIN, F.lit(0)), F.lit(peak_len)
         )
 
     df = df.withColumn(
@@ -187,7 +194,7 @@ def fifteen_minute_usage(
     # classifies the whole bucket.  Same probe as peak_category on
     # min_ts, in minute-of-day arithmetic.
     probe_md = F.pmod(m0 + F.col("__k_lo"), 1440)
-    is_p = (probe_md > 390) & (probe_md <= 1410)
+    is_p = (probe_md > PEAK_START_MIN) & (probe_md <= PEAK_END_MIN)
     # n <= bucket width in minutes: decimal(4,0) keeps the product at
     # decimal(23,12) — no precision loss (18,12 x bigint would exceed
     # precision 38 and silently drop to scale 11).

@@ -44,6 +44,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..sources.paths import glob_paths
+
 START_MARKER = "Your recent activity"
 END_MARKER = "Show deleted jobs"
 DAYS_AGO_RE = re.compile(r"(\d+)\s+day[^\s]*\s+ago", re.IGNORECASE)
@@ -343,7 +345,7 @@ def extract_blocks(binary: DataFrame) -> DataFrame:
 
 def parse_mhtml_snapshots(spark: SparkSession, path_glob: str) -> DataFrame:
     """S7 + F4/F5: binaryFile scan -> per-document block extraction."""
-    return extract_blocks(spark.read.format("binaryFile").load(path_glob))
+    return extract_blocks(spark.read.format("binaryFile").load(glob_paths(spark, path_glob)))
 
 
 def dedup_blocks(blocks: DataFrame) -> DataFrame:
@@ -357,12 +359,10 @@ def dedup_blocks(blocks: DataFrame) -> DataFrame:
     )
 
 
-def grouped_report(
-    blocks: DataFrame, cutoff_date: str | None = None, descending: bool = True
-) -> DataFrame:
+def grouped_report(blocks: DataFrame, cutoff_date: str | None = None) -> DataFrame:
     """P6 + O3: cutoff filter, group snapshots by their first line (the
-    job identifier), sort snapshots within each group by date, sort
-    groups by their first snapshot's date.
+    job identifier), sort snapshots within each group newest-first,
+    sort groups by their newest snapshot's date, newest first.
 
     Returns (group_key, group_date, snapshots: array<struct>) ordered.
     """
@@ -371,35 +371,26 @@ def grouped_report(
         df = df.filter(F.col("block_date") >= F.lit(cutoff_date))
     df = df.withColumn("group_key", F.element_at("lines", 1))
     snap = F.struct("block_date", "file_label", "lines")
-    sort_asc = not descending
     grouped = df.groupBy("group_key").agg(
-        F.sort_array(F.collect_list(snap), asc=sort_asc).alias("snapshots")
+        F.sort_array(F.collect_list(snap), asc=False).alias("snapshots")
     )
     grouped = grouped.withColumn(
         "group_date", F.element_at("snapshots", 1)["block_date"]
     )
-    order = F.col("group_date").desc() if descending else F.col("group_date").asc()
     return grouped.select("group_key", "group_date", "snapshots").orderBy(
-        order, "group_key"
+        F.col("group_date").desc(), "group_key"
     )
 
 
-def render_report(grouped: DataFrame, max_groups: int | None = 1000) -> list[str]:
+def render_report(grouped: DataFrame) -> list[str]:
     """S12: markdown-ish ordered report lines (driver-side; reports are
     human-scale by definition).
 
-    Driver memory is bounded CONTRACTUALLY: ``max_groups`` caps the
-    collect, and ``None`` streams via ``toLocalIterator`` (one
-    partition in driver memory at a time) instead of an unbounded
-    ``collect()`` — pointing this at a big table can slow down, but
-    it cannot OOM the driver."""
-    rows = (
-        grouped.limit(max_groups).collect()
-        if max_groups is not None
-        else grouped.toLocalIterator()
-    )
+    Driver memory is bounded CONTRACTUALLY: the collect is capped at
+    the first 1,000 groups, so pointing this at a big table cannot OOM
+    the driver."""
     out: list[str] = []
-    for r in rows:
+    for r in grouped.limit(1000).collect():
         out.append(f"## {r.group_key}  ({r.group_date.isoformat()})")
         for snap in r.snapshots:
             out.append(f"- [{snap.file_label}]")
@@ -464,7 +455,7 @@ def extract_html_tables(spark: SparkSession, path_glob: str) -> DataFrame:
     """S8: every <table> row of every text/html part of every document,
     one output row per table row with pipe-joined text (the reference's
     report format)."""
-    binary = spark.read.format("binaryFile").load(path_glob)
+    binary = spark.read.format("binaryFile").load(glob_paths(spark, path_glob))
 
     def extract(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd

@@ -57,8 +57,6 @@ def merge_step(
     combined: DataFrame,
     incoming: DataFrame,
     next_conflict_idx: int,
-    rtol: float = 1e-5,
-    atol: float = 1e-9,
 ) -> tuple[DataFrame, int]:
     """One fold step: full-outer join + coalesce + conflict detection.
 
@@ -77,7 +75,7 @@ def merge_step(
     # (reference computes any() before materializing the column —
     # utils/20251223-csv-to-separate-sensors-polars.py:182-196).
     conflict_conds = {
-        c: conflict(F.col(c), F.col(f"__new_{c}"), rtol, atol)
+        c: conflict(F.col(c), F.col(f"__new_{c}"))
         & F.col(c).isNotNull()
         & F.col(f"__new_{c}").isNotNull()
         for c in common
@@ -109,14 +107,15 @@ def merge_step(
     return joined.select(*out_cols), next_conflict_idx
 
 
-def drop_all_null_columns(df: DataFrame, keep: Sequence[str] = ("Timestamp",)) -> DataFrame:
-    """P4/A9: prune columns with zero non-null values (one agg pass)."""
-    candidates = [c for c in df.columns if c not in keep]
+def drop_all_null_columns(df: DataFrame) -> DataFrame:
+    """P4/A9: prune columns other than Timestamp with zero non-null
+    values (one agg pass)."""
+    candidates = [c for c in df.columns if c != "Timestamp"]
     if not candidates:
         return df
     counts = df.agg(*[F.count(F.col(f"`{c}`")).alias(c) for c in candidates]).first()
     survivors = [c for c in candidates if counts[c] > 0]
-    return df.select(*keep, *[F.col(f"`{c}`") for c in survivors])
+    return df.select("Timestamp", *[F.col(f"`{c}`") for c in survivors])
 
 
 def order_columns(df: DataFrame) -> DataFrame:
@@ -160,8 +159,6 @@ def _merge_ranked(
     u: DataFrame,
     per_file_cols: Sequence[Sequence[str]],
     jdx: dict[str, int],
-    rtol: float = 1e-5,
-    atol: float = 1e-9,
 ) -> DataFrame:
     """The merge core over a ranked union (``__rank``, Timestamp,
     ``__m_<j>``) that is unique on (rank, Timestamp); rows come back in
@@ -194,12 +191,12 @@ def _merge_ranked(
 
     # merge_step's test verbatim: accumulated existed before step s
     # (first rank < s), incoming non-null, genuinely disagree — same
-    # argument order into the tolerance (rtol scales |incoming|).
+    # argument order into the tolerance (RTOL scales |incoming|).
     conds: dict[tuple[int, str], str] = {}
     for s, c in potential:
         first, vs = f"__first_{jdx[c]}", f"__at_{s}_{jdx[c]}"
         conds[s, c] = f"{first}.r < {s} AND {vs} IS NOT NULL AND " + conflict_sql(
-            f"{first}.v", vs, rtol, atol
+            f"{first}.v", vs
         )
     # ONE probe action: which measures hold any value (P4) and which
     # (step, column) sites conflict.  A conflict column is non-null
@@ -222,9 +219,7 @@ def _merge_ranked(
     return order_columns(agg.select(*out_cols))
 
 
-def merge_sensor_frames(
-    frames: Sequence[DataFrame], rtol: float = 1e-5, atol: float = 1e-9
-) -> DataFrame:
+def merge_sensor_frames(frames: Sequence[DataFrame]) -> DataFrame:
     """Merge normalized per-file frames (already deduped per file —
     (file, Timestamp) is unique) in file order; then prune, order, and
     sort by Timestamp (O1).
@@ -253,7 +248,7 @@ def merge_sensor_frames(
     per_file_cols = [[c for c in f.columns if c != "Timestamp"] for f in frames]
     jdx = _measure_index(per_file_cols)
     u = _ranked_union(frames, per_file_cols, jdx)
-    return _merge_ranked(u, per_file_cols, jdx, rtol, atol).orderBy("Timestamp")
+    return _merge_ranked(u, per_file_cols, jdx).orderBy("Timestamp")
 
 
 def consolidate_sensors(

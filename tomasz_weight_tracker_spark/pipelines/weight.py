@@ -20,13 +20,12 @@ Format (documented at utils/20251223-weight-for-streamlit_old_001.py:28-33):
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import strip_units, try_double
 from ..operators.time_ops import resample_monthly_mean, resample_weekly_mean
+from ..sources.paths import glob_paths
 
 EAV_COLS = [
     "day_name",
@@ -46,15 +45,14 @@ def read_txt_blobs(spark: SparkSession, path_glob: str) -> DataFrame:
     """S7-lite: whole-file text blobs + file identity for local dirs.
     (The reference's Google Drive walk S6 is a remote listing feeding the
     same (file_id, content) shape — see ``incremental_sync``.)"""
-    return spark.read.text(path_glob, wholetext=True).select(
+    return spark.read.text(glob_paths(spark, path_glob), wholetext=True).select(
         F.input_file_name().alias("file_id"), F.col("value").alias("content")
     )
 
 
-def parse_weight_txt(
-    blobs: DataFrame, content_col: str = "content", file_id_col: str = "file_id"
-) -> DataFrame:
-    """F1 as native expressions: one blob -> N EAV rows.
+def parse_weight_txt(blobs: DataFrame) -> DataFrame:
+    """F1 as native expressions: one ``(file_id, content)`` blob -> N EAV
+    rows.
 
     Mirrors the reference parser's observable behavior
     (utils/20251223-weight-for-streamlit.py:38-74): files with <3 lines
@@ -62,7 +60,7 @@ def parse_weight_txt(
     skipped; the value keeps only its first token with kg/%/kcal
     stripped (G1/G2); tokens 2/3+ become info_symbol / info_txt.
     """
-    lines = F.split(F.col(content_col), "\n")
+    lines = F.split(F.col("content"), "\n")
     header = F.element_at(lines, 2)
     parts = F.split(header, ",")
 
@@ -93,23 +91,21 @@ def parse_weight_txt(
         F.when(F.size(toks) >= 3, F.array_join(F.slice(toks, 3, 1000), " "))
         .otherwise(F.lit(""))
         .alias("info_txt"),
-        F.col(file_id_col).alias("source_file_id"),
+        F.col("file_id").alias("source_file_id"),
     )
 
 
-def incremental_sync(
-    master_eav: DataFrame, available_blobs: DataFrame, file_id_col: str = "file_id"
-) -> DataFrame:
+def incremental_sync(master_eav: DataFrame, available_blobs: DataFrame) -> DataFrame:
     """ST1 batch form: parse ONLY blobs whose file id is absent from the
     master EAV (left-anti join J4 — the reference's set-difference at
     utils/20251223-weight-for-streamlit.py:144,155), then append (U1).
     """
     new_blobs = available_blobs.join(
-        master_eav.select(F.col("source_file_id").alias(file_id_col)).distinct(),
-        on=file_id_col,
+        master_eav.select(F.col("source_file_id").alias("file_id")).distinct(),
+        on="file_id",
         how="left_anti",
     )
-    new_eav = parse_weight_txt(new_blobs, file_id_col=file_id_col)
+    new_eav = parse_weight_txt(new_blobs)
     return master_eav.unionByName(new_eav, allowMissingColumns=True)
 
 
@@ -127,43 +123,43 @@ def eav_datetime(df: DataFrame) -> Column:
     )
 
 
-def pivot_eav(eav: DataFrame, attributes: Sequence[str] | None = None) -> DataFrame:
-    """A4: EAV long -> wide, aggfunc='first' with a DETERMINISTIC first
-    (min by source file then attribute order) — the reference relies on
-    pandas insertion order, which a distributed engine must pin down.
-    Drops BMR (P3) per utils/20251223-weight-for-streamlit.py:263-264.
+def pivot_eav(eav: DataFrame) -> DataFrame:
+    """A4: EAV long -> wide over ``BODY_ATTRS``, aggfunc='first' with a
+    DETERMINISTIC first (min by source file then attribute order) — the
+    reference relies on pandas insertion order, which a distributed
+    engine must pin down.  Drops BMR (P3) per
+    utils/20251223-weight-for-streamlit.py:263-264.
     """
-    attrs = list(attributes or BODY_ATTRS)
     df = eav.withColumn("date_time", eav_datetime(eav)).filter(
         F.col("date_time").isNotNull()
     )
     return (
         df.groupBy("date_time")
-        .pivot("attribute", attrs)
+        .pivot("attribute", BODY_ATTRS)
         .agg(F.min_by("value", F.struct("source_file_id", "time")))
     )
 
 
-def numeric_coercion(wide: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
+def numeric_coercion(wide: DataFrame) -> DataFrame:
     """G9: pd.to_numeric(errors='coerce') on the measure columns."""
-    cols = list(cols or [c for c in wide.columns if c != "date_time"])
     out = wide
-    for c in cols:
+    for c in [c for c in wide.columns if c != "date_time"]:
         out = out.withColumn(c, try_double(F.col(f"`{c}`")))
     return out
 
 
-def periodic_summary(
-    wide: DataFrame,
-    freq: str = "W-FRI",
-    value_cols: Sequence[str] = ("Weight", "BMI"),
-) -> DataFrame:
-    """A5 + W2 + P2: anchored resample mean (weekly 'W-<dow>' or
-    month-end 'ME'), newest-first, with per-period weight_change =
-    this period - previous period (the reference's shift(-1) on a
-    desc-sorted frame, utils/20251223-weight-for-streamlit.py:344-356).
+def periodic_summary(wide: DataFrame, freq: str = "W-FRI") -> DataFrame:
+    """A5 + W2 + P2: anchored resample mean of Weight and BMI (weekly
+    'W-<dow>' or month-end 'ME'), newest-first, with per-period
+    weight_change = this period - previous period (the reference's
+    shift(-1) on a desc-sorted frame,
+    utils/20251223-weight-for-streamlit.py:344-356).
+
+    One row per period, so the result lives in ONE partition: the lag
+    window needs no exchange and the newest-first order is a sort
+    within that partition, with no range-sampling job.
     """
-    cols = [c for c in value_cols if c in wide.columns]
+    cols = [c for c in ("Weight", "BMI") if c in wide.columns]
     df = wide.select("date_time", *cols).withColumnRenamed("date_time", "ts")
     if freq.upper() in ("ME", "M"):
         res = resample_monthly_mean(df, "ts", cols)
@@ -173,11 +169,11 @@ def periodic_summary(
         raise ValueError(f"unsupported resample freq: {freq}")
     # bounded-frame: one row per resample period
     w = Window.orderBy("period")
-    res = res.withColumn(
+    res = res.coalesce(1).withColumn(
         "weight_change", F.col("Weight") - F.lag("Weight").over(w)
     )
     renames = {"Weight": "average_weight", "BMI": "average_bmi"}
     for old, new in renames.items():
         if old in res.columns:
             res = res.withColumnRenamed(old, new)
-    return res.orderBy(F.col("period").desc())
+    return res.sortWithinPartitions(F.col("period").desc())

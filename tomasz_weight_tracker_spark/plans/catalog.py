@@ -238,13 +238,13 @@ def register(name, oracle, survey_ids=(), doc=""):
 # --- exact-aggregation helpers --------------------------------------------
 
 
-def dsum(col, scale: int = 4, prec: int = 18):
+def dsum(col, scale: int = 4):
     """Order-independent exact sum of a double column (see module doc)."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast(f"decimal({prec},{scale})")).cast("double")
+    return F.sum(c.cast(f"decimal(18,{scale})")).cast("double")
 
 
-def sql_dsum(expr: str, scale: int = 4, prec: int = 18) -> str:
+def sql_dsum(expr: str, scale: int = 4) -> str:
     # ::VARCHAR::DOUBLE, not ::DOUBLE: DuckDB's decimal->double cast
     # divides the (huge)int payload by 10^scale in floating point, so
     # once the scaled integer exceeds 2^53 it DOUBLE-ROUNDS (round-10
@@ -252,17 +252,17 @@ def sql_dsum(expr: str, scale: int = 4, prec: int = 18) -> str:
     # scaled).  The decimal's string render parsed by strtod is
     # correctly rounded — bit-identical to Spark's BigDecimal
     # .doubleValue at any magnitude.
-    return f"sum(({expr})::DECIMAL({prec},{scale}))::VARCHAR::DOUBLE"
+    return f"sum(({expr})::DECIMAL(18,{scale}))::VARCHAR::DOUBLE"
 
 
-def davg(col, scale: int = 6, prec: int = 18):
+def davg(col):
     c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast(f"decimal({prec},{scale})")).cast("double") / F.count(c)
+    return F.sum(c.cast("decimal(18,6)")).cast("double") / F.count(c)
 
 
-def sql_davg(expr: str, scale: int = 6, prec: int = 18) -> str:
+def sql_davg(expr: str) -> str:
     # Same ::VARCHAR route as sql_dsum (correctly-rounded at any scale).
-    return f"sum(({expr})::DECIMAL({prec},{scale}))::VARCHAR::DOUBLE / count({expr})"
+    return f"sum(({expr})::DECIMAL(18,6))::VARCHAR::DOUBLE / count({expr})"
 
 
 PEAK_TYPES = ("click", "view", "purchase")
@@ -836,8 +836,8 @@ def q_bucket_15min(spark, sf_dir):
     "peak_offpeak",
     f"""
     SELECT ts::DATE AS day,
-           CASE WHEN (hour(ts) * 60 + minute(ts)) > 390
-                 AND (hour(ts) * 60 + minute(ts)) <= 1410
+           CASE WHEN (hour(ts) * 60 + minute(ts)) > {TO.PEAK_START_MIN}
+                 AND (hour(ts) * 60 + minute(ts)) <= {TO.PEAK_END_MIN}
                 THEN 'P' ELSE 'OP' END AS category,
            count(*) AS n, {sql_dsum('value')} AS total_value
     FROM events GROUP BY day, category
@@ -856,7 +856,7 @@ def q_peak_offpeak(spark, sf_dir):
     )
 
 
-def _electricity_oracle(max_gap: int = 60, source: str = "events") -> str:
+def _electricity_oracle(source: str = "events") -> str:
     peak_list = ", ".join(f"'{t}'" for t in PEAK_TYPES)
     mod = "(hour(minute_ts) * 60 + minute(minute_ts))"
     return f"""
@@ -874,14 +874,14 @@ def _electricity_oracle(max_gap: int = 60, source: str = "events") -> str:
              (lead(op_cum) OVER w - op_cum)::DOUBLE AS d_op
       FROM readings WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
     ), capped AS (
-      SELECT user_id, t0, least(t1, t0 + INTERVAL {max_gap} MINUTES) AS tend, d_p, d_op
+      SELECT user_id, t0, least(t1, t0 + INTERVAL 60 MINUTES) AS tend, d_p, d_op
       FROM leads WHERE t1 IS NOT NULL
     ), grid AS (
       SELECT user_id, t0, d_p, d_op,
              unnest(generate_series(t0 + INTERVAL 1 MINUTE, tend, INTERVAL 1 MINUTE)) AS minute_ts
       FROM capped WHERE tend >= t0 + INTERVAL 1 MINUTE
     ), cat AS (
-      SELECT *, CASE WHEN {mod} > 390 AND {mod} <= 1410 THEN 'P' ELSE 'OP' END AS category
+      SELECT *, CASE WHEN {mod} > {TO.PEAK_START_MIN} AND {mod} <= {TO.PEAK_END_MIN} THEN 'P' ELSE 'OP' END AS category
       FROM grid
     ), counted AS (
       SELECT *,

@@ -669,7 +669,7 @@ def _sem_oracle() -> str:
         " * sqrt(list_dot_product(c.cv, c.cv))))::BIGINT"
     )
     return f"""
-    WITH {S.sql_ivf_train(n_centroids=SEM_K, iterations=SEM_ITERS, dim=64)},
+    WITH {S.sql_ivf_train(n_centroids=SEM_K, iterations=SEM_ITERS)},
     amap AS (
       SELECT vec_id, v, centroid_id FROM (
         SELECT e.vec_id, e.v, c.centroid_id,
@@ -1591,26 +1591,25 @@ def _url_gen_spark(h):
     return F.concat(scheme, www, host, port, path, query, frag)
 
 
-def _url_gen_sql(h="doc_id"):
-    return f"""
-        (CASE WHEN {h} % 2 = 0 THEN 'HTTP://' ELSE 'https://' END) ||
-        (CASE WHEN {h} % 3 = 0 THEN 'WWW.' ELSE '' END) ||
-        'Example' || ({h} % 7)::VARCHAR ||
-        (CASE WHEN {h} % 5 = 0 THEN '.CO.UK' ELSE '.COM' END) ||
-        (CASE WHEN {h} % 11 = 0 THEN ':8080'
-              WHEN {h} % 4 = 0 AND {h} % 2 = 0 THEN ':80'
-              WHEN {h} % 4 = 1 AND {h} % 2 = 1 THEN ':443'
+_URL_GEN_SQL = """
+        (CASE WHEN doc_id % 2 = 0 THEN 'HTTP://' ELSE 'https://' END) ||
+        (CASE WHEN doc_id % 3 = 0 THEN 'WWW.' ELSE '' END) ||
+        'Example' || (doc_id % 7)::VARCHAR ||
+        (CASE WHEN doc_id % 5 = 0 THEN '.CO.UK' ELSE '.COM' END) ||
+        (CASE WHEN doc_id % 11 = 0 THEN ':8080'
+              WHEN doc_id % 4 = 0 AND doc_id % 2 = 0 THEN ':80'
+              WHEN doc_id % 4 = 1 AND doc_id % 2 = 1 THEN ':443'
               ELSE '' END) ||
-        '/articles//item-' || ({h} % 13)::VARCHAR ||
-        (CASE WHEN {h} % 6 = 0 THEN '/'
-              WHEN {h} % 6 = 1 THEN '/index.html' ELSE '' END) ||
-        (CASE WHEN {h} % 8 = 0
-                  THEN '?utm_source=feed&id=' || ({h} % 17)::VARCHAR || '&utm_campaign=x'
-              WHEN {h} % 8 = 1 THEN '?id=' || ({h} % 17)::VARCHAR || '&fbclid=abc'
-              WHEN {h} % 8 = 2 THEN '?b=2&a=1'
-              WHEN {h} % 8 = 3 THEN '?a=1&b=2'
+        '/articles//item-' || (doc_id % 13)::VARCHAR ||
+        (CASE WHEN doc_id % 6 = 0 THEN '/'
+              WHEN doc_id % 6 = 1 THEN '/index.html' ELSE '' END) ||
+        (CASE WHEN doc_id % 8 = 0
+                  THEN '?utm_source=feed&id=' || (doc_id % 17)::VARCHAR || '&utm_campaign=x'
+              WHEN doc_id % 8 = 1 THEN '?id=' || (doc_id % 17)::VARCHAR || '&fbclid=abc'
+              WHEN doc_id % 8 = 2 THEN '?b=2&a=1'
+              WHEN doc_id % 8 = 3 THEN '?a=1&b=2'
               ELSE '' END) ||
-        (CASE WHEN {h} % 9 = 0 THEN '#section-2' ELSE '' END)"""
+        (CASE WHEN doc_id % 9 = 0 THEN '#section-2' ELSE '' END)"""
 
 
 def url_canonicalize(url):
@@ -1698,7 +1697,7 @@ def sql_registered_domain(canon):
 
 _URL_CTES = f"""
     WITH raw AS (
-        SELECT doc_id, {_url_gen_sql("doc_id")} AS url FROM documents
+        SELECT doc_id, {_URL_GEN_SQL} AS url FROM documents
     ),
     canon AS (
         SELECT doc_id, url, {sql_url_canonicalize("url")} AS curl FROM raw
@@ -2379,14 +2378,14 @@ def q_minhash_signature(spark, sf_dir):
 
 @register(
     "simhash",
-    f"SELECT doc_id, {D.sql_simhash(TOKS, 16)} AS simhash FROM documents",
+    f"SELECT doc_id, {D.sql_simhash(TOKS)} AS simhash FROM documents",
     survey_ids=(),
     doc="SimHash (16-bit, frequency-weighted bitwise majority).",
 )
 def q_simhash(spark, sf_dir):
     d = load(spark, sf_dir, "documents")
     toks = tokens(F.lower(F.col("text")))
-    return d.select("doc_id", D.simhash_exprs(toks, 16).alias("simhash"))
+    return d.select("doc_id", D.simhash_exprs(toks).alias("simhash"))
 
 
 @register(

@@ -654,8 +654,8 @@ def _report_oracle() -> str:
     "hash-match the oracle's closed-form reconstruction of the "
     "report — group headers, snapshot labels, indented block lines, "
     "blank separators, global line numbering.  The render/sink is "
-    "driver-side BY CONTRACT (reports are human-scale; max_groups "
-    "caps the collect — pipelines/jobsearch.py:render_report), so "
+    "driver-side BY CONTRACT (reports are human-scale; a 1,000-group "
+    "cap bounds the collect — pipelines/jobsearch.py:render_report), so "
     "the gate here is line-exactness of the sink format, with the "
     "heavy lifting (parse, dedup, group, sort) distributed upstream.",
 )
@@ -674,9 +674,9 @@ def q_report_render_lines(spark, sf_dir):
     ev = load(spark, sf_dir, "events").select("event_id", "ts")
     ev = ev.repartition(spark.sparkContext.defaultParallelism)
     blocks = dedup_blocks(extract_blocks(mime_blobs(ev)))
-    grouped = grouped_report(blocks, descending=True)
+    grouped = grouped_report(blocks)
     # <= 91 groups by construction (50 'Job k' + 41 'Role m' keys).
-    lines = render_report(grouped, max_groups=1000)
+    lines = render_report(grouped)
     out = Path(fixed_scratch_dir("report")) / "report.txt"
     write_text_report(lines, out)
     read_back = out.read_text(encoding="utf-8").splitlines()

@@ -331,7 +331,7 @@ def _bpe_tokens_oracle() -> str:
     from ..operators.bpe import sql_bpe_segments_cte
 
     return (
-        sql_bpe_segments_cte(_BPE_WORDS_CTE, _BPE_ROUNDS, name="seg")
+        sql_bpe_segments_cte(_BPE_WORDS_CTE, _BPE_ROUNDS)
         + """, inst AS (
         SELECT d.source, lower(u.w) AS word
         FROM documents d, unnest(string_split_regex(d.text, '\\s+')) AS u(w)
@@ -414,7 +414,7 @@ def _fertility_oracle() -> str:
     from ..operators.bpe import sql_bpe_segments_cte
 
     return (
-        sql_bpe_segments_cte(_BPE_WORDS_CTE, _BPE_ROUNDS, name="seg")
+        sql_bpe_segments_cte(_BPE_WORDS_CTE, _BPE_ROUNDS)
         + """, inst AS (
         SELECT d.lang, lower(u.w) AS word
         FROM documents d, unnest(string_split_regex(d.text, '\\s+')) AS u(w)

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions import ATOL, RTOL
 from ..pipelines.jobsearch import dedup_blocks, extract_blocks
 from ..pipelines.sensors import merge_sensor_frames
 from ..pipelines.weight import parse_weight_txt
@@ -56,7 +57,7 @@ from .catalog import load, register
 # Spark side prune a column the oracle hard-codes (schema mismatch on
 # a correct result).
 
-_SENSOR_ORACLE = """
+_SENSOR_ORACLE = f"""
 WITH hrs AS (SELECT DISTINCT date_trunc('hour', ts) AS t FROM events
              UNION SELECT TIMESTAMP '1970-01-01 00:00:00'
              UNION SELECT TIMESTAMP '1970-01-03 12:00:00'),
@@ -74,7 +75,7 @@ m1 AS (
   SELECT coalesce(ts0, ts1) AS ts01,
          coalesce(temp0, temp1) AS temp01,
          CASE WHEN temp0 IS NOT NULL AND temp1 IS NOT NULL
-                   AND abs(temp0 - temp1) > (1e-9 + 1e-5 * abs(temp1))
+                   AND abs(temp0 - temp1) > ({ATOL!r} + {RTOL!r} * abs(temp1))
               THEN temp1 END AS conf_a_temp,
          hum1
   FROM f0 FULL OUTER JOIN f1 ON ts0 = ts1),
@@ -84,7 +85,7 @@ m2 AS (
          coalesce(hum1, hum2) AS humidity,
          conf_a_temp,
          CASE WHEN hum1 IS NOT NULL AND hum2 IS NOT NULL
-                   AND abs(hum1 - hum2) > (1e-9 + 1e-5 * abs(hum2))
+                   AND abs(hum1 - hum2) > ({ATOL!r} + {RTOL!r} * abs(hum2))
               THEN hum2 END AS conf_b_hum
   FROM m1 FULL OUTER JOIN f2 ON ts01 = ts2)
 SELECT ts AS "Timestamp", temp, humidity,

@@ -55,12 +55,12 @@ def q_embed_pq_train(spark, sf_dir):
     return pq_train(load(spark, sf_dir, "embeddings"))
 
 
-def _sql_ranked(topk: int, final: str = "ranked") -> str:
-    """CTE ``{final}`` = (q_id, neighbor_id, rank, adc_dist), rank <=
+def _sql_ranked(topk: int) -> str:
+    """CTE ``ranked`` = (q_id, neighbor_id, rank, adc_dist), rank <=
     ``topk``: the per-query ascending ADC ranking of CTE ``adc`` —
     shared by the flat-PQ and IVFADC replay chains."""
     return f""",
-    {final} AS (SELECT q_id, neighbor_id, rank, adc_dist FROM (
+    ranked AS (SELECT q_id, neighbor_id, rank, adc_dist FROM (
         SELECT q_id, neighbor_id,
                row_number() OVER (PARTITION BY q_id
                                   ORDER BY adc_dist, neighbor_id)::BIGINT AS rank,
@@ -866,7 +866,6 @@ def q_ivfadc_autotune(spark, sf_dir):
 
 _BITEXT_K = 4  # mutual-kNN depth
 _IVF_NCENT = 8  # coarse centroids (matches embed_ivf_topk)
-_IVF_NPROBE = 2  # probed buckets per source vector
 
 
 def _sql_split(rel: str) -> str:
@@ -887,7 +886,7 @@ def _sql_brute_pairs(prefix: str, src: str, tgt: str) -> str:
     )"""
 
 
-def _sql_ivf_pairs(prefix: str, cent: str, src: str, tgt: str, nprobe: int) -> str:
+def _sql_ivf_pairs(prefix: str, cent: str, src: str, tgt: str) -> str:
     """CTEs ``{prefix}a`` (tgt assignment), ``{prefix}pr`` (src probes),
     ``{prefix}p`` (candidate pairs with 1e-9-quantized dots).  ``cent``
     must expose (centroid_id, cv), ``src`` (src_id, sv), ``tgt``
@@ -907,7 +906,7 @@ def _sql_ivf_pairs(prefix: str, cent: str, src: str, tgt: str, nprobe: int) -> s
                row_number() OVER (PARTITION BY s.src_id
                                   ORDER BY list_dot_product(s.sv, c.cv) DESC,
                                            c.centroid_id) AS rn
-        FROM {src} s CROSS JOIN {cent} c) WHERE rn <= {nprobe}
+        FROM {src} s CROSS JOIN {cent} c) WHERE rn <= {S.IVF_NPROBE}
     ),
     {prefix}p AS (
       SELECT pr.src_id, a.tgt_id,
@@ -977,7 +976,7 @@ def brute_pairs(e):
     )
 
 
-def ivf_candidate_pairs(e, n_cent: int, nprobe: int, centroids=None):
+def ivf_candidate_pairs(e, n_cent: int, centroids=None):
     """The IVF candidate stage alone: (src_id, tgt_id, qdot) from
     probe-bucket equi-joins — exposed so the soak can measure the pair
     relation's volume/wall separately from the margin tail.  Pass
@@ -995,7 +994,7 @@ def ivf_candidate_pairs(e, n_cent: int, nprobe: int, centroids=None):
         F.col("embedding").cast("array<double>").alias("tv"),
         "centroid_id",
     )
-    probes = S.ivf_probe(src, centroids, nprobe=nprobe)
+    probes = S.ivf_probe(src, centroids)
     # The candidate cut: equi-join on centroid_id.  Neither side is
     # broadcast — both are corpus-sized halves; the join shuffles on
     # the bucket key only.
@@ -1049,13 +1048,14 @@ def margin_mine(pairs, k: int):
     )
 
 
-def mine_bitext_ivf(e, n_cent: int, nprobe: int, k: int, centroids=None):
+def mine_bitext_ivf(e, n_cent: int, k: int, centroids=None):
     """IVF-candidate margin miner over an embeddings frame (vec_id,
     embedding).  Parameterized so the soak can hold bucket occupancy
     constant (C grown with the corpus) while the catalog entry pins
-    C=8/nprobe=2 for the oracle replay; ``centroids`` routes mining
+    C=8 for the oracle replay (``S.IVF_NPROBE`` buckets probed either
+    way); ``centroids`` routes mining
     through an external (e.g. trained) quantizer."""
-    pairs = ivf_candidate_pairs(e, n_cent=n_cent, nprobe=nprobe, centroids=centroids)
+    pairs = ivf_candidate_pairs(e, n_cent=n_cent, centroids=centroids)
     return margin_mine(pairs, k)
 
 
@@ -1092,7 +1092,7 @@ def q_bitext_mine_margin(spark, sf_dir):
     cent AS (SELECT vec_id AS centroid_id, v AS cv FROM e
              WHERE vec_id < {_IVF_NCENT}),"""
         + _sql_split("e"),
-        _sql_ivf_pairs("b", "cent", "s", "t", _IVF_NPROBE),
+        _sql_ivf_pairs("b", "cent", "s", "t"),
     ),
     survey_ids=(),
     doc="Margin-based bitext mining with IVF candidate generation — "
@@ -1121,7 +1121,7 @@ def q_bitext_mine_margin(spark, sf_dir):
 )
 def q_bitext_mine_margin_ivf(spark, sf_dir):
     e = load(spark, sf_dir, "embeddings")
-    return mine_bitext_ivf(e, n_cent=_IVF_NCENT, nprobe=_IVF_NPROBE, k=_BITEXT_K)
+    return mine_bitext_ivf(e, n_cent=_IVF_NCENT, k=_BITEXT_K)
 
 
 # ===========================================================================
@@ -1132,10 +1132,10 @@ def q_bitext_mine_margin_ivf(spark, sf_dir):
 @register(
     "bitext_mine_margin_ivf_trained",
     _sql_mined(
-        S.sql_ivf_train(n_centroids=_IVF_NCENT, iterations=2, dim=64)
+        S.sql_ivf_train(n_centroids=_IVF_NCENT, iterations=2)
         + ","
         + _sql_split("e"),
-        _sql_ivf_pairs("b", "cent", "s", "t", _IVF_NPROBE),
+        _sql_ivf_pairs("b", "cent", "s", "t"),
     ),
     survey_ids=(),
     doc="The IVF margin miner on TRAINED coarse centroids — the shape "
@@ -1160,7 +1160,7 @@ def q_bitext_mine_margin_ivf_trained(spark, sf_dir):
     # the embed_ivf/ivfadc/semantic families (catalog.py memo).
     cents = trained_ivf_centroids(spark, sf_dir, _IVF_NCENT, 2)
     return mine_bitext_ivf(
-        e, n_cent=_IVF_NCENT, nprobe=_IVF_NPROBE, k=_BITEXT_K, centroids=cents
+        e, n_cent=_IVF_NCENT, k=_BITEXT_K, centroids=cents
     )
 
 
@@ -1172,7 +1172,7 @@ _BAUD_N = 192  # sampled vector universe (constant at any corpus scale)
 
 _BITEXT_AUDIT_ORACLE = (
     f"""
-    WITH {S.sql_ivf_train(n_centroids=_IVF_NCENT, iterations=2, dim=64)},
+    WITH {S.sql_ivf_train(n_centroids=_IVF_NCENT, iterations=2)},
     cent_u AS (SELECT vec_id AS centroid_id, v AS cv FROM e
                WHERE vec_id < {_IVF_NCENT}),
     samp AS (
@@ -1189,11 +1189,11 @@ _BITEXT_AUDIT_ORACLE = (
     + ","
     + _sql_margin_tail("g", _BITEXT_K)
     + ","
-    + _sql_ivf_pairs("u", "cent_u", "s", "t", _IVF_NPROBE)
+    + _sql_ivf_pairs("u", "cent_u", "s", "t")
     + ","
     + _sql_margin_tail("u", _BITEXT_K)
     + ","
-    + _sql_ivf_pairs("w", "cent", "s", "t", _IVF_NPROBE)
+    + _sql_ivf_pairs("w", "cent", "s", "t")
     + ","
     + _sql_margin_tail("w", _BITEXT_K)
     + f"""
@@ -1258,10 +1258,10 @@ def q_bitext_recall_audit(spark, sf_dir):
     )
     cent_t = trained_ivf_centroids(spark, sf_dir, _IVF_NCENT, 2)
     ivf_u = mine_bitext_ivf(
-        samp, n_cent=_IVF_NCENT, nprobe=_IVF_NPROBE, k=_BITEXT_K, centroids=cent_u
+        samp, n_cent=_IVF_NCENT, k=_BITEXT_K, centroids=cent_u
     ).select("src_id", "tgt_id")
     ivf_t = mine_bitext_ivf(
-        samp, n_cent=_IVF_NCENT, nprobe=_IVF_NPROBE, k=_BITEXT_K, centroids=cent_t
+        samp, n_cent=_IVF_NCENT, k=_BITEXT_K, centroids=cent_t
     ).select("src_id", "tgt_id")
 
     # Round-12 restructure: the count/overlap tail was five aggregate
@@ -1345,9 +1345,7 @@ def q_bitext_recall_audit(spark, sf_dir):
 )
 def q_embed_knn(spark, sf_dir):
     e = load(spark, sf_dir, "embeddings")
-    out = S.brute_force_topk(
-        e.filter(F.col("vec_id") < 5), e, id_col="vec_id", vec_col="embedding", k=5
-    )
+    out = S.brute_force_topk(e.filter(F.col("vec_id") < 5), e, k=5)
     return out.withColumn("rank", F.col("rank").cast("long"))
 
 
@@ -1415,7 +1413,7 @@ def _ivf_probe_topk(e, centroids):
     """Spark twin of ``_SQL_IVF_PROBE_TOPK``."""
     assigned = S.ivf_assign(e, centroids)
     queries = e.filter(F.col("vec_id") < 5)
-    out = S.ivf_topk(queries, assigned, centroids, k=5, nprobe=2)
+    out = S.ivf_topk(queries, assigned, centroids, k=5)
     return out.withColumn("rank", F.col("rank").cast("long"))
 
 
@@ -1444,7 +1442,7 @@ def q_embed_ivf_topk(spark, sf_dir):
 @register(
     "embed_ivf_trained",
     f"""
-    WITH {S.sql_ivf_train(n_centroids=8, iterations=2, dim=64)},"""
+    WITH {S.sql_ivf_train(n_centroids=8, iterations=2)},"""
     + _SQL_IVF_PROBE_TOPK,
     survey_ids=(),
     doc="IVF with TRAINED centroids: two Lloyd k-means rounds in pure "

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from ..functions import md5_long, md5_long_sql
 from ..operators import dedup as D
 from ..operators.lm import LM_TRAIN_MOD, lm_apply, lm_model, sql_lm_score
+from ..operators.time_ops import PEAK_END_MIN, PEAK_START_MIN, peak_category
 from ..session import scratch_dir
 from ..streaming.pipelines import await_drain, drain_residue_batches, stream_docs, stream_upsert
 
@@ -56,7 +57,7 @@ def q_streaming_lm_filter(spark, sf_dir):
     # batch oracle (scoring train docs / dropping held docs).
     uni, big, vocab = (
         f.localCheckpoint(eager=True)
-        for f in lm_model(docs, train_mod=LM_TRAIN_MOD)
+        for f in lm_model(docs)
     )
 
     stream = stream_docs(spark, sf_dir).filter(
@@ -390,7 +391,10 @@ def q_streaming_line_dedup(spark, sf_dir):
     return line_dedup_fold(spark, log)
 
 
-_PEAK_MIN = "(hour(ts) * 60 + minute(ts)) > 390 AND (hour(ts) * 60 + minute(ts)) <= 1410"
+_PEAK_MIN = (
+    f"(hour(ts) * 60 + minute(ts)) > {PEAK_START_MIN} "
+    f"AND (hour(ts) * 60 + minute(ts)) <= {PEAK_END_MIN}"
+)
 
 
 @register(
@@ -410,7 +414,6 @@ _PEAK_MIN = "(hour(ts) * 60 + minute(ts)) > 390 AND (hour(ts) * 60 + minute(ts))
     "oracle — stream/batch parity, oracle-checked.",
 )
 def q_streaming_bucket_15min(spark, sf_dir):
-    from ..operators.time_ops import peak_category
     from ..streaming.pipelines import drain_to_memory, stream_events
 
     df = stream_events(spark, sf_dir)
@@ -580,8 +583,7 @@ def q_streaming_join_clicks(spark, sf_dir):
         F.col("ts").alias("c_ts"),
     )
     joined = stream_stream_join(
-        purchases, clicks, key="user_id", left_ts="ts", right_ts="c_ts",
-        watermark="1 hour", within="15 minutes",
+        purchases, clicks, key="user_id", right_ts="c_ts", watermark="1 hour"
     ).select("purchase_id", "click_id")
     return drain_to_memory(spark, joined, "sjoin", "append")
 

@@ -1358,9 +1358,9 @@ def q_boilerplate_ngrams(spark, sf_dir):
         SELECT doc_id, list_distinct({PT.sql_trigrams(_TOK)}) AS tg
         FROM documents
     ), bench AS (
-        SELECT DISTINCT unnest(tg) AS ngram FROM base WHERE doc_id % 53 = 0
+        SELECT DISTINCT unnest(tg) AS ngram FROM base WHERE doc_id % {PT.BENCH_MOD} = 0
     ), corpus AS (
-        SELECT doc_id, tg FROM base WHERE doc_id % 53 <> 0
+        SELECT doc_id, tg FROM base WHERE doc_id % {PT.BENCH_MOD} <> 0
     ), hits AS (
         SELECT c.doc_id, count(*)::BIGINT AS n_contaminated
         FROM (SELECT doc_id, unnest(tg) AS ngram FROM corpus) c

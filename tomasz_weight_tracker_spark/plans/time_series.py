@@ -41,7 +41,7 @@ def q_asof_join(spark, sf_dir):
         .groupBy("user_id", "ts")
         .agg(F.max_by("value", "event_id").alias("value"))
     )
-    out = asof_join(clicks, purch, keys=["user_id"], ts_col="ts", value_cols=("value",))
+    out = asof_join(clicks, purch, keys=["user_id"])
     return out.select("user_id", "event_id", F.col("value_asof"))
 
 

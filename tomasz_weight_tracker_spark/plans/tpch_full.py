@@ -31,9 +31,9 @@ from pyspark.sql import Window
 from .catalog import davg, dsum, load, register, sql_davg, sql_dsum
 
 
-def _dec(col, scale=4, prec=18):
+def _dec(col, scale=4):
     c = F.col(col) if isinstance(col, str) else col
-    return c.cast(f"decimal({prec},{scale})")
+    return c.cast(f"decimal(18,{scale})")
 
 
 # ---------------------------------------------------------------------------

@@ -309,7 +309,10 @@ def fixed_scratch_dir(tag: str) -> str:
 def parquet_file_sizes(path: str | os.PathLike) -> list[int] | None:
     """Byte sizes of a parquet path's data files: the file itself, or
     every ``*.parquet`` file under a directory (recursively), skipping
-    the ``_``/``.``-prefixed metadata and checksum files Spark ignores.
+    what Spark's file listing skips: ``_``/``.``-prefixed files
+    (metadata, checksums) and the subdirectories under them, ``.``-
+    prefixed ones (a rewrite's hidden siblings) and ``_``-prefixed ones
+    that are not ``name=value`` partitions (``_temporary``).
 
     ``None`` when the path cannot be listed.  Every size gate reads
     that as production scale: no widen, pre-aggregate, keyed join.
@@ -320,12 +323,18 @@ def parquet_file_sizes(path: str | os.PathLike) -> list[int] | None:
     try:
         if os.path.isfile(path):
             return [os.path.getsize(path)]
-        return [
-            os.path.getsize(os.path.join(root, f))
-            for root, _dirs, files in os.walk(path, onerror=_raise)
-            for f in files
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        ]
+        sizes = []
+        for root, dirs, files in os.walk(path, onerror=_raise):
+            dirs[:] = [
+                d for d in dirs
+                if not d.startswith(".") and not (d.startswith("_") and "=" not in d)
+            ]
+            sizes += [
+                os.path.getsize(os.path.join(root, f))
+                for f in files
+                if f.endswith(".parquet") and not f.startswith(("_", "."))
+            ]
+        return sizes
     except OSError:
         return None
 

@@ -35,11 +35,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampType
 
 
-def write_single_csv(df: DataFrame, out_path: str | Path, header: bool = True) -> Path:
-    """S9: write a DataFrame as exactly one CSV file at ``out_path``."""
+def write_single_csv(df: DataFrame, out_path: str | Path) -> Path:
+    """S9: write a DataFrame as exactly one CSV file, with a header, at
+    ``out_path``."""
     out_path = Path(out_path)
     tmp = Path(tempfile.mkdtemp(prefix="spark_csv_")) / "out"
-    df.coalesce(1).write.mode("overwrite").option("header", header).csv(str(tmp))
+    df.coalesce(1).write.mode("overwrite").option("header", True).csv(str(tmp))
     part = next(tmp.glob("part-*.csv"))
     out_path.parent.mkdir(parents=True, exist_ok=True)
     shutil.move(str(part), out_path)

@@ -28,17 +28,10 @@ from pyspark.sql import functions as F
 from ..operators.time_ops import peak_category
 
 
-def stream_fifteen_minute_usage(
-    events: DataFrame,
-    ts_col: str = "ts",
-    value_col: str = "value",
-    series_keys: Sequence[str] = (),
-    watermark: str = "1 hour",
-    bucket_minutes: int = 15,
-) -> DataFrame:
-    """Streaming A1 + T5 + T7: per-minute usage events -> end-labeled
-    15-minute buckets with P/OP split, tolerant of ``watermark`` of
-    lateness.
+def stream_fifteen_minute_usage(events: DataFrame, series_keys: Sequence[str] = ()) -> DataFrame:
+    """Streaming A1 + T5 + T7: per-minute ``ts``/``value`` usage events ->
+    end-labeled 15-minute buckets with P/OP split, tolerant of one hour
+    of lateness.
 
     End-labeling parity with the batch operator: batch buckets minute m
     into the window ``(start, start+15]`` labeled ``start``
@@ -46,54 +39,43 @@ def stream_fifteen_minute_usage(
     -1 minute so Spark's standard ``[start, start+15)`` tumbling window
     produces identical labels.
     """
-    shifted = F.col(ts_col) - F.expr("INTERVAL 1 MINUTE")
+    shifted = F.col("ts") - F.expr("INTERVAL 1 MINUTE")
     df = (
-        events.withWatermark(ts_col, watermark)
+        events.withWatermark("ts", "1 hour")
         .withColumn("__bucket_ts", shifted)
-        .withColumn("__cat", peak_category(F.col(ts_col)))
+        .withColumn("__cat", peak_category(F.col("ts")))
     )
-    win = F.window(F.col("__bucket_ts"), f"{bucket_minutes} minutes")
+    win = F.window(F.col("__bucket_ts"), "15 minutes")
     return (
         df.groupBy(*series_keys, win.alias("w"))
         .agg(
             F.count(F.lit(1)).alias("Minutes"),
-            F.sum(F.when(F.col("__cat") == "P", F.col(value_col))).alias("P_Usage"),
-            F.sum(F.when(F.col("__cat") == "OP", F.col(value_col))).alias("OP_Usage"),
+            F.sum(F.when(F.col("__cat") == "P", F.col("value"))).alias("P_Usage"),
+            F.sum(F.when(F.col("__cat") == "OP", F.col("value"))).alias("OP_Usage"),
         )
         .withColumn("Bucket", F.col("w.start"))
         .drop("w")
     )
 
 
-def stream_dedup_keep_first(
-    events: DataFrame,
-    keys: Sequence[str],
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming A6: drop duplicate keys arriving within the watermark.
-    (Streams keep the FIRST arrival — the batch fold's keep-last is a
-    retrospective choice; a stream cannot retract an emitted row.)"""
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        [*keys]
-    )
+def stream_dedup_keep_first(events: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """Streaming A6: drop duplicate keys arriving within a one-hour
+    watermark on ``ts``.  (Streams keep the FIRST arrival — the batch
+    fold's keep-last is a retrospective choice; a stream cannot retract
+    an emitted row.)"""
+    return events.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark([*keys])
 
 
-def stream_sessionize(
-    events: DataFrame,
-    ts_col: str = "ts",
-    series_keys: Sequence[str] = ("user_id",),
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
+def stream_sessionize(events: DataFrame) -> DataFrame:
     """Streaming twin of the batch lag-gap sessionize: session_window
-    merges events closer than ``gap`` into one session per key."""
+    merges a user's events closer than 30 minutes on ``ts`` into one
+    session (one-hour watermark)."""
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(*series_keys, F.session_window(F.col(ts_col), gap).alias("s"))
+        events.withWatermark("ts", "1 hour")
+        .groupBy("user_id", F.session_window(F.col("ts"), "30 minutes").alias("s"))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
-            *series_keys,
+            "user_id",
             F.col("s.start").alias("session_start"),
             F.col("s.end").alias("session_end"),
             "n_events",
@@ -107,21 +89,17 @@ def incremental_file_sync(
     checkpoint_dir: str,
     output_dir: str,
     schema: str,
-    transform=None,
-    fmt: str = "parquet",
 ) -> "StreamingQuery":
-    """ST1 as a real stream: the file source discovers new files, the
-    checkpoint IS the processed-file-id state (replacing the reference's
-    hand-rolled cached-id anti-join,
+    """ST1 as a real stream: the parquet file source discovers new files,
+    the checkpoint IS the processed-file-id state (replacing the
+    reference's hand-rolled cached-id anti-join,
     utils/20251223-weight-for-streamlit.py:135-189), and availableNow
     drains everything pending then stops — i.e., an incremental batch
     run with exactly-once file processing.
     """
-    stream = spark.readStream.schema(schema).format(fmt).load(input_glob)
-    if transform is not None:
-        stream = transform(stream)
     return (
-        stream.writeStream.format("parquet")
+        spark.readStream.schema(schema).parquet(input_glob)
+        .writeStream.format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
@@ -133,15 +111,10 @@ RUNNING_STATS_SCHEMA = "meter string, n bigint, total double, mean double"
 _STATS_STATE_SCHEMA = "n bigint, total double"
 
 
-def stream_running_stats(
-    events: DataFrame,
-    key_col: str = "meter",
-    value_col: str = "value",
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Custom stateful operator via ``applyInPandasWithState``: per-key
-    running (count, sum, mean) maintained across micro-batches in the
+def stream_running_stats(events: DataFrame) -> DataFrame:
+    """Custom stateful operator via ``applyInPandasWithState``: per-meter
+    running (count, sum, mean) of ``value`` maintained across
+    micro-batches (one-hour watermark on ``ts``) in the
     state store — the arbitrary-state API the built-in windowed aggs
     can't express (e.g. for CUSUM / drift detectors over sensor feeds).
 
@@ -157,15 +130,15 @@ def stream_running_stats(
         n, total = state.get if state.exists else (0, 0.0)  # .get is a property
         for pdf in pdfs:
             n += len(pdf)
-            total += float(pdf[value_col].sum())
+            total += float(pdf["value"].sum())
         state.update((n, total))
         yield pd.DataFrame(
             [{"meter": key[0], "n": n, "total": total, "mean": total / n if n else None}]
         )
 
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(key_col)
+        events.withWatermark("ts", "1 hour")
+        .groupBy("meter")
         .applyInPandasWithState(
             update,
             outputStructType=RUNNING_STATS_SCHEMA,
@@ -180,19 +153,17 @@ def stream_stream_join(
     left: DataFrame,
     right: DataFrame,
     key: str,
-    left_ts: str = "ts",
     right_ts: str = "ts",
     watermark: str = "10 minutes",
-    within: str = "15 minutes",
 ) -> DataFrame:
     """Watermarked stream-stream inner join: pair each left event with
     right events sharing ``key`` whose timestamp falls in
-    ``[left_ts, left_ts + within]`` (the impressions-to-clicks
-    attribution shape).
+    ``[ts, ts + 15 minutes]`` of the left side's ``ts`` (the
+    impressions-to-clicks attribution shape).
 
     Both sides carry watermarks AND the join condition bounds the
     event-time range, so Spark can evict buffered state once the
-    watermark passes ``left_ts + within`` — state per key is bounded by
+    watermark passes ``ts + 15 minutes`` — state per key is bounded by
     rate x interval, never by stream length.  Without the range bound
     the state store would grow forever; this is the property that
     makes the operator viable on an unbounded 100 TB/day stream.
@@ -200,12 +171,12 @@ def stream_stream_join(
     Caller renames non-key columns to avoid collisions (the two ts
     columns must be distinct names if both are selected downstream).
     """
-    lhs = left.withWatermark(left_ts, watermark).alias("l")
+    lhs = left.withWatermark("ts", watermark).alias("l")
     rhs = right.withWatermark(right_ts, watermark).alias("r")
     cond = (
         (F.col(f"l.{key}") == F.col(f"r.{key}"))
-        & (F.col(f"r.{right_ts}") >= F.col(f"l.{left_ts}"))
-        & (F.col(f"r.{right_ts}") <= F.col(f"l.{left_ts}") + F.expr(f"INTERVAL {within}"))
+        & (F.col(f"r.{right_ts}") >= F.col("l.ts"))
+        & (F.col(f"r.{right_ts}") <= F.col("l.ts") + F.expr("INTERVAL 15 minutes"))
     )
     return lhs.join(rhs, cond)
 
@@ -215,7 +186,6 @@ def stream_upsert(
     path: str,
     keys: Sequence[str],
     checkpoint: str,
-    partition_by: Sequence[str] | None = None,
     prepare=None,
     order_by: Sequence[str] | None = None,
 ):
@@ -245,7 +215,7 @@ def stream_upsert(
     """
     return (
         df.writeStream.foreachBatch(
-            make_upsert_batch(path, keys, partition_by, prepare, order_by)
+            make_upsert_batch(path, keys, prepare, order_by)
         )
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
@@ -255,7 +225,6 @@ def stream_upsert(
 def make_upsert_batch(
     path: str,
     keys: Sequence[str],
-    partition_by: Sequence[str] | None = None,
     prepare=None,
     order_by: Sequence[str] | None = None,
 ):
@@ -266,15 +235,12 @@ def make_upsert_batch(
     rows that already won produces the identical table."""
     from ..sources.writers import upsert_by_key
 
-    part = list(partition_by) if partition_by else None
     order = list(order_by) if order_by else None
 
     def apply_batch(batch_df: DataFrame, _batch_id: int) -> None:
         if prepare is not None:
             batch_df = prepare(batch_df)
-        upsert_by_key(
-            batch_df.sparkSession, batch_df, path, list(keys), part, order
-        )
+        upsert_by_key(batch_df.sparkSession, batch_df, path, list(keys), order_by=order)
 
     return apply_batch
 
@@ -375,13 +341,12 @@ def drain_to_memory(
     prefix: str,
     output_mode: str,
     timeout_sec: float = 300,
-    partitions: int = 8,
 ) -> DataFrame:
     """Run ``df`` as an availableNow stream into a memory sink and
     return the drained table.
 
     - State-store partitioning is sized via
-      :func:`..streaming.tuning.state_partitions` (``partitions``);
+      :func:`..streaming.tuning.state_partitions` (8 partitions);
       the conf lock is released as soon as the first micro-batch
       commits (the partition count is latched into the checkpoint
       then), so a slow drain does not stall other threads' streams
@@ -396,7 +361,7 @@ def drain_to_memory(
     from .tuning import state_partitions
 
     name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    with state_partitions(spark, partitions) as release_early:
+    with state_partitions(spark, 8) as release_early:
         q = (
             df.writeStream.format("memory")
             .queryName(name)

@@ -79,11 +79,11 @@ def main() -> None:
         n_cent = 8 * k
 
         t0 = time.monotonic()
-        n_pairs = ivf_candidate_pairs(e, n_cent=n_cent, nprobe=2).count()
+        n_pairs = ivf_candidate_pairs(e, n_cent=n_cent).count()
         t_pairs = time.monotonic() - t0
 
         t0 = time.monotonic()
-        n_mined = mine_bitext_ivf(e, n_cent=n_cent, nprobe=2, k=4).count()
+        n_mined = mine_bitext_ivf(e, n_cent=n_cent, k=4).count()
         t_full = time.monotonic() - t0
 
         print(

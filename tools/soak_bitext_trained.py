@@ -88,7 +88,7 @@ def main() -> None:
     ):
         t0 = time.monotonic()
         occ = occupancy(S.ivf_assign(e, cents))
-        n_pairs = ivf_candidate_pairs(e, n_cent=8, nprobe=2, centroids=cents).count()
+        n_pairs = ivf_candidate_pairs(e, n_cent=8, centroids=cents).count()
         wall = time.monotonic() - t0
         print(
             json.dumps(
