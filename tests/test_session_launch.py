@@ -14,6 +14,7 @@ import os
 import shutil
 import subprocess
 import sys
+import time
 
 import pytest
 
@@ -67,6 +68,36 @@ class TestLaunchPlan:
         open(jsa, "wb").close()
         opts, _ = launch_plan(conf, {}, cache, lambda: "k")
         assert opts == f'"-XX:SharedArchiveFile={jsa}" {_JVM_LOG_OPTS}'
+
+    def test_live_training_jvm_starts_no_second_training(self, dirs):
+        conf, cache = dirs
+        with open(os.path.join(cache, f"k.{_dead_pid()}.jvm"), "w") as f:
+            f.write(str(os.getpid()))  # the Python launcher exited, its JVM still dumps
+        assert launch_plan(conf, {}, cache, lambda: "k") == (_JVM_LOG_OPTS, None)
+
+    def test_dead_training_jvm_trains(self, dirs):
+        conf, cache = dirs
+        with open(os.path.join(cache, f"k.{_dead_pid()}.jvm"), "w") as f:
+            f.write(str(_dead_pid()))
+        opts, _ = launch_plan(conf, {}, cache, lambda: "k")
+        assert opts.startswith('"-XX:ArchiveClassesAtExit=')
+
+    @pytest.mark.skipif(not os.path.isdir("/proc/self"), reason="no /proc")
+    def test_exited_unreaped_training_jvm_trains(self, dirs):
+        conf, cache = dirs
+        zombie = subprocess.Popen([sys.executable, "-c", ""])
+        try:
+            for _ in range(600):  # exited, not yet waited for
+                with open(f"/proc/{zombie.pid}/stat") as f:
+                    if f.read().rsplit(")", 1)[-1].split()[0] == "Z":
+                        break
+                time.sleep(0.05)
+            with open(os.path.join(cache, f"k.{_dead_pid()}.jvm"), "w") as f:
+                f.write(str(zombie.pid))
+            opts, _ = launch_plan(conf, {}, cache, lambda: "k")
+        finally:
+            zombie.wait()
+        assert opts.startswith('"-XX:ArchiveClassesAtExit=')
 
     def test_missing_conf_dir_counts_as_empty(self, dirs, tmp_path):
         _, cache = dirs
@@ -175,6 +206,23 @@ class TestPromoteArchive:
         promote_archive(str(tmp_path), "k", JAVA, SPARK_HOME)
         assert os.listdir(tmp_path) == [live.name]
 
+    def test_part_of_live_training_jvm_is_left_alone(self, small_archive, tmp_path):
+        part = tmp_path / f"k.{_dead_pid()}.part"
+        _copy(small_archive, part, 4096)  # still being written
+        part.with_suffix(".jvm").write_text(str(os.getpid()))
+        promote_archive(str(tmp_path), "k", JAVA, SPARK_HOME)
+        assert sorted(os.listdir(tmp_path)) == sorted([part.name, part.with_suffix(".jvm").name])
+
+    def test_notes_of_dead_jvms_go_with_their_parts(self, small_archive, tmp_path):
+        promoted, rejected = (tmp_path / f"k.{_dead_pid()}.part" for _ in range(2))
+        _copy(small_archive, promoted)
+        _copy(small_archive, rejected, 4096)
+        for part in (promoted, rejected):
+            part.with_suffix(".jvm").write_text(str(_dead_pid()))
+        (tmp_path / f"k.{_dead_pid()}.jvm").write_text(str(_dead_pid()))  # dumped nothing
+        promote_archive(str(tmp_path), "k", JAVA, SPARK_HOME)
+        assert os.listdir(tmp_path) == ["k.jsa"]
+
 
 class TestActiveSessionUntouched:
     def test_get_spark_returns_active_session_as_is(self, spark):
@@ -203,8 +251,10 @@ from tomasz_weight_tracker_spark.session import get_spark
 spark = get_spark("cds-cycle", master="local[1]", shuffle_partitions=1,
                   extra_conf={{"spark.driver.extraJavaOptions": "-Dcaller.extra=kept"}})
 assert spark.range(1000).selectExpr("id % 3 AS k").groupBy("k").count().count() == 3
-mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+jvm = spark.sparkContext._jvm
+mx = jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
 print(json.dumps({{"args": list(mx.getInputArguments()), "pid": os.getpid(),
+                  "jvm_pid": jvm.java.lang.ProcessHandle.current().pid(),
                   "conf_dir": os.environ.get("SPARK_CONF_DIR")}}))
 """
 
@@ -213,7 +263,8 @@ print(json.dumps({{"args": list(mx.getInputArguments()), "pid": os.getpid(),
 class TestArchiveLifeCycle:
     def test_train_promote_reuse(self, small_archive, tmp_path):
         """A truncated part and another key's archive are deleted, the
-        session trains, the next one promotes and maps the archive, and a
+        session trains and notes its JVM, the next one promotes and maps
+        the archive and deletes the note, and a
         mismatched archive only warns: every launch works and prints only
         its result line on stdout."""
         xdg = tmp_path / "user cache"  # the option string must survive a space
@@ -239,8 +290,10 @@ class TestArchiveLifeCycle:
 
         trained, _ = launch()
         part = f"{key}.{trained['pid']}.part"
+        note = f"{key}.{trained['pid']}.jvm"
         assert f"-XX:ArchiveClassesAtExit={cache / part}" in trained["args"]
-        assert sorted(os.listdir(cache)) == sorted(["conf", part])
+        assert sorted(os.listdir(cache)) == sorted(["conf", part, note])
+        assert (cache / note).read_text() == str(trained["jvm_pid"])
 
         reused, _ = launch()
         assert f"-XX:SharedArchiveFile={cache / key}.jsa" in reused["args"]

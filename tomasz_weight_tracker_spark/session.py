@@ -4,7 +4,7 @@ Defaults follow the engine posture from SURVEY.md §4.4: AQE on,
 Arrow on, UTC session timezone (DuckDB-oracle comparable), shuffle
 partitions sized to the local core count rather than the 200 default.
 On a real cluster the same factory is used with a different master and
-a shuffle-partition count sized to the input (see ``for_scale``).
+a shuffle-partition count sized to the input (see ``tune_for_scale``).
 
 Also the one place that knows how the driver JVM starts (its
 class-data-sharing archive, :func:`launch_plan`), session lifetime
@@ -26,6 +26,18 @@ from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import DataFrame, SparkSession
 
 _DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# Spark's cache of compiled generated classes (static; Spark's default is
+# 100 entries, which Guava splits into four LRU segments of 25 that evict
+# on their own).  An evicted class is compiled again by Janino and starts
+# again in the interpreter, so HotSpot's C1/C2 threads compile it again
+# too.  Measured working sets of one session (warm-up plus the first
+# pass): the benchmark's cli_pipelines about 130 distinct classes and
+# catalog_sf0.1 about 94, which at 100 entries still evicted (the
+# segments fill unevenly).  The bound holds both several times over.  A
+# whole-catalog pass (tools/plan_audit.py at sf0.001: 234 queries, each
+# run once) compiles 4,308 classes; it runs no plan twice, so holding all
+# of them would only pin their class loaders and JIT-compiled code.
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_spark(
@@ -58,6 +70,7 @@ def get_spark(
         "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
         "spark.ui.enabled": "false",
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
         **(extra_conf or {}),
     }
     spark_home = _find_spark_home()
@@ -74,8 +87,19 @@ def get_spark(
         builder = builder.config(k, v)
     with _env_var("SPARK_CONF_DIR", conf_dir):
         spark = builder.getOrCreate()
+    if java_opts.startswith(f'"{_TRAIN_FLAG}'):
+        note_training_jvm(java_opts[len(_TRAIN_FLAG) + 1:].split('"', 1)[0],
+                          spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid())
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def janino_compiles(spark: SparkSession) -> int:
+    """How many generated classes this JVM has compiled with Janino
+    (Spark's ``CodegenMetrics``; a local session's executors share the
+    driver's JVM and its codegen cache)."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 # -- Driver JVM start-up: a dynamic class-data-sharing (AppCDS) archive ------
@@ -86,9 +110,13 @@ def get_spark(
 # launch (-XX:SharedArchiveFile).  The archive lives in the user cache,
 # keyed by the Java build and the Spark jar list:
 #   - no archive for the key: the session trains <key>.<pid>.part, written
-#     by its JVM at exit, so no query waits for the dump;
+#     by its JVM at exit, so no query waits for the dump.  The JVM outlives
+#     the Python process <pid> by several seconds and creates the part only
+#     then, so the session also writes <key>.<pid>.jvm holding the JVM's
+#     pid: while that JVM lives, no other launch trains;
 #   - a later launch promotes a part whose writer is gone and whose probe
-#     passes to <key>.jsa, and deletes every other part and archive;
+#     passes to <key>.jsa, and deletes every other part and archive, each
+#     with its note;
 #   - archive present: the session maps it.
 
 _DEFAULT_JAVA_OPTS = "spark.driver.defaultJavaOptions"
@@ -102,6 +130,7 @@ _CDS_FLAGS = ("-Xshare", "SharedArchiveFile", "ArchiveClasses")
 # part whose writer died mid-dump starts with zeros: -Xshare:auto then
 # ignores the file and the probe would still exit 0.
 _CDS_MAGIC = (0xF00BABA8).to_bytes(4, "little")
+_TRAIN_FLAG = "-XX:ArchiveClassesAtExit="
 
 
 def cds_cache_dir() -> str:
@@ -129,6 +158,9 @@ def launch_plan(
       empty conf directory instead, which loses nothing only then;
     - the caller's Java options do not already choose a CDS mode;
     - ``cache_dir`` is a writable directory.
+
+    Without an archive the launch trains one, unless another driver JVM
+    is still training it (:func:`note_training_jvm`).
     """
     caller_default = caller_conf.get(_DEFAULT_JAVA_OPTS, "")
     opts = f"{_JVM_LOG_OPTS} {caller_default}".strip()
@@ -148,10 +180,33 @@ def launch_plan(
     jsa = os.path.join(cache_dir, f"{key}.jsa")
     if os.path.isfile(jsa):
         flag = f"-XX:SharedArchiveFile={jsa}"
+    elif any(_training_jvm_alive(os.path.join(cache_dir, n)) for n in os.listdir(cache_dir)
+             if n.startswith(f"{key}.") and n.endswith(".jvm")):
+        return opts, None
     else:
-        flag = f"-XX:ArchiveClassesAtExit={os.path.join(cache_dir, f'{key}.{os.getpid()}.part')}"
+        flag = f"{_TRAIN_FLAG}{os.path.join(cache_dir, f'{key}.{os.getpid()}.part')}"
     # Spark splits the option string like a shell; the cache path may hold spaces.
     return f'"{flag}" {opts}', os.path.join(cache_dir, "conf")
+
+
+def note_training_jvm(part: str, jvm_pid: int) -> None:
+    """Record that the JVM ``jvm_pid`` writes ``part`` when it exits, in
+    the note ``<part stem>.jvm``.  Without a cache directory to write
+    in, the launch only loses the note."""
+    note = f"{part[:-len('.part')]}.jvm"
+    with contextlib.suppress(OSError):
+        with open(f"{note}.tmp", "w") as f:
+            f.write(str(jvm_pid))
+        os.replace(f"{note}.tmp", note)
+
+
+def _training_jvm_alive(note: str) -> bool:
+    """Whether the JVM a training note names still runs."""
+    try:
+        with open(note) as f:
+            return _alive(int(f.read()))
+    except (OSError, ValueError):
+        return False
 
 
 def _java() -> str | None:
@@ -187,28 +242,36 @@ def _cds_key_promoted(cache_dir: str, spark_home: str) -> str | None:
 
 def promote_archive(cache_dir: str, key: str, java: str, spark_home: str) -> None:
     """Promote one finished ``<key>.<pid>.part`` to ``<key>.jsa`` and
-    delete every other archive and part whose writer is gone.
+    delete every other archive and part whose writer is gone, and every
+    training note whose JVM is gone, with its part.
 
-    A part qualifies only when the process that launched its writer has
-    exited and :func:`probe_archive` passes.  So the cache holds at most
-    one archive, and no session maps an unprobed file.
+    A part qualifies only when the process that launched its writer and
+    the JVM its note names have exited and :func:`probe_archive` passes.
+    So the cache holds at most one archive, and no session maps an
+    unprobed file.
     """
     jsa = os.path.join(cache_dir, f"{key}.jsa")
     have = os.path.isfile(jsa)
     for name in sorted(os.listdir(cache_dir)):
         path = os.path.join(cache_dir, name)
-        if path == jsa or not name.endswith((".jsa", ".part")):
+        if path == jsa or not name.endswith((".jsa", ".part", ".jvm")):
             continue
+        stem, ext = os.path.splitext(path)
         # A concurrent launch may promote or delete the same file first.
         with contextlib.suppress(FileNotFoundError):
-            if name.endswith(".part"):
-                pid = name.split(".")[-2]
-                if pid.isdigit() and _alive(int(pid)):
+            if ext != ".jsa":
+                pid = stem.rsplit(".", 1)[-1]
+                if (pid.isdigit() and _alive(int(pid))) or _training_jvm_alive(f"{stem}.jvm"):
                     continue
+            if ext == ".jvm" and os.path.exists(f"{stem}.part"):
+                continue  # goes with its part
+            if ext == ".part":
                 if not have and name.startswith(f"{key}.") and probe_archive(java, spark_home, path, cache_dir):
                     os.replace(path, jsa)
                     have = True
-                    continue
+                else:
+                    os.remove(path)
+                path = f"{stem}.jvm"  # its note, if there is one
             os.remove(path)
 
 
@@ -244,7 +307,13 @@ def _alive(pid: int) -> bool:
         return False
     except PermissionError:  # another user's process
         pass
-    return True
+    # An exited JVM whose Python parent is gone stays a zombie until the
+    # init process reaps it, a second or two later.
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            return f.read().rsplit(")", 1)[-1].split()[0] != "Z"
+    except (OSError, IndexError):
+        return True
 
 
 @contextlib.contextmanager

@@ -8,6 +8,9 @@ number the hash-key/partial-aggregation disciplines exist to shrink).
 
 Usage: python tools/plan_audit.py [sf_dir]   (default sf0.001)
 
+The last line gives the session's Janino compiles and HotSpot's JIT
+compile time, the numbers that size ``session.CODEGEN_CACHE_ENTRIES``.
+
 The table is a reviewable artifact AND a drift detector: regenerate it
 after plan-affecting changes and diff.  Streaming queries are skipped
 (their plans are per-micro-batch; tests/test_streaming.py covers them).
@@ -22,7 +25,11 @@ import time
 sys.path.insert(0, ".")
 
 from tomasz_weight_tracker_spark.plans import REGISTRY  # noqa: E402
-from tomasz_weight_tracker_spark.session import get_spark  # noqa: E402
+from tomasz_weight_tracker_spark.session import (  # noqa: E402
+    CODEGEN_CACHE_ENTRIES,
+    get_spark,
+    janino_compiles,
+)
 
 SKIP = {
     "streaming_bucket_15min",
@@ -181,6 +188,9 @@ def main() -> None:
     with open("docs/PLAN_AUDIT.md", "w") as f:
         f.write("\n".join(lines))
     print(f"wrote docs/PLAN_AUDIT.md ({len(rows)} queries)")
+    jit = spark.sparkContext._jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+    print(f"codegen: {janino_compiles(spark)} Janino compiles (cache {CODEGEN_CACHE_ENTRIES} "
+          f"entries), JIT compile time {jit.getTotalCompilationTime() / 1000:.1f} s")
     spark.stop()
 
 
